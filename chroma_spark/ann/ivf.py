@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.distance import distance
 from ..operators.topk import topk_per_group
 
@@ -165,7 +166,8 @@ def build_ivf(
         model = km.fit(train.select(array_to_vector("__vec").alias("__feat")))
         centers = [[float(x) for x in c] for c in model.clusterCenters()]
     spark = records.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centers)],
         "centroid_id INT, centroid ARRAY<FLOAT>",
     )

@@ -15,12 +15,14 @@ register it in the catalog.
 from __future__ import annotations
 
 import uuid
+from functools import cached_property
 from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .frames import local_frame
 from .operators.knn import exact_knn
 from .operators.search import search as search_op
 from .sources.collection import (
@@ -268,12 +270,21 @@ class Client:
         (BaseAPI ``get_collection_by_id``,
         `/root/reference/chromadb/api/__init__.py:619-646`). One catalog
         state read; raises when no collection carries the id."""
+        return self._lookup(id, by_name=False)
+
+    def _lookup(self, ident: str, by_name: bool = True) -> "Collection":
+        """Collection by name (when ``by_name``), else by UUID, from ONE
+        catalog state read — the server's record routes address by id,
+        its collection routes by name."""
         prefix = f"{self.tenant}/{self.database}/"
-        colls = self.catalog._load()[0]["collections"]  # one state read, not N
+        colls = self.catalog._load()[0]["collections"]
+        if by_name and prefix + ident in colls:
+            return Collection(self, prefix + ident)
         for scoped_name, meta in colls.items():
-            if scoped_name.startswith(prefix) and meta["id"] == str(id):
+            if scoped_name.startswith(prefix) and meta["id"] == str(ident):
                 return Collection(self, scoped_name)
-        raise CollectionError(f"collection with id {id!r} does not exist")
+        what = "collection" if by_name else "collection with id"
+        raise CollectionError(f"{what} {ident!r} does not exist")
 
     def get_or_create_collection(self, name: str, **kw) -> "Collection":
         return self.create_collection(name, get_or_create=True, **kw)
@@ -326,6 +337,61 @@ class Client:
         return out
 
 
+class _ReadView:
+    """One catalog state of a collection, resolved once per read call.
+
+    Everything a read needs (base, WAL tail, pending predicate deletes,
+    index descriptors) derives from the single ``meta`` the call read, so
+    base and log always belong to one committed state. Reading them from
+    two catalog reads would let a compaction commit in between and pair the
+    old base with the truncated log, silently dropping the tail's records.
+    Base and tail are read lazily, each at most once per call.
+
+    ``read_level`` mirrors the reference's ReadLevel
+    (``rust/types/src/execution/plan.rs:553``): ``index_only`` (base only),
+    ``index_and_wal`` (base ∪ full log tail), or ``index_and_bounded_wal``
+    (base ∪ log where ``seq_id <= log_bound``)."""
+
+    def __init__(
+        self,
+        store: CollectionStore,
+        meta: CollectionMeta,
+        read_level: str = "index_and_wal",
+        log_bound: int | None = None,
+    ) -> None:
+        if read_level == "index_and_bounded_wal" and log_bound is None:
+            raise ValueError("index_and_bounded_wal requires log_bound")
+        self._store = store
+        self.meta = meta
+        self.read_level = read_level
+        self._log_bound = log_bound
+
+    @cached_property
+    def base(self) -> DataFrame | None:
+        return self._store.read_base(self.meta)
+
+    @cached_property
+    def _tail(self) -> tuple[DataFrame | None, list[tuple]]:
+        log = self._store.read_log(self.meta) if self.read_level != "index_only" else None
+        if log is not None and self.read_level == "index_and_bounded_wal":
+            log = log.filter(F.col("seq_id") <= int(self._log_bound))
+        return Collection._split_where_ops(log)
+
+    @property
+    def log(self) -> DataFrame | None:
+        """The id-keyed tail (DELETE_WHERE records split off)."""
+        return self._tail[0]
+
+    @property
+    def where_ops(self) -> list[tuple]:
+        return self._tail[1]
+
+    @cached_property
+    def records(self) -> DataFrame | None:
+        """Materialized record state (None when empty)."""
+        return Collection._fold(self.base, self.log, self.where_ops)
+
+
 class Collection:
     def __init__(self, client: Client, name: str) -> None:
         self._client = client
@@ -348,16 +414,26 @@ class Collection:
         return Schema.from_dict(self._store.meta.schema)
 
     def modify(self, name: str | None = None, metadata: dict | None = None) -> None:
-        """Rename and/or replace collection metadata
-        (Collection.modify in the reference client)."""
+        """Rename and/or replace the user metadata of the collection
+        (Collection.modify in the reference client). Engine-owned keys
+        (``__``-prefixed: embedding functions, index descriptors,
+        tokenizer) survive the replacement; a user key with that prefix is
+        rejected."""
         self._client._enforce(
             Action.UPDATE_COLLECTION,
             collection_name=name,
             metadatas=[metadata] if metadata else None,
         )
         if metadata is not None:
+            reserved = sorted(str(k) for k in metadata if str(k).startswith("__"))
+            if reserved:
+                raise CollectionError(
+                    f"metadata keys starting with '__' are reserved for the engine: {reserved}"
+                )
+
             def _set(m):
-                m.metadata = dict(metadata)
+                engine = {k: v for k, v in m.metadata.items() if k.startswith("__")}
+                m.metadata = {**metadata, **engine}
 
             self._store.catalog.mutate(self._store.name, _set)
         if name is not None and name != self.name:
@@ -377,7 +453,9 @@ class Collection:
 
         self._store.catalog.mutate(self._store.name, _set)
 
-    def _validate_indexed(self, where, where_document, knn: bool = False, sparse: bool = False) -> None:
+    def _validate_indexed(
+        self, meta: CollectionMeta, where, where_document, knn: bool = False, sparse: bool = False
+    ) -> None:
         """Frontend filter gate: payload validation first (malformed
         operators/values reject BEFORE execution, even against an empty
         collection — the reference validates at the frontend), then the
@@ -386,7 +464,7 @@ class Collection:
         from .where import validate_payloads
 
         validate_payloads(where, where_document)
-        s = self.schema
+        s = Schema.from_dict(meta.schema)
         if s is None:
             return
         s.validate_where(where)
@@ -394,19 +472,21 @@ class Collection:
         if knn:
             s.validate_knn(sparse=sparse)
 
-    def _embedding_function(self):
-        cfg = self._store.meta.metadata.get("__embedding_function__")
+    @staticmethod
+    def _embedding_function(meta: CollectionMeta):
+        cfg = meta.metadata.get("__embedding_function__")
         if cfg is None:
             return None
         from .functions.embedding import get_embedding_function
 
         return get_embedding_function(cfg["name"], **cfg.get("kwargs", {}))
 
-    def _sparse_embedding_function(self, key: str | None = None):
+    @staticmethod
+    def _sparse_embedding_function(meta: CollectionMeta, key: str | None = None):
         """(ef, key) for the collection's configured sparse EF (SPLADE-style
         learned-sparse or BM25), or (None, None). With ``key`` given,
         returns the EF only if it is configured for that sparse column."""
-        cfg = self._store.meta.metadata.get("__sparse_embedding_function__")
+        cfg = meta.metadata.get("__sparse_embedding_function__")
         if cfg is None or (key is not None and cfg.get("key", "sparse") != key):
             return None, None
         from .functions.embedding import get_embedding_function
@@ -416,23 +496,23 @@ class Collection:
             cfg.get("key", "sparse"),
         )
 
-    def _auto_embed(self, embeddings, documents):
+    def _auto_embed(self, meta: CollectionMeta, embeddings, documents):
         """Client-side embedding of documents when the collection has an
         attached EF and no embeddings were passed (CollectionCommon
         _validate_and_prepare semantics)."""
         if embeddings is not None or documents is None:
             return embeddings
-        ef = self._embedding_function()
+        ef = self._embedding_function(meta)
         return ef(list(documents)) if ef is not None else None
 
-    def _auto_embed_sparse(self, documents, metadatas):
+    def _auto_embed_sparse(self, meta: CollectionMeta, documents, metadatas):
         """Sparse twin of :meth:`_auto_embed`: when the collection has a
         configured sparse EF (SPLADE wire provider / BM25), populate its
         sparse key in each record's metadata from the document — unless the
         caller already supplied that key. Only the MISSING rows are
         embedded (a wire EF pays one HTTP batch per ~256 docs; re-embedding
         already-supplied rows would multiply that for nothing)."""
-        sef, skey = self._sparse_embedding_function()
+        sef, skey = self._sparse_embedding_function(meta)
         if sef is None or documents is None:
             return metadatas
         missing = [
@@ -461,11 +541,10 @@ class Collection:
             Action.ADD, ids=ids, embeddings=embeddings, documents=documents,
             uris=uris, metadatas=metadatas,
         )
-        snap = self.snapshot()
+        meta = self._store.meta
+        snap = _ReadView(self._store, meta).records
         if snap is not None:
-            ids_df = self._client.spark.createDataFrame(
-                [(str(i),) for i in ids], "id STRING"
-            )
+            ids_df = local_frame(self._client.spark, [(str(i),) for i in ids], "id STRING")
             dup = [
                 r["id"]
                 for r in snap.select("id")
@@ -475,8 +554,7 @@ class Collection:
             ]
             if dup:
                 raise CollectionError(f"duplicate ids in add: {sorted(dup)}")
-        self._append("ADD", ids, self._auto_embed(embeddings, documents), documents, uris,
-                     self._auto_embed_sparse(documents, metadatas))
+        self._append("ADD", meta, ids, embeddings, documents, uris, metadatas)
 
     _BULK_META_TYPES = (
         T.BooleanType,
@@ -526,14 +604,14 @@ class Collection:
         meta = self._store.meta
         df = records.withColumn("id", F.col("id").cast("string"))
         if "embedding" not in df.columns and "document" in df.columns:
-            ef = self._embedding_function()
+            ef = self._embedding_function(meta)
             if ef is not None:
                 df = df.withColumn("embedding", ef.embed_column(F.col("document")).cast("array<float>"))
         if "embedding" in df.columns:
             df = df.withColumn("embedding", F.col("embedding").cast("array<float>"))
         from .sparse_vector import SPARSE_VECTOR_TYPE
 
-        sef, skey = self._sparse_embedding_function()
+        sef, skey = self._sparse_embedding_function(meta)
         if sef is not None and skey not in df.columns and "document" in df.columns:
             # sparse auto-embed: prefer the EF's DataFrame-level form (it
             # materializes shared intermediates as real columns — O(tokens)
@@ -593,7 +671,7 @@ class Collection:
                     "(pass order_by=<col> to resolve duplicates deterministically)"
                 )
         if op == "ADD":
-            snap = self.snapshot()
+            snap = _ReadView(self._store, meta).records
             if snap is not None:
                 dup = [
                     r["id"]
@@ -682,14 +760,16 @@ class Collection:
 
         if format not in ("jsonl", "json"):
             raise CollectionError("export_files supports format='jsonl'")
-        self._validate_indexed(where, where_document)
-        snap = self.snapshot()
+        meta = self._store.meta
+        self._validate_indexed(meta, where, where_document)
+        view = _ReadView(self._store, meta)
+        snap = view.records
         if snap is None:
             raise CollectionError("nothing to export: collection is empty")
         if where is not None:
             snap = snap.filter(where_to_column(where, known_keys=frozenset(snap.columns)))
         if where_document is not None:
-            cands = self._fts_candidates(where_document)
+            cands = self._fts_candidates(view, where_document)
             if cands is not None:
                 snap = snap.join(cands, "id", "semi")
             snap = snap.filter(where_doc_to_column(where_document))
@@ -745,16 +825,14 @@ class Collection:
             Action.UPDATE, ids=ids, embeddings=embeddings, documents=documents,
             uris=uris, metadatas=metadatas,
         )
-        self._append("UPDATE", ids, self._auto_embed(embeddings, documents), documents, uris,
-                     self._auto_embed_sparse(documents, metadatas))
+        self._append("UPDATE", self._store.meta, ids, embeddings, documents, uris, metadatas)
 
     def upsert(self, ids, embeddings=None, documents=None, uris=None, metadatas=None) -> None:
         self._client._enforce(
             Action.UPSERT, ids=ids, embeddings=embeddings, documents=documents,
             uris=uris, metadatas=metadatas,
         )
-        self._append("UPSERT", ids, self._auto_embed(embeddings, documents), documents, uris,
-                     self._auto_embed_sparse(documents, metadatas))
+        self._append("UPSERT", self._store.meta, ids, embeddings, documents, uris, metadatas)
 
     def delete(self, ids=None, where=None, where_document=None) -> None:
         """Delete by ids and/or predicates. A no-argument delete() raises —
@@ -771,7 +849,7 @@ class Collection:
             Action.DELETE, ids=ids, where=where, where_document=where_document
         )
         if where is None and where_document is None:
-            self._append("DELETE", ids, None, None, None, None)
+            self._append("DELETE", self._store.meta, ids, None, None, None, None)
             return
         self._append_delete_where(ids, where, where_document)
 
@@ -872,14 +950,15 @@ class Collection:
                 T.StructField("where_json", T.StringType()),
             ]
         )
-        df = self._client.spark.createDataFrame(
-            [(meta.log_position, "DELETE_WHERE", None, None, None, None, payload)], schema
+        df = local_frame(
+            self._client.spark,
+            [(meta.log_position, "DELETE_WHERE", None, None, None, None, payload)],
+            schema,
         )
         path = self._store.append_log(df)
         self._commit_log_append(path, base_pos=int(meta.log_position), max_seq=int(meta.log_position))
 
-    def _append(self, op, ids, embeddings, documents, uris, metadatas) -> None:
-        meta = self._store.meta
+    def _append(self, op, meta: CollectionMeta, ids, embeddings, documents, uris, metadatas) -> None:
         ids = [str(i) for i in ids]
         n = len(ids)
         cap = self._client.get_max_batch_size()
@@ -891,6 +970,8 @@ class Collection:
                 f"batch of {n} exceeds get_max_batch_size()={cap}; "
                 "use add_records(DataFrame) for bulk ingest"
             )
+        embeddings = self._auto_embed(meta, embeddings, documents)
+        metadatas = self._auto_embed_sparse(meta, documents, metadatas)
         if embeddings is not None:
             dims = {len(e) for e in embeddings if e is not None}
             if meta.dimension is None and dims:
@@ -991,15 +1072,15 @@ class Collection:
             m = _col(metadatas, i) or {}
             emb = _col(embeddings, i)
             rows.append(
-                {
-                    "seq_id": meta.log_position + i,
-                    "op": op,
-                    "id": ids[i],
-                    "embedding": [float(x) for x in emb] if emb is not None else None,
-                    "document": _col(documents, i),
-                    "uri": _col(uris, i),
-                    **{k: _coerce(m.get(k), t) for k, t in meta_keys.items()},
-                }
+                (
+                    meta.log_position + i,
+                    op,
+                    ids[i],
+                    [float(x) for x in emb] if emb is not None else None,
+                    _col(documents, i),
+                    _col(uris, i),
+                    *(_coerce(m.get(k), t) for k, t in meta_keys.items()),
+                )
             )
         fields = [
             T.StructField("seq_id", T.LongType()),
@@ -1018,7 +1099,7 @@ class Collection:
                 fields.append(T.StructField(k, _META_SPARK_TYPES[t]))
             else:
                 raise CollectionError(f"unsupported metadata type {t!r} for key {k!r}")
-        df = self._client.spark.createDataFrame(rows, T.StructType(fields))
+        df = local_frame(self._client.spark, rows, T.StructType(fields))
         path = self._store.append_log(df)
         self._commit_log_append(
             path,
@@ -1042,14 +1123,7 @@ class Collection:
         ``index_and_bounded_wal`` (base ∪ log where ``seq_id <= log_bound``
         — bounded-staleness reads; the frontend's log scouting picks the
         bound, ``service_based_frontend.rs:2833-2852``)."""
-        if read_level == "index_and_bounded_wal" and log_bound is None:
-            raise ValueError("index_and_bounded_wal requires log_bound")
-        base = self._store.read_base()
-        log = self._store.read_log() if read_level != "index_only" else None
-        if log is not None and read_level == "index_and_bounded_wal":
-            log = log.filter(F.col("seq_id") <= int(log_bound))
-        log, where_ops = self._split_where_ops(log)
-        return self._fold(base, log, where_ops)
+        return _ReadView(self._store, self._store.meta, read_level, log_bound).records
 
     @staticmethod
     def _split_where_ops(log: DataFrame | None) -> tuple[DataFrame | None, list[tuple]]:
@@ -1364,21 +1438,12 @@ class Collection:
         # path before this read — folded — or survives in the kept tail)
         meta = self._store.meta
         consumed_logs = list(meta.log_paths)
-        spark = self._client.spark
         # resolve attached functions (and their extra input collections'
         # snapshots) BEFORE any write: a missing/broken input fails the
         # compaction cleanly here instead of after the new base is on disk
         attached = [*self._attached_functions(), *(attached or [])]
-        base = (
-            spark.read.option("mergeSchema", "true").parquet(*meta.base_paths)
-            if meta.base_paths
-            else None
-        )
-        log_batch = (
-            spark.read.option("mergeSchema", "true").parquet(*consumed_logs)
-            if consumed_logs
-            else None
-        )
+        base = self._store.read_base(meta)
+        log_batch = self._store.read_log(meta)
         log, where_ops = self._split_where_ops(log_batch)
         snap = self._fold(base, log, where_ops)
         if snap is None:
@@ -1412,9 +1477,9 @@ class Collection:
             m.base_paths = [path]
             m.log_paths = [p for p in m.log_paths if p not in consumed]
 
-        self._store.catalog.mutate(self._store.name, _register)
+        registered = self._store.catalog.mutate(self._store.name, _register)
         if refresh_indexes:
-            base = self._store.read_base()
+            base = self._store.read_base(registered)
 
             def _has_rows(col_name: str) -> bool:
                 return (
@@ -1488,7 +1553,7 @@ class Collection:
             # refresh_indexes=False: this build IS the refresh
             self.compact(refresh_indexes=False)
         meta = self._store.meta
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         if base is None:
             raise CollectionError("cannot index an empty collection")
         records = base.filter(F.col("embedding").isNotNull()).select("id", "embedding")
@@ -1606,8 +1671,8 @@ class Collection:
             # would interleave two collections' independent epoch counters —
             # rebuild once into our own directory instead
             return _full()
-        base = self._store.read_base()
-        touched = self._touched_ids(log_batch, self._load_vector_index()[1].select("id"))
+        base = self._store.read_base(meta)
+        touched = self._touched_ids(meta, log_batch, self._load_vector_index(vi)[1].select("id"))
         n_touched = int(touched.count())
         if vi.get("n_appended", 0) + n_touched > self.REINDEX_FRACTION * max(
             1, vi.get("n_rows", 0)
@@ -1666,8 +1731,8 @@ class Collection:
 
         return encode_pq(assigned, self._pq_books(vi))
 
-    def _load_vector_index(self) -> tuple[DataFrame, DataFrame]:
-        """(centroids, live postings) for the registered vector index.
+    def _load_vector_index(self, vi: dict) -> tuple[DataFrame, DataFrame]:
+        """(centroids, live postings) for the vector index descriptor ``vi``.
 
         Epoch MVCC: keep rows with ``__epoch <= vi.version`` that are not
         superseded by a tombstone (``__epoch < dead_upto``). The tombstone
@@ -1680,7 +1745,6 @@ class Collection:
         from .layout import check_layout
 
         spark = self._client.spark
-        vi = self._store.meta.vector_index
         check_layout(vi["path"], "ivf")
         centroids = spark.read.parquet(_os.path.join(vi["path"], "centroids"))
         postings = spark.read.parquet(_os.path.join(vi["path"], "postings"))
@@ -1702,7 +1766,9 @@ class Collection:
                 )
         return centroids, postings
 
-    def _touched_ids(self, log_batch: DataFrame, live_ids: DataFrame) -> DataFrame:
+    def _touched_ids(
+        self, meta: CollectionMeta, log_batch: DataFrame, live_ids: DataFrame
+    ) -> DataFrame:
         """Ids whose index entries a compaction batch invalidates: the
         id-keyed log rows plus — under predicate deletes — previously-live
         ids absent from the new (folded) base."""
@@ -1710,7 +1776,7 @@ class Collection:
         if "where_json" in log_batch.columns and (
             log_batch.filter(F.col("op") == "DELETE_WHERE").head() is not None
         ):
-            base = self._store.read_base()
+            base = self._store.read_base(meta)
             gone = live_ids.distinct().join(base.select("id"), "id", "anti")
             touched = touched.unionByName(gone).distinct()
         return touched
@@ -1739,13 +1805,13 @@ class Collection:
         own_prefix = _os.path.join(self._store.catalog.root, self._store.name) + _os.sep
         if not si["path"].startswith(own_prefix):
             return _full()  # fork child diverging from a parent-owned layout
-        touched = self._touched_ids(log_batch, self._load_sparse_index(si).select("id"))
+        touched = self._touched_ids(meta, log_batch, self._load_sparse_index(si).select("id"))
         n_touched = int(touched.count())
         if si.get("n_appended", 0) + n_touched > self.REINDEX_FRACTION * max(
             1, si.get("n_docs", 0)
         ):
             return _full()
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         if n_touched:
             touched.withColumn("epoch", F.lit(meta.version).cast("long")).write.mode(
                 "append"
@@ -1829,7 +1895,7 @@ class Collection:
             # refresh_indexes=False: this build IS the refresh
             self.compact(refresh_indexes=False)
         meta = self._store.meta
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         if base is None or key not in base.columns:
             raise CollectionError(f"no SparseVector column {key!r} to index")
         postings = explode_postings(
@@ -1885,7 +1951,7 @@ class Collection:
         walk(rank)
         return out
 
-    def _fresh_sparse_indexes(self, read_level: str, keys: set[str] | None = None) -> dict:
+    def _fresh_sparse_indexes(self, view: _ReadView, keys: set[str] | None = None) -> dict:
         """Fresh per-key sparse indexes as RankEvaluator specs, with
         WAL-tail postings merged in: index entries for touched ids are
         anti-joined away and the live tail records' postings unioned (the
@@ -1897,23 +1963,20 @@ class Collection:
         restricts the work to the sparse columns a payload queries."""
         from .operators.sparse import explode_postings
 
-        meta = self._store.meta
+        meta = view.meta
         if not meta.sparse_indexes:
             return {}
         if keys is not None and not (keys & set(meta.sparse_indexes)):
             return {}
-        log = self._store.read_log() if read_level != "index_only" else None
-        log, where_ops = self._split_where_ops(log)
+        log, where_ops = view.log, view.where_ops
         out: dict = {}
         touched: DataFrame | None = None
         if log is not None:
             touched = log.select("id").distinct()
-            if where_ops:
-                base = self._store.read_base()
-                if base is not None:
-                    touched = touched.unionByName(
-                        self._predicate_matched_ids(base, where_ops)
-                    ).distinct()
+            if where_ops and view.base is not None:
+                touched = touched.unionByName(
+                    self._predicate_matched_ids(view.base, where_ops)
+                ).distinct()
         for key, si in meta.sparse_indexes.items():
             if keys is not None and key not in keys:
                 continue
@@ -1921,7 +1984,7 @@ class Collection:
                 continue
             postings = self._load_sparse_index(si)
             if touched is not None:
-                base = self._store.read_base()
+                base = view.base
                 base_t = base.join(touched, "id", "semi") if base is not None else None
                 tail = self._fold(base_t, log, where_ops)
                 live = postings.join(touched, "id", "anti")
@@ -1955,7 +2018,7 @@ class Collection:
         if self._store.meta.log_paths:
             self.compact(refresh_indexes=False)
         meta = self._store.meta
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         if base is None or text_col not in base.columns:
             raise CollectionError(f"no text column {text_col!r} to index")
         records = base.filter(F.col(text_col).isNotNull()).select(
@@ -2047,7 +2110,7 @@ class Collection:
         desc = meta.metadata.get("__dedup_index__")
         if desc is None or desc["version"] == meta.version:
             return
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         text_col = desc["text_col"]
         if base is None or text_col not in base.columns:
             self._store.catalog.mutate(
@@ -2126,16 +2189,17 @@ class Collection:
         text is hydrated only for candidate ids."""
         from .operators.dedup import minhash_incremental_pairs
 
-        desc = self._store.meta.metadata.get("__dedup_index__")
+        meta = self._store.meta
+        desc = meta.metadata.get("__dedup_index__")
         if desc is None:
             raise CollectionError("no dedup index; call build_dedup_index() first")
-        if desc["version"] != self._store.meta.version or self._store.meta.log_paths:
+        if desc["version"] != meta.version or meta.log_paths:
             raise CollectionError(
                 "dedup index is stale (WAL tail pending or version "
-                f"{desc['version']} != {self._store.meta.version}); compact() refreshes it"
+                f"{desc['version']} != {meta.version}); compact() refreshes it"
             )
         bands_df = self._load_dedup_bands(desc).drop("fp")
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         corpus = base.select("id", F.col(desc["text_col"]).alias("document"))
         batch = new_docs.select(
             F.col(id_col).alias("id"),
@@ -2165,14 +2229,15 @@ class Collection:
         collection version."""
         from .operators.dedup import semdedup_from_postings
 
-        vi = self._store.meta.vector_index
+        meta = self._store.meta
+        vi = meta.vector_index
         if vi is None:
             raise CollectionError("no vector index; call build_vector_index() first")
-        if self._store.meta.log_paths:
+        if meta.log_paths:
             raise CollectionError(
                 "vector index is stale (WAL tail pending); compact() refreshes it"
             )
-        centroids, postings = self._load_vector_index()
+        centroids, postings = self._load_vector_index(vi)
         return semdedup_from_postings(
             postings.select("centroid_id", "id", "embedding"),
             centroids.select("centroid_id", "centroid"),
@@ -2256,7 +2321,7 @@ class Collection:
         if self._store.meta.log_paths:
             self.compact(refresh_indexes=False)
         meta = self._store.meta
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         if base is None or text_col not in base.columns:
             raise CollectionError(f"no text column {text_col!r} to index")
         records = base.filter(F.col(text_col).isNotNull()).select(
@@ -2334,7 +2399,7 @@ class Collection:
         desc = meta.metadata.get("__fts_index__")
         if desc is None or desc["version"] == meta.version:
             return
-        base = self._store.read_base()
+        base = self._store.read_base(meta)
         text_col = desc["text_col"]
         if base is None or text_col not in base.columns:
             self._store.catalog.mutate(
@@ -2384,7 +2449,7 @@ class Collection:
             lambda m: m.metadata.__setitem__("__fts_index__", new_desc),
         )
 
-    def _fts_candidates(self, where_document: dict) -> DataFrame | None:
+    def _fts_candidates(self, view: _ReadView, where_document: dict) -> DataFrame | None:
         """Index-served candidate ids for a document filter, or None when
         the index can't help (absent, stale, or no positive >= 3-char
         literal in the tree). The candidate set is a SOUND superset of the
@@ -2392,8 +2457,8 @@ class Collection:
         re-checked exactly; the exact predicate always verifies."""
         from .operators.fts import contains_candidates, required_needles
 
-        desc = self._store.meta.metadata.get("__fts_index__")
-        if desc is None or desc["version"] != self._store.meta.version:
+        desc = view.meta.metadata.get("__fts_index__")
+        if desc is None or desc["version"] != view.meta.version:
             return None
         needles = required_needles(where_document)
         if not needles:
@@ -2401,9 +2466,8 @@ class Collection:
         cands = contains_candidates(
             self._load_fts_live(desc, "postings"), needles, int(desc["n_buckets"])
         )
-        log = self._store.read_log()
-        if log is not None:
-            cands = cands.unionByName(log.select("id").distinct()).distinct()
+        if view.log is not None:
+            cands = cands.unionByName(view.log.select("id").distinct()).distinct()
         return cands
 
     def snapshot_at(self, version: int) -> DataFrame:
@@ -2572,7 +2636,7 @@ class Collection:
         ``num_unindexed_ops`` = WAL-tail ops a query at INDEX_ONLY would
         miss. One bounded count job over the tail paths."""
         meta = self._store.meta
-        log = self._store.read_log()
+        log = self._store.read_log(meta)
         unindexed = 0 if log is None else log.count()
         total = int(meta.log_position)
         indexed = max(0, total - unindexed)
@@ -2640,8 +2704,9 @@ class Collection:
         # validate the filter payloads BEFORE creating the destination so a
         # rejected where/where_document leaves no side effects (no leaked
         # empty collection)
-        self._validate_indexed(where, where_document)
-        snap = self.snapshot()
+        self._validate_indexed(meta, where, where_document)
+        view = _ReadView(self._store, meta)
+        snap = view.records
         dst = dst_client.create_collection(
             name,
             dimension=meta.dimension,
@@ -2654,7 +2719,7 @@ class Collection:
         if where is not None:
             snap = snap.filter(where_to_column(where, known_keys=frozenset(snap.columns)))
         if where_document is not None:
-            cands = self._fts_candidates(where_document)
+            cands = self._fts_candidates(view, where_document)
             if cands is not None:
                 snap = snap.join(cands, "id", "semi")
             snap = snap.filter(where_doc_to_column(where_document))
@@ -2689,8 +2754,10 @@ class Collection:
             Action.GET, query_ids=ids, where=where, where_document=where_document,
             limit=limit,
         )
-        self._validate_indexed(where, where_document)
-        snap = self.snapshot(read_level)
+        meta = self._store.meta
+        self._validate_indexed(meta, where, where_document)
+        view = _ReadView(self._store, meta, read_level)
+        snap = view.records
         if snap is None:
             return []
         if ids is not None:
@@ -2698,7 +2765,7 @@ class Collection:
         if where is not None:
             snap = snap.filter(where_to_column(where, known_keys=frozenset(snap.columns)))
         if where_document is not None:
-            cands = self._fts_candidates(where_document)
+            cands = self._fts_candidates(view, where_document)
             if cands is not None:
                 # index-served prefilter: exact predicate verifies the
                 # (sound superset) candidates only — no full-text scan
@@ -2759,10 +2826,13 @@ class Collection:
             Action.QUERY, query_embeddings=query_embeddings, query_ids=ids,
             where=where, where_document=where_document, n_results=n_results,
         )
+        # one catalog read serves the whole call: EF, schema gate, snapshot,
+        # index descriptors and the selectivity-cache key all describe it
+        meta = self._store.meta
         if query_embeddings is None:
             if query_texts is None:
                 raise CollectionError("one of query_embeddings / query_texts is required")
-            ef = self._embedding_function()
+            ef = self._embedding_function(meta)
             if ef is None:
                 raise CollectionError("query_texts requires an attached embedding function")
             query_embeddings = ef(list(query_texts))
@@ -2776,13 +2846,9 @@ class Collection:
         empty: dict[str, list] = {"ids": [[] for _ in range(nq)]}
         for f in include:
             empty[f] = [[] for _ in range(nq)]
-        self._validate_indexed(where, where_document, knn=True)
-        # state identity captured adjacent to the snapshot read: the
-        # selectivity-cache key must describe the state `allowed` is
-        # counted over, not a later re-read (a concurrent commit between
-        # the two would cache a stale count under the new state's key)
-        meta0 = self._store.meta
-        snap = self.snapshot(read_level)
+        self._validate_indexed(meta, where, where_document, knn=True)
+        view = _ReadView(self._store, meta, read_level)
+        snap = view.records
         if snap is None:
             return empty
         filtered = snap
@@ -2793,12 +2859,13 @@ class Collection:
                 where_to_column(where, known_keys=frozenset(filtered.columns))
             )
         if where_document is not None:
-            cands = self._fts_candidates(where_document)
+            cands = self._fts_candidates(view, where_document)
             if cands is not None:
                 filtered = filtered.join(cands, "id", "semi")
             filtered = filtered.filter(where_doc_to_column(where_document))
         spark = self._client.spark
-        qdf = spark.createDataFrame(
+        qdf = local_frame(
+            spark,
             [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
             "query_id INT, embedding ARRAY<FLOAT>",
         )
@@ -2812,16 +2879,16 @@ class Collection:
             predicate_fp = _json.dumps(
                 [sorted(str(i) for i in ids) if ids is not None else None,
                  where, where_document, read_level,
-                 meta0.version, meta0.log_position],
+                 meta.version, meta.log_position],
                 sort_keys=True, default=str,
             )
         top = self._query_via_index(
-            qdf, n_results, nprobe, read_level,
+            view, qdf, n_results, nprobe,
             allowed=filtered.select("id") if has_filters else None,
             predicate_fp=predicate_fp,
         )
         if top is None:
-            top = exact_knn(filtered, qdf, k=n_results, space=self._store.meta.space)
+            top = exact_knn(filtered, qdf, k=n_results, space=meta.space)
         snap = filtered
         need_payload = bool(set(include) - {"distances"})
         if need_payload:
@@ -2852,33 +2919,33 @@ class Collection:
                 out["metadatas"][q].append(md or None)
         return out
 
-    def _embed_rank_queries(self, rank):
+    def _embed_rank_queries(self, meta: CollectionMeta, rank):
         """String $knn queries embed client-side with the collection's
         attached embedding function (Collection.py:447-449 embeds text Knn
         queries before the search payload ships)."""
         if isinstance(rank, list):
-            return [self._embed_rank_queries(e) for e in rank]
+            return [self._embed_rank_queries(meta, e) for e in rank]
         if not isinstance(rank, dict):
             return rank
         out = {}
         for op, arg in rank.items():
             if op == "$knn" and isinstance(arg, dict) and isinstance(arg.get("query"), str):
-                ef = self._embedding_function()
+                ef = self._embedding_function(meta)
                 if ef is None:
                     raise CollectionError(
                         "string $knn query requires an attached embedding function"
                     )
                 out[op] = {**arg, "query": [float(x) for x in ef([arg["query"]])[0]]}
             else:
-                out[op] = self._embed_rank_queries(arg)
+                out[op] = self._embed_rank_queries(meta, arg)
         return out
 
     def _query_via_index(
         self,
+        view: _ReadView,
         qdf: DataFrame,
         k: int,
         nprobe: int | None,
-        read_level: str,
         allowed: DataFrame | None,
         predicate_fp: str | None = None,
     ) -> DataFrame | None:
@@ -2891,18 +2958,17 @@ class Collection:
         vectorized against base (one pushdown-able filter scan) — those ids
         join the excluded set and the bounded tail fold, which replays the
         predicate at its seq position for the touched groups."""
-        meta = self._store.meta
+        meta = view.meta
         vi = meta.vector_index
         if vi is None or vi.get("version") != meta.version:
             return None
-        if read_level not in ("index_only", "index_and_wal"):
+        if view.read_level not in ("index_only", "index_and_wal"):
             return None
         from .ann.ivf import ivf_search
         from .operators.knn import knn_merge
 
-        log = self._store.read_log() if read_level != "index_only" else None
-        log, where_ops = self._split_where_ops(log)
-        centroids, postings = self._load_vector_index()
+        log, where_ops = view.log, view.where_ops
+        centroids, postings = self._load_vector_index(vi)
         probes = int(nprobe or vi["n_lists"])
         if allowed is not None and nprobe is not None and vi.get("n_rows"):
             # filter-before-ANN thins every probed list by the filter's
@@ -2917,10 +2983,10 @@ class Collection:
             cache_key = None
             if predicate_fp is not None:
                 # memoized per (collection, predicate fingerprint) — the
-                # fingerprint embeds the (version, log_position) captured
-                # adjacent to the snapshot `allowed` derives from, so the
-                # cached count always describes the state it was counted
-                # over; a query loop re-issuing the same filter pays ONE job
+                # fingerprint embeds the (version, log_position) of the
+                # view `allowed` derives from, so the cached count always
+                # describes the state it was counted over; a query loop
+                # re-issuing the same filter pays ONE job
                 cache = getattr(self._client, "_selectivity_cache", None)
                 if cache is None:
                     cache = {}
@@ -2938,7 +3004,7 @@ class Collection:
                 probes = max(probes, min(int(vi["n_lists"]), _math.ceil(probes / sel)))
         touched = log.select("id").distinct() if log is not None else None
         if where_ops:
-            matched = self._predicate_matched_ids(self._store.read_base(), where_ops)
+            matched = self._predicate_matched_ids(view.base, where_ops)
             touched = matched if touched is None else touched.unionByName(matched).distinct()
         if vi.get("means") is not None:
             from .ann.quantize import ivf_quantized_search
@@ -3001,7 +3067,7 @@ class Collection:
         # WAL tail: materialize ONLY the touched id-groups (base semi-join),
         # brute-force them, then merge the two top-k streams; pending
         # predicate deletes replay inside the bounded fold
-        base = self._store.read_base()
+        base = view.base
         base_t = base.join(touched, "id", "semi") if base is not None else None
         tail = self._fold(base_t, log, where_ops)
         tail = tail.filter(F.col("embedding").isNotNull())
@@ -3052,16 +3118,18 @@ class Collection:
         ceiling."""
         self._client._enforce(Action.QUERY, n_results=n_results, where=where,
                               where_document=where_document)
-        self._validate_indexed(where, where_document, knn=True)
+        meta = self._store.meta
+        self._validate_indexed(meta, where, where_document, knn=True)
+        view = _ReadView(self._store, meta, read_level)
         qdf = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).alias("embedding"),
         )
         allowed = None
         if where is not None or where_document is not None:
-            snap_f = self.snapshot(read_level)
+            snap_f = view.records
             if snap_f is None:
-                return qdf.sparkSession.createDataFrame([], self._knn_out_schema(qdf))
+                return local_frame(qdf.sparkSession, [], self._knn_out_schema(qdf))
             if where is not None:
                 snap_f = snap_f.filter(
                     where_to_column(where, known_keys=frozenset(snap_f.columns))
@@ -3069,15 +3137,15 @@ class Collection:
             if where_document is not None:
                 snap_f = snap_f.filter(where_doc_to_column(where_document))
             allowed = snap_f.select("id")
-        via_index = self._query_via_index(qdf, n_results, nprobe, read_level, allowed)
+        via_index = self._query_via_index(view, qdf, n_results, nprobe, allowed)
         if via_index is not None:
             return via_index
-        snap = self.snapshot(read_level)
+        snap = view.records
         if snap is None:
-            return qdf.sparkSession.createDataFrame([], self._knn_out_schema(qdf))
+            return local_frame(qdf.sparkSession, [], self._knn_out_schema(qdf))
         cand = snap.join(allowed, "id", "semi") if allowed is not None else snap
         cand = cand.filter(F.col("embedding").isNotNull())
-        return exact_knn(cand, qdf, k=n_results, space=self._store.meta.space)
+        return exact_knn(cand, qdf, k=n_results, space=meta.space)
 
     def sparse_query_batch(
         self,
@@ -3104,8 +3172,8 @@ class Collection:
         from the snapshot. ``prune_buckets`` controls the driver-side
         distinct-term collect that turns the batch vocabulary into
         partition filters: ``"auto"`` (default) prunes only when the batch
-        holds <= ``prune_threshold`` queries (checked with a bounded
-        ``limit().count()``, never a full count) — a huge batch's
+        holds <= ``prune_threshold`` queries (one bounded ``limit()``
+        collect of the query term lists, never a full count) — a huge batch's
         vocabulary approaches the whole term space, so the collect would
         cost an unbounded driver round-trip to prune nothing. ``True`` /
         ``False`` force either side. Scale note: query postings are the
@@ -3118,10 +3186,12 @@ class Collection:
         from .operators.sparse import _dot_topk, explode_postings, sparse_index_topk
 
         self._client._enforce(Action.QUERY, n_results=n_results)
+        meta = self._store.meta
+        view = _ReadView(self._store, meta, read_level)
         if query_text_col is not None:
             if query_vec_col is not None:
                 raise CollectionError("pass query_vec_col or query_text_col, not both")
-            sef, _skey = self._sparse_embedding_function(key)
+            sef, _skey = self._sparse_embedding_function(meta, key)
             if sef is None:
                 raise CollectionError(
                     f"query_text_col requires a sparse embedding function "
@@ -3136,12 +3206,20 @@ class Collection:
                 F.col(query_id_col).alias("query_id"),
                 F.col(query_vec_col or key).alias("__q"),
             )
-        specs = self._fresh_sparse_indexes(read_level, keys={key})
+        specs = self._fresh_sparse_indexes(view, keys={key})
         if key in specs:
             postings, n_buckets, n_docs = specs[key]
+            every_bucket = list(range(n_buckets))
+            query_indices = None if prune_buckets else every_bucket
             if prune_buckets == "auto":
-                prune_buckets = (
-                    qdf.limit(prune_threshold + 1).count() <= prune_threshold
+                # one bounded probe (<= prune_threshold + 1 query rows reach
+                # the driver): a small batch's vocabulary comes from it
+                # directly, with no separate distinct-terms job
+                probe = qdf.select("__q.indices").limit(prune_threshold + 1).collect()
+                query_indices = (
+                    sorted({int(i) for r in probe for i in r[0] or ()})
+                    if len(probe) <= prune_threshold
+                    else every_bucket
                 )
             return sparse_index_topk(
                 postings,
@@ -3151,11 +3229,12 @@ class Collection:
                 sparse_col="__q",
                 idf=idf,
                 n_docs=n_docs,
-                query_indices=None if prune_buckets else list(range(n_buckets)),
+                query_indices=query_indices,
             )
-        snap = self.snapshot(read_level)
+        snap = view.records
         if snap is None or key not in snap.columns:
-            return qdf.sparkSession.createDataFrame(
+            return local_frame(
+                qdf.sparkSession,
                 [],
                 T.StructType(
                     [
@@ -3238,12 +3317,14 @@ class Collection:
             if isinstance(payload.get("limit"), dict)
             else payload.get("limit"),
         )
-        self._validate_indexed(payload.get("where"), payload.get("where_document"))
+        meta = self._store.meta
+        self._validate_indexed(meta, payload.get("where"), payload.get("where_document"))
         payload = dict(payload)
         if payload.get("rank") is not None:
-            payload["rank"] = self._embed_rank_queries(payload["rank"])
+            payload["rank"] = self._embed_rank_queries(meta, payload["rank"])
         rank_keys = self._rank_knn_keys(payload.get("rank"))
-        snap = self.snapshot(read_level)
+        view = _ReadView(self._store, meta, read_level)
+        snap = view.records
         if snap is None:
             # reference semantics: an empty collection yields an empty
             # SearchResult, not an error — run the pipeline over an empty
@@ -3267,17 +3348,17 @@ class Collection:
                             key, SPARSE_VECTOR_TYPE if is_sparse else T.ArrayType(T.FloatType())
                         )
                     )
-            snap = self._client.spark.createDataFrame([], T.StructType(fields))
+            snap = local_frame(self._client.spark, [], T.StructType(fields))
         sparse_keys = {k for k, s in rank_keys.items() if s}
         wd = payload.get("where_document")
         return search_op(
             snap,
-            default_space=self._store.meta.space,
+            default_space=meta.space,
             offset_col="offset_id" if "offset_id" in snap.columns else None,
-            sparse_index=self._fresh_sparse_indexes(read_level, keys=sparse_keys)
+            sparse_index=self._fresh_sparse_indexes(view, keys=sparse_keys)
             if sparse_keys
             else {},
-            doc_candidates=self._fts_candidates(wd) if wd is not None else None,
+            doc_candidates=self._fts_candidates(view, wd) if wd is not None else None,
             **payload,
         )
 
@@ -3404,9 +3485,9 @@ class CollectionTransaction:
             probe = sorted(write_ids | self._read_ids)
             if probe:
                 spark = self._coll._client.spark
-                tail = store.read_log().filter(F.col("seq_id") >= self._begin_pos).select("id")
-                ids_df = spark.createDataFrame(
-                    [(i, i in write_ids) for i in probe], "id STRING, is_write BOOLEAN"
+                tail = store.read_log(meta).filter(F.col("seq_id") >= self._begin_pos).select("id")
+                ids_df = local_frame(
+                    spark, [(i, i in write_ids) for i in probe], "id STRING, is_write BOOLEAN"
                 )
                 hits = (
                     tail.join(F.broadcast(ids_df), "id")

@@ -57,6 +57,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.distance import ROUND_DECIMALS
 from .knn import exact_knn
 
@@ -270,15 +271,15 @@ class RankEvaluator:
                     (i, [float(x) for x in t.get("query")], s)
                     for i, (_, t, s) in enumerate(keyed)
                 ]
-                qdf = spark.createDataFrame(
-                    qrows, "query_id INT, embedding ARRAY<FLOAT>, space STRING"
+                qdf = local_frame(
+                    spark, qrows, "query_id INT, embedding ARRAY<FLOAT>, space STRING"
                 )
                 space = list(space)
             else:
                 qrows = [
                     (i, [float(x) for x in t.get("query")]) for i, (_, t, _) in enumerate(keyed)
                 ]
-                qdf = spark.createDataFrame(qrows, "query_id INT, embedding ARRAY<FLOAT>")
+                qdf = local_frame(spark, qrows, "query_id INT, embedding ARRAY<FLOAT>")
             keyed = [(k_, t) for k_, t, _ in keyed]
             kmax = max(int(t.get("limit", 16)) for _, t in keyed)
             top = self.knn_fn(
@@ -374,7 +375,8 @@ class RankEvaluator:
             )
             for i, (_, t) in enumerate(keyed)
         ]
-        qdf = spark.createDataFrame(
+        qdf = local_frame(
+            spark,
             qrows,
             f"query_id INT, {sparse_col} STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>",
         )

@@ -52,7 +52,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..frames import local_frame
 from ..functions.text import md5_long, md5_long_sql
 
 # md5_long is 60 bits: hashes normalize to [0, 1) by this constant
@@ -260,8 +262,12 @@ def kmv_distinct_filtered(
 
     for _ in range(max_rounds):
         if groups:
-            thr_df = spark.createDataFrame(
-                [(*g, t) for g, t in thr.items()], [*groups, "__thr"]
+            thr_df = local_frame(
+                spark,
+                [(*g, t) for g, t in thr.items()],
+                T.StructType(
+                    [hashed.schema[g] for g in groups] + [T.StructField("__thr", T.LongType())]
+                ),
             )
             cand = (
                 hashed.join(F.broadcast(thr_df), groups)

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.text import tokens, tokens_sql
 from .topk import topk_per_group
 
@@ -110,7 +111,7 @@ def bm25_topk(
         .groupBy("id", "dl", "term")
         .agg(F.count("*").alias("tf"))
     )
-    qterms = spark.createDataFrame([(t,) for t in query_terms], "term STRING")
+    qterms = local_frame(spark, [(t,) for t in query_terms], "term STRING")
     dfreq = (
         toks.select(F.explode(F.array_distinct("toks")).alias("term"))
         .groupBy("term")
@@ -404,7 +405,7 @@ def bm25_index_topk(
     spark = indexed_tf.sparkSession
     buckets = sorted({_py_term_bucket(t, n_buckets) for t in query_terms})
     pruned = indexed_tf.filter(F.col("bucket").isin(buckets)).drop("bucket")
-    qdf = F.broadcast(spark.createDataFrame([(t,) for t in set(query_terms)], "term STRING"))
+    qdf = F.broadcast(local_frame(spark, [(t,) for t in set(query_terms)], "term STRING"))
     joined = pruned.join(qdf, "term")
     w = Window.partitionBy("term")
     joined = joined.withColumn("__df", F.count("*").over(w).cast("double"))

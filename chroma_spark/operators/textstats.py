@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.text import (
     BPE_TOKEN_RE,
     md5_long,
@@ -758,8 +759,8 @@ def pack_sequences(
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += totals[pid]
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid INT, __off LONG"
+    off_df = local_frame(
+        spark, [(pid, off) for pid, off in offsets.items()], "__pid INT, __off LONG"
     )
     w = Window.partitionBy("__pid").orderBy("id")
     cum_before = (F.col("__off") + F.sum("n_tokens").over(w) - F.col("n_tokens")).alias(

@@ -23,6 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .frames import local_frame
+
 TABLES = (
     "region",
     "nation",
@@ -833,7 +835,8 @@ def sparse_dot_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sparse import sparse_index_topk
 
     qv = [_sparse_qvec(spark, sf_dir, 0), _sparse_qvec(spark, sf_dir, 1)]
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(i, (q["indices"], q["values"])) for i, q in enumerate(qv)],
         "query_id INT, sparse STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>",
     )
@@ -1367,7 +1370,8 @@ def _register_span_c4_balance() -> None:
 
     def _balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = _emb_records(spark, sf_dir).select("id", "embedding")
-        id_map = spark.createDataFrame(
+        id_map = local_frame(
+            spark,
             [(i, v) for i, v in enumerate(sorted(_FIXED_CENTROID_IDS))],
             "centroid_id INT, cid_src BIGINT",
         )
@@ -2015,7 +2019,8 @@ def ann_ivf_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.topk import topk_per_group
 
     emb = _emb_records(spark, sf_dir).select("id", "embedding")
-    id_map = spark.createDataFrame(
+    id_map = local_frame(
+        spark,
         [(i, v) for i, v in enumerate(sorted(_FIXED_CENTROID_IDS))],
         "centroid_id INT, cid_src BIGINT",
     )
@@ -2118,7 +2123,8 @@ def _register_semdedup() -> None:
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = _emb_records(spark, sf_dir).select("id", "embedding")
-        id_map = spark.createDataFrame(
+        id_map = local_frame(
+            spark,
             [(i, v) for i, v in enumerate(sorted(_FIXED_CENTROID_IDS))],
             "centroid_id INT, cid_src BIGINT",
         )
@@ -2554,13 +2560,15 @@ def doc_contains_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/fts.py; reference `rust/index/src/fulltext/types.rs`):
     candidates from a partition-pruned posting lookup, exact contains
     verifying candidates only — same rows as the full scan (the oracle)."""
+    from .api import _ReadView
     from .where import where_doc_to_column
 
     wd = {"$contains": "spark table"}
     col = _fts_collection(spark, sf_dir)
-    cands = col._fts_candidates(wd)
+    view = _ReadView(col._store, col._store.meta)
+    cands = col._fts_candidates(view, wd)
     assert cands is not None, "fts index must be fresh for this query"
-    snap = col.snapshot("index_and_wal")
+    snap = view.records
     return (
         snap.join(cands, "id", "semi")
         .filter(where_doc_to_column(wd))

@@ -138,19 +138,6 @@ def create_app(
             )
         return clients[key]
 
-    def resolve(client: Client, ident: str):
-        """Collection by name, else by uuid (record routes pass the id)."""
-        try:
-            return client.get_collection(ident)
-        except CollectionError:
-            prefix = f"{client.tenant}/{client.database}/"
-            for scoped_name in client.catalog.list():
-                if not scoped_name.startswith(prefix):
-                    continue
-                if client.catalog.get(scoped_name).id == ident:
-                    return client.get_collection(scoped_name[len(prefix):])
-            raise CollectionError(f"collection {ident!r} does not exist")
-
     @app.errorhandler(CollectionError)
     def _collection_error(e):
         msg = str(e)
@@ -292,7 +279,7 @@ def create_app(
     @app.get(f"{base}/collections/<ident>")
     def get_collection(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         return jsonify(_collection_model(c, col.name))
 
     @app.get(f"{base}/collections/by-id/<cid>")
@@ -305,20 +292,20 @@ def create_app(
     @app.get(f"{base}/collections/<ident>/fork_count")
     def fork_count(tenant, database, ident):
         # reference route: rust/frontend/src/server.rs:336-337
-        col = resolve(scoped(tenant, database), ident)
+        col = scoped(tenant, database)._lookup(ident)
         return jsonify({"count": col.fork_count()})
 
     @app.get(f"{base}/collections/<ident>/indexing_status")
     def indexing_status(tenant, database, ident):
         # reference route: rust/frontend/src/server.rs:360-361
-        col = resolve(scoped(tenant, database), ident)
+        col = scoped(tenant, database)._lookup(ident)
         return jsonify(col.get_indexing_status())
 
     @app.post(f"{base}/collections/<ident>/functions/attach")
     def attach_function(tenant, database, ident):
         # reference route: rust/frontend/src/server.rs:384-386; function_id
         # maps to the engine's kind registry (streaming/functions.py)
-        col = resolve(scoped(tenant, database), ident)
+        col = scoped(tenant, database)._lookup(ident)
         body = request.get_json(force=True)
         if not body.get("name"):
             raise ValueError("attach_function requires 'name'")
@@ -333,7 +320,7 @@ def create_app(
     @app.post(f"{base}/collections/<ident>/attached_functions/<name>/detach")
     def detach_function(tenant, database, ident, name):
         # reference route: rust/frontend/src/server.rs:396-398
-        col = resolve(scoped(tenant, database), ident)
+        col = scoped(tenant, database)._lookup(ident)
         body = request.get_json(silent=True) or {}
         return jsonify(col.detach_function(name, delete_output=bool(body.get("delete_output"))))
 
@@ -343,7 +330,7 @@ def create_app(
     @app.get(f"{base}/collections/<ident>/functions/<name>")
     @app.get(f"{base}/collections/<ident>/attached_functions/<name>")
     def get_attached_function(tenant, database, ident, name):
-        col = resolve(scoped(tenant, database), ident)
+        col = scoped(tenant, database)._lookup(ident)
         return jsonify({"attached_function": col.get_attached_function(name)})
 
     @app.post(f"{base}/collections/<ident>/attached_functions/<name>/add_input")
@@ -351,17 +338,17 @@ def create_app(
         # reference route: rust/frontend/src/server.rs:392-395; the body's
         # new input may be a name or a uuid (resolved like record routes)
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         raw = body.get("new_input_collection_id") or body["new_input_collection"]
-        new_input = resolve(c, raw).name.rsplit("/", 1)[-1]
+        new_input = c._lookup(raw).name.rsplit("/", 1)[-1]
         spec, created = col.add_attached_function_input(name, new_input)
         return jsonify({"attached_function": spec, "created": created})
 
     @app.put(f"{base}/collections/<ident>")
     def update_collection(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         col.modify(name=body.get("new_name"), metadata=body.get("new_metadata"))
         return jsonify(None)
@@ -369,14 +356,14 @@ def create_app(
     @app.delete(f"{base}/collections/<ident>")
     def delete_collection(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         c.delete_collection(col.name)
         return jsonify(None)
 
     @app.post(f"{base}/collections/<ident>/fork")
     def fork_collection(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         new = request.get_json(force=True)["new_name"]
         col.fork(new)
         return jsonify(_collection_model(c, new))
@@ -384,7 +371,7 @@ def create_app(
     # -- records -----------------------------------------------------------
     def _record_op(tenant, database, ident, op):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         kw = {
             "ids": body["ids"],
@@ -411,7 +398,7 @@ def create_app(
     @app.post(f"{base}/collections/<ident>/get")
     def get_records(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         include = body.get("include") or ["metadatas", "documents"]
         rows = col.get(
@@ -427,7 +414,7 @@ def create_app(
     @app.post(f"{base}/collections/<ident>/delete")
     def delete_records(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         col.delete(
             ids=body.get("ids"),
@@ -439,7 +426,7 @@ def create_app(
     @app.get(f"{base}/collections/<ident>/count")
     def count_records(tenant, database, ident):
         c = scoped(tenant, database)
-        return jsonify(resolve(c, ident).count())
+        return jsonify(c._lookup(ident).count())
 
     @app.post(f"{base}/collections/<ident>/search")
     def search_records(tenant, database, ident):
@@ -447,7 +434,7 @@ def create_app(
         ``searches`` (api_types.rs:2493: column-major ids/documents/
         embeddings/metadatas/scores + the echoed select keys)."""
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         levels = {"IndexAndWal": "index_and_wal", "IndexOnly": "index_only"}
         rl = body.get("read_level") or "index_and_wal"
@@ -483,7 +470,7 @@ def create_app(
     @app.post(f"{base}/collections/<ident>/query")
     def query_records(tenant, database, ident):
         c = scoped(tenant, database)
-        col = resolve(c, ident)
+        col = c._lookup(ident)
         body = request.get_json(force=True)
         include = body.get("include") or ["metadatas", "documents", "distances"]
         res = col.query(

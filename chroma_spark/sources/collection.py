@@ -456,14 +456,16 @@ class CollectionStore:
         df.write.mode("error").parquet(path)
         return path
 
-    def read_log(self) -> DataFrame | None:
-        paths = self.meta.log_paths
-        if not paths:
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+    # reads take the caller's meta rather than re-reading the catalog: base
+    # and log of one call must come from ONE catalog state, or a compaction
+    # committing between two reads pairs the old base with the truncated log
+    def read_log(self, meta: CollectionMeta) -> DataFrame | None:
+        return self._read_parts(meta.log_paths)
 
-    def read_base(self) -> DataFrame | None:
-        paths = self.meta.base_paths
+    def read_base(self, meta: CollectionMeta) -> DataFrame | None:
+        return self._read_parts(meta.base_paths)
+
+    def _read_parts(self, paths: list[str]) -> DataFrame | None:
         if not paths:
             return None
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)

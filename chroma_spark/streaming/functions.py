@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions.text import sql_lit
 
 
@@ -213,12 +214,9 @@ def make_attached_function(name: str, kind: str, _input_states=None, **params):
             rank_of: dict[str, int] = {}
             for i, (a, b) in enumerate(merges):
                 rank_of.setdefault(a + b, i + 1)
-            ranks = state.sparkSession.createDataFrame(
-                list(rank_of.items()) or [("", 0)],
-                "symbol STRING, merge_rank INT",
+            ranks = local_frame(
+                state.sparkSession, list(rank_of.items()), "symbol STRING, merge_rank INT"
             )
-            if not rank_of:
-                ranks = ranks.filter(F.lit(False))
             return freqs.join(F.broadcast(ranks), "symbol", "left").select(
                 "symbol", "freq", "merge_rank"
             )

@@ -7,8 +7,13 @@ from __future__ import annotations
 
 import pytest
 
-from chroma_spark.api import Client
+from chroma_spark.api import Client, _ReadView
 from chroma_spark.sources.collection import CollectionError, StaleReadError
+
+
+def _view(col):
+    """The collection's current catalog state as one read view."""
+    return _ReadView(col._store, col._store.meta)
 
 
 @pytest.fixture()
@@ -224,7 +229,7 @@ def test_query_knn_and_read_levels(client):
     col.add(ids=["f"], embeddings=[[0.8, 0, 0, 0]])
     full = col.snapshot("index_and_wal")
     tail_seqs = sorted(
-        r["seq_id"] for r in col._store.read_log().select("seq_id").collect()
+        r["seq_id"] for r in col._store.read_log(col._store.meta).select("seq_id").collect()
     )
     bounded = col.snapshot("index_and_bounded_wal", log_bound=tail_seqs[0])
     assert bounded.count() == 4  # "e" visible, "f" (later seq) not
@@ -233,6 +238,39 @@ def test_query_knn_and_read_levels(client):
 
     with _pytest.raises(ValueError):
         col.snapshot("index_and_bounded_wal")
+
+
+@pytest.mark.parametrize("read", ["query", "search"])
+def test_read_is_not_torn_by_a_concurrent_compaction(client, monkeypatch, read):
+    """A compaction that commits while a read resolves its state must not
+    tear it. Compaction leaves the logical state unchanged, so a read that
+    takes base and WAL tail from one catalog state returns the same ids
+    either way; pairing the old base with the truncated log would drop the
+    uncompacted insert."""
+    from chroma_spark.sources.collection import CollectionStore
+
+    col = client.create_collection(f"torn_{read}", dimension=2, space="l2")
+    col.add(ids=["a", "b", "c"], embeddings=[[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]])
+    col.build_vector_index(n_lists=1)
+    col.add(ids=["new"], embeddings=[[0.9, 0.1]])  # uncompacted insert
+    read_base = CollectionStore.read_base
+    compacted: dict = {}
+
+    def read_base_then_compact(store, *args, **kwargs):
+        df = read_base(store, *args, **kwargs)
+        if not compacted:  # once: the compaction's own reads pass through
+            compacted["version"] = None
+            compacted["version"] = client.get_collection(col.name).compact()
+        return df
+
+    monkeypatch.setattr(CollectionStore, "read_base", read_base_then_compact)
+    if read == "query":
+        ids = col.query([[1.0, 0.0]], n_results=4)["ids"][0]
+    else:
+        rank = {"$knn": {"query": [1.0, 0.0], "limit": 4}}
+        ids = [r["id"] for r in col.search(rank=rank, select=["#id"]).collect()]
+    assert compacted == {"version": 2}, "the compaction must commit inside the read"
+    assert sorted(ids) == ["a", "b", "c", "new"]
 
 
 def test_compact_then_same_results(client):
@@ -334,6 +372,32 @@ def test_modify_rename_and_metadata(client):
     assert col.count() == 3
     with pytest.raises(CollectionError):
         client.get_collection("orig")
+
+
+def test_modify_metadata_keeps_engine_keys(client):
+    """modify(metadata=...) replaces the USER metadata only: the embedding
+    function and the FTS index descriptor survive, so later document adds
+    still embed and document filters stay index-served; a user key in the
+    engine's ``__`` namespace is rejected."""
+    col = client.create_collection(
+        "modef", embedding_function="hashing", embedding_function_kwargs={"dim": 16}
+    )
+    col.add(ids=["a", "b"], documents=["quick brown fox", "lazy dog sleeps"])
+    col.build_fts_index()
+    col.modify(metadata={"purpose": "test"})
+    md = col._store.meta.metadata
+    assert md["purpose"] == "test"
+    assert "__embedding_function__" in md and "__fts_index__" in md
+    col.add(ids=["c"], documents=["quick red fox"])
+    (got,) = col.get(ids=["c"], include=["embeddings"])
+    assert got["embedding"] is not None and len(got["embedding"]) == 16
+    wd = {"$contains": "quick"}
+    assert col._fts_candidates(_view(col), wd) is not None
+    assert sorted(r["id"] for r in col.get(where_document=wd)) == ["a", "c"]
+    with pytest.raises(CollectionError, match="reserved"):
+        col.modify(metadata={"purpose": "x", "__fts_index__": None})
+    md = col._store.meta.metadata
+    assert md["purpose"] == "test" and md["__fts_index__"] is not None
 
 
 def test_modify_rename_clash_rejected(client):
@@ -618,7 +682,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
         [(0, [float(x) for x in embs[5]])], "query_id INT, embedding ARRAY<FLOAT>"
     )
     # the index path engages (nprobe defaults to all lists -> exact)
-    assert col._query_via_index(qdf, 3, None, "index_and_wal", None) is not None
+    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
     res = col.query(q, n_results=3)
     assert res["ids"][0][0] == "r5" and res["distances"][0][0] == 0.0
 
@@ -639,15 +703,15 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     # pending predicate delete: the index stays engaged (matched ids are
     # computed vectorized against base and excluded; no wholesale fallback)
     col.delete(where={"never_there": {"$eq": 1}})
-    assert col._query_via_index(qdf, 3, None, "index_and_wal", None) is not None
+    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
 
     # compaction without refresh leaves the index stale -> exact fallback
     col.compact(refresh_indexes=False)
-    assert col._query_via_index(qdf, 3, None, "index_and_wal", None) is None
+    assert col._query_via_index(_view(col), qdf, 3, None, None) is None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
     col.build_vector_index(n_lists=3)
-    assert col._query_via_index(qdf, 3, None, "index_and_wal", None) is not None
+    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
 
     # default compact() refreshes the registered index for the new version
@@ -655,7 +719,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     col.add(ids=["new2"], embeddings=[[0.1, 0.1, 0.1, 0.1]])
     col.compact()
     assert col._store.meta.vector_index["version"] == col.version
-    assert col._query_via_index(qdf, 3, None, "index_and_wal", None) is not None
+    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
 
 
 def test_fork_inherits_vector_index(client, spark):
@@ -665,7 +729,7 @@ def test_fork_inherits_vector_index(client, spark):
     fork = col.fork("vchild")
     qdf = spark.createDataFrame([(0, [1.0, 0.0])], "query_id INT, embedding ARRAY<FLOAT>")
     # the child serves from the parent's index files (zero-copy)
-    assert fork._query_via_index(qdf, 2, None, "index_and_wal", None) is not None
+    assert fork._query_via_index(_view(fork), qdf, 2, None, None) is not None
     assert fork.query([[1.0, 0]], n_results=1)["ids"][0] == ["a"]
     # divergent child writes merge through the tail; parent untouched
     fork.add(ids=["z"], embeddings=[[1.0, 0.0]])
@@ -689,7 +753,7 @@ def test_compaction_maintains_index_incrementally(client, spark):
     col.add(ids=ids, embeddings=embs)
     vi = col.build_vector_index(n_lists=4)
     trained = vi["trained_version"]
-    cents0 = sorted(tuple(r.centroid) for r in col._load_vector_index()[0].collect())
+    cents0 = sorted(tuple(r.centroid) for r in col._load_vector_index(col._store.meta.vector_index)[0].collect())
 
     col.add(ids=["n1"], embeddings=[[2.0, 2, 2, 2]])
     col.update(ids=["r3"], embeddings=[[3.0, 3, 3, 3]])
@@ -698,18 +762,18 @@ def test_compaction_maintains_index_incrementally(client, spark):
     vi2 = col._store.meta.vector_index
     assert vi2["trained_version"] == trained, "small delta must not retrain"
     assert vi2["version"] == col.version and vi2["n_appended"] == 3
-    cents1 = sorted(tuple(r.centroid) for r in col._load_vector_index()[0].collect())
+    cents1 = sorted(tuple(r.centroid) for r in col._load_vector_index(col._store.meta.vector_index)[0].collect())
     assert cents1 == cents0, "centroid table must be untouched by the delta"
 
     # live postings reflect the delta: n1 present, r4 gone, r3 moved
-    live = {r.id for r in col._load_vector_index()[1].select("id").distinct().collect()}
+    live = {r.id for r in col._load_vector_index(col._store.meta.vector_index)[1].select("id").distinct().collect()}
     assert "n1" in live and "r4" not in live and "r3" in live
 
     # with no WAL tail, the index-served query must equal exact brute force
     # (nprobe defaults to every list)
     assert col._store.meta.log_paths == []
     qdf = spark.createDataFrame([(0, [2.0, 2.0, 2.0, 2.0])], "query_id INT, embedding ARRAY<FLOAT>")
-    assert col._query_via_index(qdf, 5, None, "index_and_wal", None) is not None
+    assert col._query_via_index(_view(col), qdf, 5, None, None) is not None
     got = col.query([[2.0, 2, 2, 2]], n_results=5)["ids"][0]
     exact = exact_knn(col.snapshot().filter("embedding is not null"), qdf, k=5, space="l2")
     assert got == [r.id for r in exact.orderBy("rank").collect()]
@@ -834,7 +898,7 @@ def test_pq_index_lifecycle_and_incremental_maintenance(client):
     assert col.query([[2.0] * 8], n_results=1)["ids"][0] == ["zz"]
     assert col.query([embs[7]], n_results=1)["ids"][0] == ["p7"]
     # appended delta rows carry pq codes (encoded with trained books)
-    postings = col._load_vector_index()[1]
+    postings = col._load_vector_index(col._store.meta.vector_index)[1]
     assert postings.filter("pq_code is null").count() == 0
 
     # dim not divisible by 8 -> clean refusal
@@ -877,7 +941,7 @@ def test_incremental_maintenance_soak_many_cycles(client, spark):
         assert got == [r.id for r in exact.orderBy("rank").collect()], f"cycle {cycle}"
         assert got[0] == victim
         # exactly one live posting per id despite 5 generations of appends
-        live = col._load_vector_index()[1].groupBy("id").count()
+        live = col._load_vector_index(col._store.meta.vector_index)[1].groupBy("id").count()
         over = live.filter(F_col_count_gt(2)).collect()  # replicas=2 per id max
         assert over == [], over
 
@@ -993,9 +1057,9 @@ def test_no_arg_delete_raises(client):
 
 def test_predicate_delete_stores_predicate_not_expansion(client):
     col = _mk(client)
-    n_log_rows_before = col._store.read_log().count()
+    n_log_rows_before = col._store.read_log(col._store.meta).count()
     col.delete(where={"k": {"$gte": 2}})
-    log = col._store.read_log()
+    log = col._store.read_log(col._store.meta)
     # exactly ONE new log record, carrying the predicate
     assert log.count() == n_log_rows_before + 1
     assert log.filter(log.op == "DELETE_WHERE").count() == 1
@@ -1162,7 +1226,7 @@ def test_filtered_sparse_idf_consistent_inline_vs_indexed(client):
     # still served (matched ids excluded via the bounded tail fold) and a
     # nothing-matching predicate leaves scores identical
     col.delete(where={"never": {"$eq": 1}})
-    assert col._fresh_sparse_indexes("index_and_wal", keys={"sv"}) != {}
+    assert col._fresh_sparse_indexes(_view(col), keys={"sv"}) != {}
     tolerated = {
         r["id"]: r["score"]
         for r in col.search(where={"grp": {"$eq": "x"}}, rank=rank, select=["#id"]).collect()
@@ -1188,9 +1252,9 @@ def test_index_reads_tolerate_matching_predicate_deletes(client, spark):
     col.delete(where={"grp": {"$eq": "x"}})  # matches r1,r3,r5,r7,r9 — pending
 
     qdf = spark.createDataFrame([(0, [2.0, 8.0])], "query_id INT, embedding ARRAY<FLOAT>")
-    assert col._query_via_index(qdf, 4, None, "index_and_wal", None) is not None
+    assert col._query_via_index(_view(col), qdf, 4, None, None) is not None
     got_vec = col.query([[2.0, 8.0]], n_results=4)["ids"][0]
-    assert col._fresh_sparse_indexes("index_and_wal", keys={"sv"}) != {}
+    assert col._fresh_sparse_indexes(_view(col), keys={"sv"}) != {}
     rank = {"$knn": {"query": {"indices": [1], "values": [1.0]}, "key": "sv", "limit": 5}}
     got_sparse = [r["id"] for r in col.search(rank=rank, select=["#id"]).collect()]
 
@@ -1343,7 +1407,7 @@ def test_sparse_query_batch_inline_and_indexed(client):
 
     # adaptive default: a batch over the threshold skips the vocabulary
     # collect (scans all buckets) yet returns identical results; the
-    # threshold probe itself is a bounded limit().count(), not a full count
+    # threshold probe itself is a bounded limit() collect, not a full count
     auto_big = got(
         col.sparse_query_batch(qdf, key="sv", n_results=3, idf=False, prune_threshold=1)
     )

@@ -121,7 +121,7 @@ def test_concurrent_add_compact_fork_gc_two_processes(spark, tmp_path, commit_ba
     assert ids == expected  # nothing lost, nothing duplicated
 
     # WAL seq ranges never overlapped: distinct seq per surviving log row
-    log = col._store.read_log()
+    log = col._store.read_log(col._store.meta)
     if log is not None:
         seqs = [r["seq_id"] for r in log.select("seq_id").collect()]
         assert len(seqs) == len(set(seqs))
@@ -193,7 +193,7 @@ def test_two_hot_writers_never_overlap_seqs(spark, tmp_path, commit_backend_env)
     col = Client(spark, root).get_collection("mphot")
     ids = sorted(r["id"] for r in col.get(include=[]))
     assert ids == sorted([f"p{i}" for i in range(n_iter)] + [f"q{i}" for i in range(n_iter)])
-    log = col._store.read_log()
+    log = col._store.read_log(col._store.meta)
     seqs = [r["seq_id"] for r in log.select("seq_id").collect()]
     assert len(seqs) == len(set(seqs)) == 2 * n_iter
     # the committed cursor sits past every seq (re-based fragments advance it)

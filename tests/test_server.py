@@ -308,6 +308,21 @@ def test_server_embedding_function_config(http):
         f"{BASE}/collections/{cid}/get", json={"include": ["embeddings"]}
     ).get_json()
     assert all(len(e) == 8 for e in got["embeddings"])
+    # PUT new_metadata replaces the user metadata only: the EF config
+    # survives, and engine-reserved keys are a 400
+    assert http.put(
+        f"{BASE}/collections/efcol", json={"new_metadata": {"team": "y"}}
+    ).status_code == 200
+    assert http.get(f"{BASE}/collections/efcol").get_json()["metadata"] == {"team": "y"}
+    bad = http.put(
+        f"{BASE}/collections/efcol", json={"new_metadata": {"__embedding_function__": {}}}
+    )
+    assert bad.status_code == 400 and "reserved" in bad.get_json()["message"]
+    http.post(f"{BASE}/collections/{cid}/add", json={"ids": ["z"], "documents": ["new text"]})
+    got = http.post(
+        f"{BASE}/collections/{cid}/get", json={"ids": ["z"], "include": ["embeddings"]}
+    ).get_json()
+    assert len(got["embeddings"][0]) == 8
 
 
 def test_concurrent_http_requests(spark, tmp_path):
