@@ -258,14 +258,6 @@ def _assign_arrow(
     return records.mapInPandas(assign, out_schema)
 
 
-def append_ivf_postings(postings: DataFrame, path: str) -> None:
-    """Append a delta batch into an existing partitioned layout — new files
-    land inside the per-list directories, so partition pruning keeps working
-    and nothing existing is rewritten (the LSM-ish append SPANN's posting
-    lists do; readers version-filter via the ``__epoch`` column)."""
-    postings.write.mode("append").partitionBy("centroid_id").parquet(f"{path}/postings")
-
-
 def write_ivf(centroids: DataFrame, postings: DataFrame, path: str) -> None:
     """Persist the index: postings PARTITIONED BY centroid_id (one prunable
     directory per posting list — SPANN's posting-list files), centroids as a

@@ -39,6 +39,17 @@ from .where import where_doc_to_column, where_to_column
 
 _META_SPARK_TYPES = {bool: T.BooleanType(), int: T.LongType(), float: T.DoubleType(), str: T.StringType()}
 
+# index kind -> (layout stamp kind, epoch-stamped posting sub-layout, its
+# partition column). Descriptors live in ``CollectionMeta.indexes`` keyed
+# "vector", "sparse:<key>", "dedup" and "fts"; layout.py holds the one
+# epoch/tombstone mechanism all four share.
+_INDEX_SPECS = {
+    "vector": ("ivf", "postings", "centroid_id"),
+    "sparse": ("sparse", "postings", "bucket"),
+    "dedup": ("dedup", "bands", "band"),
+    "fts": ("fts", "postings", "bucket"),
+}
+
 
 class _LogCursorMoved(Exception):
     """Internal: a WAL-append CAS found the log cursor advanced by another
@@ -230,12 +241,12 @@ class Client:
             )
             + 1,
         )
-        md = dict(metadata or {})
+        config: dict[str, Any] = {}
         if embedding_function is not None:
             from .functions.embedding import get_embedding_function
 
             get_embedding_function(embedding_function, **(embedding_function_kwargs or {}))  # validate
-            md["__embedding_function__"] = {
+            config["embedding_function"] = {
                 "name": embedding_function,
                 "kwargs": embedding_function_kwargs or {},
             }
@@ -245,7 +256,7 @@ class Client:
             get_embedding_function(
                 sparse_embedding_function, **(sparse_embedding_function_kwargs or {})
             )  # validate the name/kwargs before persisting
-            md["__sparse_embedding_function__"] = {
+            config["sparse_embedding_function"] = {
                 "name": sparse_embedding_function,
                 "kwargs": sparse_embedding_function_kwargs or {},
                 "key": sparse_embedding_key,
@@ -255,8 +266,9 @@ class Client:
             id=uuid.uuid4().hex,
             dimension=dimension,
             space=space,
-            metadata=md,
+            metadata=dict(metadata or {}),
             schema=schema.to_dict() if schema is not None else None,
+            config=config,
         )
         self.catalog.create(meta, get_or_create=get_or_create)
         return Collection(self, self._scoped(name))
@@ -300,9 +312,7 @@ class Client:
             for scoped_name, meta in state["collections"].items():
                 if not scoped_name.startswith(prefix):
                     continue
-                for fn_name, spec in (meta.get("metadata") or {}).get(
-                    "__functions__", {}
-                ).items():
+                for fn_name, spec in meta["config"].get("functions", {}).items():
                     if name in spec.get("inputs", []):
                         raise CollectionError(
                             f"collection {name!r} is an input of attached function "
@@ -415,10 +425,9 @@ class Collection:
 
     def modify(self, name: str | None = None, metadata: dict | None = None) -> None:
         """Rename and/or replace the user metadata of the collection
-        (Collection.modify in the reference client). Engine-owned keys
-        (``__``-prefixed: embedding functions, index descriptors,
-        tokenizer) survive the replacement; a user key with that prefix is
-        rejected."""
+        (Collection.modify in the reference client). Engine state lives in
+        typed catalog fields, so the replacement cannot touch it; keys with
+        the ``__`` prefix stay reserved and are rejected."""
         self._client._enforce(
             Action.UPDATE_COLLECTION,
             collection_name=name,
@@ -431,11 +440,9 @@ class Collection:
                     f"metadata keys starting with '__' are reserved for the engine: {reserved}"
                 )
 
-            def _set(m):
-                engine = {k: v for k, v in m.metadata.items() if k.startswith("__")}
-                m.metadata = {**metadata, **engine}
-
-            self._store.catalog.mutate(self._store.name, _set)
+            self._store.catalog.mutate(
+                self._store.name, lambda m: setattr(m, "metadata", dict(metadata))
+            )
         if name is not None and name != self.name:
             new_scoped = self._client._scoped(name)
             self._store.catalog.rename(
@@ -474,7 +481,7 @@ class Collection:
 
     @staticmethod
     def _embedding_function(meta: CollectionMeta):
-        cfg = meta.metadata.get("__embedding_function__")
+        cfg = meta.config.get("embedding_function")
         if cfg is None:
             return None
         from .functions.embedding import get_embedding_function
@@ -486,7 +493,7 @@ class Collection:
         """(ef, key) for the collection's configured sparse EF (SPLADE-style
         learned-sparse or BM25), or (None, None). With ``key`` given,
         returns the EF only if it is configured for that sparse column."""
-        cfg = meta.metadata.get("__sparse_embedding_function__")
+        cfg = meta.config.get("sparse_embedding_function")
         if cfg is None or (key is not None and cfg.get("key", "sparse") != key):
             return None, None
         from .functions.embedding import get_embedding_function
@@ -1237,7 +1244,7 @@ class Collection:
                     raise CollectionError(
                         f"group_col {group_col!r} is not a column of input {other!r}"
                     )
-        fns = dict(self._store.meta.metadata.get("__functions__", {}))
+        fns = self.list_functions()
         created = name not in fns
         self._client._enforce(
             Action.ATTACH_FUNCTION,
@@ -1249,9 +1256,7 @@ class Collection:
             spec["inputs"] = list(inputs)
 
         def _set(m):
-            cur = dict(m.metadata.get("__functions__", {}))
-            cur[name] = spec
-            m.metadata["__functions__"] = cur
+            m.config["functions"] = {**m.config.get("functions", {}), name: spec}
 
         self._store.catalog.mutate(self._store.name, _set)
         return {"name": name, **spec}, created
@@ -1285,7 +1290,7 @@ class Collection:
         out: dict = {}
 
         def _add(m):
-            fns = dict(m.metadata.get("__functions__", {}))
+            fns = dict(m.config.get("functions", {}))
             if name not in fns:
                 raise CollectionError(f"attached function {name!r} does not exist")
             spec = dict(fns[name])
@@ -1294,7 +1299,7 @@ class Collection:
             if out["created"]:
                 spec["inputs"] = [*cur, new_input]
                 fns[name] = spec
-                m.metadata["__functions__"] = fns
+                m.config["functions"] = fns
             out["spec"] = spec
 
         self._store.catalog.mutate(self._store.name, _add)
@@ -1307,11 +1312,11 @@ class Collection:
         Returns True on success, mirroring the reference."""
 
         def _del(m):
-            fns = dict(m.metadata.get("__functions__", {}))
+            fns = dict(m.config.get("functions", {}))
             if name not in fns:
                 raise CollectionError(f"attached function {name!r} does not exist")
             del fns[name]
-            m.metadata["__functions__"] = fns
+            m.config["functions"] = fns
 
         self._store.catalog.mutate(self._store.name, _del)
         if delete_output:
@@ -1323,13 +1328,13 @@ class Collection:
         return True
 
     def list_functions(self) -> dict[str, dict]:
-        return dict(self._store.meta.metadata.get("__functions__", {}))
+        return dict(self._store.meta.config.get("functions", {}))
 
-    def _attached_functions(self) -> list:
+    def _attached_functions(self, meta: CollectionMeta) -> list:
         from .streaming.functions import make_attached_function
 
         out = []
-        for n, spec in sorted(self.list_functions().items()):
+        for n, spec in sorted(meta.config.get("functions", {}).items()):
             # multi-input functions read the LATEST snapshot of each extra
             # input collection at run (compaction) time
             states = [
@@ -1359,7 +1364,7 @@ class Collection:
             version = max(versions)
         return self._client.spark.read.parquet(_os.path.join(base, f"v{version}"))
 
-    def compact(self, attached: list | None = None, refresh_indexes: bool = True) -> int:
+    def compact(self, attached: list | None = None) -> int:
         """Fold the WAL into a new base version; returns the new version.
 
         ``attached`` — AttachedFunction list (streaming/compactor.py) run
@@ -1368,10 +1373,10 @@ class Collection:
         output lands under the collection dir as the derived "output
         collection" (`fn_{name}/v{version}`).
 
-        ``refresh_indexes`` — when a vector index is registered, rebuild it
-        for the new version (the reference's compaction writes the vector
-        segment's index as part of the same flush, SURVEY §3.3), so index
-        reads never go stale across compactions.
+        Every registered index is flushed for the new version in the same
+        compaction (the reference's compaction writes each segment's index
+        as part of the flush, SURVEY §3.3), so index reads never go stale
+        across compactions; see :meth:`_maintain_indexes`.
 
         Single-compactor-per-collection: an advisory lockfile serializes
         compaction ACROSS PROCESSES (the reference assigns one compaction
@@ -1382,7 +1387,7 @@ class Collection:
         crashed owner's stale lock is taken over after LOCK_STALE_SECONDS.
         """
         with self._compaction_lock():
-            return self._compact_locked(attached, refresh_indexes)
+            return self._compact_locked(attached)
 
     LOCK_STALE_SECONDS = 600.0
 
@@ -1431,17 +1436,18 @@ class Collection:
 
         return _lock()
 
-    def _compact_locked(self, attached: list | None, refresh_indexes: bool) -> int:
-        # pin the fold's inputs ONCE: the fold, the attached functions, and
-        # the register below all see exactly these paths, so a concurrent
-        # writer's fragment is never half-included (it either commits its
-        # path before this read — folded — or survives in the kept tail)
+    def _compact_locked(self, attached: list | None) -> int:
+        # pin the fold's inputs ONCE: the fold, the attached functions, the
+        # register and the index maintenance below all derive from this one
+        # catalog state, so a concurrent writer's fragment is never
+        # half-included (it either commits its path before this read —
+        # folded — or survives in the kept tail)
         meta = self._store.meta
         consumed_logs = list(meta.log_paths)
         # resolve attached functions (and their extra input collections'
         # snapshots) BEFORE any write: a missing/broken input fails the
         # compaction cleanly here instead of after the new base is on disk
-        attached = [*self._attached_functions(), *(attached or [])]
+        attached = [*self._attached_functions(meta), *(attached or [])]
         base = self._store.read_base(meta)
         log_batch = self._store.read_log(meta)
         log, where_ops = self._split_where_ops(log_batch)
@@ -1478,48 +1484,214 @@ class Collection:
             m.log_paths = [p for p in m.log_paths if p not in consumed]
 
         registered = self._store.catalog.mutate(self._store.name, _register)
-        if refresh_indexes:
-            base = self._store.read_base(registered)
-
-            def _has_rows(col_name: str) -> bool:
-                return (
-                    base is not None
-                    and col_name in base.columns
-                    and base.filter(F.col(col_name).isNotNull()).head() is not None
-                )
-
-            vi = meta.vector_index
-            if vi is not None:
-                if _has_rows("embedding"):
-                    self._maintain_vector_index(log_batch)
-                else:
-                    # the collection emptied out (or lost every embedding):
-                    # deregister rather than crash the k-means build; a
-                    # later compaction with vectors re-registers via the
-                    # schema path or an explicit build
-                    self._store.catalog.mutate(
-                        self._store.name, lambda m: setattr(m, "vector_index", None)
-                    )
-            elif self.schema is not None:
-                # declarative indexing: an explicit vector_index config in
-                # the schema means "maintain the index at compaction" (the
-                # reference's compaction always writes the vector segment)
-                cfg = self.schema.index_config("vector_index", "#embedding") or {}
-                if cfg.get("n_lists") and _has_rows("embedding"):
-                    self.build_vector_index()
-            for key, si in list((meta.sparse_indexes or {}).items()):
-                if _has_rows(key):
-                    self._maintain_sparse_index(key, log_batch)
-                else:
-                    def _drop_si(m, key=key):
-                        m.sparse_indexes = {
-                            k: v for k, v in (m.sparse_indexes or {}).items() if k != key
-                        }
-
-                    self._store.catalog.mutate(self._store.name, _drop_si)
-            self._maintain_dedup_index()
-            self._maintain_fts_index()
+        self._maintain_indexes(registered, base, log, where_ops)
         return new_version
+
+    def _maintain_indexes(
+        self,
+        meta: CollectionMeta,
+        old_base: DataFrame | None,
+        log: DataFrame | None,
+        where_ops: list[tuple],
+    ) -> None:
+        """Flush every registered index for ``meta``, the state this
+        compaction just registered, under layout.py's append-or-rebuild
+        rule. One aggregate over the new base counts every index's docs;
+        the touched ids (the log's ids, plus — under predicate deletes —
+        old-base ids missing from the new base) are computed once for all
+        indexes; every new descriptor lands in one catalog commit. A
+        rebuild builds from the registered base (it never compacts again);
+        an index whose source column has no rows left is deregistered, and
+        a vector index the schema declares (``n_lists``) is built here once
+        vectors exist."""
+        import os as _os
+
+        from . import layout
+
+        wanted = dict(meta.indexes)
+        if "vector" not in wanted and self._schema_vector_config(meta).get("n_lists"):
+            wanted["vector"] = {}
+        if not wanted:
+            return
+        base = self._store.read_base(meta)
+        stats = self._index_stats(base, wanted)
+        own_dir = _os.path.join(self._store.catalog.root, self._store.name)
+        replaced = meta.version - 1
+        touched, n_touched = None, 0
+        if log is not None and any(
+            layout.can_append(d, own_dir, replaced, 0) for d in wanted.values() if d
+        ):
+            touched = log.select("id").distinct()
+            if where_ops and old_base is not None:
+                gone = old_base.select("id").join(base.select("id"), "id", "anti")
+                touched = touched.unionByName(gone).distinct()
+            n_touched = touched.count()
+        out: dict[str, dict | None] = {}
+        for name, desc in wanted.items():
+            if not stats[name]:
+                out[name] = None
+            elif desc and layout.can_append(desc, own_dir, replaced, n_touched):
+                if n_touched:
+                    _kind, sub, part = _INDEX_SPECS[name.split(":")[0]]
+                    layout.tombstone(desc, touched, meta.version)
+                    src = self._index_source(name, desc)
+                    todo = base.join(touched, "id", "semi").filter(F.col(src).isNotNull())
+                    layout.append(desc, sub, self._index_rows(name, desc, todo), meta.version, part)
+                out[name] = {
+                    **desc,
+                    "version": meta.version,
+                    "epoch": meta.version,
+                    "n_appended": int(desc.get("n_appended", 0)) + n_touched,
+                }
+            else:
+                out[name] = self._build_index(name, meta, base, desc)
+            if out[name] is not None:
+                out[name]["n_docs"] = stats[name]
+        self._set_indexes(out)
+
+    def _set_indexes(self, descs: dict[str, dict | None]) -> None:
+        """Register (or, for None, drop) index descriptors in one commit."""
+
+        def _set(m):
+            m.indexes = {k: v for k, v in {**m.indexes, **descs}.items() if v is not None}
+
+        self._store.catalog.mutate(self._store.name, _set)
+
+    @staticmethod
+    def _index_source(name: str, desc: dict) -> str:
+        """The base column index ``name`` is built from."""
+        if name == "vector":
+            return "embedding"
+        return name.split(":", 1)[1] if name.startswith("sparse:") else desc["text_col"]
+
+    def _index_stats(self, base: DataFrame | None, indexes: dict[str, dict]) -> dict[str, int]:
+        """Docs each index covers in ``base``, all in one aggregate: rows
+        with a non-null source value; for a sparse index, rows with at
+        least one posting (its IDF denominator — the same count the
+        unindexed scorer takes over its exploded postings)."""
+        exprs = {}
+        for name, desc in indexes.items():
+            src = self._index_source(name, desc)
+            if base is not None and src in base.columns:
+                has = F.col(src).isNotNull()
+                if name.startswith("sparse:"):
+                    has = F.size(F.col(src)["indices"]) > 0
+                exprs[name] = F.count(F.when(has, 1))
+        got = {}
+        if exprs:
+            row = base.agg(*(e.alias(f"n{i}") for i, e in enumerate(exprs.values()))).first()
+            got = dict(zip(exprs, row))
+        return {name: int(got.get(name, 0)) for name in indexes}
+
+    def _schema_vector_config(self, meta: CollectionMeta) -> dict:
+        schema = Schema.from_dict(meta.schema)
+        return (schema.index_config("vector_index", "#embedding") if schema else None) or {}
+
+    def _build_registered(self, name: str, **params) -> dict:
+        """The public build path: fold pending WAL entries first (a plain
+        compaction, which also maintains every other index), so the index
+        covers exactly one collection version; then build and register."""
+        meta = self._store.meta
+        if meta.log_paths:
+            self.compact()
+            meta = self._store.meta
+        base = self._store.read_base(meta)
+        desc = self._build_index(name, meta, base, params)
+        desc["n_docs"] = self._index_stats(base, {name: desc})[name]
+        self._set_indexes({name: desc})
+        return desc
+
+    def _build_index(self, name: str, meta: CollectionMeta, base: DataFrame | None, params: dict) -> dict:
+        """Build index ``name`` over ``base`` into a fresh layout dir and
+        return its descriptor (unregistered). ``params`` are the kind's
+        build parameters — on a rebuild, the replaced descriptor."""
+        if name == "vector":
+            return self._build_vector(meta, base, **params)
+        src = self._index_source(name, params)
+        if base is None or src not in base.columns:
+            raise CollectionError(f"no column {src!r} to index")
+        desc = self._new_index(name, meta, **params)
+        rows = self._index_rows(name, desc, base.filter(F.col(src).isNotNull()))
+        return self._write_index(name, desc, rows)
+
+    def _new_index(self, name: str, meta: CollectionMeta, **params) -> dict:
+        """Descriptor of a fresh, empty layout dir for ``name`` at
+        ``meta.version``."""
+        import os as _os
+        import shutil
+
+        path = _os.path.join(
+            self._store.catalog.root, self._store.name,
+            f"index_{name.replace(':', '_')}", f"v{meta.version}",
+        )
+        # builds append into the layout: a second build at the same version
+        # must not add to the first one's rows
+        shutil.rmtree(path, ignore_errors=True)
+        return {
+            **params,
+            "kind": _INDEX_SPECS[name.split(":")[0]][0],
+            "path": path,
+            "version": meta.version,
+            "epoch": meta.version,
+            "n_appended": 0,
+        }
+
+    def _write_index(self, name: str, desc: dict, rows: DataFrame) -> dict:
+        from . import layout
+
+        kind, sub, part = _INDEX_SPECS[name.split(":")[0]]
+        layout.append(desc, sub, rows, desc["version"], part)
+        layout.stamp_layout(desc["path"], kind)
+        return desc
+
+    def _index_rows(self, name: str, desc: dict, records: DataFrame) -> DataFrame:
+        """Posting rows of ``records`` (rows with a non-null source value)
+        under ``desc``'s parameters: a fresh build's rows and a maintenance
+        delta alike. Vector rows are assigned to the TRAINED centroids and
+        encoded with the trained quantizer (the initial build assigns and
+        encodes while training, in :meth:`_build_vector`)."""
+        import os as _os
+
+        kind = name.split(":")[0]
+        if kind == "sparse":
+            from .operators.sparse import explode_postings
+
+            return explode_postings(records, sparse_col=self._index_source(name, desc)).withColumn(
+                "bucket", (F.col("idx") % int(desc["n_buckets"])).cast("int")
+            )
+        if kind == "fts":
+            from .operators.fts import doc_trigram_postings
+
+            return doc_trigram_postings(records, int(desc["n_buckets"]), text_col=desc["text_col"])
+        if kind == "dedup":
+            from .operators.dedup import minhash_bands, minhash_signatures
+
+            text = F.col(desc["text_col"])
+            docs = records.select("id", text.alias("document"), F.md5(text).alias("fp"))
+            sigs = minhash_signatures(docs, desc["num_perm"], desc["n"], "document", "id")
+            return minhash_bands(
+                sigs, desc["bands"], desc["num_perm"] // desc["bands"], "id"
+            ).join(docs.select("id", "fp"), "id")
+        from .ann.ivf import assign_to_centroids
+
+        centroids = self._client.spark.read.parquet(_os.path.join(desc["path"], "centroids"))
+        rows = assign_to_centroids(
+            records.select("id", "embedding"), centroids,
+            replicas=int(desc.get("replicas", 2)), method="arrow",
+        )
+        if desc.get("quantized") == "sign":
+            from .ann.quantize import build_codes
+
+            rows, _ = build_codes(rows, means=[float(m) for m in desc["means"]])
+        elif desc.get("quantized") == "sq4":
+            from .ann.quantize import build_codes4
+
+            rows, _ = build_codes4(rows, ranges=(list(desc["sq4_lo"]), list(desc["sq4_step"])))
+        elif desc.get("quantized") == "pq":
+            from .ann.pq import encode_pq
+
+            rows = encode_pq(rows, self._pq_books(desc))
+        return rows
 
     def build_vector_index(
         self,
@@ -1545,21 +1717,33 @@ class Collection:
         codebooks (dim/8 subspaces, 256 codes each — m bytes/vector; LUT
         ADC prefilter; rerank_factor defaults to 8). PQ codebooks persist
         beside the layout (``pq_books.json``), not in the catalog."""
+        return self._build_registered(
+            "vector", n_lists=n_lists, replicas=replicas, quantized=quantized,
+            rerank_factor=rerank_factor,
+        )
+
+    def _build_vector(
+        self,
+        meta: CollectionMeta,
+        base: DataFrame | None,
+        n_lists: int | None = None,
+        replicas: int = 2,
+        quantized: bool | str | None = None,
+        rerank_factor: int | None = None,
+        **_,
+    ) -> dict:
+        """Train centroids (and the quantizer tier) and write the IVF
+        layout; the descriptor keeps what deltas need to append without
+        retraining: centroids on disk, ``means`` / ``sq4_lo``+``sq4_step``
+        / PQ books beside the layout."""
         import os as _os
 
-        from .ann.ivf import build_ivf, write_ivf
+        from .ann.ivf import build_ivf
 
-        if self._store.meta.log_paths:
-            # refresh_indexes=False: this build IS the refresh
-            self.compact(refresh_indexes=False)
-        meta = self._store.meta
-        base = self._store.read_base(meta)
         if base is None:
             raise CollectionError("cannot index an empty collection")
         records = base.filter(F.col("embedding").isNotNull()).select("id", "embedding")
-        cfg = {}
-        if self.schema is not None:
-            cfg = self.schema.index_config("vector_index", "#embedding") or {}
+        cfg = self._schema_vector_config(meta)
         n_lists = int(n_lists or cfg.get("n_lists", 16))
         if quantized is None:
             quantized = cfg.get("quantized", False)
@@ -1569,29 +1753,18 @@ class Collection:
             raise CollectionError(
                 f"unknown quantization tier {quantized!r}; use 'sign', 'sq4' or 'pq'"
             )
+        dim = int(meta.dimension or 0)
+        if quantized == "pq" and dim % 8 != 0:
+            raise CollectionError(f"pq tier needs dim divisible by 8, got {dim}")
+        desc = self._new_index(
+            "vector", meta, n_lists=n_lists, space=meta.space, trained_version=meta.version,
+            replicas=int(replicas), quantized=quantized,
+        )
         # bulk build: GEMM assignment (ivf._assign_arrow) — the expression
         # form is O(N * n_lists) interpreted array distances, hours at SIFT1M+
         centroids, postings = build_ivf(
             records, n_lists=n_lists, replicas=replicas, assign_method="arrow"
         )
-        path = _os.path.join(
-            self._store.catalog.root, self._store.name, "index_vector", f"v{meta.version}"
-        )
-        desc = {
-            "version": meta.version,
-            "path": path,
-            "n_lists": n_lists,
-            "space": meta.space,
-            # incremental-maintenance state: epoch stamps every posting row
-            # (readers filter `__epoch <= version`, so shared-layout forks
-            # stay consistent); trained_version/n_rows/n_appended drive the
-            # retrain-on-drift decision at compaction
-            "epoch": meta.version,
-            "trained_version": meta.version,
-            "replicas": int(replicas),
-            "n_rows": int(records.count()),
-            "n_appended": 0,
-        }
         if quantized == "sign":
             from .ann.quantize import build_codes
 
@@ -1610,112 +1783,17 @@ class Collection:
 
             from .ann.pq import encode_pq, train_pq
 
-            dim = len(records.select("embedding").first()["embedding"])
-            if dim % 8 != 0:
-                raise CollectionError(f"pq tier needs dim divisible by 8, got {dim}")
             books = train_pq(records, m=dim // 8, k_codes=256)
             postings = encode_pq(postings, books)
-            _os.makedirs(path, exist_ok=True)
-            with open(_os.path.join(path, "pq_books.json"), "w") as f:
+            _os.makedirs(desc["path"], exist_ok=True)
+            with open(_os.path.join(desc["path"], "pq_books.json"), "w") as f:
                 _json.dump(books, f)
             desc["pq"] = {"m": dim // 8, "k_codes": 256}
             desc["rerank_factor"] = int(rerank_factor or 8)
-        postings = postings.withColumn("__epoch", F.lit(meta.version).cast("long"))
-        write_ivf(centroids, postings, path)
-        self._store.catalog.mutate(
-            self._store.name, lambda m: setattr(m, "vector_index", desc)
+        centroids.coalesce(1).write.mode("overwrite").parquet(
+            _os.path.join(desc["path"], "centroids")
         )
-        return desc
-
-    # fraction of the trained corpus that may accumulate as tombstoned/
-    # appended deltas before compaction retrains k-means from scratch —
-    # SPANN's incremental-head discipline (types.rs splits/merges heads
-    # incrementally and reclusters only on imbalance)
-    REINDEX_FRACTION = 0.5
-
-    def _maintain_vector_index(self, log_batch: DataFrame | None) -> dict:
-        """Per-compaction index upkeep WITHOUT a full rebuild: reuse the
-        trained centroids, tombstone the batch's touched ids at the new
-        epoch, assign only the delta's vectors (old centroids, old
-        quantization pivot) and append them to the existing partitioned
-        layout. A 0.1% delta costs a delta-sized pass, not a corpus-sized
-        one. Retrains from scratch only when cumulative drift exceeds
-        ``REINDEX_FRACTION`` of the trained corpus (or no epoch-stamped
-        layout exists yet)."""
-        import os as _os
-
-        from .ann.ivf import append_ivf_postings, assign_to_centroids
-
-        meta = self._store.meta
-        vi = meta.vector_index
-
-        def _full() -> dict:
-            tier: bool | str = False
-            if vi is not None and vi.get("means") is not None:
-                tier = "sign"
-            elif vi is not None and vi.get("sq4_lo") is not None:
-                tier = "sq4"
-            elif vi is not None and vi.get("pq") is not None:
-                tier = "pq"
-            return self.build_vector_index(
-                n_lists=vi.get("n_lists") if vi else None,
-                quantized=tier,
-                rerank_factor=int(vi["rerank_factor"]) if vi and "rerank_factor" in vi else None,
-            )
-
-        if vi is None or vi.get("epoch") is None or log_batch is None:
-            return _full()
-        own_prefix = _os.path.join(self._store.catalog.root, self._store.name) + _os.sep
-        if not vi["path"].startswith(own_prefix):
-            # fork child diverging from a parent-owned layout: appending here
-            # would interleave two collections' independent epoch counters —
-            # rebuild once into our own directory instead
-            return _full()
-        base = self._store.read_base(meta)
-        touched = self._touched_ids(meta, log_batch, self._load_vector_index(vi)[1].select("id"))
-        n_touched = int(touched.count())
-        if vi.get("n_appended", 0) + n_touched > self.REINDEX_FRACTION * max(
-            1, vi.get("n_rows", 0)
-        ):
-            return _full()
-        spark = self._client.spark
-        if n_touched:
-            touched.withColumn("epoch", F.lit(meta.version).cast("long")).write.mode(
-                "append"
-            ).parquet(_os.path.join(vi["path"], "tombstones"))
-            delta = (
-                base.join(touched, "id", "semi")
-                .filter(F.col("embedding").isNotNull())
-                .select("id", "embedding")
-            )
-            centroids = spark.read.parquet(_os.path.join(vi["path"], "centroids"))
-            assigned = assign_to_centroids(
-                delta, centroids, replicas=int(vi.get("replicas", 2)), method="arrow"
-            )
-            if vi.get("means") is not None:
-                from .ann.quantize import build_codes
-
-                assigned, _ = build_codes(assigned, means=[float(m) for m in vi["means"]])
-            elif vi.get("sq4_lo") is not None:
-                from .ann.quantize import build_codes4
-
-                assigned, _ = build_codes4(
-                    assigned, ranges=(list(vi["sq4_lo"]), list(vi["sq4_step"]))
-                )
-            elif vi.get("pq") is not None:
-                assigned = self._encode_pq_delta(assigned, vi)
-            assigned = assigned.withColumn("__epoch", F.lit(meta.version).cast("long"))
-            append_ivf_postings(assigned, vi["path"])
-        desc = {
-            **vi,
-            "version": meta.version,
-            "epoch": meta.version,
-            "n_appended": int(vi.get("n_appended", 0)) + n_touched,
-        }
-        self._store.catalog.mutate(
-            self._store.name, lambda m: setattr(m, "vector_index", desc)
-        )
-        return desc
+        return self._write_index("vector", desc, postings)
 
     def _pq_books(self, vi: dict) -> "list":
         """Codebooks persisted beside the layout (too big for the catalog
@@ -1726,158 +1804,14 @@ class Collection:
         with open(_os.path.join(vi["path"], "pq_books.json")) as f:
             return _json.load(f)
 
-    def _encode_pq_delta(self, assigned: DataFrame, vi: dict) -> DataFrame:
-        from .ann.pq import encode_pq
-
-        return encode_pq(assigned, self._pq_books(vi))
-
-    def _load_vector_index(self, vi: dict) -> tuple[DataFrame, DataFrame]:
-        """(centroids, live postings) for the vector index descriptor ``vi``.
-
-        Epoch MVCC: keep rows with ``__epoch <= vi.version`` that are not
-        superseded by a tombstone (``__epoch < dead_upto``). The tombstone
-        join is an equi-join on id whose right side is bounded by
-        ``REINDEX_FRACTION`` of the corpus (retrain resets it), and a fork
-        child reading the parent's layout filters both sides to its own
-        pinned version — shared files, no copies."""
+    def _ivf(self, vi: dict) -> tuple[DataFrame, DataFrame]:
+        """(centroids, live postings) of the vector index ``vi``."""
         import os as _os
 
-        from .layout import check_layout
+        from .layout import live
 
-        spark = self._client.spark
-        check_layout(vi["path"], "ivf")
-        centroids = spark.read.parquet(_os.path.join(vi["path"], "centroids"))
-        postings = spark.read.parquet(_os.path.join(vi["path"], "postings"))
-        if "__epoch" in postings.columns and vi.get("epoch") is not None:
-            version = int(vi["version"])
-            postings = postings.filter(F.col("__epoch") <= version)
-            tomb_path = _os.path.join(vi["path"], "tombstones")
-            if _os.path.isdir(tomb_path):
-                dead = (
-                    spark.read.parquet(tomb_path)
-                    .filter(F.col("epoch") <= version)
-                    .groupBy("id")
-                    .agg(F.max("epoch").alias("__dead_upto"))
-                )
-                postings = (
-                    postings.join(dead, "id", "left")
-                    .filter(F.col("__dead_upto").isNull() | (F.col("__epoch") >= F.col("__dead_upto")))
-                    .drop("__dead_upto")
-                )
-        return centroids, postings
-
-    def _touched_ids(
-        self, meta: CollectionMeta, log_batch: DataFrame, live_ids: DataFrame
-    ) -> DataFrame:
-        """Ids whose index entries a compaction batch invalidates: the
-        id-keyed log rows plus — under predicate deletes — previously-live
-        ids absent from the new (folded) base."""
-        touched = log_batch.filter(F.col("id").isNotNull()).select("id").distinct()
-        if "where_json" in log_batch.columns and (
-            log_batch.filter(F.col("op") == "DELETE_WHERE").head() is not None
-        ):
-            base = self._store.read_base(meta)
-            gone = live_ids.distinct().join(base.select("id"), "id", "anti")
-            touched = touched.unionByName(gone).distinct()
-        return touched
-
-    def _maintain_sparse_index(self, key: str, log_batch: DataFrame | None) -> dict:
-        """Per-compaction sparse-index upkeep without a full rebuild — the
-        same epoch/tombstone scheme as _maintain_vector_index: touched ids
-        tombstone at the new epoch, the delta's postings append into the
-        bucket-partitioned layout, and only drift past REINDEX_FRACTION
-        (of indexed docs) rewrites from scratch. ``n_docs`` (the IDF
-        denominator) refreshes with one narrow count over the new base."""
-        import os as _os
-
-        from .operators.sparse import explode_postings
-
-        meta = self._store.meta
-        si = (meta.sparse_indexes or {}).get(key)
-
-        def _full() -> dict:
-            return self.build_sparse_index(
-                key, n_buckets=int(si.get("n_buckets", 64)) if si else 64
-            )
-
-        if si is None or si.get("epoch") is None or log_batch is None:
-            return _full()
-        own_prefix = _os.path.join(self._store.catalog.root, self._store.name) + _os.sep
-        if not si["path"].startswith(own_prefix):
-            return _full()  # fork child diverging from a parent-owned layout
-        touched = self._touched_ids(meta, log_batch, self._load_sparse_index(si).select("id"))
-        n_touched = int(touched.count())
-        if si.get("n_appended", 0) + n_touched > self.REINDEX_FRACTION * max(
-            1, si.get("n_docs", 0)
-        ):
-            return _full()
-        base = self._store.read_base(meta)
-        if n_touched:
-            touched.withColumn("epoch", F.lit(meta.version).cast("long")).write.mode(
-                "append"
-            ).parquet(_os.path.join(si["path"], "tombstones"))
-            delta = explode_postings(
-                base.join(touched, "id", "semi").filter(F.col(key).isNotNull()),
-                id_col="id",
-                sparse_col=key,
-            )
-            n_buckets = int(si["n_buckets"])
-            delta.withColumn("bucket", (F.col("idx") % n_buckets).cast("int")).withColumn(
-                "__epoch", F.lit(meta.version).cast("long")
-            ).repartition("bucket").write.mode("append").partitionBy("bucket").parquet(
-                _os.path.join(si["path"], "postings")
-            )
-        n_docs = float(base.filter(F.col(key).isNotNull()).count())
-        desc = {
-            **si,
-            "version": meta.version,
-            "epoch": meta.version,
-            "n_docs": n_docs,
-            "n_appended": int(si.get("n_appended", 0)) + n_touched,
-        }
-
-        def _set_si(m):
-            m.sparse_indexes = {**(m.sparse_indexes or {}), key: desc}
-
-        self._store.catalog.mutate(self._store.name, _set_si)
-        return desc
-
-    def _load_sparse_index(self, si: dict) -> DataFrame:
-        """Live posting rows for a registered sparse index (epoch MVCC like
-        _load_vector_index), with the book-keeping column dropped so the
-        shape matches what the search operators and tail union expect."""
-        import os as _os
-
-        from .layout import check_layout
-
-        spark = self._client.spark
-        # incremental layouts keep postings/ + tombstones/ as siblings (a
-        # tombstone dir inside a partitioned tree breaks discovery); plain
-        # layouts (pre-incremental / offline caches) are the bare dir
-        root = si["path"]
-        check_layout(root, "sparse")
-        postings_dir = _os.path.join(root, "postings")
-        postings = spark.read.parquet(postings_dir if _os.path.isdir(postings_dir) else root)
-        if "__epoch" in postings.columns and si.get("epoch") is not None:
-            version = int(si["version"])
-            postings = postings.filter(F.col("__epoch") <= version)
-            tomb_path = _os.path.join(si["path"], "tombstones")
-            if _os.path.isdir(tomb_path):
-                dead = (
-                    spark.read.parquet(tomb_path)
-                    .filter(F.col("epoch") <= version)
-                    .groupBy("id")
-                    .agg(F.max("epoch").alias("__dead_upto"))
-                )
-                postings = (
-                    postings.join(dead, "id", "left")
-                    .filter(
-                        F.col("__dead_upto").isNull() | (F.col("__epoch") >= F.col("__dead_upto"))
-                    )
-                    .drop("__dead_upto")
-                )
-            postings = postings.drop("__epoch")
-        return postings
+        postings = live(vi, "postings")
+        return self._client.spark.read.parquet(_os.path.join(vi["path"], "centroids")), postings
 
     def build_sparse_index(self, key: str, n_buckets: int = 64) -> dict:
         """Build + register the term-bucket posting index over a
@@ -1887,44 +1821,7 @@ class Collection:
         ``key`` then read only their buckets' partitions, with WAL-tail
         postings unioned in (the sparse_index_knn + sparse_log_knn merge,
         SURVEY §3.2)."""
-        import os as _os
-
-        from .operators.sparse import explode_postings, write_sparse_index
-
-        if self._store.meta.log_paths:
-            # refresh_indexes=False: this build IS the refresh
-            self.compact(refresh_indexes=False)
-        meta = self._store.meta
-        base = self._store.read_base(meta)
-        if base is None or key not in base.columns:
-            raise CollectionError(f"no SparseVector column {key!r} to index")
-        postings = explode_postings(
-            base.filter(F.col(key).isNotNull()), id_col="id", sparse_col=key
-        ).withColumn("__epoch", F.lit(meta.version).cast("long"))
-        path = _os.path.join(
-            self._store.catalog.root, self._store.name, f"index_sparse_{key}", f"v{meta.version}"
-        )
-        write_sparse_index(postings, _os.path.join(path, "postings"), n_buckets=n_buckets)
-        from .layout import stamp_layout
-
-        stamp_layout(path, "sparse")
-        n_docs = float(postings.select("id").distinct().count())
-        desc = {
-            "version": meta.version,
-            "path": path,
-            "n_buckets": int(n_buckets),
-            "n_docs": n_docs,
-            # incremental-maintenance state (same scheme as the vector
-            # index: epoch-stamped rows, tombstones, drift counter)
-            "epoch": meta.version,
-            "n_appended": 0,
-        }
-
-        def _set_si(m):
-            m.sparse_indexes = {**(m.sparse_indexes or {}), key: desc}
-
-        self._store.catalog.mutate(self._store.name, _set_si)
-        return desc
+        return self._build_registered(f"sparse:{key}", n_buckets=int(n_buckets))
 
     @staticmethod
     def _rank_knn_keys(rank) -> dict[str, bool]:
@@ -1961,12 +1858,17 @@ class Collection:
         at seq position inside the bounded tail fold; n_docs refreshes at
         compaction like the reference's index-time stats. ``keys``
         restricts the work to the sparse columns a payload queries."""
-        from .operators.sparse import explode_postings
+        from .layout import live
 
         meta = view.meta
-        if not meta.sparse_indexes:
-            return {}
-        if keys is not None and not (keys & set(meta.sparse_indexes)):
+        fresh = {
+            name.split(":", 1)[1]: si
+            for name, si in meta.indexes.items()
+            if name.startswith("sparse:")
+            and si["version"] == meta.version
+            and (keys is None or name.split(":", 1)[1] in keys)
+        }
+        if not fresh:
             return {}
         log, where_ops = view.log, view.where_ops
         out: dict = {}
@@ -1977,25 +1879,18 @@ class Collection:
                 touched = touched.unionByName(
                     self._predicate_matched_ids(view.base, where_ops)
                 ).distinct()
-        for key, si in meta.sparse_indexes.items():
-            if keys is not None and key not in keys:
-                continue
-            if si.get("version") != meta.version:
-                continue
-            postings = self._load_sparse_index(si)
+        for key, si in fresh.items():
+            postings = live(si, "postings")
             if touched is not None:
                 base = view.base
                 base_t = base.join(touched, "id", "semi") if base is not None else None
                 tail = self._fold(base_t, log, where_ops)
-                live = postings.join(touched, "id", "anti")
+                postings = postings.join(touched, "id", "anti")
                 if key in tail.columns:
-                    tail_postings = explode_postings(
-                        tail.filter(F.col(key).isNotNull()), id_col="id", sparse_col=key
-                    ).withColumn(
-                        "bucket", (F.col("idx") % si["n_buckets"]).cast("int")
+                    tail_postings = self._index_rows(
+                        f"sparse:{key}", si, tail.filter(F.col(key).isNotNull())
                     )
-                    live = live.unionByName(tail_postings)
-                postings = live
+                    postings = postings.unionByName(tail_postings)
             out[key] = (postings, int(si["n_buckets"]), float(si["n_docs"]))
         return out
 
@@ -2010,173 +1905,8 @@ class Collection:
         fingerprints). :meth:`find_near_duplicates` then matches any
         incoming batch in O(batch); compaction maintains the table
         incrementally (only changed documents re-shingle)."""
-        import os as _os
-
-        from .layout import stamp_layout
-        from .operators.dedup import minhash_bands, minhash_signatures
-
-        if self._store.meta.log_paths:
-            self.compact(refresh_indexes=False)
-        meta = self._store.meta
-        base = self._store.read_base(meta)
-        if base is None or text_col not in base.columns:
-            raise CollectionError(f"no text column {text_col!r} to index")
-        records = base.filter(F.col(text_col).isNotNull()).select(
-            "id", F.col(text_col).alias("document"), F.md5(F.col(text_col)).alias("fp")
-        )
-        rows = num_perm // bands
-        bdf = (
-            minhash_bands(
-                minhash_signatures(records, num_perm, n, "document", "id"), bands, rows, "id"
-            )
-            .join(records.select("id", "fp"), "id")
-            .withColumn("__epoch", F.lit(meta.version).cast("long"))
-        )
-        path = _os.path.join(
-            self._store.catalog.root, self._store.name, f"index_dedup_{text_col}", f"v{meta.version}"
-        )
-        bdf.repartition("band").write.mode("overwrite").partitionBy("band").parquet(
-            _os.path.join(path, "bands")
-        )
-        stamp_layout(path, "dedup")
-        desc = {
-            "version": meta.version,
-            "path": path,
-            "num_perm": int(num_perm),
-            "bands": int(bands),
-            "n": int(n),
-            "text_col": text_col,
-            # incremental-maintenance state (same epoch/tombstone scheme as
-            # the vector and sparse indexes)
-            "epoch": meta.version,
-            "n_docs": int(records.count()),
-            "n_appended": 0,
-        }
-        self._store.catalog.mutate(
-            self._store.name,
-            lambda m: m.metadata.__setitem__("__dedup_index__", desc),
-        )
-        return desc
-
-    def _load_dedup_bands(self, desc: dict) -> DataFrame:
-        """Live band rows for the registered dedup index — epoch MVCC like
-        _load_vector_index/_load_sparse_index: rows with ``__epoch <=
-        version`` not superseded by a tombstone. A legacy (v1, rewritten)
-        layout without epoch columns reads as-is; a fork child filtering at
-        its pinned version never sees the parent's later appends."""
-        import os as _os
-
-        from .layout import check_layout
-
-        check_layout(desc["path"], "dedup")
-        spark = self._client.spark
-        bands = spark.read.parquet(_os.path.join(desc["path"], "bands"))
-        if "__epoch" in bands.columns and desc.get("epoch") is not None:
-            version = int(desc["version"])
-            bands = bands.filter(F.col("__epoch") <= version)
-            tomb_path = _os.path.join(desc["path"], "tombstones")
-            if _os.path.isdir(tomb_path):
-                dead = (
-                    spark.read.parquet(tomb_path)
-                    .filter(F.col("epoch") <= version)
-                    .groupBy("id")
-                    .agg(F.max("epoch").alias("__dead_upto"))
-                )
-                bands = (
-                    bands.join(dead, "id", "left")
-                    .filter(
-                        F.col("__dead_upto").isNull()
-                        | (F.col("__epoch") >= F.col("__dead_upto"))
-                    )
-                    .drop("__dead_upto")
-                )
-            bands = bands.drop("__epoch")
-        return bands
-
-    def _maintain_dedup_index(self) -> None:
-        """Post-compaction upkeep, O(changed docs) in COMPUTE and WRITES:
-        changed/new documents re-shingle and their band rows APPEND into
-        the existing band-partitioned layout at the new epoch; stale ids
-        (deleted, or superseded content fingerprints) get a tombstone row.
-        Files written by earlier epochs are never rewritten — the same
-        append-only MVCC discipline as the vector/sparse indexes. Drift
-        past REINDEX_FRACTION of the indexed corpus rebuilds from scratch
-        into a fresh layout dir."""
-        import os as _os
-
-        from .operators.dedup import minhash_bands, minhash_signatures
-
-        meta = self._store.meta
-        desc = meta.metadata.get("__dedup_index__")
-        if desc is None or desc["version"] == meta.version:
-            return
-        base = self._store.read_base(meta)
-        text_col = desc["text_col"]
-        if base is None or text_col not in base.columns:
-            self._store.catalog.mutate(
-                self._store.name,
-                lambda m: m.metadata.pop("__dedup_index__", None) and None,
-            )
-            return
-
-        def _full() -> None:
-            self.build_dedup_index(
-                num_perm=int(desc["num_perm"]),
-                bands=int(desc["bands"]),
-                n=int(desc["n"]),
-                text_col=text_col,
-            )
-
-        own_prefix = _os.path.join(self._store.catalog.root, self._store.name) + _os.sep
-        if desc.get("epoch") is None or not desc["path"].startswith(own_prefix):
-            # legacy (v1) layout, or a fork child diverging from a
-            # parent-owned layout: rebuild once into our own epoch layout
-            return _full()
-        records = base.filter(F.col(text_col).isNotNull()).select(
-            "id", F.col(text_col).alias("document"), F.md5(F.col(text_col)).alias("fp")
-        )
-        live = self._load_dedup_bands(desc).select("id", "fp").distinct()
-        todo = records.join(live, ["id", "fp"], "anti")
-        dead = live.join(records.select("id", "fp"), ["id", "fp"], "anti").select("id").distinct()
-        n_todo, n_dead = int(todo.count()), int(dead.count())
-        n_touched = n_todo + n_dead
-        if desc.get("n_appended", 0) + n_touched > self.REINDEX_FRACTION * max(
-            1, desc.get("n_docs", 0)
-        ):
-            return _full()
-        if n_dead:
-            # a changed id is in dead (its old fingerprint left the base)
-            # AND in todo: one tombstone at the new epoch kills its old
-            # rows, the fresh append (same epoch, kept by the >= dead_upto
-            # filter) replaces them
-            dead.withColumn("epoch", F.lit(meta.version).cast("long")).write.mode(
-                "append"
-            ).parquet(_os.path.join(desc["path"], "tombstones"))
-        if n_todo:
-            rows = desc["num_perm"] // desc["bands"]
-            fresh = (
-                minhash_bands(
-                    minhash_signatures(todo, desc["num_perm"], desc["n"], "document", "id"),
-                    desc["bands"],
-                    rows,
-                    "id",
-                )
-                .join(todo.select("id", "fp"), "id")
-                .withColumn("__epoch", F.lit(meta.version).cast("long"))
-            )
-            fresh.repartition("band").write.mode("append").partitionBy("band").parquet(
-                _os.path.join(desc["path"], "bands")
-            )
-        new_desc = {
-            **desc,
-            "version": meta.version,
-            "epoch": meta.version,
-            "n_docs": int(records.count()),
-            "n_appended": int(desc.get("n_appended", 0)) + n_touched,
-        }
-        self._store.catalog.mutate(
-            self._store.name,
-            lambda m: m.metadata.__setitem__("__dedup_index__", new_desc),
+        return self._build_registered(
+            "dedup", num_perm=int(num_perm), bands=int(bands), n=int(n), text_col=text_col
         )
 
     def find_near_duplicates(
@@ -2187,10 +1917,11 @@ class Collection:
         and the collection (plus within-batch), via the registered dedup
         index — the pre-ingest gate of a training-data pipeline. Corpus
         text is hydrated only for candidate ids."""
+        from .layout import live
         from .operators.dedup import minhash_incremental_pairs
 
         meta = self._store.meta
-        desc = meta.metadata.get("__dedup_index__")
+        desc = meta.indexes.get("dedup")
         if desc is None:
             raise CollectionError("no dedup index; call build_dedup_index() first")
         if desc["version"] != meta.version or meta.log_paths:
@@ -2198,7 +1929,7 @@ class Collection:
                 "dedup index is stale (WAL tail pending or version "
                 f"{desc['version']} != {meta.version}); compact() refreshes it"
             )
-        bands_df = self._load_dedup_bands(desc).drop("fp")
+        bands_df = live(desc, "bands").drop("fp")
         base = self._store.read_base(meta)
         corpus = base.select("id", F.col(desc["text_col"]).alias("document"))
         batch = new_docs.select(
@@ -2230,14 +1961,14 @@ class Collection:
         from .operators.dedup import semdedup_from_postings
 
         meta = self._store.meta
-        vi = meta.vector_index
+        vi = meta.indexes.get("vector")
         if vi is None:
             raise CollectionError("no vector index; call build_vector_index() first")
         if meta.log_paths:
             raise CollectionError(
                 "vector index is stale (WAL tail pending); compact() refreshes it"
             )
-        centroids, postings = self._load_vector_index(vi)
+        centroids, postings = self._ivf(vi)
         return semdedup_from_postings(
             postings.select("centroid_id", "id", "embedding"),
             centroids.select("centroid_id", "centroid"),
@@ -2255,7 +1986,7 @@ class Collection:
         count downstream; the ``bpe_vocab`` attached function is the
         opposite tool — it re-learns at every compaction to TRACK drift).
         The merge table is config-sized, so it lives in the collection
-        metadata like an embedding-function spec and any later process
+        config like an embedding-function spec and any later process
         rebuilds the identical tokenizer."""
         from .operators.bpe import bpe_train
 
@@ -2271,13 +2002,12 @@ class Collection:
             "max_words": int(max_words),
         }
         self._store.catalog.mutate(
-            self._store.name,
-            lambda m: m.metadata.__setitem__("__tokenizer__", desc),
+            self._store.name, lambda m: m.config.__setitem__("tokenizer", desc)
         )
         return desc
 
     def _tokenizer(self) -> tuple[list[tuple[str, str]], str]:
-        desc = self._store.meta.metadata.get("__tokenizer__")
+        desc = self._store.meta.config.get("tokenizer")
         if desc is None:
             raise CollectionError("no tokenizer; call build_tokenizer() first")
         return [tuple(m) for m in desc["merges"]], desc["text_col"]
@@ -2313,141 +2043,7 @@ class Collection:
         partition-pruned candidate lookup + exact verify on the candidates
         only — never a full-text scan. Compaction maintains the postings
         incrementally (only changed documents re-trigram, appends only)."""
-        import os as _os
-
-        from .layout import stamp_layout
-        from .operators.fts import doc_trigram_postings
-
-        if self._store.meta.log_paths:
-            self.compact(refresh_indexes=False)
-        meta = self._store.meta
-        base = self._store.read_base(meta)
-        if base is None or text_col not in base.columns:
-            raise CollectionError(f"no text column {text_col!r} to index")
-        records = base.filter(F.col(text_col).isNotNull()).select(
-            "id", F.col(text_col).alias("document"), F.md5(F.col(text_col)).alias("fp")
-        )
-        postings = doc_trigram_postings(records, n_buckets).withColumn(
-            "__epoch", F.lit(meta.version).cast("long")
-        )
-        path = _os.path.join(
-            self._store.catalog.root, self._store.name, f"index_fts_{text_col}", f"v{meta.version}"
-        )
-        postings.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(
-            _os.path.join(path, "postings")
-        )
-        records.select("id", "fp").withColumn(
-            "__epoch", F.lit(meta.version).cast("long")
-        ).write.mode("overwrite").parquet(_os.path.join(path, "fps"))
-        stamp_layout(path, "fts")
-        desc = {
-            "version": meta.version,
-            "path": path,
-            "n_buckets": int(n_buckets),
-            "text_col": text_col,
-            "epoch": meta.version,
-            "n_docs": int(records.count()),
-            "n_appended": 0,
-        }
-        self._store.catalog.mutate(
-            self._store.name,
-            lambda m: m.metadata.__setitem__("__fts_index__", desc),
-        )
-        return desc
-
-    def _load_fts_live(self, desc: dict, sub: str) -> DataFrame:
-        """Epoch-MVCC live rows of an FTS layout piece (``postings`` or
-        ``fps``) — same visibility rule as the dedup/sparse tiers: rows
-        with ``__epoch <= version`` not superseded by a per-id tombstone."""
-        import os as _os
-
-        from .layout import check_layout
-
-        check_layout(desc["path"], "fts")
-        df = self._client.spark.read.parquet(_os.path.join(desc["path"], sub))
-        version = int(desc["version"])
-        df = df.filter(F.col("__epoch") <= version)
-        tomb_path = _os.path.join(desc["path"], "tombstones")
-        if _os.path.isdir(tomb_path):
-            dead = (
-                self._client.spark.read.parquet(tomb_path)
-                .filter(F.col("epoch") <= version)
-                .groupBy("id")
-                .agg(F.max("epoch").alias("__dead_upto"))
-            )
-            df = (
-                df.join(dead, "id", "left")
-                .filter(
-                    F.col("__dead_upto").isNull()
-                    | (F.col("__epoch") >= F.col("__dead_upto"))
-                )
-                .drop("__dead_upto")
-            )
-        return df.drop("__epoch")
-
-    def _maintain_fts_index(self) -> None:
-        """Post-compaction upkeep, O(changed docs) in compute and writes —
-        the dedup-tier maintenance pattern verbatim: changed/new documents
-        re-trigram and APPEND into the bucket partitions at the new epoch,
-        stale ids get a tombstone row, drift past REINDEX_FRACTION
-        rebuilds."""
-        import os as _os
-
-        from .operators.fts import doc_trigram_postings
-
-        meta = self._store.meta
-        desc = meta.metadata.get("__fts_index__")
-        if desc is None or desc["version"] == meta.version:
-            return
-        base = self._store.read_base(meta)
-        text_col = desc["text_col"]
-        if base is None or text_col not in base.columns:
-            self._store.catalog.mutate(
-                self._store.name,
-                lambda m: m.metadata.pop("__fts_index__", None) and None,
-            )
-            return
-        own_prefix = _os.path.join(self._store.catalog.root, self._store.name) + _os.sep
-        if not desc["path"].startswith(own_prefix):
-            # fork child diverging from a parent-owned layout: own rebuild
-            return self.build_fts_index(text_col, int(desc["n_buckets"])) and None
-        records = base.filter(F.col(text_col).isNotNull()).select(
-            "id", F.col(text_col).alias("document"), F.md5(F.col(text_col)).alias("fp")
-        )
-        live = self._load_fts_live(desc, "fps").select("id", "fp").distinct()
-        todo = records.join(live, ["id", "fp"], "anti")
-        dead = live.join(records.select("id", "fp"), ["id", "fp"], "anti").select("id").distinct()
-        n_todo, n_dead = int(todo.count()), int(dead.count())
-        n_touched = n_todo + n_dead
-        if desc.get("n_appended", 0) + n_touched > self.REINDEX_FRACTION * max(
-            1, desc.get("n_docs", 0)
-        ):
-            self.build_fts_index(text_col, int(desc["n_buckets"]))
-            return
-        if n_dead:
-            dead.withColumn("epoch", F.lit(meta.version).cast("long")).write.mode(
-                "append"
-            ).parquet(_os.path.join(desc["path"], "tombstones"))
-        if n_todo:
-            doc_trigram_postings(todo, int(desc["n_buckets"])).withColumn(
-                "__epoch", F.lit(meta.version).cast("long")
-            ).repartition("bucket").write.mode("append").partitionBy("bucket").parquet(
-                _os.path.join(desc["path"], "postings")
-            )
-            todo.select("id", "fp").withColumn(
-                "__epoch", F.lit(meta.version).cast("long")
-            ).write.mode("append").parquet(_os.path.join(desc["path"], "fps"))
-        new_desc = {
-            **desc,
-            "version": meta.version,
-            "epoch": meta.version,
-            "n_docs": int(records.count()),
-            "n_appended": int(desc.get("n_appended", 0)) + n_touched,
-        }
-        self._store.catalog.mutate(
-            self._store.name,
-            lambda m: m.metadata.__setitem__("__fts_index__", new_desc),
-        )
+        return self._build_registered("fts", text_col=text_col, n_buckets=int(n_buckets))
 
     def _fts_candidates(self, view: _ReadView, where_document: dict) -> DataFrame | None:
         """Index-served candidate ids for a document filter, or None when
@@ -2455,17 +2051,16 @@ class Collection:
         literal in the tree). The candidate set is a SOUND superset of the
         base-side matches; WAL-touched ids union in so tail writes are
         re-checked exactly; the exact predicate always verifies."""
+        from .layout import live
         from .operators.fts import contains_candidates, required_needles
 
-        desc = view.meta.metadata.get("__fts_index__")
+        desc = view.meta.indexes.get("fts")
         if desc is None or desc["version"] != view.meta.version:
             return None
         needles = required_needles(where_document)
         if not needles:
             return None
-        cands = contains_candidates(
-            self._load_fts_live(desc, "postings"), needles, int(desc["n_buckets"])
-        )
+        cands = contains_candidates(live(desc, "postings"), needles, int(desc["n_buckets"]))
         if view.log is not None:
             cands = cands.unionByName(view.log.select("id").distinct()).distinct()
         return cands
@@ -2516,23 +2111,10 @@ class Collection:
         grace = max(0.0, grace_seconds)
         now = _time.time()
 
-        referenced: set[str] = set()
-        log_referenced: set[str] = set()
-        index_referenced: set[str] = set()
-        for cname in self._store.catalog.list():
-            m = self._store.catalog.get(cname)
-            referenced.update(m.base_paths)
-            log_referenced.update(m.log_paths)
-            if m.vector_index:
-                index_referenced.add(m.vector_index["path"])
-            for si in (m.sparse_indexes or {}).values():
-                index_referenced.add(si["path"])
-            di = m.metadata.get("__dedup_index__")
-            if di:
-                index_referenced.add(di["path"])
-            fi = m.metadata.get("__fts_index__")
-            if fi:
-                index_referenced.add(fi["path"])
+        colls = self._store.catalog._load()[0]["collections"].values()  # one state read
+        referenced = {p for m in colls for p in m["base_paths"]}
+        log_referenced = {p for m in colls for p in m["log_paths"]}
+        index_referenced = {d["path"] for m in colls for d in m["indexes"].values()}
         keep = set(self.list_versions()[-max(1, keep_last):])
         keep.add(self._store.meta.version)
         # candidate set: everything unreferenced RIGHT NOW, each tagged
@@ -2552,12 +2134,7 @@ class Collection:
         # parent's old index)
         coll_dir = os.path.join(self._store.catalog.root, self._store.name)
         for sub in os.listdir(coll_dir) if os.path.isdir(coll_dir) else []:
-            if not (
-                sub == "index_vector"
-                or sub.startswith("index_sparse_")
-                or sub.startswith("index_dedup_")
-                or sub.startswith("index_fts_")
-            ):
+            if not sub.startswith("index_"):
                 continue
             for vdir in os.listdir(os.path.join(coll_dir, sub)):
                 p = os.path.join(coll_dir, sub, vdir)
@@ -2650,34 +2227,17 @@ class Collection:
     def fork(self, name: str) -> "Collection":
         """Zero-copy clone at the current version (Collection.py:329):
         the child references the parent's part files; new writes diverge."""
-        parent = self._store.meta
+        import dataclasses
+
         # NumForks (quota/mod.rs:311): forks share the root's base part
         # files, so count live collections referencing any of them
-        shared = set(parent.base_paths)
-        num_forks = sum(
-            1
-            for other in self._store.catalog.list()
-            if other != self._store.name
-            and shared & set(self._store.catalog.get(other).base_paths)
-        )
         self._client._enforce(
-            Action.FORK_COLLECTION, collection_name=name, num_forks=num_forks + 1
+            Action.FORK_COLLECTION, collection_name=name, num_forks=self.fork_count() + 1
         )
-        child = CollectionMeta(
-            name=self._client._scoped(name),
-            id=uuid.uuid4().hex,
-            dimension=parent.dimension,
-            space=parent.space,
-            version=parent.version,
-            metadata=dict(parent.metadata),
-            base_paths=list(parent.base_paths),
-            log_paths=list(parent.log_paths),
-            log_position=parent.log_position,
-            schema=parent.schema,
-            # zero-copy includes the indexes: the child serves from the
-            # parent's index files until its own writes diverge + compact
-            vector_index=dict(parent.vector_index) if parent.vector_index else None,
-            sparse_indexes={k: dict(v) for k, v in (parent.sparse_indexes or {}).items()},
+        # zero-copy includes the indexes: the child serves from the
+        # parent's index files until its own writes diverge + compact
+        child = dataclasses.replace(
+            self._store.meta, name=self._client._scoped(name), id=uuid.uuid4().hex
         )
         self._store.catalog.create(child)
         return Collection(self._client, self._client._scoped(name))
@@ -2714,6 +2274,10 @@ class Collection:
             metadata=dict(meta.metadata),
             schema=Schema.from_dict(meta.schema),
         )
+        # the config (embedding functions, tokenizer, attached functions)
+        # travels; index descriptors never do — they describe the source's
+        # files at the source's versions
+        dst._store.catalog.mutate(dst._store.name, lambda m: setattr(m, "config", meta.config))
         if snap is None:
             return dst
         if where is not None:
@@ -2959,8 +2523,8 @@ class Collection:
         join the excluded set and the bounded tail fold, which replays the
         predicate at its seq position for the touched groups."""
         meta = view.meta
-        vi = meta.vector_index
-        if vi is None or vi.get("version") != meta.version:
+        vi = meta.indexes.get("vector")
+        if vi is None or vi["version"] != meta.version:
             return None
         if view.read_level not in ("index_only", "index_and_wal"):
             return None
@@ -2968,9 +2532,9 @@ class Collection:
         from .operators.knn import knn_merge
 
         log, where_ops = view.log, view.where_ops
-        centroids, postings = self._load_vector_index(vi)
+        centroids, postings = self._ivf(vi)
         probes = int(nprobe or vi["n_lists"])
-        if allowed is not None and nprobe is not None and vi.get("n_rows"):
+        if allowed is not None and nprobe is not None and vi.get("n_docs"):
             # filter-before-ANN thins every probed list by the filter's
             # selectivity, so a fixed probe budget quietly loses recall
             # (measured at 1M: 10%-selective filters need ~4x the probes,
@@ -2999,7 +2563,7 @@ class Collection:
                     if len(cache) >= 512:  # bounded: counts are 8-byte ints
                         cache.clear()
                     cache[cache_key] = n_allowed
-            sel = n_allowed / max(1, int(vi["n_rows"]))
+            sel = n_allowed / max(1, int(vi["n_docs"]))
             if 0.0 < sel < 1.0:
                 probes = max(probes, min(int(vi["n_lists"]), _math.ceil(probes / sel)))
         touched = log.select("id").distinct() if log is not None else None

@@ -64,8 +64,7 @@ def _collection_model(client: Client, name: str) -> dict:
     return {
         "id": meta.id,
         "name": name,
-        "metadata": {k: v for k, v in meta.metadata.items() if not k.startswith("__")}
-        or None,
+        "metadata": meta.metadata or None,
         "dimension": meta.dimension,
         "tenant": client.tenant,
         "database": client.database,

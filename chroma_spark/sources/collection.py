@@ -70,15 +70,17 @@ class CollectionMeta:
     base_paths: list[str] = field(default_factory=list)
     log_paths: list[str] = field(default_factory=list)
     schema: dict | None = None  # serialized chroma_spark.schema.Schema
-    # persisted ANN index descriptor {version, path, n_lists, space} — the
-    # vector-segment registration (a compaction writes the index for one
-    # collection version; queries check freshness against it)
-    vector_index: dict | None = None
-    # per-key sparse posting indexes {key: {version, path, n_buckets, n_docs}}
-    sparse_indexes: dict[str, dict] = field(default_factory=dict)
+    # engine-owned index descriptors keyed "vector", "sparse:<key>",
+    # "dedup" and "fts" — the segment registrations (a compaction writes
+    # every index for one collection version; reads check freshness against
+    # it). chroma_spark/layout.py describes the epoch scheme they share.
+    indexes: dict[str, dict] = field(default_factory=dict)
+    # engine-owned configuration: "embedding_function",
+    # "sparse_embedding_function", "tokenizer", "functions"
+    config: dict[str, Any] = field(default_factory=dict)
 
 
-CATALOG_FORMAT_VERSION = 2
+CATALOG_FORMAT_VERSION = 3
 
 # commit files kept behind the head for stale readers mid-listdir; each
 # holds the FULL state so one file bootstraps everything
@@ -86,15 +88,19 @@ _COMMIT_KEEP = 8
 _COMMIT_MAX_RETRIES = 500
 
 
+_V1_META_FIELDS = frozenset(
+    ("name", "id", "dimension", "space", "version", "log_position", "metadata",
+     "base_paths", "log_paths", "schema", "vector_index", "sparse_indexes")
+)
+
+
 def _migrate_catalog_v0(data: dict) -> dict:
-    """v0 -> v1: drop meta keys this build's CollectionMeta doesn't know
+    """v0 -> v1: drop meta keys the v1 CollectionMeta didn't know
     (pre-versioning catalogs could carry fields from experimental builds;
     dataclass construction would otherwise crash on them)."""
-    import dataclasses
-
-    known = {f.name for f in dataclasses.fields(CollectionMeta)}
     return {
-        name: {k: v for k, v in meta.items() if k in known} for name, meta in data.items()
+        name: {k: v for k, v in meta.items() if k in _V1_META_FIELDS}
+        for name, meta in data.items()
     }
 
 
@@ -106,7 +112,45 @@ def _migrate_catalog_v1(data: dict) -> dict:
     return {"collections": data, "namespaces": {}}
 
 
-_CATALOG_MIGRATIONS = {0: _migrate_catalog_v0, 1: _migrate_catalog_v1}
+def _migrate_catalog_v2(data: dict) -> dict:
+    """v2 -> v3: engine state leaves the user's metadata dict. Index
+    descriptors (``vector_index``, ``sparse_indexes``, ``__dedup_index__``,
+    ``__fts_index__``) move into ``indexes`` and gain their layout kind;
+    embedding-function, tokenizer and attached-function specs move into
+    ``config``. Descriptors without epoch stamps (pre-incremental layouts
+    the epoch layer cannot read) are dropped: reads fall back to scans
+    until the index is built again, and gc reclaims the files."""
+    for meta in data["collections"].values():
+        md = meta.get("metadata") or {}
+        found = {
+            "vector": meta.pop("vector_index", None),
+            "dedup": md.pop("__dedup_index__", None),
+            "fts": md.pop("__fts_index__", None),
+        }
+        for key, desc in (meta.pop("sparse_indexes", None) or {}).items():
+            found[f"sparse:{key}"] = desc
+        kinds = {"vector": "ivf", "dedup": "dedup", "fts": "fts"}
+        meta["indexes"] = {
+            name: {**desc, "kind": kinds.get(name, "sparse")}
+            for name, desc in found.items()
+            if desc and desc.get("epoch") is not None
+        }
+        vi = meta["indexes"].get("vector")
+        if vi is not None:
+            vi["n_docs"] = vi.pop("n_rows", 0)
+            vi["quantized"] = next(
+                (t for t, k in (("sign", "means"), ("sq4", "sq4_lo"), ("pq", "pq")) if k in vi),
+                False,
+            )
+        meta["config"] = {
+            k: md.pop(f"__{k}__")
+            for k in ("embedding_function", "sparse_embedding_function", "tokenizer", "functions")
+            if f"__{k}__" in md
+        }
+    return data
+
+
+_CATALOG_MIGRATIONS = {0: _migrate_catalog_v0, 1: _migrate_catalog_v1, 2: _migrate_catalog_v2}
 
 
 class CatalogConflictError(CollectionError):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from chroma_spark.api import Client, _ReadView
+from chroma_spark import layout
 from chroma_spark.sources.collection import CollectionError, StaleReadError
 
 
@@ -375,19 +376,38 @@ def test_modify_rename_and_metadata(client):
 
 
 def test_modify_metadata_keeps_engine_keys(client):
-    """modify(metadata=...) replaces the USER metadata only: the embedding
-    function and the FTS index descriptor survive, so later document adds
-    still embed and document filters stay index-served; a user key in the
-    engine's ``__`` namespace is rejected."""
+    """Engine state lives in typed catalog fields, never in the user's
+    metadata: with dense and sparse EFs, all four indexes, a tokenizer and
+    an attached function in place, ``meta.metadata`` holds only user keys
+    and the HTTP collection model returns it unfiltered. modify(metadata=
+    ...) replaces the USER metadata only: the embedding function and the
+    FTS index descriptor survive, so later document adds still embed and
+    document filters stay index-served; a user key in the ``__`` namespace
+    is rejected."""
+    from chroma_spark.server import _collection_model
+
     col = client.create_collection(
-        "modef", embedding_function="hashing", embedding_function_kwargs={"dim": 16}
+        "modef", embedding_function="hashing", embedding_function_kwargs={"dim": 16},
+        sparse_embedding_function="bm25_sparse", metadata={"team": "data"},
     )
     col.add(ids=["a", "b"], documents=["quick brown fox", "lazy dog sleeps"])
+    col.build_vector_index(n_lists=1)
+    col.build_sparse_index("sparse", n_buckets=4)
+    col.build_dedup_index(num_perm=8, bands=2)
     col.build_fts_index()
+    col.build_tokenizer(n_merges=4)
+    col.attach_function("counts", "record_counter")
+    meta = col._store.meta
+    assert meta.metadata == {"team": "data"}
+    assert _collection_model(client, "modef")["metadata"] == {"team": "data"}
+    assert set(meta.indexes) == {"vector", "sparse:sparse", "dedup", "fts"}
+    assert set(meta.config) == {
+        "embedding_function", "sparse_embedding_function", "tokenizer", "functions"
+    }
     col.modify(metadata={"purpose": "test"})
-    md = col._store.meta.metadata
-    assert md["purpose"] == "test"
-    assert "__embedding_function__" in md and "__fts_index__" in md
+    meta = col._store.meta
+    assert meta.metadata == {"purpose": "test"}
+    assert "embedding_function" in meta.config and "fts" in meta.indexes
     col.add(ids=["c"], documents=["quick red fox"])
     (got,) = col.get(ids=["c"], include=["embeddings"])
     assert got["embedding"] is not None and len(got["embedding"]) == 16
@@ -396,8 +416,8 @@ def test_modify_metadata_keeps_engine_keys(client):
     assert sorted(r["id"] for r in col.get(where_document=wd)) == ["a", "c"]
     with pytest.raises(CollectionError, match="reserved"):
         col.modify(metadata={"purpose": "x", "__fts_index__": None})
-    md = col._store.meta.metadata
-    assert md["purpose"] == "test" and md["__fts_index__"] is not None
+    meta = col._store.meta
+    assert meta.metadata == {"purpose": "test"} and meta.indexes["fts"] is not None
 
 
 def test_modify_rename_clash_rejected(client):
@@ -445,9 +465,9 @@ def test_schema_configured_index_builds_at_compaction(client):
     schema = Schema().create_index("vector_index", "#embedding", {"n_lists": 2})
     col = client.create_collection("auto_idx", dimension=2, schema=schema)
     col.add(ids=["a", "b", "c"], embeddings=[[1.0, 0], [0, 1.0], [0.7, 0.7]])
-    assert col._store.meta.vector_index is None
+    assert col._store.meta.indexes.get("vector") is None
     col.compact()  # declarative: schema config -> index written by compaction
-    vi = col._store.meta.vector_index
+    vi = col._store.meta.indexes["vector"]
     assert vi is not None and vi["version"] == col.version and vi["n_lists"] == 2
     assert col.query([[1.0, 0]], n_results=1)["ids"][0] == ["a"]
 
@@ -470,7 +490,7 @@ def test_quantized_vector_index_lifecycle(client, spark):
     assert set(res["ids"][0][:2]) == {"q3", "qnew"}
     # compaction refresh preserves quantization
     col.compact()
-    assert col._store.meta.vector_index.get("means") is not None
+    assert col._store.meta.indexes["vector"].get("means") is not None
 
 
 def test_query_empty_collection_per_query_lists(client):
@@ -706,8 +726,11 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
 
-    # compaction without refresh leaves the index stale -> exact fallback
-    col.compact(refresh_indexes=False)
+    # a descriptor older than the collection is stale -> exact fallback
+    col.compact()
+    col._store.catalog.mutate(
+        col._store.name, lambda m: m.indexes["vector"].__setitem__("version", m.version - 1)
+    )
     assert col._query_via_index(_view(col), qdf, 3, None, None) is None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
     col.build_vector_index(n_lists=3)
@@ -718,7 +741,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     # (the reference's compaction flushes the vector segment's index too)
     col.add(ids=["new2"], embeddings=[[0.1, 0.1, 0.1, 0.1]])
     col.compact()
-    assert col._store.meta.vector_index["version"] == col.version
+    assert col._store.meta.indexes["vector"]["version"] == col.version
     assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
 
 
@@ -753,20 +776,20 @@ def test_compaction_maintains_index_incrementally(client, spark):
     col.add(ids=ids, embeddings=embs)
     vi = col.build_vector_index(n_lists=4)
     trained = vi["trained_version"]
-    cents0 = sorted(tuple(r.centroid) for r in col._load_vector_index(col._store.meta.vector_index)[0].collect())
+    cents0 = sorted(tuple(r.centroid) for r in col._ivf(col._store.meta.indexes["vector"])[0].collect())
 
     col.add(ids=["n1"], embeddings=[[2.0, 2, 2, 2]])
     col.update(ids=["r3"], embeddings=[[3.0, 3, 3, 3]])
     col.delete(ids=["r4"])
     col.compact()
-    vi2 = col._store.meta.vector_index
+    vi2 = col._store.meta.indexes["vector"]
     assert vi2["trained_version"] == trained, "small delta must not retrain"
     assert vi2["version"] == col.version and vi2["n_appended"] == 3
-    cents1 = sorted(tuple(r.centroid) for r in col._load_vector_index(col._store.meta.vector_index)[0].collect())
+    cents1 = sorted(tuple(r.centroid) for r in col._ivf(col._store.meta.indexes["vector"])[0].collect())
     assert cents1 == cents0, "centroid table must be untouched by the delta"
 
     # live postings reflect the delta: n1 present, r4 gone, r3 moved
-    live = {r.id for r in col._load_vector_index(col._store.meta.vector_index)[1].select("id").distinct().collect()}
+    live = {r.id for r in col._ivf(col._store.meta.indexes["vector"])[1].select("id").distinct().collect()}
     assert "n1" in live and "r4" not in live and "r3" in live
 
     # with no WAL tail, the index-served query must equal exact brute force
@@ -785,7 +808,7 @@ def test_compaction_maintains_index_incrementally(client, spark):
         embeddings=[[rnd.random() for _ in range(4)] for _ in range(30)],
     )
     col.compact()
-    vi3 = col._store.meta.vector_index
+    vi3 = col._store.meta.indexes["vector"]
     assert vi3["trained_version"] == col.version, "drift must trigger a retrain"
     assert vi3["n_appended"] == 0
 
@@ -809,14 +832,14 @@ def test_compaction_maintains_sparse_index_incrementally(client):
     col.update(ids=["d6"], metadatas=[{"sv": {"indices": [2], "values": [40.0]}}])
     v_before = col.version
     col.compact()
-    si = col._store.meta.sparse_indexes["sv"]
+    si = col._store.meta.indexes["sparse:sv"]
     assert si["version"] == col.version and si["epoch"] == col.version
     assert si["n_appended"] == 3
     assert si["path"] == si0["path"], "small delta must not rewrite the layout"
     assert si["n_docs"] == 20.0  # 20 + n1 - d5
     assert col.version == v_before + 1
 
-    live = col._load_sparse_index(si)
+    live = layout.live(si, "postings")
     live_ids = {r.id for r in live.select("id").distinct().collect()}
     assert "n1" in live_ids and "d5" not in live_ids
     assert "__epoch" not in live.columns
@@ -837,8 +860,65 @@ def test_compaction_maintains_sparse_index_incrementally(client):
         metadatas=[{"sv": {"indices": [3], "values": [2.0]}} for _ in range(15)],
     )
     col.compact()
-    si2 = col._store.meta.sparse_indexes["sv"]
+    si2 = col._store.meta.indexes["sparse:sv"]
     assert si2["n_appended"] == 0 and si2["path"] != si0["path"], "drift must rebuild"
+
+
+@pytest.mark.parametrize("kind", ["vector", "sparse"])
+def test_index_maintenance_never_skips_a_batch(client, kind):
+    """Building another index kind compacts first; the index that missed
+    that compaction must not be marked fresh by the next one with only
+    the last batch appended (it would silently lose the batch it missed)."""
+    col = client.create_collection(f"skip_{kind}", dimension=2)
+    col.add(
+        ids=[f"a{i}" for i in range(8)],
+        embeddings=[[float(i), 1.0] for i in range(8)],
+        documents=[f"doc {i}" for i in range(8)],
+        metadatas=[{"sv": {"indices": [i % 3], "values": [1.0]}} for i in range(8)],
+    )
+    if kind == "vector":
+        col.build_vector_index(n_lists=2)
+    else:
+        col.build_sparse_index("sv", n_buckets=4)
+    col.add(ids=["far"], embeddings=[[100.0, 100.0]], documents=["far away"],
+            metadatas=[{"sv": {"indices": [9], "values": [5.0]}}])
+    col.build_fts_index()  # another kind's build folds "far" into the base
+    col.add(ids=["late"], embeddings=[[0.5, 0.5]], documents=["late doc"],
+            metadatas=[{"sv": {"indices": [0], "values": [1.0]}}])
+    col.compact()
+    if kind == "vector":
+        assert col.query([[100.0, 100.0]], n_results=1)["ids"][0] == ["far"]
+    else:
+        rank = {"$knn": {"query": {"indices": [9], "values": [1.0]}, "key": "sv", "limit": 1}}
+        assert [r["id"] for r in col.search(rank=rank, select=["#id"]).collect()] == ["far"]
+
+
+def test_sparse_n_docs_after_maintenance_equals_rebuild(client):
+    """The IDF denominator has one definition — docs with at least one
+    posting — so an incrementally maintained index scores exactly like a
+    fresh rebuild of the same state, empty sparse vectors included."""
+    col = client.create_collection("ndocs", dimension=2)
+    empty = {"indices": [], "values": []}
+    col.add(
+        ids=["a", "b", "c", "d"],
+        embeddings=[[1.0, 0.0]] * 4,
+        metadatas=[{"sv": {"indices": [0, 1], "values": [1.0, 2.0]}}, {"sv": empty},
+                   {"sv": {"indices": [1], "values": [3.0]}}, {"sv": empty}],
+    )
+    assert col.build_sparse_index("sv", n_buckets=4)["n_docs"] == 2
+    col.add(ids=["e"], embeddings=[[0.0, 1.0]],
+            metadatas=[{"sv": {"indices": [0], "values": [4.0]}}])
+    col.compact()
+    rank = {"$knn": {"query": {"indices": [0, 1], "values": [1.0, 1.0]}, "key": "sv", "limit": 5}}
+
+    def _scores():
+        return {r["id"]: round(r["score"], 9) for r in col.search(rank=rank, select=["#id"]).collect()}
+
+    maintained = _scores()
+    n_maintained = col._fresh_sparse_indexes(_view(col), keys={"sv"})["sv"][2]
+    rebuilt = col.build_sparse_index("sv", n_buckets=4)
+    assert maintained == _scores()
+    assert n_maintained == rebuilt["n_docs"] == 3
 
 
 def test_sq4_index_lifecycle_and_incremental_maintenance(client):
@@ -860,7 +940,7 @@ def test_sq4_index_lifecycle_and_incremental_maintenance(client):
     col.add(ids=["zz"], embeddings=[[2.0, 2, 2, 2]])
     assert col.query([[2.0, 2, 2, 2]], n_results=1)["ids"][0] == ["zz"]
     col.compact()
-    vi2 = col._store.meta.vector_index
+    vi2 = col._store.meta.indexes["vector"]
     assert vi2["trained_version"] == vi["trained_version"]
     assert vi2["sq4_lo"] == vi["sq4_lo"] and vi2["sq4_step"] == vi["sq4_step"]
     assert col.query([[2.0, 2, 2, 2]], n_results=1)["ids"][0] == ["zz"]
@@ -893,12 +973,12 @@ def test_pq_index_lifecycle_and_incremental_maintenance(client):
     col.add(ids=["zz"], embeddings=[[2.0] * 8])
     assert col.query([[2.0] * 8], n_results=1)["ids"][0] == ["zz"]
     col.compact()
-    vi2 = col._store.meta.vector_index
+    vi2 = col._store.meta.indexes["vector"]
     assert vi2["trained_version"] == vi["trained_version"]
     assert col.query([[2.0] * 8], n_results=1)["ids"][0] == ["zz"]
     assert col.query([embs[7]], n_results=1)["ids"][0] == ["p7"]
     # appended delta rows carry pq codes (encoded with trained books)
-    postings = col._load_vector_index(col._store.meta.vector_index)[1]
+    postings = col._ivf(col._store.meta.indexes["vector"])[1]
     assert postings.filter("pq_code is null").count() == 0
 
     # dim not divisible by 8 -> clean refusal
@@ -929,7 +1009,7 @@ def test_incremental_maintenance_soak_many_cycles(client, spark):
         col.add(ids=[victim], embeddings=[[float(cycle), 0.5, 0.5, 0.5]])
         col.update(ids=["r1"], embeddings=[[0.5, float(cycle), 0.5, 0.5]])
         col.compact()
-        vi = col._store.meta.vector_index
+        vi = col._store.meta.indexes["vector"]
         assert vi["trained_version"] == trained, f"cycle {cycle} retrained"
         assert vi["version"] == col.version
         q = [float(cycle), 0.5, 0.5, 0.5]
@@ -941,7 +1021,7 @@ def test_incremental_maintenance_soak_many_cycles(client, spark):
         assert got == [r.id for r in exact.orderBy("rank").collect()], f"cycle {cycle}"
         assert got[0] == victim
         # exactly one live posting per id despite 5 generations of appends
-        live = col._load_vector_index(col._store.meta.vector_index)[1].groupBy("id").count()
+        live = col._ivf(col._store.meta.indexes["vector"])[1].groupBy("id").count()
         over = live.filter(F_col_count_gt(2)).collect()  # replicas=2 per id max
         assert over == [], over
 
@@ -963,7 +1043,7 @@ def test_quantized_index_incremental_append_uses_trained_pivot(client, spark):
     means0 = vi["means"]
     col.add(ids=["zz"], embeddings=[[2.0, 2, 2, 2]])
     col.compact()
-    vi2 = col._store.meta.vector_index
+    vi2 = col._store.meta.indexes["vector"]
     assert vi2["trained_version"] == vi["trained_version"]
     assert vi2["means"] == means0, "delta must encode with the trained pivot"
     # appended row is code-searchable end to end
@@ -995,7 +1075,7 @@ def test_fork_isolated_from_parent_incremental_appends(client):
             metadatas=[{"sv": {"indices": [0], "values": [9.0]}}])
     col.delete(ids=["b"])
     col.compact()
-    assert col._store.meta.vector_index["path"] == child._store.meta.vector_index["path"]
+    assert col._store.meta.indexes["vector"]["path"] == child._store.meta.indexes["vector"]["path"]
 
     # parent sees its new state
     got_parent = set(col.query([[0.0, 1.0]], n_results=4)["ids"][0])
@@ -1148,8 +1228,8 @@ def test_sparse_index_lifecycle_in_search(client):
     assert scores == {"b": 1.0 - 10.0, "d": 1.0 - 7.0}
     # compaction refreshes the sparse index for the new version
     col.compact()
-    assert col._store.meta.sparse_indexes["sv"]["version"] == col.version
-    assert col._store.meta.sparse_indexes["sv"]["n_docs"] == 3.0  # b, c, d
+    assert col._store.meta.indexes["sparse:sv"]["version"] == col.version
+    assert col._store.meta.indexes["sparse:sv"]["n_docs"] == 3.0  # b, c, d
     scores = {r["id"]: r["score"] for r in col.search(rank=rank, select=["#id"]).collect()}
     assert scores == {"b": 1.0 - 10.0, "d": 1.0 - 7.0}
 
@@ -1169,7 +1249,7 @@ def test_compact_deregisters_index_when_collection_empties(client):
     col.delete(ids=["a", "b"])
     v = col.compact()  # must not crash the k-means build on zero vectors
     assert col.count() == 0 and col.version == v
-    assert col._store.meta.vector_index is None
+    assert col._store.meta.indexes.get("vector") is None
     # and the collection keeps working afterwards
     col.add(ids=["c"], embeddings=[[0.5, 0.5]])
     assert col.query([[0.5, 0.5]], n_results=1)["ids"][0] == ["c"]
@@ -1504,13 +1584,13 @@ def test_dedup_index_lifecycle(client):
     with pytest.raises(Exception, match="stale"):
         col.find_near_duplicates(batch)
     v2 = col.compact()
-    desc2 = col._store.meta.metadata["__dedup_index__"]
+    desc2 = col._store.meta.indexes["dedup"]
     assert desc2["version"] == v2
     assert desc2["path"] == desc["path"]  # in-place append, no new layout dir
     after = _file_states(os.path.join(desc2["path"], "bands"))
     assert {p: after[p] for p in before} == before  # pre-existing files untouched
     assert set(after) > set(before)  # the changed doc's rows were appended
-    live = col._load_dedup_bands(desc2)
+    live = layout.live(desc2, "bands")
     rows2 = {(r.id, r.band, r.bh) for r in live.drop("fp").collect()}
     b_old = spark.read.parquet(os.path.join(desc["path"], "bands")).filter("__epoch = %d" % desc["epoch"])
     rows1 = {(r.id, r.band, r.bh) for r in b_old.drop("fp", "__epoch").collect()}
@@ -1522,8 +1602,8 @@ def test_dedup_index_lifecycle(client):
     # update one doc: its old rows die by tombstone, others stay on disk
     col.update(ids=["b"], documents=["completely new content replacing b entirely now"])
     col.compact()
-    desc3 = col._store.meta.metadata["__dedup_index__"]
-    live3 = {(r.id, r.fp) for r in col._load_dedup_bands(desc3).select("id", "fp").distinct().collect()}
+    desc3 = col._store.meta.indexes["dedup"]
+    live3 = {(r.id, r.fp) for r in layout.live(desc3, "bands").select("id", "fp").distinct().collect()}
     assert {i for i, _ in live3} == {"a", "b", "c", *fillers}
     b_fp = {fp for i, fp in live3 if i == "b"}
     old_b_fp = {fp for i, fp in {(r.id, r.fp) for r in b_old.collect()} if i == "b"}
@@ -1687,7 +1767,7 @@ def test_persisted_tokenizer_lifecycle(client, spark, tmp_path):
     after = {r.id: (r.n_words, r.n_bpe) for r in col.token_counts().collect()}
     assert after["a"] == before["a"] and after["b"] == before["b"]
     assert after["c"][0] == 3
-    assert col._store.meta.metadata["__tokenizer__"]["merges"] == desc["merges"]
+    assert col._store.meta.config["tokenizer"]["merges"] == desc["merges"]
     # index_only skips the WAL tail
     assert {r.id for r in col.token_counts(read_level="index_only").collect()} == {"a", "b"}
 
@@ -1729,6 +1809,13 @@ def test_copy_to_materialized_full_and_filtered(spark, tmp_path):
     # empty result still creates the (empty) destination
     none = col.copy_to("none", where={"k": {"$gt": 99}})
     assert none.count() == 0 and "none" in client.list_collections()
+    # index descriptors never travel: a copy at the source's index version
+    # must not serve its document filters from the source's postings
+    col.build_fts_index()
+    fts_dst = col.copy_to("fts_dst")
+    fts_dst.add(ids=["z"], embeddings=[[0.3, 0.7]], documents=["zebra quokka"])
+    fts_dst.compact()
+    assert [r["id"] for r in fts_dst.get(where_document={"$contains": "quokka"})] == ["z"]
 
 
 def test_copy_to_across_clients(spark, tmp_path):

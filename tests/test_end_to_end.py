@@ -48,7 +48,7 @@ def test_full_user_journey(spark, tmp_path):
 
     # compaction builds the schema-configured vector index declaratively
     col.compact()
-    assert col._store.meta.vector_index is not None
+    assert col._store.meta.indexes.get("vector") is not None
     col.build_sparse_index("sv", n_buckets=4)
 
     # filtered hybrid search: dense text query + where filter + pagination
@@ -153,9 +153,9 @@ def test_bulk_pipeline_journey_over_testdata(spark, tmp_path):
         "id STRING, embedding ARRAY<FLOAT>, document STRING, lang STRING, source STRING, n_chars LONG",
     )
     col.add_records(delta, op="UPSERT")
-    trained = col._store.meta.vector_index["trained_version"]
+    trained = col._store.meta.indexes["vector"]["trained_version"]
     col.compact()
-    vi = col._store.meta.vector_index
+    vi = col._store.meta.indexes["vector"]
     assert vi["trained_version"] == trained and vi["version"] == col.version
     assert col.query([qvec], n_results=2)["ids"][0] == ["3", "bulk-new"] or (
         col.query([qvec], n_results=2)["ids"][0] == ["bulk-new", "3"]

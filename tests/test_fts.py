@@ -64,7 +64,7 @@ def test_fts_index_serves_contains_and_regex(client):
     ]
     before = [_ids(col, wd) for wd in cases]
     col.build_fts_index()
-    assert col._store.meta.metadata["__fts_index__"]["n_docs"] == len(DOCS)
+    assert col._store.meta.indexes["fts"]["n_docs"] == len(DOCS)
     after = [_ids(col, wd) for wd in cases]
     assert before == after
     # sanity on actual semantics
@@ -100,7 +100,7 @@ def test_fts_wal_tail_reads_stay_exact(client):
 def test_fts_maintenance_is_o_changed_and_exact(client):
     col = _mk(client, "fts4")
     col.build_fts_index()
-    path = col._store.meta.metadata["__fts_index__"]["path"]
+    path = col._store.meta.indexes["fts"]["path"]
 
     def _files():
         out = {}
@@ -116,7 +116,7 @@ def test_fts_maintenance_is_o_changed_and_exact(client):
     col.add(ids=["g"], embeddings=[[8.0, 0.0]], documents=["gnu quick gnu"])
     col.update(ids=["b"], documents=["crate swapped for the container contents"])
     col.compact()
-    desc = col._store.meta.metadata["__fts_index__"]
+    desc = col._store.meta.indexes["fts"]
     assert desc["version"] == col.version and desc["n_appended"] >= 2
     after = _files()
     for p, sig in before.items():
@@ -141,7 +141,7 @@ def test_fts_survives_cold_reopen_and_gc(client, spark, tmp_path):
         r["id"] for r in col2.get(where_document={"$contains": "quick"}, include=[])
     ) == ["a", "d", "h"]
     # the live layout survived gc
-    assert os.path.isdir(col2._store.meta.metadata["__fts_index__"]["path"])
+    assert os.path.isdir(col2._store.meta.indexes["fts"]["path"])
 
 
 def test_fts_rebuild_after_drift(client):
@@ -149,11 +149,11 @@ def test_fts_rebuild_after_drift(client):
     layout build instead of unbounded tombstone debt."""
     col = _mk(client, "fts6")
     col.build_fts_index()
-    old_path = col._store.meta.metadata["__fts_index__"]["path"]
+    old_path = col._store.meta.indexes["fts"]["path"]
     for i in sorted(DOCS):
         col.update(ids=[i], documents=[f"completely regenerated text number {i} quick"])
     col.compact()
-    desc = col._store.meta.metadata["__fts_index__"]
+    desc = col._store.meta.indexes["fts"]
     assert desc["path"] != old_path  # rebuilt into a fresh layout dir
     assert desc["n_appended"] == 0
     assert _ids(col, {"$contains": "regenerated"}) == sorted(DOCS)
