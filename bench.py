@@ -1,7 +1,10 @@
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": N, "builds": {store: sec}, ...}
+Index stores are opened (built if missing or stale) in the unbudgeted
+warmup, so no timed query includes an index build.
 """
 
 from __future__ import annotations
@@ -13,7 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from chroma_spark.registry import QUERIES  # noqa: E402
+from chroma_spark.registry import BUILDS, QUERIES, STORES  # noqa: E402
 from chroma_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -46,6 +49,11 @@ BENCH_QUERIES = [
     "top_customers",
 ]
 
+# the registry testdata stores BENCH_QUERIES read (bm25_topk; the docs
+# collection for sparse_dot_topk / rank_hybrid_sparse; the emb collection
+# for rank_hybrid_sparse and the ann_* queries)
+BENCH_STORES = ("bm25", "docs", "emb")
+
 # Per-query budgets at sf0.1: 2x the BASELINE.md §B row where one exists,
 # else ~2.5x a healthy measured run (ambient-load spread documented there is
 # ±10%; these only trip on real plan regressions). Violations are reported
@@ -77,7 +85,7 @@ BUDGETS_SEC = {
 }
 
 
-def _warmup(spark) -> None:
+def _warmup(spark) -> dict[str, float]:
     """Unbudgeted warmup so the first budgeted query measures the query, not
     session startup or box state (page cache cold after a pytest soak, JIT
     and codegen caches empty). Touches every table the suite scans —
@@ -95,20 +103,30 @@ def _warmup(spark) -> None:
             # filter + agg exercises scan, codegen, and Arrow paths once
             df.filter(F.length(F.col(df.columns[0]).cast("string")) >= 0).count()
     print(f"# warmup (unbudgeted): {round(time.time() - t0, 3)}s", file=sys.stderr)
+    builds = {}
+    for name in BENCH_STORES:
+        n_built = len(BUILDS)
+        STORES[name](spark, SF_DIR)
+        builds[name] = sum((sec for _, sec in BUILDS[n_built:]), 0.0)  # 0.0: reused
+        print(f"# build {name} (unbudgeted): {builds[name]}s", file=sys.stderr)
+    return builds
 
 
 def main() -> None:
     spark = get_spark("chroma-spark-bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    _warmup(spark)
+    builds = _warmup(spark)
     timings: dict[str, float] = {}
     reruns: dict[str, float] = {}
     for name in BENCH_QUERIES:
         q = QUERIES[name]
+        n_built = len(BUILDS)
         t0 = time.time()
         n = q.fn(spark, SF_DIR).count()
         timings[name] = round(time.time() - t0, 3)
         print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
+        if len(BUILDS) > n_built:
+            print(f"# {name}: timed run built a store; add it to BENCH_STORES", file=sys.stderr)
         if name in BUDGETS_SEC and timings[name] > BUDGETS_SEC[name]:
             # isolated-rerun discipline, automated: a one-off over-budget
             # reading is usually transient box state (GC pause, page-cache
@@ -136,6 +154,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "builds": builds,
                 "budget_violations": violations,
                 "budget_reruns": reruns,
             }

@@ -7,7 +7,7 @@ DataFrames (pointer-chasing, global mutable state) — which is exactly why
 Chroma itself moved to SPANN for its distributed tier. We re-express SPANN's
 structure natively:
 
-- **build**: MLlib k-means (fixed seed) -> ``centroids`` table
+- **build**: seeded k-means (driver-side numpy) -> ``centroids`` table
   ``(centroid_id, centroid)`` + ``postings`` table = records tagged with
   their nearest centroid, written PARTITIONED BY centroid_id. At 100 TB the
   k-means runs on a sample and assignment is one broadcast-join pass.
@@ -122,11 +122,8 @@ def build_ivf(
     id_col: str = "id",
     vec_col: str = "embedding",
     seed: int = 42,
-    sample_fraction: float | None = None,
     max_iter: int = 20,
     replicas: int = 2,
-    train_partitions: int | None = 8,
-    trainer: str = "numpy",
     max_train_sample: int = 262_144,
     restarts: int = 4,
     assign_method: str = "expr",
@@ -146,25 +143,9 @@ def build_ivf(
     the records — one pass, no record-side shuffle before the final
     repartition-by-list.
     """
-    if trainer == "numpy":
-        centers = _train_centroids_numpy(
-            records, n_lists, vec_col, seed, max_iter, max_train_sample, restarts
-        )
-    else:  # MLlib path for samples too large to collect driver-side
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        train = records.select(F.col(vec_col).alias("__vec"))
-        if sample_fraction is not None and sample_fraction < 1.0:
-            train = train.sample(fraction=sample_fraction, seed=seed)
-        if train_partitions is not None:
-            # a handful of partitions avoids paying per-iteration scheduler
-            # overhead on k-means' many tiny jobs; measured 2x on the build.
-            # Pass None to keep the input partitioning for huge samples.
-            train = train.coalesce(train_partitions)
-        km = KMeans(k=n_lists, seed=seed, maxIter=max_iter, featuresCol="__feat")
-        model = km.fit(train.select(array_to_vector("__vec").alias("__feat")))
-        centers = [[float(x) for x in c] for c in model.clusterCenters()]
+    centers = _train_centroids_numpy(
+        records, n_lists, vec_col, seed, max_iter, max_train_sample, restarts
+    )
     spark = records.sparkSession
     centroids = local_frame(
         spark,

@@ -43,7 +43,6 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 RECORD_COLS = ("id", "embedding", "document", "uri")
 LOG_COLS = ("seq_id", "op")
@@ -544,21 +543,3 @@ class CollectionStore:
         if not os.path.isdir(d):
             return []
         return sorted(os.path.join(d, s) for s in os.listdir(d) if s.startswith("batch-"))
-
-
-def align_columns(dfs: list[DataFrame]) -> list[DataFrame]:
-    """unionByName-compatible column alignment across evolving schemas."""
-    all_cols: list[str] = []
-    types: dict[str, str] = {}
-    for df in dfs:
-        for c, t in df.dtypes:
-            if c not in types:
-                all_cols.append(c)
-                types[c] = t
-    out = []
-    for df in dfs:
-        missing = [c for c in all_cols if c not in df.columns]
-        for c in missing:
-            df = df.withColumn(c, F.lit(None).cast(types[c]))
-        out.append(df.select(*all_cols))
-    return out

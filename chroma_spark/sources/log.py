@@ -246,9 +246,3 @@ def _is_null(v) -> bool:
         return bool(result) if not hasattr(result, "__len__") else False
     except (TypeError, ValueError):
         return False
-
-
-def next_seq_window(log: DataFrame, seq_col: str = "seq_id") -> int:
-    """Max assigned seq + 1 (the log version a new append starts at)."""
-    row = log.agg(F.max(seq_col).alias("m")).first()
-    return int(row["m"]) + 1 if row["m"] is not None else 0

@@ -9,6 +9,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_MEDIUM = os.environ.get("SPARK_GRAFT_SF_MEDIUM", "/root/testdata/sf0.01")
+# the headline-suite scale (bench.py): recall gates that only bite past a
+# few thousand vectors run here
+SF_LARGE = os.environ.get(
+    "SPARK_GRAFT_SF_LARGE", os.path.join(os.path.dirname(SF_MEDIUM), "sf0.1")
+)
 
 
 @pytest.fixture(scope="session")

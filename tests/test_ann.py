@@ -5,11 +5,14 @@ equivalence (nprobe == n_lists must equal exact search).
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from chroma_spark.ann.ivf import build_ivf, ivf_search, recall_at_k
 from chroma_spark.operators.knn import exact_knn
-from tests.conftest import SF_MEDIUM
+from tests.conftest import SF_LARGE, SF_MEDIUM, SF_SMALL
 
 
 def _records(spark):
@@ -100,6 +103,27 @@ def test_ivf_quantized_pipeline_recall(spark):
     )
     r = recall_at_k(approx, exact)
     assert r >= 0.95, f"ivf+quantized recall@10 = {r}"
+
+
+@pytest.mark.parametrize("sf", [SF_SMALL, SF_LARGE], ids=["sf_small", "sf_large"])
+@pytest.mark.parametrize("name", ["ann_ivf_topk", "ann_quantized_topk"])
+def test_registered_ann_recall(spark, name, sf):
+    """The registered trained-ANN queries have no SQL oracle; this is their
+    gate: recall@10 >= 0.95 vs exact l2 over their own queries (ids < 5),
+    so a wrong id decode, space or index descriptor in the registry wiring
+    fails here. Past a few thousand vectors the quantized tier's re-rank
+    budget is what holds it (sf_large)."""
+    from chroma_spark.registry import QUERIES
+
+    if not os.path.isdir(sf):
+        pytest.skip(f"no testdata at {sf}")
+    records = spark.read.parquet(f"{sf}/embeddings.parquet").select(
+        F.col("vec_id").alias("id"), "embedding"
+    )
+    queries = records.filter(F.col("id") < 5).select(F.col("id").alias("query_id"), "embedding")
+    exact = exact_knn(records, queries, k=10, space="l2")
+    r = recall_at_k(QUERIES[name].fn(spark, sf), exact)
+    assert r >= 0.95, f"{name} recall@10 = {r} at {sf}"
 
 
 # ---------------------------------------------------------------------------

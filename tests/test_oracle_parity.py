@@ -64,6 +64,29 @@ def test_rows_only_queries_run(spark):
             assert df.count() >= 0, name
 
 
+def test_torn_store_marker_rebuilds(spark, duck):
+    """A store whose marker was cut mid-write (a killed build, two
+    processes racing) is stale, not an error: the next call rebuilds it
+    from scratch and still matches the oracle; the new marker is whole."""
+    import json
+    import os
+
+    from chroma_spark import registry
+
+    q = QUERIES["doc_contains_indexed"]
+    q.fn(spark, SF_SMALL).count()
+    root = registry._index_dir("docs", SF_SMALL)
+    with open(os.path.join(root, "_index_meta.json"), "w") as f:
+        f.write('{"src_sig": [17')
+    registry._STORES.pop(root)  # as a fresh process would see it
+    n_built = len(registry.BUILDS)
+    got = sorted(r["id"] for r in q.fn(spark, SF_SMALL).collect())
+    assert got == sorted(r[0] for r in duck.execute(q.oracle).fetchall())
+    assert [b for b, _ in registry.BUILDS[n_built:]] == [os.path.basename(root)]
+    with open(os.path.join(root, "_index_meta.json")) as f:
+        assert json.load(f)["src_sig"] is not None
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
