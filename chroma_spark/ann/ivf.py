@@ -270,6 +270,22 @@ def probed_postings(
     return postings.filter(F.col("centroid_id").isin([int(c) for c in centroid_ids]))
 
 
+def probe_lists(q: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """The ``nprobe`` nearest posting lists per query: ``q``'s columns
+    (``__qid``, ``__qvec`` and any query-side code column) plus
+    ``centroid_id``. Centroid ranking always uses l2 (k-means trains in l2)."""
+    cdist = distance(F.col("centroid"), F.col("__qvec"), "l2")
+    return topk_per_group(
+        q.crossJoin(F.broadcast(centroids)).select(
+            *q.columns, "centroid_id", cdist.alias("__cdist")
+        ),
+        ["__qid"],
+        [F.col("__cdist").asc(), F.col("centroid_id").asc()],
+        nprobe,
+        two_stage=False,  # centroid set is tiny; one window pass
+    ).select(*q.columns, "centroid_id")
+
+
 def ivf_search(
     centroids: DataFrame,
     postings: DataFrame,
@@ -300,17 +316,7 @@ def ivf_search(
     versions re-enter through the log-side brute force + knn_merge.
     """
     q = queries.select(F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec"))
-    cdist = distance(F.col("centroid"), F.col("__qvec"), "l2")
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(centroids)).select(
-            "__qid", "__qvec", "centroid_id", cdist.alias("__cdist")
-        ),
-        ["__qid"],
-        [F.col("__cdist").asc(), F.col("centroid_id").asc()],
-        nprobe,
-        two_stage=False,  # centroid set is tiny; one window pass
-    ).select("__qid", "__qvec", "centroid_id")
-    probed = postings.join(F.broadcast(probes), "centroid_id")
+    probed = postings.join(F.broadcast(probe_lists(q, centroids, nprobe)), "centroid_id")
     if allowed_ids is not None:
         probed = probed.join(allowed_ids.select(F.col(id_col)), id_col, "semi")
     if excluded_ids is not None:

@@ -36,8 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.distance import distance
-from ..operators.topk import topk_per_group
+from .rerank import coded_search, rounded
 
 
 def train_pq(
@@ -175,6 +174,20 @@ def pq_adc_expr(code_col: str, lut_col: str, m: int, k_codes: int) -> F.Column:
     )
 
 
+def _pq_query(queries, codebooks, code_col, query_id_col, query_vec_col, round_decimals):
+    """Query side ``(__qid, __qvec, __lut)`` of the PQ tier and its ADC
+    distance; the LUT rides the broadcast query side."""
+    m, k_codes = len(codebooks), len(codebooks[0])
+    q = _with_lut(
+        queries.select(
+            F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
+        ),
+        codebooks,
+        "__qvec",
+    )
+    return q, rounded(pq_adc_expr(code_col, "__lut", m, k_codes), round_decimals)
+
+
 def pq_search(
     coded_records: DataFrame,
     queries: DataFrame,
@@ -192,39 +205,10 @@ def pq_search(
     """ADC prefilter (top ``rerank_factor * k``) -> exact re-rank top-k.
     Output ``(query_id, id, dist, rank)`` — drop-in interchangeable with
     the other KNN operators."""
-    m, k_codes = len(codebooks), len(codebooks[0])
-    q = _with_lut(
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
-        ),
-        codebooks,
-        "__qvec",
-    )
-    from .rerank import hydrate_rerank
-
-    adc = pq_adc_expr(code_col, "__lut", m, k_codes)
-    if round_decimals is not None:
-        adc = F.round(adc, round_decimals) + F.lit(0.0)
-    # narrow prefilter: the LUT rides the broadcast query side; candidate
-    # rows carry only (qid, id, adc) into the top-k shuffle (see rerank.py)
-    survivors = topk_per_group(
-        coded_records.crossJoin(F.broadcast(q.select("__qid", "__lut"))).select(
-            "__qid", F.col(id_col), adc.alias("__adc")
-        ),
-        ["__qid"],
-        [F.col("__adc").asc(), F.col(id_col).asc()],
-        rerank_factor * k,
-    ).select("__qid", id_col)
-    return hydrate_rerank(
-        survivors,
-        coded_records,
-        q.select("__qid", "__qvec"),
-        k,
-        space,
-        id_col,
-        vec_col,
-        query_id_col,
-        round_decimals,
+    q, adc = _pq_query(queries, codebooks, code_col, query_id_col, query_vec_col, round_decimals)
+    return coded_search(
+        coded_records, q, adc, "__lut", k, rerank_factor, space, id_col, vec_col,
+        query_id_col, round_decimals,
     )
 
 
@@ -250,55 +234,8 @@ def ivf_pq_search(
     within the probed lists -> exact re-rank. ``allowed_ids`` /
     ``excluded_ids``: see ``ivf.ivf_search`` (filter-before-ANN and
     WAL-tail staleness exclusion)."""
-    m, k_codes = len(codebooks), len(codebooks[0])
-    q = _with_lut(
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
-        ),
-        codebooks,
-        "__qvec",
-    )
-    cdist = distance(F.col("centroid"), F.col("__qvec"), "l2")
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(centroids)).select(
-            "__qid", "__qvec", "__lut", "centroid_id", cdist.alias("__cdist")
-        ),
-        ["__qid"],
-        [F.col("__cdist").asc(), F.col("centroid_id").asc()],
-        nprobe,
-        two_stage=False,
-    ).select("__qid", "__qvec", "__lut", "centroid_id")
-    probed_src = coded_postings
-    if allowed_ids is not None:
-        probed_src = probed_src.join(allowed_ids.select(F.col(id_col)), id_col, "semi")
-    if excluded_ids is not None:
-        probed_src = probed_src.join(excluded_ids.select(F.col(id_col)), id_col, "anti")
-    from .rerank import hydrate_rerank
-
-    adc = pq_adc_expr(code_col, "__lut", m, k_codes)
-    if round_decimals is not None:
-        adc = F.round(adc, round_decimals) + F.lit(0.0)
-    # narrow prefilter: (qid, id, adc); replicas collapse via min
-    survivors = topk_per_group(
-        probed_src.join(F.broadcast(probes.drop("__qvec")), "centroid_id")
-        .select("__qid", F.col(id_col), adc.alias("__adc"))
-        .groupBy("__qid", id_col)
-        .agg(F.min("__adc").alias("__adc")),
-        ["__qid"],
-        [F.col("__adc").asc(), F.col(id_col).asc()],
-        rerank_factor * k,
-    ).select("__qid", id_col)
-    hyd_src = probed_src.join(
-        F.broadcast(probes.select("centroid_id").distinct()), "centroid_id"
-    )
-    return hydrate_rerank(
-        survivors,
-        hyd_src,
-        q.select("__qid", "__qvec"),
-        k,
-        space,
-        id_col,
-        vec_col,
-        query_id_col,
-        round_decimals,
+    q, adc = _pq_query(queries, codebooks, code_col, query_id_col, query_vec_col, round_decimals)
+    return coded_search(
+        coded_postings, q, adc, "__lut", k, rerank_factor, space, id_col, vec_col,
+        query_id_col, round_decimals, centroids, nprobe, allowed_ids, excluded_ids,
     )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.distance import distance
-from ..operators.topk import topk_per_group
+from .rerank import coded_search, rounded
 
 WORD = 64
 
@@ -85,6 +85,17 @@ def build_codes(
     if means is None:
         means = dim_means(records, vec_col)
     return records.withColumn("code", _pack_expr(vec_col, means)), means
+
+
+def _with_codes(
+    queries: DataFrame, means: list[float], query_id_col: str, query_vec_col: str
+) -> DataFrame:
+    """Query side of the sign-bit tier: ``(__qid, __qvec, __qcode)``."""
+    return queries.select(
+        F.col(query_id_col).alias("__qid"),
+        F.col(query_vec_col).alias("__qvec"),
+        _pack_expr(query_vec_col, means).alias("__qcode"),
+    )
 
 
 def hamming(code_a: F.Column, code_b: F.Column) -> F.Column:
@@ -176,6 +187,17 @@ def build_codes4(
     return records.withColumn("code4", _pack4_expr(vec_col, lo, step)), ranges
 
 
+def _sq4_query(queries, ranges, space, query_id_col, query_vec_col, round_decimals):
+    """Query side ``(__qid, __qvec)`` of the SQ4 tier and its ADC distance:
+    the full-precision query against the reconstructed candidate."""
+    lo, step = ranges
+    q = queries.select(
+        F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
+    )
+    adc = distance(_unpack4_expr("code4", lo, step), F.col("__qvec"), space)
+    return q, rounded(adc, round_decimals)
+
+
 def sq4_search(
     coded_records: DataFrame,
     queries: DataFrame,
@@ -193,27 +215,10 @@ def sq4_search(
     top ``rerank_factor*k``) -> exact re-rank top-k. Output
     ``(query_id, id, dist, rank)``, drop-in interchangeable with the other
     KNN operators. ADC distances round like exact ones so ties are stable."""
-    from .rerank import hydrate_rerank
-
-    lo, step = ranges
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
-    )
-    adc = distance(_unpack4_expr("code4", lo, step), F.col("__qvec"), space)
-    if round_decimals is not None:
-        adc = F.round(adc, round_decimals) + F.lit(0.0)
-    # prefilter emits ONLY (qid, id, adc): the top-k shuffle stays narrow
-    # even with millions of candidates (see rerank.py)
-    survivors = topk_per_group(
-        coded_records.crossJoin(F.broadcast(q)).select(
-            "__qid", F.col(id_col), adc.alias("__adc")
-        ),
-        ["__qid"],
-        [F.col("__adc").asc(), F.col(id_col).asc()],
-        rerank_factor * k,
-    ).select("__qid", id_col)
-    return hydrate_rerank(
-        survivors, coded_records, q, k, space, id_col, vec_col, query_id_col, round_decimals
+    q, adc = _sq4_query(queries, ranges, space, query_id_col, query_vec_col, round_decimals)
+    return coded_search(
+        coded_records, q, adc, "__qvec", k, rerank_factor, space, id_col, vec_col,
+        query_id_col, round_decimals,
     )
 
 
@@ -236,46 +241,10 @@ def ivf_sq4_search(
 ) -> DataFrame:
     """IVF + SQ4: nprobe centroid pruning -> ADC prefilter within probed
     lists -> exact re-rank; the probed scan reads the narrow code column."""
-    lo, step = ranges
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
-    )
-    cdist = distance(F.col("centroid"), F.col("__qvec"), "l2")
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(centroids)).select(
-            "__qid", "__qvec", "centroid_id", cdist.alias("__cdist")
-        ),
-        ["__qid"],
-        [F.col("__cdist").asc(), F.col("centroid_id").asc()],
-        nprobe,
-        two_stage=False,
-    ).select("__qid", "__qvec", "centroid_id")
-    probed_src = coded_postings
-    if allowed_ids is not None:
-        probed_src = probed_src.join(allowed_ids.select(F.col(id_col)), id_col, "semi")
-    if excluded_ids is not None:
-        probed_src = probed_src.join(excluded_ids.select(F.col(id_col)), id_col, "anti")
-    from .rerank import hydrate_rerank
-
-    adc = distance(_unpack4_expr("code4", lo, step), F.col("__qvec"), space)
-    if round_decimals is not None:
-        adc = F.round(adc, round_decimals) + F.lit(0.0)
-    # narrow prefilter: (qid, id, adc) only; replicas collapse via min
-    survivors = topk_per_group(
-        probed_src.join(F.broadcast(probes), "centroid_id")
-        .select("__qid", F.col(id_col), adc.alias("__adc"))
-        .groupBy("__qid", id_col)
-        .agg(F.min("__adc").alias("__adc")),
-        ["__qid"],
-        [F.col("__adc").asc(), F.col(id_col).asc()],
-        rerank_factor * k,
-    ).select("__qid", id_col)
-    # hydration scan stays partition-pruned to the probed lists
-    hyd_src = probed_src.join(
-        F.broadcast(probes.select("centroid_id").distinct()), "centroid_id"
-    )
-    return hydrate_rerank(
-        survivors, hyd_src, q, k, space, id_col, vec_col, query_id_col, round_decimals
+    q, adc = _sq4_query(queries, ranges, space, query_id_col, query_vec_col, round_decimals)
+    return coded_search(
+        coded_postings, q, adc, "__qvec", k, rerank_factor, space, id_col, vec_col,
+        query_id_col, round_decimals, centroids, nprobe, allowed_ids, excluded_ids,
     )
 
 
@@ -297,33 +266,10 @@ def quantized_search(
     Output ``(query_id, id, dist, rank)`` — drop-in interchangeable with
     exact_knn / ivf_search, recall-tested the same way.
     """
-    from .rerank import hydrate_rerank
-
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(query_vec_col).alias("__qvec"),
-        _pack_expr(query_vec_col, means).alias("__qcode"),
-    )
-    ham = hamming(F.col("code"), F.col("__qcode"))
-    # narrow prefilter: (qid, id, ham) only (see rerank.py)
-    survivors = topk_per_group(
-        coded_records.crossJoin(F.broadcast(q.select("__qid", "__qcode"))).select(
-            "__qid", F.col(id_col), ham.alias("__ham")
-        ),
-        ["__qid"],
-        [F.col("__ham").asc(), F.col(id_col).asc()],
-        rerank_factor * k,
-    ).select("__qid", id_col)
-    return hydrate_rerank(
-        survivors,
-        coded_records,
-        q.select("__qid", "__qvec"),
-        k,
-        space,
-        id_col,
-        vec_col,
-        query_id_col,
-        round_decimals,
+    q = _with_codes(queries, means, query_id_col, query_vec_col)
+    return coded_search(
+        coded_records, q, hamming(F.col("code"), F.col("__qcode")), "__qcode", k,
+        rerank_factor, space, id_col, vec_col, query_id_col, round_decimals,
     )
 
 
@@ -349,50 +295,9 @@ def ivf_quantized_search(
     reads only probed partitions AND only the narrow code column.
     ``allowed_ids``/``excluded_ids``: see ivf.ivf_search (filter-before-ANN
     and WAL-tail staleness exclusion)."""
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(query_vec_col).alias("__qvec"),
-        _pack_expr(query_vec_col, means).alias("__qcode"),
-    )
-    cdist = distance(F.col("centroid"), F.col("__qvec"), "l2")
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(centroids)).select(
-            "__qid", "__qvec", "__qcode", "centroid_id", cdist.alias("__cdist")
-        ),
-        ["__qid"],
-        [F.col("__cdist").asc(), F.col("centroid_id").asc()],
-        nprobe,
-        two_stage=False,
-    ).select("__qid", "__qvec", "__qcode", "centroid_id")
-    probed_src = coded_postings
-    if allowed_ids is not None:
-        probed_src = probed_src.join(allowed_ids.select(F.col(id_col)), id_col, "semi")
-    if excluded_ids is not None:
-        probed_src = probed_src.join(excluded_ids.select(F.col(id_col)), id_col, "anti")
-    from .rerank import hydrate_rerank
-
-    ham = hamming(F.col("code"), F.col("__qcode"))
-    # narrow prefilter: (qid, id, ham); replicas collapse via min
-    survivors = topk_per_group(
-        probed_src.join(F.broadcast(probes.drop("__qvec")), "centroid_id")
-        .select("__qid", F.col(id_col), ham.alias("__ham"))
-        .groupBy("__qid", id_col)
-        .agg(F.min("__ham").alias("__ham")),
-        ["__qid"],
-        [F.col("__ham").asc(), F.col(id_col).asc()],
-        rerank_factor * k,
-    ).select("__qid", id_col)
-    hyd_src = probed_src.join(
-        F.broadcast(probes.select("centroid_id").distinct()), "centroid_id"
-    )
-    return hydrate_rerank(
-        survivors,
-        hyd_src,
-        q.select("__qid", "__qvec"),
-        k,
-        space,
-        id_col,
-        vec_col,
-        query_id_col,
-        round_decimals,
+    q = _with_codes(queries, means, query_id_col, query_vec_col)
+    return coded_search(
+        coded_postings, q, hamming(F.col("code"), F.col("__qcode")), "__qcode", k,
+        rerank_factor, space, id_col, vec_col, query_id_col, round_decimals,
+        centroids, nprobe, allowed_ids, excluded_ids,
     )

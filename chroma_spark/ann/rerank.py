@@ -14,6 +14,11 @@ At 100 TB this is also the right byte economics: the candidate scan reads
 only the narrow code column; the wide embedding column is read in a second,
 semi-join-pruned pass over just the probed partitions, and only survivor
 rows travel.
+
+:func:`coded_search` is the one pipeline every code tier runs — (probe ->
+allowed/excluded filter ->) code-domain prefilter top ``rerank_factor * k``
+-> :func:`hydrate_rerank`; a tier contributes only its query-side code
+column and its approximate-distance expression.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import distance
 from ..operators.topk import topk_per_group
+from .ivf import probe_lists
 
 
 def hydrate_rerank(
@@ -53,13 +59,71 @@ def hydrate_rerank(
         survivors.join(F.broadcast(vecs), id_col)
         .join(F.broadcast(queries), "__qid")
     )
-    d = distance(F.col(vec_col), F.col("__qvec"), space)
-    if round_decimals is not None:
-        d = F.round(d, round_decimals) + F.lit(0.0)
+    d = rounded(distance(F.col(vec_col), F.col("__qvec"), space), round_decimals)
     return topk_per_group(
         hydrated.select(F.col("__qid").alias(query_id_col), F.col(id_col), d.alias("dist")),
         [query_id_col],
         [F.col("dist").asc(), F.col(id_col).asc()],
         k,
         rank_col="rank",
+    )
+
+
+def rounded(d: F.Column, round_decimals: int | None) -> F.Column:
+    """``d`` rounded like exact distances (+ 0.0 canonicalizes -0.0)."""
+    return d if round_decimals is None else F.round(d, round_decimals) + F.lit(0.0)
+
+
+def coded_search(
+    coded: DataFrame,
+    q: DataFrame,
+    approx: F.Column,
+    reads: str,
+    k: int,
+    rerank_factor: int,
+    space: str,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    round_decimals: int | None,
+    centroids: DataFrame | None = None,
+    nprobe: int | None = None,
+    allowed_ids: DataFrame | None = None,
+    excluded_ids: DataFrame | None = None,
+) -> DataFrame:
+    """Code-domain prefilter -> exact re-rank over ``coded`` records or
+    postings. ``q``: ``(__qid, __qvec[, <query code>])``; ``approx``: the
+    tier's approximate distance, reading the query-side column ``reads``
+    (the only query column the prefilter broadcast carries). With
+    ``centroids`` only the ``nprobe`` nearest lists are scored and
+    hydrated; ``allowed_ids``/``excluded_ids``: see ``ivf.ivf_search``."""
+    source = coded
+    if centroids is None:
+        scored = coded.crossJoin(F.broadcast(q.select("__qid", reads))).select(
+            "__qid", F.col(id_col), approx.alias("__adc")
+        )
+    else:
+        probes = probe_lists(q, centroids, nprobe)
+        if allowed_ids is not None:
+            source = source.join(allowed_ids.select(F.col(id_col)), id_col, "semi")
+        if excluded_ids is not None:
+            source = source.join(excluded_ids.select(F.col(id_col)), id_col, "anti")
+        scored = (
+            source.join(F.broadcast(probes.select("__qid", reads, "centroid_id")), "centroid_id")
+            .select("__qid", F.col(id_col), approx.alias("__adc"))
+            .groupBy("__qid", id_col)
+            .agg(F.min("__adc").alias("__adc"))
+        )
+        # hydration scan stays partition-pruned to the probed lists
+        source = source.join(F.broadcast(probes.select("centroid_id").distinct()), "centroid_id")
+    # narrow prefilter: (qid, id, approx) only into the top-k shuffle
+    survivors = topk_per_group(
+        scored,
+        ["__qid"],
+        [F.col("__adc").asc(), F.col(id_col).asc()],
+        rerank_factor * k,
+    ).select("__qid", id_col)
+    return hydrate_rerank(
+        survivors, source, q.select("__qid", "__qvec"), k, space, id_col, vec_col,
+        query_id_col, round_decimals,
     )

@@ -14,6 +14,7 @@ register it in the catalog.
 
 from __future__ import annotations
 
+import math
 import uuid
 from functools import cached_property
 from typing import Any, Sequence
@@ -22,9 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .ann.ivf import ivf_search
+from .ann.pq import encode_pq, ivf_pq_search, train_pq
+from .ann.quantize import (
+    build_codes, build_codes4, dim_means, dim_ranges, ivf_quantized_search, ivf_sq4_search,
+)
 from .frames import local_frame
-from .operators.knn import exact_knn
+from .operators.knn import exact_knn, knn_merge
+from .operators.limit import page
+from .operators.rank import collect_knn_terms
 from .operators.search import search as search_op
+from .plans import Filter, GetPlan, KNNPlan, Limit, Search
 from .sources.collection import (
     Catalog,
     CollectionError,
@@ -35,7 +44,8 @@ from .sources.collection import (
 from .quota import Action, AllowAllQuotaEnforcer, QuotaPayload
 from .schema import Schema
 from .sources.log import materialize
-from .where import where_doc_to_column, where_to_column
+from .sparse_vector import SPARSE_VECTOR_TYPE
+from .where import filter_records, where_doc_to_column, where_to_column
 
 _META_SPARK_TYPES = {bool: T.BooleanType(), int: T.LongType(), float: T.DoubleType(), str: T.StringType()}
 
@@ -48,6 +58,22 @@ _INDEX_SPECS = {
     "sparse": ("sparse", "postings", "bucket"),
     "dedup": ("dedup", "bands", "band"),
     "fts": ("fts", "postings", "bucket"),
+}
+
+# vector-index quantizer tier -> (its coded IVF search, the trained codec
+# read from a descriptor, the postings encoder, the default rerank factor)
+_CODED_IVF = {
+    "sign": (ivf_quantized_search, lambda col, vi: [float(m) for m in vi["means"]],
+             lambda rows, means: build_codes(rows, means=means)[0], 24),
+    "sq4": (ivf_sq4_search, lambda col, vi: (list(vi["sq4_lo"]), list(vi["sq4_step"])),
+            lambda rows, ranges: build_codes4(rows, ranges=ranges)[0], 4),
+    "pq": (ivf_pq_search, lambda col, vi: col._pq_books(vi), encode_pq, 8),
+}
+
+# the fields every record frame carries (an empty collection's typed frame)
+_RECORD_FIELDS = {
+    "id": T.StringType(), "offset_id": T.LongType(), "embedding": T.ArrayType(T.FloatType()),
+    "document": T.StringType(), "uri": T.StringType(),
 }
 
 
@@ -400,6 +426,315 @@ class _ReadView:
     def records(self) -> DataFrame | None:
         """Materialized record state (None when empty)."""
         return Collection._fold(self.base, self.log, self.where_ops)
+
+    @cached_property
+    def touched(self) -> DataFrame | None:
+        """Ids whose index entries the WAL tail makes stale (None with no
+        tail): the ids the id-keyed tail writes plus the base ids a pending
+        predicate delete matches (one vectorized base scan)."""
+        if self.log is None:
+            return None
+        touched = self.log.select("id").distinct()
+        if self.where_ops and self.base is not None:
+            matched = Collection._predicate_matched_ids(self.base, self.where_ops)
+            touched = touched.unionByName(matched).distinct()
+        return touched
+
+    @cached_property
+    def tail(self) -> DataFrame | None:
+        """Live state of the touched ids only — the bounded tail fold every
+        index source merges (predicate deletes replay at their seqs)."""
+        if self.touched is None:
+            return None
+        base = self.base.join(self.touched, "id", "semi") if self.base is not None else None
+        return Collection._fold(base, self.log, self.where_ops)
+
+
+class _Executor:
+    """The one read executor (the reference's ``execution/executor/
+    local.py``): every read builds a plan (``plans/``; a count is just its
+    read level) and lowers it over ONE :class:`_ReadView` in a fixed order
+    — filter (:meth:`filtered`), record source (a fresh index merged with
+    the view's touched-ids / bounded tail fold: :meth:`ivf_top`,
+    :meth:`sparse_indexes`; else the exact scan), rank and limit, then
+    hydration of the winners only. An empty collection lowers over one
+    typed empty record frame (:meth:`records`)."""
+
+    def __init__(self, col: "Collection", view: _ReadView) -> None:
+        self.col, self.view = col, view
+
+    def records(self, extra: dict[str, T.DataType] | None = None) -> DataFrame:
+        """The view's records; if empty, a typed empty frame of the record
+        fields plus ``extra`` (name -> type) columns a plan references."""
+        if self.view.records is not None:
+            return self.view.records
+        fields = {**_RECORD_FIELDS, **(extra or {})}
+        schema = T.StructType([T.StructField(n, t) for n, t in fields.items()])
+        return local_frame(self.col._client.spark, [], schema)
+
+    def filtered(self, flt: Filter, extra: dict[str, T.DataType] | None = None) -> DataFrame:
+        """Stage 2: the records ``flt`` keeps."""
+        wd = flt.where_document
+        cands = self.fts_candidates(wd) if wd is not None else None
+        return filter_records(self.records(extra), flt.ids, flt.where, wd, cands)
+
+    def fts_candidates(self, where_document: dict) -> DataFrame | None:
+        """Index-served candidate ids for a document filter, or None when
+        the index can't help (absent, stale, or no positive >= 3-char
+        literal in the tree). The candidate set is a SOUND superset of the
+        base-side matches; WAL-touched ids union in so tail writes are
+        re-checked exactly; the exact predicate always verifies."""
+        from .layout import live
+        from .operators.fts import contains_candidates, required_needles
+
+        view = self.view
+        desc = view.meta.indexes.get("fts")
+        if desc is None or desc["version"] != view.meta.version:
+            return None
+        needles = required_needles(where_document)
+        if not needles:
+            return None
+        cands = contains_candidates(live(desc, "postings"), needles, int(desc["n_buckets"]))
+        if view.log is not None:
+            cands = cands.unionByName(view.log.select("id").distinct()).distinct()
+        return cands
+
+    def ivf_top(
+        self, qdf: DataFrame, k: int, nprobe: int | None, allowed: DataFrame | None,
+        predicate_fp: str | None = None,
+    ) -> DataFrame | None:
+        """Stage 3, dense: index-side KNN + WAL-tail brute force +
+        knn_merge (the reference's parallel knn_log + knn_hnsw ->
+        knn_merge, SURVEY §3.2); None when the exact scan must serve
+        instead (no fresh index or a bounded read level). Pending predicate
+        deletes do NOT abandon the index: their matched ids are in the
+        view's touched set, which the tail fold re-serves."""
+        view = self.view
+        meta = view.meta
+        vi = meta.indexes.get("vector")
+        if vi is None or vi["version"] != meta.version:
+            return None
+        if view.read_level not in ("index_only", "index_and_wal"):
+            return None
+        centroids, postings = self.col._ivf(vi)
+        probes = int(nprobe or vi["n_lists"])
+        if allowed is not None and nprobe is not None and vi.get("n_docs"):
+            # filter-before-ANN thins every probed list by the filter's
+            # selectivity, so a fixed probe budget quietly loses recall
+            # (measured at 1M: 10%-selective filters need ~4x the probes,
+            # BASELINE.md round-6 filtered table). Scale the budget so the
+            # expected CANDIDATE count matches what the caller asked for;
+            # the one bounded count here prices a recall cliff away.
+            # memoized per (collection, predicate fingerprint) — the
+            # fingerprint embeds the (version, log_position) of the view
+            # `allowed` derives from, so the cached count always describes
+            # the state it was counted over; a query loop re-issuing the
+            # same filter pays ONE job
+            cache = self.col._client.__dict__.setdefault("_selectivity_cache", {})
+            cache_key = (self.col._store.name, predicate_fp)
+            n_allowed = cache.get(cache_key) if predicate_fp is not None else None
+            if n_allowed is None:
+                n_allowed = allowed.count()
+                if predicate_fp is not None:
+                    if len(cache) >= 512:  # bounded: counts are 8-byte ints
+                        cache.clear()
+                    cache[cache_key] = n_allowed
+            sel = n_allowed / max(1, int(vi["n_docs"]))
+            if 0.0 < sel < 1.0:
+                probes = max(probes, min(int(vi["n_lists"]), math.ceil(probes / sel)))
+        search_kw = dict(
+            k=k, nprobe=probes, space=vi.get("space", meta.space),
+            allowed_ids=allowed, excluded_ids=view.touched,
+        )
+        if vi.get("quantized"):
+            search, codec, _encode, rerank_factor = _CODED_IVF[vi["quantized"]]
+            index_top = search(
+                centroids, postings, qdf, codec(self.col, vi),
+                rerank_factor=int(vi.get("rerank_factor", rerank_factor)), **search_kw,
+            )
+        else:
+            index_top = ivf_search(centroids, postings, qdf, **search_kw)
+        if view.touched is None:
+            return index_top
+        tail = view.tail.filter(F.col("embedding").isNotNull())
+        if allowed is not None:
+            tail = tail.join(allowed, "id", "semi")
+        return knn_merge([index_top, exact_knn(tail, qdf, k=k, space=meta.space)], k)
+
+    def sparse_indexes(self, keys: set[str] | None = None) -> dict:
+        """Stage 3, sparse: fresh per-key sparse indexes as RankEvaluator
+        specs ``(postings, n_buckets, n_docs)``, with the WAL tail merged
+        in: index entries of the view's touched ids are anti-joined away
+        and the bounded tail fold's postings unioned (the reference's
+        parallel sparse_index_knn + sparse_log_knn); n_docs refreshes at
+        compaction like the reference's index-time stats. ``keys``
+        restricts the work to the sparse columns a plan queries."""
+        from .layout import live
+
+        view = self.view
+        meta = view.meta
+        out: dict = {}
+        for name, si in meta.indexes.items():
+            key = name.split(":", 1)[-1]
+            if not name.startswith("sparse:") or si["version"] != meta.version:
+                continue
+            if keys is not None and key not in keys:
+                continue
+            postings = live(si, "postings")
+            if view.touched is not None:
+                postings = postings.join(view.touched, "id", "anti")
+                if key in view.tail.columns:
+                    tail = view.tail.filter(F.col(key).isNotNull())
+                    postings = postings.unionByName(self.col._index_rows(name, si, tail))
+            out[key] = (postings, int(si["n_buckets"]), float(si["n_docs"]))
+        return out
+
+    def count(self) -> int:
+        """A count plan: the cardinality of the view's records."""
+        return self.records().count()
+
+    def get(self, plan: GetPlan) -> DataFrame:
+        """A get plan: filter, order by insertion offset, page, and project
+        the page to ``include``."""
+        rows = self.filtered(plan.filter)
+        # un-ranked gets are ordered by the internal insertion offset, not
+        # the user string id ("10" < "2" lexicographically) — limit.rs:23-36
+        order = [F.col("id").asc()]
+        if "offset_id" in rows.columns:
+            order.insert(0, F.col("offset_id").asc_nulls_first())
+        rows = page(rows, order, offset=plan.limit.offset, limit=plan.limit.limit)
+        include = plan.include
+        drop = {"embeddings": "embedding", "documents": "document", "uris": "uri"}
+        hidden = {v for k, v in drop.items() if k not in include} | {"offset_id"}
+        if "metadatas" not in include:
+            # include gates metadata too (GetResult carries metadatas only
+            # when asked, chromadb/api/types.py:585-608)
+            hidden |= {c for c in rows.columns if c not in ("id", "embedding", "document", "uri")}
+        return rows.select(*[c for c in rows.columns if c not in hidden])
+
+    def knn(self, plan: KNNPlan, qdf: DataFrame, nprobe: int | None) -> DataFrame:
+        """A dense KNN plan over the query frame ``qdf`` ``(query_id,
+        embedding)``: top ``fetch`` ``(query_id, id, dist, rank)`` per query
+        from :meth:`ivf_top` or the exact scan of the filtered records; an
+        ``include`` beyond distances hydrates the winners only (the
+        KnnProjection contract, knn_projection.rs:61)."""
+        flt = plan.filter
+        filtered = allowed = predicate_fp = None
+        if any(f is not None for f in (flt.ids, flt.where, flt.where_document)):
+            import json as _json
+
+            filtered = self.filtered(flt)
+            allowed = filtered.select("id")
+            # stable fingerprint of the filter payload: a query loop with a
+            # repeated filter prices the nprobe selectivity boost ONCE
+            predicate_fp = _json.dumps(
+                [sorted(str(i) for i in flt.ids) if flt.ids is not None else None,
+                 flt.where, flt.where_document, self.view.read_level,
+                 self.view.meta.version, self.view.meta.log_position],
+                sort_keys=True, default=str,
+            )
+        top = self.ivf_top(qdf, plan.fetch, nprobe, allowed, predicate_fp)
+        hydrate = bool(set(plan.include) - {"distances"})
+        if filtered is None and (top is None or hydrate):
+            # unfiltered, the records are read only if the index cannot
+            # rank or the winners need their fields
+            filtered = self.filtered(flt)
+        if top is None:
+            cands = filtered.filter(F.col("embedding").isNotNull())
+            top = exact_knn(cands, qdf, k=plan.fetch, space=self.view.meta.space)
+        if not hydrate:
+            return top
+        # the top-k side is tiny — broadcast it as the BUILD side of an
+        # inner join (winner ids are by construction a subset of the
+        # filtered records, so inner == left, and a left join could not
+        # broadcast its left/build side)
+        return filtered.join(F.broadcast(top), "id", "inner")
+
+    def sparse_knn(
+        self, plan: KNNPlan, qdf: DataFrame, key: str, idf: bool,
+        prune_buckets: bool | str, prune_threshold: int,
+    ) -> DataFrame:
+        """A sparse KNN plan over the query frame ``qdf`` ``(query_id,
+        <key>)``: the top ``fetch`` per query ``(query_id, id, score)`` by
+        (optionally IDF-scaled) dot product on column ``key``, served by
+        the fresh term-bucket index (:meth:`sparse_indexes`) or by postings
+        exploded from the records."""
+        from .operators.sparse import sparse_dot_topk, sparse_index_topk
+
+        specs = self.sparse_indexes(keys={key})
+        if key in specs:
+            postings, n_buckets, n_docs = specs[key]
+            every_bucket = list(range(n_buckets))
+            query_indices = None if prune_buckets else every_bucket
+            if prune_buckets == "auto":
+                # one bounded probe (<= prune_threshold + 1 query rows reach
+                # the driver): a small batch's vocabulary comes from it
+                # directly, with no separate distinct-terms job
+                probe = qdf.select(F.col(key)["indices"]).limit(prune_threshold + 1).collect()
+                query_indices = (
+                    sorted({int(i) for r in probe for i in r[0] or ()})
+                    if len(probe) <= prune_threshold
+                    else every_bucket
+                )
+            return sparse_index_topk(
+                postings,
+                qdf,
+                k=plan.fetch,
+                n_buckets=n_buckets,
+                sparse_col=key,
+                idf=idf,
+                n_docs=n_docs,
+                query_indices=query_indices,
+            )
+        records = self.records({key: SPARSE_VECTOR_TYPE})
+        if key not in records.columns:  # no record ever wrote the key
+            records = records.withColumn(key, F.lit(None).cast(SPARSE_VECTOR_TYPE))
+        return sparse_dot_topk(
+            records.filter(F.col(key).isNotNull()), qdf, plan.fetch, sparse_col=key, idf=idf
+        )
+
+    def search(self, plan: Search) -> DataFrame:
+        """A Search plan: the filter stage keeps the candidates, the rank
+        expression's sparse ``$knn`` terms read fresh sparse indexes (dense
+        ``$knn`` terms scan exactly), and the search operator ranks,
+        groups, pages and hydrates the winners."""
+        import copy
+
+        meta = self.view.meta
+        rank, terms = copy.deepcopy(plan.rank), []
+        collect_knn_terms(rank, terms)
+        # every column a $knn term reads (sparse keys / alternate dense
+        # vector keys); an empty collection's frame carries them too
+        extra: dict[str, T.DataType] = {}
+        for t in (t for t in terms if isinstance(t, dict)):
+            if isinstance(t.get("query"), str):
+                # string $knn queries embed client-side with the attached
+                # embedding function (Collection.py:447-449 embeds text Knn
+                # queries before the search payload ships)
+                ef = self.col._embedding_function(meta)
+                if ef is None:
+                    raise CollectionError(
+                        "string $knn query requires an attached embedding function"
+                    )
+                t["query"] = [float(x) for x in ef([t["query"]])[0]]
+            if isinstance(t.get("query"), dict):
+                extra[str(t.get("key", "sparse")).lstrip("#")] = SPARSE_VECTOR_TYPE
+            else:
+                extra[str(t.get("key") or "#embedding").lstrip("#")] = T.ArrayType(T.FloatType())
+        records = self.records(extra)
+        sparse_keys = {k for k, t in extra.items() if t == SPARSE_VECTOR_TYPE}
+        return search_op(
+            records,
+            candidates=self.filtered(Filter(where=plan.where, where_document=plan.where_document), extra),
+            rank=rank,
+            group_by=plan.group_by,
+            offset=plan.limit.offset,
+            limit=plan.limit.limit,
+            select=plan.select,
+            default_space=meta.space,
+            offset_col="offset_id" if "offset_id" in records.columns else None,
+            sparse_index=self.sparse_indexes(keys=sparse_keys) if sparse_keys else {},
+        )
 
 
 class Collection:
@@ -767,19 +1102,11 @@ class Collection:
 
         if format not in ("jsonl", "json"):
             raise CollectionError("export_files supports format='jsonl'")
-        meta = self._store.meta
-        self._validate_indexed(meta, where, where_document)
-        view = _ReadView(self._store, meta)
-        snap = view.records
-        if snap is None:
+        ex = self._read()
+        self._validate_indexed(ex.view.meta, where, where_document)
+        if ex.view.records is None:
             raise CollectionError("nothing to export: collection is empty")
-        if where is not None:
-            snap = snap.filter(where_to_column(where, known_keys=frozenset(snap.columns)))
-        if where_document is not None:
-            cands = self._fts_candidates(view, where_document)
-            if cands is not None:
-                snap = snap.join(cands, "id", "semi")
-            snap = snap.filter(where_doc_to_column(where_document))
+        snap = ex.filtered(Filter(where=where, where_document=where_document))
         drop = {"embeddings": "embedding", "documents": "document", "uris": "uri"}
         hidden = {v for k, v in drop.items() if k not in include}
         hidden |= {"seq_id", "op", "where_json", "offset_id"}
@@ -1679,18 +2006,9 @@ class Collection:
             records.select("id", "embedding"), centroids,
             replicas=int(desc.get("replicas", 2)), method="arrow",
         )
-        if desc.get("quantized") == "sign":
-            from .ann.quantize import build_codes
-
-            rows, _ = build_codes(rows, means=[float(m) for m in desc["means"]])
-        elif desc.get("quantized") == "sq4":
-            from .ann.quantize import build_codes4
-
-            rows, _ = build_codes4(rows, ranges=(list(desc["sq4_lo"]), list(desc["sq4_step"])))
-        elif desc.get("quantized") == "pq":
-            from .ann.pq import encode_pq
-
-            rows = encode_pq(rows, self._pq_books(desc))
+        if desc.get("quantized"):
+            _search, codec, encode, _rerank = _CODED_IVF[desc["quantized"]]
+            rows = encode(rows, codec(self, desc))
         return rows
 
     def build_vector_index(
@@ -1765,31 +2083,25 @@ class Collection:
         centroids, postings = build_ivf(
             records, n_lists=n_lists, replicas=replicas, assign_method="arrow"
         )
+        # train the tier's codec into the descriptor, then encode with it
         if quantized == "sign":
-            from .ann.quantize import build_codes
-
-            postings, means = build_codes(postings)
-            desc["means"] = [float(m) for m in means]
-            desc["rerank_factor"] = int(rerank_factor or 24)
+            desc["means"] = [float(m) for m in dim_means(postings)]
         elif quantized == "sq4":
-            from .ann.quantize import build_codes4
-
-            postings, (lo, step) = build_codes4(postings)
+            lo, step = dim_ranges(postings)
             desc["sq4_lo"] = [float(x) for x in lo]
             desc["sq4_step"] = [float(x) for x in step]
-            desc["rerank_factor"] = int(rerank_factor or 4)
         elif quantized == "pq":
             import json as _json
 
-            from .ann.pq import encode_pq, train_pq
-
             books = train_pq(records, m=dim // 8, k_codes=256)
-            postings = encode_pq(postings, books)
             _os.makedirs(desc["path"], exist_ok=True)
             with open(_os.path.join(desc["path"], "pq_books.json"), "w") as f:
                 _json.dump(books, f)
             desc["pq"] = {"m": dim // 8, "k_codes": 256}
-            desc["rerank_factor"] = int(rerank_factor or 8)
+        if quantized:
+            _search, codec, encode, default_rerank = _CODED_IVF[quantized]
+            postings = encode(postings, codec(self, desc))
+            desc["rerank_factor"] = int(rerank_factor or default_rerank)
         centroids.coalesce(1).write.mode("overwrite").parquet(
             _os.path.join(desc["path"], "centroids")
         )
@@ -1822,77 +2134,6 @@ class Collection:
         postings unioned in (the sparse_index_knn + sparse_log_knn merge,
         SURVEY §3.2)."""
         return self._build_registered(f"sparse:{key}", n_buckets=int(n_buckets))
-
-    @staticmethod
-    def _rank_knn_keys(rank) -> dict[str, bool]:
-        """Every $knn key a rank expression touches -> is_sparse."""
-        out: dict[str, bool] = {}
-
-        def walk(node):
-            if isinstance(node, list):
-                for e in node:
-                    walk(e)
-                return
-            if not isinstance(node, dict):
-                return
-            for op, arg in node.items():
-                if op == "$knn" and isinstance(arg, dict):
-                    q = arg.get("query")
-                    if isinstance(q, dict):
-                        out[str(arg.get("key", "sparse")).lstrip("#")] = True
-                    else:
-                        out[str(arg.get("key") or "#embedding").lstrip("#")] = False
-                else:
-                    walk(arg)
-
-        walk(rank)
-        return out
-
-    def _fresh_sparse_indexes(self, view: _ReadView, keys: set[str] | None = None) -> dict:
-        """Fresh per-key sparse indexes as RankEvaluator specs, with
-        WAL-tail postings merged in: index entries for touched ids are
-        anti-joined away and the live tail records' postings unioned (the
-        reference's parallel sparse_index_knn + sparse_log_knn). Pending
-        predicate deletes fold in the same way — their matched ids come
-        from one vectorized base scan (_predicate_matched_ids) and replay
-        at seq position inside the bounded tail fold; n_docs refreshes at
-        compaction like the reference's index-time stats. ``keys``
-        restricts the work to the sparse columns a payload queries."""
-        from .layout import live
-
-        meta = view.meta
-        fresh = {
-            name.split(":", 1)[1]: si
-            for name, si in meta.indexes.items()
-            if name.startswith("sparse:")
-            and si["version"] == meta.version
-            and (keys is None or name.split(":", 1)[1] in keys)
-        }
-        if not fresh:
-            return {}
-        log, where_ops = view.log, view.where_ops
-        out: dict = {}
-        touched: DataFrame | None = None
-        if log is not None:
-            touched = log.select("id").distinct()
-            if where_ops and view.base is not None:
-                touched = touched.unionByName(
-                    self._predicate_matched_ids(view.base, where_ops)
-                ).distinct()
-        for key, si in fresh.items():
-            postings = live(si, "postings")
-            if touched is not None:
-                base = view.base
-                base_t = base.join(touched, "id", "semi") if base is not None else None
-                tail = self._fold(base_t, log, where_ops)
-                postings = postings.join(touched, "id", "anti")
-                if key in tail.columns:
-                    tail_postings = self._index_rows(
-                        f"sparse:{key}", si, tail.filter(F.col(key).isNotNull())
-                    )
-                    postings = postings.unionByName(tail_postings)
-            out[key] = (postings, int(si["n_buckets"]), float(si["n_docs"]))
-        return out
 
     # -- dedup index (minhash band table as a collection index tier) -----
 
@@ -2044,26 +2285,6 @@ class Collection:
         only — never a full-text scan. Compaction maintains the postings
         incrementally (only changed documents re-trigram, appends only)."""
         return self._build_registered("fts", text_col=text_col, n_buckets=int(n_buckets))
-
-    def _fts_candidates(self, view: _ReadView, where_document: dict) -> DataFrame | None:
-        """Index-served candidate ids for a document filter, or None when
-        the index can't help (absent, stale, or no positive >= 3-char
-        literal in the tree). The candidate set is a SOUND superset of the
-        base-side matches; WAL-touched ids union in so tail writes are
-        re-checked exactly; the exact predicate always verifies."""
-        from .layout import live
-        from .operators.fts import contains_candidates, required_needles
-
-        desc = view.meta.indexes.get("fts")
-        if desc is None or desc["version"] != view.meta.version:
-            return None
-        needles = required_needles(where_document)
-        if not needles:
-            return None
-        cands = contains_candidates(live(desc, "postings"), needles, int(desc["n_buckets"]))
-        if view.log is not None:
-            cands = cands.unionByName(view.log.select("id").distinct()).distinct()
-        return cands
 
     def snapshot_at(self, version: int) -> DataFrame:
         """Time travel: the compacted state as of ``version`` (old base
@@ -2258,15 +2479,14 @@ class Collection:
         driver loop. Pass ``client`` to copy across stores (the
         local<->cloud direction of the CLI)."""
         dst_client = client or self._client
-        meta = self._store.meta
+        ex = self._read()
+        meta = ex.view.meta
         from .schema import Schema
 
         # validate the filter payloads BEFORE creating the destination so a
         # rejected where/where_document leaves no side effects (no leaked
         # empty collection)
         self._validate_indexed(meta, where, where_document)
-        view = _ReadView(self._store, meta)
-        snap = view.records
         dst = dst_client.create_collection(
             name,
             dimension=meta.dimension,
@@ -2278,15 +2498,7 @@ class Collection:
         # travels; index descriptors never do — they describe the source's
         # files at the source's versions
         dst._store.catalog.mutate(dst._store.name, lambda m: setattr(m, "config", meta.config))
-        if snap is None:
-            return dst
-        if where is not None:
-            snap = snap.filter(where_to_column(where, known_keys=frozenset(snap.columns)))
-        if where_document is not None:
-            cands = self._fts_candidates(view, where_document)
-            if cands is not None:
-                snap = snap.join(cands, "id", "semi")
-            snap = snap.filter(where_doc_to_column(where_document))
+        snap = ex.filtered(Filter(where=where, where_document=where_document))
         records = snap.drop("seq_id", "op", "where_json", "offset_id")
         if records.isEmpty():
             return dst
@@ -2297,9 +2509,13 @@ class Collection:
     # read surface
     # ------------------------------------------------------------------
 
+    def _read(self, read_level: str = "index_and_wal") -> _Executor:
+        """Stage 1 of every read: resolve ONE catalog state and the
+        executor that lowers the call's plans over it."""
+        return _Executor(self, _ReadView(self._store, self._store.meta, read_level))
+
     def count(self, read_level: str = "index_and_wal") -> int:
-        snap = self.snapshot(read_level)
-        return 0 if snap is None else snap.count()
+        return self._read(read_level).count()
 
     def peek(self, limit: int = 10) -> list[dict]:
         return self.get(limit=limit)
@@ -2318,41 +2534,10 @@ class Collection:
             Action.GET, query_ids=ids, where=where, where_document=where_document,
             limit=limit,
         )
-        meta = self._store.meta
-        self._validate_indexed(meta, where, where_document)
-        view = _ReadView(self._store, meta, read_level)
-        snap = view.records
-        if snap is None:
-            return []
-        if ids is not None:
-            snap = snap.filter(F.col("id").isin([str(i) for i in ids]))
-        if where is not None:
-            snap = snap.filter(where_to_column(where, known_keys=frozenset(snap.columns)))
-        if where_document is not None:
-            cands = self._fts_candidates(view, where_document)
-            if cands is not None:
-                # index-served prefilter: exact predicate verifies the
-                # (sound superset) candidates only — no full-text scan
-                snap = snap.join(cands, "id", "semi")
-            snap = snap.filter(where_doc_to_column(where_document))
-        # un-ranked gets are ordered by the internal insertion offset, not
-        # the user string id ("10" < "2" lexicographically) — limit.rs:23-36
-        if "offset_id" in snap.columns:
-            snap = snap.orderBy(F.col("offset_id").asc_nulls_first(), F.col("id").asc())
-        else:
-            snap = snap.orderBy("id")
-        if offset:
-            snap = snap.offset(offset)
-        if limit is not None:
-            snap = snap.limit(limit)
-        drop = {"embeddings": "embedding", "documents": "document", "uris": "uri"}
-        hidden = {v for k, v in drop.items() if k not in include} | {"offset_id"}
-        if "metadatas" not in include:
-            # include gates metadata too (GetResult carries metadatas only
-            # when asked, chromadb/api/types.py:585-608)
-            hidden |= {c for c in snap.columns if c not in ("id", "embedding", "document", "uri")}
-        cols = [c for c in snap.columns if c not in hidden]
-        return [r.asDict(recursive=True) for r in snap.select(*cols).collect()]
+        ex = self._read(read_level)
+        self._validate_indexed(ex.view.meta, where, where_document)
+        plan = GetPlan(Filter(ids, where, where_document), Limit(offset, limit), include, read_level)
+        return [r.asDict(recursive=True) for r in ex.get(plan).collect()]
 
     _QUERY_INCLUDE_DEFAULT = ("metadatas", "documents", "distances")
     _INTERNAL_COLS = frozenset({"id", "embedding", "document", "uri", "offset_id"})
@@ -2384,15 +2569,15 @@ class Collection:
         index; tune down for speed) and brute-forces only WAL-tail records,
         merging the two top-k streams (the reference's parallel
         knn_log + knn_hnsw -> knn_merge pipeline, SURVEY §3.2). Falls back
-        to the exact scan when no fresh index exists or predicate deletes
-        are pending in the tail."""
+        to the exact scan when no fresh index exists."""
         self._client._enforce(
             Action.QUERY, query_embeddings=query_embeddings, query_ids=ids,
             where=where, where_document=where_document, n_results=n_results,
         )
         # one catalog read serves the whole call: EF, schema gate, snapshot,
         # index descriptors and the selectivity-cache key all describe it
-        meta = self._store.meta
+        ex = self._read(read_level)
+        meta = ex.view.meta
         if query_embeddings is None:
             if query_texts is None:
                 raise CollectionError("one of query_embeddings / query_texts is required")
@@ -2406,75 +2591,27 @@ class Collection:
         bad = set(include) - {"distances", "documents", "metadatas", "embeddings", "uris"}
         if bad:
             raise CollectionError(f"unknown include fields: {sorted(bad)}")
-        nq = len(query_embeddings)
-        empty: dict[str, list] = {"ids": [[] for _ in range(nq)]}
-        for f in include:
-            empty[f] = [[] for _ in range(nq)]
         self._validate_indexed(meta, where, where_document, knn=True)
-        view = _ReadView(self._store, meta, read_level)
-        snap = view.records
-        if snap is None:
-            return empty
-        filtered = snap
-        if ids is not None:
-            filtered = filtered.filter(F.col("id").isin([str(i) for i in ids]))
-        if where is not None:
-            filtered = filtered.filter(
-                where_to_column(where, known_keys=frozenset(filtered.columns))
-            )
-        if where_document is not None:
-            cands = self._fts_candidates(view, where_document)
-            if cands is not None:
-                filtered = filtered.join(cands, "id", "semi")
-            filtered = filtered.filter(where_doc_to_column(where_document))
-        spark = self._client.spark
+        # the list-shaped front of the query_batch lowering: the query
+        # lists become a local query frame
         qdf = local_frame(
-            spark,
+            self._client.spark,
             [(i, [float(x) for x in q]) for i, q in enumerate(query_embeddings)],
             "query_id INT, embedding ARRAY<FLOAT>",
         )
-        has_filters = ids is not None or where is not None or where_document is not None
-        predicate_fp = None
-        if has_filters:
-            import json as _json
-
-            # stable fingerprint of the filter payload: a query loop with a
-            # repeated filter prices the nprobe selectivity boost ONCE
-            predicate_fp = _json.dumps(
-                [sorted(str(i) for i in ids) if ids is not None else None,
-                 where, where_document, read_level,
-                 meta.version, meta.log_position],
-                sort_keys=True, default=str,
-            )
-        top = self._query_via_index(
-            view, qdf, n_results, nprobe,
-            allowed=filtered.select("id") if has_filters else None,
-            predicate_fp=predicate_fp,
-        )
-        if top is None:
-            top = exact_knn(filtered, qdf, k=n_results, space=meta.space)
-        snap = filtered
-        need_payload = bool(set(include) - {"distances"})
-        if need_payload:
-            # winners-only hydration: the top-k side is tiny — broadcast it
-            # as the BUILD side of an inner join (winner ids are by
-            # construction a subset of the snapshot, so inner == left, and
-            # a left join could not broadcast its left/build side)
-            winners = snap.join(F.broadcast(top), "id", "inner")
-        else:
-            winners = top
+        plan = KNNPlan(query_embeddings, n_results, Filter(ids, where, where_document), include, read_level)
+        winners = ex.knn(plan, qdf, nprobe)
         rows = [r.asDict(recursive=True) for r in winners.collect()]
-        meta_cols = [c for c in snap.columns if c not in self._INTERNAL_COLS]
-        out = empty
+        meta_cols = [
+            c for c in winners.columns
+            if c not in self._INTERNAL_COLS | {"query_id", "dist", "rank"}
+        ]
+        out: dict[str, list] = {f: [[] for _ in query_embeddings] for f in ("ids", *include)}
+        fields = {"ids": "id", "distances": "dist", "documents": "document", "uris": "uri"}
         for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
             q = r["query_id"]
-            out["ids"][q].append(r["id"])
-            if "distances" in include:
-                out["distances"][q].append(r["dist"])
-            if "documents" in include:
-                out["documents"][q].append(r["document"])
-            if "uris" in include:
-                out["uris"][q].append(r["uri"])
+            for f in {"ids", *include} & set(fields):
+                out[f][q].append(r[fields[f]])
             if "embeddings" in include:
                 emb = r["embedding"]
                 out["embeddings"][q].append(list(emb) if emb is not None else None)
@@ -2482,176 +2619,6 @@ class Collection:
                 md = {k: r[k] for k in meta_cols if r[k] is not None}
                 out["metadatas"][q].append(md or None)
         return out
-
-    def _embed_rank_queries(self, meta: CollectionMeta, rank):
-        """String $knn queries embed client-side with the collection's
-        attached embedding function (Collection.py:447-449 embeds text Knn
-        queries before the search payload ships)."""
-        if isinstance(rank, list):
-            return [self._embed_rank_queries(meta, e) for e in rank]
-        if not isinstance(rank, dict):
-            return rank
-        out = {}
-        for op, arg in rank.items():
-            if op == "$knn" and isinstance(arg, dict) and isinstance(arg.get("query"), str):
-                ef = self._embedding_function(meta)
-                if ef is None:
-                    raise CollectionError(
-                        "string $knn query requires an attached embedding function"
-                    )
-                out[op] = {**arg, "query": [float(x) for x in ef([arg["query"]])[0]]}
-            else:
-                out[op] = self._embed_rank_queries(meta, arg)
-        return out
-
-    def _query_via_index(
-        self,
-        view: _ReadView,
-        qdf: DataFrame,
-        k: int,
-        nprobe: int | None,
-        allowed: DataFrame | None,
-        predicate_fp: str | None = None,
-    ) -> DataFrame | None:
-        """Index-side KNN + WAL-tail brute force + knn_merge; None when the
-        exact path must run instead (no fresh index or bounded read level).
-
-        Pending predicate deletes do NOT abandon the index: for ids the
-        id-keyed tail never touches, base state IS their state at every
-        tail seq, so each predicate's matched set is exact when evaluated
-        vectorized against base (one pushdown-able filter scan) — those ids
-        join the excluded set and the bounded tail fold, which replays the
-        predicate at its seq position for the touched groups."""
-        meta = view.meta
-        vi = meta.indexes.get("vector")
-        if vi is None or vi["version"] != meta.version:
-            return None
-        if view.read_level not in ("index_only", "index_and_wal"):
-            return None
-        from .ann.ivf import ivf_search
-        from .operators.knn import knn_merge
-
-        log, where_ops = view.log, view.where_ops
-        centroids, postings = self._ivf(vi)
-        probes = int(nprobe or vi["n_lists"])
-        if allowed is not None and nprobe is not None and vi.get("n_docs"):
-            # filter-before-ANN thins every probed list by the filter's
-            # selectivity, so a fixed probe budget quietly loses recall
-            # (measured at 1M: 10%-selective filters need ~4x the probes,
-            # BASELINE.md round-6 filtered table). Scale the budget so the
-            # expected CANDIDATE count matches what the caller asked for;
-            # the one bounded count here prices a recall cliff away.
-            import math as _math
-
-            n_allowed: int | None = None
-            cache_key = None
-            if predicate_fp is not None:
-                # memoized per (collection, predicate fingerprint) — the
-                # fingerprint embeds the (version, log_position) of the
-                # view `allowed` derives from, so the cached count always
-                # describes the state it was counted over; a query loop
-                # re-issuing the same filter pays ONE job
-                cache = getattr(self._client, "_selectivity_cache", None)
-                if cache is None:
-                    cache = {}
-                    self._client._selectivity_cache = cache
-                cache_key = (self._store.name, predicate_fp)
-                n_allowed = cache.get(cache_key)
-            if n_allowed is None:
-                n_allowed = allowed.count()
-                if cache_key is not None:
-                    if len(cache) >= 512:  # bounded: counts are 8-byte ints
-                        cache.clear()
-                    cache[cache_key] = n_allowed
-            sel = n_allowed / max(1, int(vi["n_docs"]))
-            if 0.0 < sel < 1.0:
-                probes = max(probes, min(int(vi["n_lists"]), _math.ceil(probes / sel)))
-        touched = log.select("id").distinct() if log is not None else None
-        if where_ops:
-            matched = self._predicate_matched_ids(view.base, where_ops)
-            touched = matched if touched is None else touched.unionByName(matched).distinct()
-        if vi.get("means") is not None:
-            from .ann.quantize import ivf_quantized_search
-
-            index_top = ivf_quantized_search(
-                centroids,
-                postings,
-                qdf,
-                [float(m) for m in vi["means"]],
-                k=k,
-                nprobe=probes,
-                rerank_factor=int(vi.get("rerank_factor", 24)),
-                space=vi.get("space", meta.space),
-                allowed_ids=allowed,
-                excluded_ids=touched,
-            )
-        elif vi.get("sq4_lo") is not None:
-            from .ann.quantize import ivf_sq4_search
-
-            index_top = ivf_sq4_search(
-                centroids,
-                postings,
-                qdf,
-                (list(vi["sq4_lo"]), list(vi["sq4_step"])),
-                k=k,
-                nprobe=probes,
-                rerank_factor=int(vi.get("rerank_factor", 4)),
-                space=vi.get("space", meta.space),
-                allowed_ids=allowed,
-                excluded_ids=touched,
-            )
-        elif vi.get("pq") is not None:
-            from .ann.pq import ivf_pq_search
-
-            index_top = ivf_pq_search(
-                centroids,
-                postings,
-                qdf,
-                self._pq_books(vi),
-                k=k,
-                nprobe=probes,
-                rerank_factor=int(vi.get("rerank_factor", 8)),
-                space=vi.get("space", meta.space),
-                allowed_ids=allowed,
-                excluded_ids=touched,
-            )
-        else:
-            index_top = ivf_search(
-                centroids,
-                postings,
-                qdf,
-                k=k,
-                nprobe=probes,
-                space=vi.get("space", meta.space),
-                allowed_ids=allowed,
-                excluded_ids=touched,
-            )
-        if touched is None:
-            return index_top
-        # WAL tail: materialize ONLY the touched id-groups (base semi-join),
-        # brute-force them, then merge the two top-k streams; pending
-        # predicate deletes replay inside the bounded fold
-        base = view.base
-        base_t = base.join(touched, "id", "semi") if base is not None else None
-        tail = self._fold(base_t, log, where_ops)
-        tail = tail.filter(F.col("embedding").isNotNull())
-        if allowed is not None:
-            tail = tail.join(allowed, "id", "semi")
-        tail_top = exact_knn(tail, qdf, k=k, space=meta.space)
-        return knn_merge([index_top, tail_top], k)
-
-    @staticmethod
-    def _knn_out_schema(qdf: DataFrame) -> T.StructType:
-        """Empty-result schema for query_batch: query_id keeps the caller's
-        type (string ids and long ids both flow through unchanged)."""
-        return T.StructType(
-            [
-                qdf.schema["query_id"],
-                T.StructField("id", T.StringType()),
-                T.StructField("dist", T.DoubleType()),
-                T.StructField("rank", T.IntegerType()),
-            ]
-        )
 
     def query_batch(
         self,
@@ -2682,34 +2649,15 @@ class Collection:
         ceiling."""
         self._client._enforce(Action.QUERY, n_results=n_results, where=where,
                               where_document=where_document)
-        meta = self._store.meta
-        self._validate_indexed(meta, where, where_document, knn=True)
-        view = _ReadView(self._store, meta, read_level)
+        ex = self._read(read_level)
+        self._validate_indexed(ex.view.meta, where, where_document, knn=True)
         qdf = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).alias("embedding"),
         )
-        allowed = None
-        if where is not None or where_document is not None:
-            snap_f = view.records
-            if snap_f is None:
-                return local_frame(qdf.sparkSession, [], self._knn_out_schema(qdf))
-            if where is not None:
-                snap_f = snap_f.filter(
-                    where_to_column(where, known_keys=frozenset(snap_f.columns))
-                )
-            if where_document is not None:
-                snap_f = snap_f.filter(where_doc_to_column(where_document))
-            allowed = snap_f.select("id")
-        via_index = self._query_via_index(view, qdf, n_results, nprobe, allowed)
-        if via_index is not None:
-            return via_index
-        snap = view.records
-        if snap is None:
-            return local_frame(qdf.sparkSession, [], self._knn_out_schema(qdf))
-        cand = snap.join(allowed, "id", "semi") if allowed is not None else snap
-        cand = cand.filter(F.col("embedding").isNotNull())
-        return exact_knn(cand, qdf, k=n_results, space=meta.space)
+        flt = Filter(where=where, where_document=where_document)
+        return ex.knn(KNNPlan(fetch=n_results, filter=flt, include=("distances",),
+                              read_level=read_level), qdf, nprobe)
 
     def sparse_query_batch(
         self,
@@ -2747,74 +2695,23 @@ class Collection:
         ``query_text_col`` embeds raw query text with the collection's
         configured sparse EF for ``key`` (SPLADE wire provider / BM25) —
         the sparse analog of ``query(query_texts=...)``."""
-        from .operators.sparse import _dot_topk, explode_postings, sparse_index_topk
-
         self._client._enforce(Action.QUERY, n_results=n_results)
-        meta = self._store.meta
-        view = _ReadView(self._store, meta, read_level)
+        ex = self._read(read_level)
         if query_text_col is not None:
             if query_vec_col is not None:
                 raise CollectionError("pass query_vec_col or query_text_col, not both")
-            sef, _skey = self._sparse_embedding_function(meta, key)
+            sef, _skey = self._sparse_embedding_function(ex.view.meta, key)
             if sef is None:
                 raise CollectionError(
                     f"query_text_col requires a sparse embedding function "
                     f"configured for key {key!r}"
                 )
-            qdf = queries.select(
-                F.col(query_id_col).alias("query_id"),
-                sef.embed_column(F.col(query_text_col)).alias("__q"),
-            )
+            qvec = sef.embed_column(F.col(query_text_col))
         else:
-            qdf = queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vec_col or key).alias("__q"),
-            )
-        specs = self._fresh_sparse_indexes(view, keys={key})
-        if key in specs:
-            postings, n_buckets, n_docs = specs[key]
-            every_bucket = list(range(n_buckets))
-            query_indices = None if prune_buckets else every_bucket
-            if prune_buckets == "auto":
-                # one bounded probe (<= prune_threshold + 1 query rows reach
-                # the driver): a small batch's vocabulary comes from it
-                # directly, with no separate distinct-terms job
-                probe = qdf.select("__q.indices").limit(prune_threshold + 1).collect()
-                query_indices = (
-                    sorted({int(i) for r in probe for i in r[0] or ()})
-                    if len(probe) <= prune_threshold
-                    else every_bucket
-                )
-            return sparse_index_topk(
-                postings,
-                qdf,
-                k=n_results,
-                n_buckets=n_buckets,
-                sparse_col="__q",
-                idf=idf,
-                n_docs=n_docs,
-                query_indices=query_indices,
-            )
-        snap = view.records
-        if snap is None or key not in snap.columns:
-            return local_frame(
-                qdf.sparkSession,
-                [],
-                T.StructType(
-                    [
-                        qdf.schema["query_id"],
-                        T.StructField("id", T.StringType()),
-                        T.StructField("score", T.DoubleType()),
-                    ]
-                ),
-            )
-        postings = explode_postings(snap.filter(F.col(key).isNotNull()), sparse_col=key)
-        qpost = explode_postings(
-            qdf, id_col="query_id", sparse_col="__q"
-        ).withColumnsRenamed({"id": "query_id", "doc_w": "q_w"})
-        return _dot_topk(
-            postings, qpost, n_results, 6, idf_from=postings if idf else None
-        )
+            qvec = F.col(query_vec_col or key)
+        qdf = queries.select(F.col(query_id_col).alias("query_id"), qvec.alias(key))
+        plan = KNNPlan(fetch=n_results, include=("distances",), read_level=read_level)
+        return ex.sparse_knn(plan, qdf, key, idf, prune_buckets, prune_threshold)
 
     def hybrid_query_batch(
         self,
@@ -2838,16 +2735,20 @@ class Collection:
         its ``per_side_limit`` default rank, ascending-is-better.
 
         Each side retrieves its own top ``per_side_limit`` candidates
-        through the index-served batch paths; the fusion join touches only
-        ``n_queries × per_side_limit`` rows per side."""
+        through the index-served batch lowerings, both over ONE catalog
+        state; the fusion join touches only ``n_queries × per_side_limit``
+        rows per side."""
         from .operators.topk import topk_per_group
 
-        dense = self.query_batch(
-            dense_queries, n_results=per_side_limit, read_level=read_level, nprobe=nprobe
+        self._client._enforce(Action.QUERY, n_results=per_side_limit)
+        ex = self._read(read_level)
+        self._validate_indexed(ex.view.meta, None, None, knn=True)
+        side = KNNPlan(fetch=per_side_limit, include=("distances",), read_level=read_level)
+        dense = ex.knn(
+            side, dense_queries.select("query_id", "embedding"), nprobe
         ).select("query_id", "id", (F.col("rank") - 1).cast("double").alias("__d0"))
-        sp = self.sparse_query_batch(
-            sparse_queries, key=key, n_results=per_side_limit,
-            read_level=read_level, idf=idf,
+        sp = ex.sparse_knn(
+            side, sparse_queries.select("query_id", key), key, idf, "auto", 1024
         )
         from pyspark.sql import Window
 
@@ -2881,50 +2782,11 @@ class Collection:
             if isinstance(payload.get("limit"), dict)
             else payload.get("limit"),
         )
-        meta = self._store.meta
-        self._validate_indexed(meta, payload.get("where"), payload.get("where_document"))
+        ex = self._read(read_level)
+        self._validate_indexed(ex.view.meta, payload.get("where"), payload.get("where_document"))
         payload = dict(payload)
-        if payload.get("rank") is not None:
-            payload["rank"] = self._embed_rank_queries(meta, payload["rank"])
-        rank_keys = self._rank_knn_keys(payload.get("rank"))
-        view = _ReadView(self._store, meta, read_level)
-        snap = view.records
-        if snap is None:
-            # reference semantics: an empty collection yields an empty
-            # SearchResult, not an error — run the pipeline over an empty
-            # record frame carrying the standard record schema plus any
-            # column the rank expression references (sparse keys /
-            # alternate dense vector keys)
-            from .sparse_vector import SPARSE_VECTOR_TYPE
-
-            fields = [
-                T.StructField("id", T.StringType()),
-                T.StructField("offset_id", T.LongType()),
-                T.StructField("embedding", T.ArrayType(T.FloatType())),
-                T.StructField("document", T.StringType()),
-                T.StructField("uri", T.StringType()),
-            ]
-            standard = {f.name for f in fields}
-            for key, is_sparse in rank_keys.items():
-                if key not in standard:
-                    fields.append(
-                        T.StructField(
-                            key, SPARSE_VECTOR_TYPE if is_sparse else T.ArrayType(T.FloatType())
-                        )
-                    )
-            snap = local_frame(self._client.spark, [], T.StructType(fields))
-        sparse_keys = {k for k, s in rank_keys.items() if s}
-        wd = payload.get("where_document")
-        return search_op(
-            snap,
-            default_space=meta.space,
-            offset_col="offset_id" if "offset_id" in snap.columns else None,
-            sparse_index=self._fresh_sparse_indexes(view, keys=sparse_keys)
-            if sparse_keys
-            else {},
-            doc_candidates=self._fts_candidates(view, wd) if wd is not None else None,
-            **payload,
-        )
+        limit = Limit(payload.pop("offset", 0), payload.pop("limit", None))
+        return ex.search(Search(limit=limit, read_level=read_level, **payload))
 
     # ------------------------------------------------------------------
     # conditional transactions

@@ -124,6 +124,25 @@ def _fold(domains: list[RankDomain], identity: float, op) -> RankDomain:
     return acc
 
 
+def collect_knn_terms(expr: Any, out: list[dict]) -> None:
+    """Gather every $knn leaf — the reference collects them the same way
+    before orchestration (``rust/types/src/execution/operator.rs:
+    1204-1230`` ``RankExpr::knn_queries``)."""
+    if not isinstance(expr, dict):
+        return
+    for op, arg in expr.items():
+        if op == "$knn":
+            out.append(arg)
+        elif op in ("$sub", "$div"):
+            collect_knn_terms(arg.get("left"), out)
+            collect_knn_terms(arg.get("right"), out)
+        elif isinstance(arg, list):
+            for e in arg:
+                collect_knn_terms(e, out)
+        else:
+            collect_knn_terms(arg, out)
+
+
 class RankEvaluator:
     """Evaluates a rank expression dict over a candidate record DataFrame.
 
@@ -164,24 +183,6 @@ class RankEvaluator:
         # _precompute_knns before tree evaluation
         self._knn_cache: dict[tuple, DataFrame] = {}
 
-    def _collect_knn_terms(self, expr: Any, out: list[dict]) -> None:
-        """Gather every $knn leaf — the reference collects them the same way
-        before orchestration (``rust/types/src/execution/operator.rs:
-        1204-1230`` ``RankExpr::knn_queries``)."""
-        if not isinstance(expr, dict):
-            return
-        for op, arg in expr.items():
-            if op == "$knn":
-                out.append(arg)
-            elif op in ("$sub", "$div"):
-                self._collect_knn_terms(arg.get("left"), out)
-                self._collect_knn_terms(arg.get("right"), out)
-            elif isinstance(arg, list):
-                for e in arg:
-                    self._collect_knn_terms(e, out)
-            else:
-                self._collect_knn_terms(arg, out)
-
     @staticmethod
     def _knn_key(arg: dict[str, Any]) -> tuple:
         q = arg.get("query")
@@ -215,7 +216,7 @@ class RankEvaluator:
         side), then each term slices its ``rank <= limit`` from the result.
         """
         terms: list[dict] = []
-        self._collect_knn_terms(expr, terms)
+        collect_knn_terms(expr, terms)
         by_space: dict[str, list[tuple[tuple, dict]]] = {}
         by_sparse_col: dict[str, list[tuple[tuple, dict]]] = {}
         for t in terms:

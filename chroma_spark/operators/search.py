@@ -19,7 +19,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..where import where_doc_to_column, where_to_column
+from ..where import filter_records
 from .group_by import ranked_group_by
 from .limit import page
 from .rank import RankEvaluator, finalize_scores
@@ -42,27 +42,23 @@ def search(
     knn_fn=None,
     offset_col: str | None = None,
     sparse_index: dict | None = None,
-    doc_candidates: DataFrame | None = None,
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Run a Search payload; returns records (+ ``score`` when ranked).
 
     ``offset_col`` — the internal insertion-offset column; when given,
     un-ranked results order by it (limit.rs:23-36) instead of the id.
     ``sparse_index`` — per-key persisted posting indexes for sparse $knn
-    terms (see RankEvaluator). ``doc_candidates`` — an FTS-index-served
-    candidate id superset for ``where_document`` (Collection.search wires
-    `_fts_candidates`); applied as a semi-join on the CANDIDATE side only,
-    so corpus-level IDF stats stay unfiltered, and the exact predicate
-    still verifies."""
-    candidates = records
-    if where is not None:
-        candidates = candidates.filter(
-            where_to_column(where, array_keys, known_keys=frozenset(records.columns))
+    terms (see RankEvaluator). ``candidates`` — the records the caller's
+    own filter stage already kept (Collection.search lowers ``where`` /
+    ``where_document`` with its FTS candidates there); when None, ``where``
+    and ``where_document`` filter ``records`` here. Filtering touches the
+    CANDIDATE side only, so corpus-level IDF stats stay unfiltered."""
+    if candidates is None:
+        candidates = filter_records(
+            records, where=where, where_document=where_document,
+            array_keys=array_keys, id_col=id_col, doc_col=doc_col,
         )
-    if where_document is not None:
-        if doc_candidates is not None:
-            candidates = candidates.join(doc_candidates, id_col, "semi")
-        candidates = candidates.filter(where_doc_to_column(where_document, doc_col))
 
     if rank is None:
         out = candidates

@@ -2,12 +2,18 @@
 
 ``chromadb/execution/expression/plan.py:19-43`` defines ``CountPlan``,
 ``GetPlan``, ``KNNPlan`` and ``Search`` as plain dataclasses (there is no
-rewriting optimizer — SURVEY §3's IR summary); the executor pattern-matches
-them. Here each plan knows how to execute itself against a
-:class:`chroma_spark.api.Collection` — Catalyst is the optimizer, so a plan
-is just a typed, serializable description of an API call. They serialize to
-dicts (the protobuf-conversion analog, ``rust/types/src/execution/
-plan.rs:34-588``) so plans can be logged, shipped, or replayed.
+rewriting optimizer — SURVEY §3's IR summary); one executor pattern-matches
+them. Here they are the input of the one read executor
+(:class:`chroma_spark.api._Executor`): every public read builds a plan and
+the executor lowers it over one resolved catalog state in a fixed order —
+filter, record source (fresh index + WAL-tail merge, or exact scan), rank
+and limit, hydration. Catalyst optimizes what the lowering produces.
+
+``plan.execute(collection)`` runs a plan through the collection's public
+method of the same kind, so admission control (authz, rate, quota) and
+payload validation always run before the executor sees it. Plans serialize
+to dicts (the protobuf-conversion analog, ``rust/types/src/execution/
+plan.rs:34-588``) so they can be logged, shipped, or replayed.
 """
 
 from __future__ import annotations

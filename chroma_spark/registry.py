@@ -973,7 +973,7 @@ def rank_hybrid_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_store(spark, sf_dir)
     ev = RankEvaluator(
         _view(_emb_store(spark, sf_dir)).records.select("id", "embedding"),
-        sparse_index=docs._fresh_sparse_indexes(_view(docs), keys={"sparse"}),
+        sparse_index=docs._read().sparse_indexes(keys={"sparse"}),
     )
     out = finalize_scores(ev.evaluate(expr))
     return out.select(F.col("id").cast("long").alias("id"), "score")
@@ -2518,18 +2518,12 @@ def doc_contains_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/fts.py; reference `rust/index/src/fulltext/types.rs`):
     candidates from a partition-pruned posting lookup, exact contains
     verifying candidates only — same rows as the full scan (the oracle)."""
-    from .where import where_doc_to_column
+    from .plans import Filter
 
     wd = {"$contains": "spark table"}
-    col = _docs_store(spark, sf_dir)
-    view = _view(col)
-    cands = col._fts_candidates(view, wd)
-    assert cands is not None, "fts index must be fresh for this query"
-    return (
-        view.records.join(cands, "id", "semi")
-        .filter(where_doc_to_column(wd))
-        .select(F.col("id").cast("long").alias("id"))
-    )
+    ex = _docs_store(spark, sf_dir)._read()
+    assert ex.fts_candidates(wd) is not None, "fts index must be fresh for this query"
+    return ex.filtered(Filter(where_document=wd)).select(F.col("id").cast("long").alias("id"))
 
 
 _SV_DIMS = 8  # sparse tier = first 8 embedding dims as explicit postings

@@ -38,9 +38,9 @@ explicit ``IS NULL OR`` branches, so the two backends agree row-for-row.
 
 from __future__ import annotations
 
-from typing import AbstractSet, Any
+from typing import AbstractSet, Any, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _COMPARE_OPS = {"$eq", "$ne", "$gt", "$gte", "$lt", "$lte"}
@@ -146,6 +146,32 @@ def where_to_column(
         return c.isNull() | (c != F.lit(val))
     cmp = {"$gt": c > val, "$gte": c >= val, "$lt": c < val, "$lte": c <= val}
     return c.isNotNull() & cmp[op]
+
+
+def filter_records(
+    records: DataFrame,
+    ids: Sequence[str] | None = None,
+    where: dict[str, Any] | None = None,
+    where_document: dict[str, Any] | None = None,
+    doc_candidates: DataFrame | None = None,
+    array_keys: AbstractSet[str] = frozenset(),
+    id_col: str = "id",
+    doc_col: str = "document",
+) -> DataFrame:
+    """The one filter stage of every read: ``ids``, then ``where``, then
+    ``where_document``, which first semi-joins ``doc_candidates`` (an FTS
+    SOUND superset of its matches) so the exact predicate verifies only
+    candidates."""
+    out = records
+    if ids is not None:
+        out = out.filter(F.col(id_col).isin([str(i) for i in ids]))
+    if where is not None:
+        out = out.filter(where_to_column(where, array_keys, known_keys=frozenset(records.columns)))
+    if where_document is not None:
+        if doc_candidates is not None:
+            out = out.join(doc_candidates, id_col, "semi")
+        out = out.filter(where_doc_to_column(where_document, doc_col))
+    return out
 
 
 def where_doc_to_column(wd: dict[str, Any], doc_col: str = "document") -> Column:

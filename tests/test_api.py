@@ -7,14 +7,9 @@ from __future__ import annotations
 
 import pytest
 
-from chroma_spark.api import Client, _ReadView
+from chroma_spark.api import Client
 from chroma_spark import layout
 from chroma_spark.sources.collection import CollectionError, StaleReadError
-
-
-def _view(col):
-    """The collection's current catalog state as one read view."""
-    return _ReadView(col._store, col._store.meta)
 
 
 @pytest.fixture()
@@ -412,7 +407,7 @@ def test_modify_metadata_keeps_engine_keys(client):
     (got,) = col.get(ids=["c"], include=["embeddings"])
     assert got["embedding"] is not None and len(got["embedding"]) == 16
     wd = {"$contains": "quick"}
-    assert col._fts_candidates(_view(col), wd) is not None
+    assert col._read().fts_candidates(wd) is not None
     assert sorted(r["id"] for r in col.get(where_document=wd)) == ["a", "c"]
     with pytest.raises(CollectionError, match="reserved"):
         col.modify(metadata={"purpose": "x", "__fts_index__": None})
@@ -702,7 +697,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
         [(0, [float(x) for x in embs[5]])], "query_id INT, embedding ARRAY<FLOAT>"
     )
     # the index path engages (nprobe defaults to all lists -> exact)
-    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
+    assert col._read().ivf_top(qdf, 3, None, None) is not None
     res = col.query(q, n_results=3)
     assert res["ids"][0][0] == "r5" and res["distances"][0][0] == 0.0
 
@@ -723,7 +718,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     # pending predicate delete: the index stays engaged (matched ids are
     # computed vectorized against base and excluded; no wholesale fallback)
     col.delete(where={"never_there": {"$eq": 1}})
-    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
+    assert col._read().ivf_top(qdf, 3, None, None) is not None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
 
     # a descriptor older than the collection is stale -> exact fallback
@@ -731,10 +726,10 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     col._store.catalog.mutate(
         col._store.name, lambda m: m.indexes["vector"].__setitem__("version", m.version - 1)
     )
-    assert col._query_via_index(_view(col), qdf, 3, None, None) is None
+    assert col._read().ivf_top(qdf, 3, None, None) is None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
     col.build_vector_index(n_lists=3)
-    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
+    assert col._read().ivf_top(qdf, 3, None, None) is not None
     assert col.query(q, n_results=3)["ids"][0][0] == "new"
 
     # default compact() refreshes the registered index for the new version
@@ -742,7 +737,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     col.add(ids=["new2"], embeddings=[[0.1, 0.1, 0.1, 0.1]])
     col.compact()
     assert col._store.meta.indexes["vector"]["version"] == col.version
-    assert col._query_via_index(_view(col), qdf, 3, None, None) is not None
+    assert col._read().ivf_top(qdf, 3, None, None) is not None
 
 
 def test_fork_inherits_vector_index(client, spark):
@@ -752,7 +747,7 @@ def test_fork_inherits_vector_index(client, spark):
     fork = col.fork("vchild")
     qdf = spark.createDataFrame([(0, [1.0, 0.0])], "query_id INT, embedding ARRAY<FLOAT>")
     # the child serves from the parent's index files (zero-copy)
-    assert fork._query_via_index(_view(fork), qdf, 2, None, None) is not None
+    assert fork._read().ivf_top(qdf, 2, None, None) is not None
     assert fork.query([[1.0, 0]], n_results=1)["ids"][0] == ["a"]
     # divergent child writes merge through the tail; parent untouched
     fork.add(ids=["z"], embeddings=[[1.0, 0.0]])
@@ -796,7 +791,7 @@ def test_compaction_maintains_index_incrementally(client, spark):
     # (nprobe defaults to every list)
     assert col._store.meta.log_paths == []
     qdf = spark.createDataFrame([(0, [2.0, 2.0, 2.0, 2.0])], "query_id INT, embedding ARRAY<FLOAT>")
-    assert col._query_via_index(_view(col), qdf, 5, None, None) is not None
+    assert col._read().ivf_top(qdf, 5, None, None) is not None
     got = col.query([[2.0, 2, 2, 2]], n_results=5)["ids"][0]
     exact = exact_knn(col.snapshot().filter("embedding is not null"), qdf, k=5, space="l2")
     assert got == [r.id for r in exact.orderBy("rank").collect()]
@@ -915,7 +910,7 @@ def test_sparse_n_docs_after_maintenance_equals_rebuild(client):
         return {r["id"]: round(r["score"], 9) for r in col.search(rank=rank, select=["#id"]).collect()}
 
     maintained = _scores()
-    n_maintained = col._fresh_sparse_indexes(_view(col), keys={"sv"})["sv"][2]
+    n_maintained = col._read().sparse_indexes(keys={"sv"})["sv"][2]
     rebuilt = col.build_sparse_index("sv", n_buckets=4)
     assert maintained == _scores()
     assert n_maintained == rebuilt["n_docs"] == 3
@@ -1306,7 +1301,7 @@ def test_filtered_sparse_idf_consistent_inline_vs_indexed(client):
     # still served (matched ids excluded via the bounded tail fold) and a
     # nothing-matching predicate leaves scores identical
     col.delete(where={"never": {"$eq": 1}})
-    assert col._fresh_sparse_indexes(_view(col), keys={"sv"}) != {}
+    assert col._read().sparse_indexes(keys={"sv"}) != {}
     tolerated = {
         r["id"]: r["score"]
         for r in col.search(where={"grp": {"$eq": "x"}}, rank=rank, select=["#id"]).collect()
@@ -1332,9 +1327,9 @@ def test_index_reads_tolerate_matching_predicate_deletes(client, spark):
     col.delete(where={"grp": {"$eq": "x"}})  # matches r1,r3,r5,r7,r9 — pending
 
     qdf = spark.createDataFrame([(0, [2.0, 8.0])], "query_id INT, embedding ARRAY<FLOAT>")
-    assert col._query_via_index(_view(col), qdf, 4, None, None) is not None
+    assert col._read().ivf_top(qdf, 4, None, None) is not None
     got_vec = col.query([[2.0, 8.0]], n_results=4)["ids"][0]
-    assert col._fresh_sparse_indexes(_view(col), keys={"sv"}) != {}
+    assert col._read().sparse_indexes(keys={"sv"}) != {}
     rank = {"$knn": {"query": {"indices": [1], "values": [1.0]}, "key": "sv", "limit": 5}}
     got_sparse = [r["id"] for r in col.search(rank=rank, select=["#id"]).collect()]
 
@@ -1931,3 +1926,245 @@ def test_baseapi_tail_client_surface(client):
     assert col.fork_count() == 0
     child = col.fork("tail_child")
     assert col.fork_count() == 1 and child.fork_count() == 1
+
+
+# ---------------------------------------------------------------------------
+# The one read executor: every public read lowers through api._Executor
+# ---------------------------------------------------------------------------
+
+
+def _rows(df):
+    """A DataFrame's rows as sorted plain dicts (order-free comparison)."""
+    return sorted(
+        (r.asDict(recursive=True) for r in df.collect()),
+        key=lambda r: sorted((k, repr(v)) for k, v in r.items()),
+    )
+
+
+def test_hybrid_query_batch_reads_one_catalog_state(client, monkeypatch):
+    """Both sides of a hybrid batch lower over ONE catalog state: a write or
+    compaction between two state reads would fuse two collection states."""
+    from chroma_spark.sources.collection import Catalog
+
+    col = client.create_collection("hyb1", dimension=2, space="l2")
+    col.add(
+        ids=["a", "b"],
+        embeddings=[[1.0, 0.0], [0.0, 1.0]],
+        metadatas=[{"sv": {"indices": [0], "values": [1.0]}}, {"sv": {"indices": [1], "values": [1.0]}}],
+    )
+    spark = col._client.spark
+    dq = spark.createDataFrame([(0, [1.0, 0.0])], "query_id INT, embedding ARRAY<FLOAT>")
+    sq = spark.createDataFrame(
+        [(0, {"indices": [0], "values": [1.0]})],
+        "query_id INT, sv STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>",
+    )
+    gets = []
+    real_get = Catalog.get
+
+    def counting_get(self, name, *a, **kw):
+        if name == col._store.name:
+            gets.append(name)
+        return real_get(self, name, *a, **kw)
+
+    monkeypatch.setattr(Catalog, "get", counting_get)
+    out = col.hybrid_query_batch(dq, sq, key="sv", n_results=2, per_side_limit=4, idf=False)
+    assert len(gets) == 1, f"{len(gets)} catalog states read for one hybrid batch"
+    assert {r.id for r in out.collect()} == {"a", "b"}
+
+
+def test_query_batch_serves_where_document_from_fts_index(client):
+    """query_batch(where_document=...) uses a fresh FTS index like every
+    other read, and a WAL tail that adds and deletes matching documents
+    gives the same answer with and without the index."""
+    col = client.create_collection("qbfts", dimension=2, space="l2")
+    col.add(
+        ids=["a", "b", "c", "d"],
+        embeddings=[[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.5, 0.5]],
+        documents=["quick brown fox", "lazy dog", "quick red fox", "slow fox"],
+    )
+    col.build_fts_index(n_buckets=4)
+    col.add(ids=["e"], embeddings=[[0.95, 0.05]], documents=["another quick fox"])
+    col.delete(ids=["a"])
+    wd = {"$contains": "quick"}
+    assert col._read().fts_candidates(wd) is not None
+    spark = col._client.spark
+    qdf = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])], "query_id INT, embedding ARRAY<FLOAT>")
+    indexed = _rows(col.query_batch(qdf, n_results=3, where_document=wd))
+    col._store.catalog.mutate(col._store.name, lambda m: m.indexes.clear())
+    assert col._read().fts_candidates(wd) is None
+    assert indexed == _rows(col.query_batch(qdf, n_results=3, where_document=wd))
+    assert {r["id"] for r in indexed} == {"c", "e"}
+
+
+def test_executor_index_lowerings_equal_exact_scans(spark, tmp_path, monkeypatch):
+    """One view with a fresh exact (nprobe unset, unquantized) IVF index, a
+    sparse index and an FTS index, plus a WAL tail holding an UPDATE, a
+    DELETE and a pending predicate delete: every read entry point's
+    index-served lowering equals its exact-scan lowering; each plan's
+    ``execute`` equals its public call; a KNNPlan over quota is rejected
+    exactly as ``query`` rejects it, before the executor runs."""
+    import random
+
+    from chroma_spark.operators.rank import rrf
+    from chroma_spark.plans import CountPlan, Filter, GetPlan, KNNPlan, Limit, Search
+    from chroma_spark.quota import QuotaExceededError, StaticQuotaEnforcer, UsageType
+
+    client = Client(
+        spark, str(tmp_path / "store"),
+        quota_enforcer=StaticQuotaEnforcer(limits={UsageType.LIMIT_VALUE: 100}),
+    )
+    col = client.create_collection("par", dimension=4, space="l2")
+    rnd = random.Random(11)
+    ids = [f"p{i:02d}" for i in range(24)]
+    embs = [[rnd.random() for _ in range(4)] for _ in ids]
+    words = ["quick fox", "lazy dog", "brown bear"]
+    col.add(
+        ids=ids,
+        embeddings=embs,
+        documents=[f"{words[i % 3]} number {i}" for i in range(24)],
+        metadatas=[
+            {"grp": i % 2, "sv": {"indices": [i % 5, 5 + i % 4], "values": [1.0, 0.5 + i / 100]}}
+            for i in range(24)
+        ],
+    )
+    col.build_vector_index(n_lists=3)
+    col.build_sparse_index("sv", n_buckets=4)
+    col.build_fts_index(n_buckets=4)
+    col.update(
+        ids=["p03"], embeddings=[[0.5, 0.5, 0.5, 0.5]], documents=["quick fox moved"],
+        metadatas=[{"grp": 0, "sv": {"indices": [1, 6], "values": [2.0, 1.0]}}],
+    )
+    col.delete(ids=["p06"])
+    col.delete(where={"grp": 1}, where_document={"$contains": "bear"})  # p05, p11, p17, p23
+
+    q = [embs[4], embs[9]]
+    qdf = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(q)], "query_id INT, embedding ARRAY<FLOAT>"
+    )
+    sq = spark.createDataFrame(
+        [(0, {"indices": [1, 6], "values": [1.0, 1.0]}), (1, {"indices": [0, 3], "values": [1.0, 2.0]})],
+        "query_id INT, sv STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>",
+    )
+    wd = {"$contains": "fox"}
+    every = ["distances", "documents", "metadatas", "embeddings"]
+    rank = rrf([
+        {"query": q[0], "limit": 8, "default": 8},
+        {"query": {"indices": [1, 6], "values": [1.0, 1.0]}, "key": "sv", "limit": 8,
+         "default": 8, "idf": False},
+    ])
+
+    def read_all(tag: str) -> dict:
+        out_dir = str(tmp_path / f"export_{tag}")
+        col.export_files(out_dir, where={"grp": 0}, where_document=wd, include=["documents"])
+        exported = _rows(spark.read.json(out_dir))
+        dst = col.copy_to(f"copy_{tag}", where={"grp": 0}, where_document=wd)
+        return {
+            "count": col.count(),
+            "get": col.get(where_document=wd, include=["documents", "metadatas", "embeddings"]),
+            "query": col.query(q, n_results=5, include=every),
+            "query_filtered": col.query(q, n_results=5, where={"grp": 0}, where_document=wd, include=every),
+            "query_batch": _rows(col.query_batch(qdf, n_results=5)),
+            "query_batch_filtered": _rows(col.query_batch(qdf, n_results=4, where_document=wd)),
+            "sparse": _rows(col.sparse_query_batch(sq, key="sv", n_results=5, idf=False)),
+            "hybrid": _rows(col.hybrid_query_batch(qdf, sq, key="sv", n_results=5, per_side_limit=8, idf=False)),
+            "search": _rows(col.search(
+                where_document=wd, rank=rank, limit=5, select=["#id", "#score", "#document"]
+            )),
+            "export": exported,
+            "copy_to": dst.get(include=["documents", "metadatas", "embeddings"]),
+        }
+
+    ex = col._read()
+    assert ex.view.touched is not None and ex.view.where_ops
+    assert ex.ivf_top(qdf, 3, None, None) is not None
+    assert set(ex.sparse_indexes({"sv"})) == {"sv"}
+    assert ex.fts_candidates(wd) is not None
+    indexed = read_all("indexed")
+    assert indexed["count"] == 23 - 4
+    assert {r["id"] for r in indexed["get"]} & {"p05", "p06", "p11"} == set()
+    assert "p03" in {r["id"] for r in indexed["get"]}
+
+    # every plan kind: plan.execute(col) is the public call
+    get_plan = GetPlan(filter=Filter(where={"grp": 0}, where_document=wd), limit=Limit(offset=1, limit=3))
+    assert get_plan.execute(col) == col.get(where={"grp": 0}, where_document=wd, offset=1, limit=3)
+    assert CountPlan().execute(col) == col.count()
+    knn_plan = KNNPlan(embeddings=q, fetch=4, filter=Filter(where_document=wd))
+    assert knn_plan.execute(col) == col.query(q, n_results=4, where_document=wd)
+    search_plan = Search(where_document=wd, rank=rank, limit=Limit(limit=4), select=["#id", "#score"])
+    assert _rows(search_plan.execute(col)) == _rows(
+        col.search(where_document=wd, rank=rank, limit=4, select=["#id", "#score"])
+    )
+
+    # quota: the plan is rejected by the public method's admission check,
+    # with query's own error, and never reaches the executor
+    with pytest.raises(QuotaExceededError) as by_query:
+        col.query(q, n_results=500)
+    reads = []
+    real_read = type(col)._read
+    monkeypatch.setattr(
+        type(col), "_read", lambda self, *a, **kw: reads.append(1) or real_read(self, *a, **kw)
+    )
+    with pytest.raises(QuotaExceededError) as by_plan:
+        KNNPlan(embeddings=q, fetch=500).execute(col)
+    monkeypatch.undo()
+    assert str(by_plan.value) == str(by_query.value) and reads == []
+
+    # the same view with no index: every entry point takes the exact scan
+    col._store.catalog.mutate(col._store.name, lambda m: m.indexes.clear())
+    ex = col._read()
+    assert ex.ivf_top(qdf, 3, None, None) is None
+    assert ex.sparse_indexes({"sv"}) == {} and ex.fts_candidates(wd) is None
+    exact = read_all("exact")
+    for name in indexed:
+        assert indexed[name] == exact[name], name
+
+
+def _calls_in(fn) -> set[str]:
+    """Names called (``f(...)`` or ``x.f(...)``) anywhere in a function."""
+    import ast
+
+    return {
+        n.func.attr if isinstance(n.func, ast.Attribute) else n.func.id
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and isinstance(n.func, (ast.Attribute, ast.Name))
+    }
+
+
+def test_reads_lower_only_through_the_executor():
+    """One mechanism per read stage: no read entry point filters, picks an
+    index or ranks by itself — each resolves one view through
+    ``Collection._read`` and hands its plan to the executor, whose stages
+    alone call the filter compilers, the FTS lookup and the KNN
+    operators."""
+    import ast
+
+    import chroma_spark.api as api
+
+    with open(api.__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    classes = {n.name: n for n in tree.body if isinstance(n, ast.ClassDef)}
+    methods = {
+        n.name: n for n in classes["Collection"].body if isinstance(n, ast.FunctionDef)
+    }
+    entry_points = [
+        "get", "count", "query", "search", "query_batch", "sparse_query_batch",
+        "hybrid_query_batch", "export_files", "copy_to",
+    ]
+    stage_only = {
+        "where_to_column", "where_doc_to_column", "filter_records", "fts_candidates",
+        "_fts_candidates", "exact_knn", "knn_merge", "ivf_search", "search_op",
+    }
+    for name in entry_points:
+        calls = _calls_in(methods[name])
+        assert not calls & stage_only, f"Collection.{name} calls {sorted(calls & stage_only)}"
+        assert "_read" in calls, f"Collection.{name} does not resolve its view via _read"
+    # outside the executor, only predicate-delete matching and compaction
+    # compile filters themselves
+    for cls_name, cls in classes.items():
+        for fn in (n for n in cls.body if isinstance(n, ast.FunctionDef)):
+            if cls_name in ("_Executor", "_ReadView"):
+                continue
+            stray = _calls_in(fn) & stage_only
+            assert not stray or fn.name == "_predicate_matched_ids", (
+                f"{cls_name}.{fn.name} calls {sorted(stray)}"
+            )

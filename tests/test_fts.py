@@ -8,12 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from chroma_spark.api import Client, _ReadView
-
-
-def _view(col):
-    """The collection's current catalog state as one read view."""
-    return _ReadView(col._store, col._store.meta)
+from chroma_spark.api import Client
 
 
 @pytest.fixture()
@@ -75,14 +70,14 @@ def test_fts_index_serves_contains_and_regex(client):
 def test_fts_candidates_prune_scan_and_are_sound(client, spark):
     col = _mk(client, "fts2")
     col.build_fts_index()
-    cands = col._fts_candidates(_view(col), {"$contains": "quick brown"})
+    cands = col._read().fts_candidates({"$contains": "quick brown"})
     assert sorted(r.id for r in cands.collect()) == ["a", "d"]
     # the posting scan must reach parquet with bucket partition filters
     plan = cands._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
     # unusable trees return None (no index consultation at all)
-    assert col._fts_candidates(_view(col), {"$not_contains": "quick"}) is None
-    assert col._fts_candidates(_view(col), {"$or": [{"$contains": "abc"}]}) is None
+    assert col._read().fts_candidates({"$not_contains": "quick"}) is None
+    assert col._read().fts_candidates({"$or": [{"$contains": "abc"}]}) is None
 
 
 def test_fts_wal_tail_reads_stay_exact(client):
