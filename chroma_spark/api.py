@@ -14,11 +14,14 @@ register it in the catalog.
 
 from __future__ import annotations
 
+import functools
 import math
+import threading
 import uuid
-from functools import cached_property
+from collections import OrderedDict
 from typing import Any, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -190,9 +193,12 @@ class Client:
                 "client.allow_reset = True to enable (ALLOW_RESET analog)"
             )
         prefix = f"{self.tenant}/{self.database}/"
+        ids = set()
         for name in list(self.catalog.list()):
             if name.startswith(prefix):
+                ids.add(self.catalog.get(name).id)
                 self.catalog.drop(name)
+        _ReadView.release_collections(self.catalog.root, ids)
         return True
 
     # -- admin surface -------------------------------------------------
@@ -349,7 +355,9 @@ class Client:
         return _check
 
     def delete_collection(self, name: str) -> None:
+        cid = self.catalog.get(self._scoped(name)).id
         self.catalog.drop(self._scoped(name), precondition=self._guard_not_function_input(name))
+        _ReadView.release_collections(self.catalog.root, {cid})
 
     def list_collections(self, limit: int | None = None, offset: int = 0) -> list[str]:
         self._enforce(Action.LIST_COLLECTIONS)
@@ -373,15 +381,49 @@ class Client:
         return out
 
 
-class _ReadView:
-    """One catalog state of a collection, resolved once per read call.
+def _built_once(fn):
+    """A :class:`_ReadView` property built at most once per view, under the
+    view's own lock (``functools.cached_property`` holds one lock shared by
+    every instance on Python 3.11, so views of different collections would
+    wait on each other's schema-inference jobs)."""
+    name = fn.__name__
 
-    Everything a read needs (base, WAL tail, pending predicate deletes,
-    index descriptors) derives from the single ``meta`` the call read, so
-    base and log always belong to one committed state. Reading them from
-    two catalog reads would let a compaction commit in between and pair the
+    @functools.wraps(fn)
+    def get(self):
+        with self._lock:
+            if name not in self._built:
+                self._built[name] = fn(self)
+            return self._built[name]
+
+    return property(get)
+
+
+# collections whose newest read state stays resident (LRU); Spark's storage
+# LRU bounds the bytes the resident record frames take (MEMORY_AND_DISK)
+RESIDENT_COLLECTIONS = 8
+_resident: OrderedDict[tuple[str, str], "_ReadView"] = OrderedDict()
+_resident_lock = threading.Lock()
+
+
+class _ReadView:
+    """One catalog state of a collection, resolved once and shared.
+
+    Everything a read needs (base, WAL tail, pending predicate deletes)
+    derives from the single ``meta`` the view was resolved from, so base
+    and log always belong to one committed state. Reading them from two
+    catalog reads would let a compaction commit in between and pair the
     old base with the truncated log, silently dropping the tail's records.
-    Base and tail are read lazily, each at most once per call.
+    Each frame is built at most once, under the view's own lock, so views
+    of different collections or states never wait on each other.
+
+    **Residency** (:meth:`resolve`): the newest state of each of the last
+    ``RESIDENT_COLLECTIONS`` collections read stays resident process-wide,
+    keyed by :attr:`key` ``(catalog root, collection id, version,
+    log_position, read_level, log_bound)``. Concurrent readers of one state
+    share one view; its folded ``records`` are persisted, and the frames of
+    immutable artifacts (base paths, index layout builds) pass on to the
+    collection's next state, so an insert never re-lists or re-infers them.
+    Only a new catalog state invalidates anything: it has a new key.
 
     ``read_level`` mirrors the reference's ReadLevel
     (``rust/types/src/execution/plan.rs:553``): ``index_only`` (base only),
@@ -401,12 +443,103 @@ class _ReadView:
         self.meta = meta
         self.read_level = read_level
         self._log_bound = log_bound
+        self.key = (
+            store.catalog.root, meta.id, meta.version, meta.log_position, read_level, log_bound,
+        )
+        self._lock = threading.RLock()
+        self._built: dict[str, Any] = {}
+        # frames keyed by the immutable artifact they read
+        self.frames: dict[tuple, DataFrame | None] = {}
+        # filter-selectivity counts of this state, keyed by predicate
+        self.selectivity: dict[str, int] = {}
+        self.resident = False
 
-    @cached_property
+    @classmethod
+    def resolve(
+        cls,
+        store: CollectionStore,
+        meta: CollectionMeta,
+        read_level: str = "index_and_wal",
+        log_bound: int | None = None,
+    ) -> "_ReadView":
+        """The shared view of ``meta``'s state, made resident when it is
+        the newest state seen of its collection (an older one — a reader
+        that raced a commit — gets a private view)."""
+        view = cls(store, meta, read_level, log_bound)
+        slot = view.key[:2]
+        with _resident_lock:
+            old = _resident.get(slot)
+            if old is not None and old.key == view.key:
+                _resident.move_to_end(slot)
+                return old
+            if old is not None and old.key[2:4] > view.key[2:4]:
+                return view
+            released = [old] if old is not None else []
+            # a collection dropped and re-created under the same name
+            # (possibly by another process) rewrites the same paths
+            for s, v in list(_resident.items()):
+                if s[0] == slot[0] and s != slot and v.meta.name == meta.name:
+                    released.append(_resident.pop(s))
+            if old is not None:
+                view.frames = {k: f for k, f in dict(old.frames).items() if view._carries(k)}
+            view.resident = True
+            _resident[slot] = view
+            _resident.move_to_end(slot)
+            while len(_resident) > RESIDENT_COLLECTIONS:
+                released.append(_resident.popitem(last=False)[1])
+        for v in released:
+            v.release()
+        return view
+
+    @staticmethod
+    def lookup(store: CollectionStore, meta: CollectionMeta) -> "_ReadView | None":
+        """The resident ``index_and_wal`` view of ``meta``'s state, if any
+        (never makes a state resident)."""
+        view = _resident.get((store.catalog.root, meta.id))
+        if view is not None and view.key[2:] == (meta.version, meta.log_position, "index_and_wal", None):
+            return view
+        return None
+
+    @staticmethod
+    def release_collections(root: str, ids: set[str]) -> None:
+        """Release the resident views of collections ``ids`` under ``root``."""
+        with _resident_lock:
+            released = [_resident.pop(s) for s in list(_resident) if s[0] == root and s[1] in ids]
+        for v in released:
+            v.release()
+
+    def release(self) -> None:
+        """Stop being resident: unpersist the records (a build in flight
+        unpersists its own result once it sees the flag)."""
+        self.resident = False
+        records = self._built.get("records")
+        if records is not None:
+            records.unpersist(blocking=False)
+
+    def _carries(self, key: tuple) -> bool:
+        """Whether a predecessor's frame ``key`` still describes an
+        artifact this state references."""
+        if key[0] == "base":
+            return key[1] == tuple(self.meta.base_paths)
+        return any(
+            d["path"] == key[1] and (key[0] == "centroids" or d["version"] == key[3])
+            for d in self.meta.indexes.values()
+        )
+
+    def frame(self, key: tuple, build) -> DataFrame | None:
+        """The frame of the immutable artifact ``key``, built at most once
+        per view and handed on to the collection's next resident state."""
+        with self._lock:
+            if key not in self.frames:
+                self.frames[key] = build()
+            return self.frames[key]
+
+    @property
     def base(self) -> DataFrame | None:
-        return self._store.read_base(self.meta)
+        paths = tuple(self.meta.base_paths)
+        return self.frame(("base", paths), lambda: self._store.read_base(self.meta))
 
-    @cached_property
+    @_built_once
     def _tail(self) -> tuple[DataFrame | None, list[tuple]]:
         log = self._store.read_log(self.meta) if self.read_level != "index_only" else None
         if log is not None and self.read_level == "index_and_bounded_wal":
@@ -422,12 +555,19 @@ class _ReadView:
     def where_ops(self) -> list[tuple]:
         return self._tail[1]
 
-    @cached_property
+    @_built_once
     def records(self) -> DataFrame | None:
-        """Materialized record state (None when empty)."""
-        return Collection._fold(self.base, self.log, self.where_ops)
+        """Materialized record state (None when empty); persisted while
+        the view is resident."""
+        records = Collection._fold(self.base, self.log, self.where_ops)
+        if records is not None and self.resident:
+            records = records.persist(StorageLevel.MEMORY_AND_DISK)
+            self._built["records"] = records
+            if not self.resident:  # released while building
+                records.unpersist(blocking=False)
+        return records
 
-    @cached_property
+    @_built_once
     def touched(self) -> DataFrame | None:
         """Ids whose index entries the WAL tail makes stale (None with no
         tail): the ids the id-keyed tail writes plus the base ids a pending
@@ -440,7 +580,7 @@ class _ReadView:
             touched = touched.unionByName(matched).distinct()
         return touched
 
-    @cached_property
+    @_built_once
     def tail(self) -> DataFrame | None:
         """Live state of the touched ids only — the bounded tail fold every
         index source merges (predicate deletes replay at their seqs)."""
@@ -458,10 +598,44 @@ class _Executor:
     the view's touched-ids / bounded tail fold: :meth:`ivf_top`,
     :meth:`sparse_indexes`; else the exact scan), rank and limit, then
     hydration of the winners only. An empty collection lowers over one
-    typed empty record frame (:meth:`records`)."""
+    typed empty record frame (:meth:`records`).
 
-    def __init__(self, col: "Collection", view: _ReadView) -> None:
-        self.col, self.view = col, view
+    ``meta`` is the catalog state the call read: the view's frames derive
+    from its (version, log position), and its index descriptors and
+    configuration are read fresh on every call — an index registered after
+    the compaction that produced the state serves at once."""
+
+    def __init__(self, col: "Collection", view: _ReadView, meta: CollectionMeta) -> None:
+        self.col, self.view, self.meta = col, view, meta
+
+    def _fresh(self, name: str) -> dict | None:
+        """Index ``name``'s descriptor if it indexes this state, its layout
+        stamp checked (on every read: the stamp lives outside the view)."""
+        from .layout import check_layout
+
+        desc = self.meta.indexes.get(name)
+        if desc is None or desc["version"] != self.meta.version:
+            return None
+        return {**desc, "built": check_layout(desc["path"], desc["kind"])}
+
+    def _live(self, desc: dict, sub: str) -> DataFrame:
+        """Live rows of a fresh index's sub-layout, resolved once per
+        layout build and version."""
+        from .layout import live
+
+        key = ("live", desc["path"], sub, desc["version"], desc["built"])
+        return self.view.frame(key, lambda: live(desc, sub))
+
+    def _ivf(self, vi: dict) -> tuple[DataFrame, DataFrame]:
+        """(centroids, live postings) of the fresh vector index ``vi``."""
+        import os as _os
+
+        path = _os.path.join(vi["path"], "centroids")
+        spark = self.col._client.spark
+        centroids = self.view.frame(
+            ("centroids", vi["path"], vi["built"]), lambda: spark.read.parquet(path)
+        )
+        return centroids, self._live(vi, "postings")
 
     def records(self, extra: dict[str, T.DataType] | None = None) -> DataFrame:
         """The view's records; if empty, a typed empty frame of the record
@@ -484,20 +658,60 @@ class _Executor:
         literal in the tree). The candidate set is a SOUND superset of the
         base-side matches; WAL-touched ids union in so tail writes are
         re-checked exactly; the exact predicate always verifies."""
-        from .layout import live
         from .operators.fts import contains_candidates, required_needles
 
-        view = self.view
-        desc = view.meta.indexes.get("fts")
-        if desc is None or desc["version"] != view.meta.version:
+        desc = self._fresh("fts")
+        if desc is None:
             return None
         needles = required_needles(where_document)
         if not needles:
             return None
-        cands = contains_candidates(live(desc, "postings"), needles, int(desc["n_buckets"]))
-        if view.log is not None:
-            cands = cands.unionByName(view.log.select("id").distinct()).distinct()
+        cands = contains_candidates(self._live(desc, "postings"), needles, int(desc["n_buckets"]))
+        if self.view.log is not None:
+            cands = cands.unionByName(self.view.log.select("id").distinct()).distinct()
         return cands
+
+    def _vector_index(self) -> dict | None:
+        """The fresh vector index, if the read level lets an index serve."""
+        if self.view.read_level not in ("index_only", "index_and_wal"):
+            return None
+        return self._fresh("vector")
+
+    def _probes(
+        self, vi: dict, nprobe: int | None, allowed: DataFrame | None, predicate_fp: str | None
+    ) -> int:
+        """The probe budget of index ``vi``: ``nprobe``, or every list."""
+        probes = int(nprobe or vi["n_lists"])
+        if allowed is None or nprobe is None or not vi.get("n_docs"):
+            return probes
+        # filter-before-ANN thins every probed list by the filter's
+        # selectivity, so a fixed probe budget quietly loses recall
+        # (measured at 1M: 10%-selective filters need ~4x the probes,
+        # BASELINE.md round-6 filtered table). Scale the budget so the
+        # expected CANDIDATE count matches what the caller asked for; the
+        # one bounded count here prices a recall cliff away. Memoized per
+        # predicate on the view: a query loop re-issuing the same filter
+        # over one state pays ONE job, and a new state counts afresh.
+        memo = self.view.selectivity
+        n_allowed = memo.get(predicate_fp) if predicate_fp is not None else None
+        if n_allowed is None:
+            n_allowed = allowed.count()
+            if predicate_fp is not None:
+                memo[predicate_fp] = n_allowed
+        sel = n_allowed / max(1, int(vi["n_docs"]))
+        if 0.0 < sel < 1.0:
+            probes = max(probes, min(int(vi["n_lists"]), math.ceil(probes / sel)))
+        return probes
+
+    @staticmethod
+    def _scan_serves(vi: dict, probes: int) -> bool:
+        """The physical choice: the exact scan serves instead of index
+        ``vi`` when the probe covers every list of an unquantized index.
+        Such a probe does at least the scan's distance work and, on top,
+        assigns centroids, scans ``replicas``x postings, joins tombstones,
+        dedups and merges the tail — for the same answer (both round
+        distances to 6 decimals and order by ``(dist, id)``)."""
+        return not vi.get("quantized") and probes >= int(vi["n_lists"])
 
     def ivf_top(
         self, qdf: DataFrame, k: int, nprobe: int | None, allowed: DataFrame | None,
@@ -509,42 +723,14 @@ class _Executor:
         instead (no fresh index or a bounded read level). Pending predicate
         deletes do NOT abandon the index: their matched ids are in the
         view's touched set, which the tail fold re-serves."""
-        view = self.view
-        meta = view.meta
-        vi = meta.indexes.get("vector")
-        if vi is None or vi["version"] != meta.version:
+        view, meta = self.view, self.meta
+        vi = self._vector_index()
+        if vi is None:
             return None
-        if view.read_level not in ("index_only", "index_and_wal"):
-            return None
-        centroids, postings = self.col._ivf(vi)
-        probes = int(nprobe or vi["n_lists"])
-        if allowed is not None and nprobe is not None and vi.get("n_docs"):
-            # filter-before-ANN thins every probed list by the filter's
-            # selectivity, so a fixed probe budget quietly loses recall
-            # (measured at 1M: 10%-selective filters need ~4x the probes,
-            # BASELINE.md round-6 filtered table). Scale the budget so the
-            # expected CANDIDATE count matches what the caller asked for;
-            # the one bounded count here prices a recall cliff away.
-            # memoized per (collection, predicate fingerprint) — the
-            # fingerprint embeds the (version, log_position) of the view
-            # `allowed` derives from, so the cached count always describes
-            # the state it was counted over; a query loop re-issuing the
-            # same filter pays ONE job
-            cache = self.col._client.__dict__.setdefault("_selectivity_cache", {})
-            cache_key = (self.col._store.name, predicate_fp)
-            n_allowed = cache.get(cache_key) if predicate_fp is not None else None
-            if n_allowed is None:
-                n_allowed = allowed.count()
-                if predicate_fp is not None:
-                    if len(cache) >= 512:  # bounded: counts are 8-byte ints
-                        cache.clear()
-                    cache[cache_key] = n_allowed
-            sel = n_allowed / max(1, int(vi["n_docs"]))
-            if 0.0 < sel < 1.0:
-                probes = max(probes, min(int(vi["n_lists"]), math.ceil(probes / sel)))
+        centroids, postings = self._ivf(vi)
         search_kw = dict(
-            k=k, nprobe=probes, space=vi.get("space", meta.space),
-            allowed_ids=allowed, excluded_ids=view.touched,
+            k=k, nprobe=self._probes(vi, nprobe, allowed, predicate_fp),
+            space=vi.get("space", meta.space), allowed_ids=allowed, excluded_ids=view.touched,
         )
         if vi.get("quantized"):
             search, codec, _encode, rerank_factor = _CODED_IVF[vi["quantized"]]
@@ -569,18 +755,16 @@ class _Executor:
         parallel sparse_index_knn + sparse_log_knn); n_docs refreshes at
         compaction like the reference's index-time stats. ``keys``
         restricts the work to the sparse columns a plan queries."""
-        from .layout import live
-
         view = self.view
-        meta = view.meta
         out: dict = {}
-        for name, si in meta.indexes.items():
+        for name in self.meta.indexes:
             key = name.split(":", 1)[-1]
-            if not name.startswith("sparse:") or si["version"] != meta.version:
+            if not name.startswith("sparse:") or (keys is not None and key not in keys):
                 continue
-            if keys is not None and key not in keys:
+            si = self._fresh(name)
+            if si is None:
                 continue
-            postings = live(si, "postings")
+            postings = self._live(si, "postings")
             if view.touched is not None:
                 postings = postings.join(view.touched, "id", "anti")
                 if key in view.tail.columns:
@@ -615,9 +799,10 @@ class _Executor:
     def knn(self, plan: KNNPlan, qdf: DataFrame, nprobe: int | None) -> DataFrame:
         """A dense KNN plan over the query frame ``qdf`` ``(query_id,
         embedding)``: top ``fetch`` ``(query_id, id, dist, rank)`` per query
-        from :meth:`ivf_top` or the exact scan of the filtered records; an
-        ``include`` beyond distances hydrates the winners only (the
-        KnnProjection contract, knn_projection.rs:61)."""
+        from :meth:`ivf_top` or, when no index may serve or the physical
+        choice (:meth:`_scan_serves`) prefers it, the exact scan of the
+        filtered records; an ``include`` beyond distances hydrates the
+        winners only (the KnnProjection contract, knn_projection.rs:61)."""
         flt = plan.filter
         filtered = allowed = predicate_fp = None
         if any(f is not None for f in (flt.ids, flt.where, flt.where_document)):
@@ -625,15 +810,18 @@ class _Executor:
 
             filtered = self.filtered(flt)
             allowed = filtered.select("id")
-            # stable fingerprint of the filter payload: a query loop with a
-            # repeated filter prices the nprobe selectivity boost ONCE
+            # stable fingerprint of the filter payload (the view is one
+            # state at one read level): a query loop with a repeated filter
+            # prices the nprobe selectivity boost ONCE
             predicate_fp = _json.dumps(
                 [sorted(str(i) for i in flt.ids) if flt.ids is not None else None,
-                 flt.where, flt.where_document, self.view.read_level,
-                 self.view.meta.version, self.view.meta.log_position],
+                 flt.where, flt.where_document],
                 sort_keys=True, default=str,
             )
-        top = self.ivf_top(qdf, plan.fetch, nprobe, allowed, predicate_fp)
+        top = None
+        vi = self._vector_index()
+        if vi is not None and not self._scan_serves(vi, self._probes(vi, nprobe, allowed, predicate_fp)):
+            top = self.ivf_top(qdf, plan.fetch, nprobe, allowed, predicate_fp)
         hydrate = bool(set(plan.include) - {"distances"})
         if filtered is None and (top is None or hydrate):
             # unfiltered, the records are read only if the index cannot
@@ -641,7 +829,7 @@ class _Executor:
             filtered = self.filtered(flt)
         if top is None:
             cands = filtered.filter(F.col("embedding").isNotNull())
-            top = exact_knn(cands, qdf, k=plan.fetch, space=self.view.meta.space)
+            top = exact_knn(cands, qdf, k=plan.fetch, space=self.meta.space)
         if not hydrate:
             return top
         # the top-k side is tiny — broadcast it as the BUILD side of an
@@ -700,7 +888,7 @@ class _Executor:
         groups, pages and hydrates the winners."""
         import copy
 
-        meta = self.view.meta
+        meta = self.meta
         rank, terms = copy.deepcopy(plan.rank), []
         collect_knn_terms(rank, terms)
         # every column a $knn term reads (sparse keys / alternate dense
@@ -884,7 +1072,7 @@ class Collection:
             uris=uris, metadatas=metadatas,
         )
         meta = self._store.meta
-        snap = _ReadView(self._store, meta).records
+        snap = _ReadView.resolve(self._store, meta).records
         if snap is not None:
             ids_df = local_frame(self._client.spark, [(str(i),) for i in ids], "id STRING")
             dup = [
@@ -1103,7 +1291,7 @@ class Collection:
         if format not in ("jsonl", "json"):
             raise CollectionError("export_files supports format='jsonl'")
         ex = self._read()
-        self._validate_indexed(ex.view.meta, where, where_document)
+        self._validate_indexed(ex.meta, where, where_document)
         if ex.view.records is None:
             raise CollectionError("nothing to export: collection is empty")
         snap = ex.filtered(Filter(where=where, where_document=where_document))
@@ -1457,7 +1645,7 @@ class Collection:
         ``index_and_bounded_wal`` (base ∪ log where ``seq_id <= log_bound``
         — bounded-staleness reads; the frontend's log scouting picks the
         bound, ``service_based_frontend.rs:2833-2852``)."""
-        return _ReadView(self._store, self._store.meta, read_level, log_bound).records
+        return _ReadView.resolve(self._store, self._store.meta, read_level, log_bound).records
 
     @staticmethod
     def _split_where_ops(log: DataFrame | None) -> tuple[DataFrame | None, list[tuple]]:
@@ -1775,10 +1963,11 @@ class Collection:
         # snapshots) BEFORE any write: a missing/broken input fails the
         # compaction cleanly here instead of after the new base is on disk
         attached = [*self._attached_functions(meta), *(attached or [])]
-        base = self._store.read_base(meta)
-        log_batch = self._store.read_log(meta)
-        log, where_ops = self._split_where_ops(log_batch)
-        snap = self._fold(base, log, where_ops)
+        # a resident view of the pinned state writes its persisted records;
+        # compaction never makes a state resident
+        view = _ReadView.lookup(self._store, meta) or _ReadView(self._store, meta)
+        base, log, where_ops = view.base, view.log, view.where_ops
+        snap = view.records
         if snap is None:
             return meta.version
         new_version = meta.version + 1
@@ -1786,6 +1975,7 @@ class Collection:
         # persistently-attached functions always run; ad-hoc ones compose
         # (both resolved above, before the base write)
         if attached:
+            log_batch = self._store.read_log(meta)
             state = self._client.spark.read.parquet(path)
             import os as _os
 
@@ -2022,9 +2212,12 @@ class Collection:
         current version (the vector-segment write of the reference's
         compaction: ``apply/commit/flush`` then ``register``). Pending WAL
         entries are compacted first so the index corresponds to exactly one
-        collection version; ``query()`` then serves from the index and
-        brute-forces only the WAL tail written after the build
-        (merged via knn_merge, ``operators/knn_merge.rs:43``).
+        collection version; a ``query()`` probing fewer lists than
+        ``n_lists`` (``nprobe``), or any query of a quantized tier, then
+        serves from the index and brute-forces only the WAL tail written
+        after the build (merged via knn_merge,
+        ``operators/knn_merge.rs:43``). An unquantized index probed in
+        full (``nprobe=None``) is served by the exact scan instead.
 
         ``quantized`` picks the code tier, mirroring the reference's
         1-bit..multi-bit RaBitQ spectrum (rust/index/src/quantization/
@@ -2480,7 +2673,7 @@ class Collection:
         local<->cloud direction of the CLI)."""
         dst_client = client or self._client
         ex = self._read()
-        meta = ex.view.meta
+        meta = ex.meta
         from .schema import Schema
 
         # validate the filter payloads BEFORE creating the destination so a
@@ -2510,9 +2703,10 @@ class Collection:
     # ------------------------------------------------------------------
 
     def _read(self, read_level: str = "index_and_wal") -> _Executor:
-        """Stage 1 of every read: resolve ONE catalog state and the
-        executor that lowers the call's plans over it."""
-        return _Executor(self, _ReadView(self._store, self._store.meta, read_level))
+        """Stage 1 of every read: resolve ONE catalog state (its resident
+        view) and the executor that lowers the call's plans over it."""
+        meta = self._store.meta
+        return _Executor(self, _ReadView.resolve(self._store, meta, read_level), meta)
 
     def count(self, read_level: str = "index_and_wal") -> int:
         return self._read(read_level).count()
@@ -2535,7 +2729,7 @@ class Collection:
             limit=limit,
         )
         ex = self._read(read_level)
-        self._validate_indexed(ex.view.meta, where, where_document)
+        self._validate_indexed(ex.meta, where, where_document)
         plan = GetPlan(Filter(ids, where, where_document), Limit(offset, limit), include, read_level)
         return [r.asDict(recursive=True) for r in ex.get(plan).collect()]
 
@@ -2564,20 +2758,23 @@ class Collection:
         embedded client-side with the collection's attached embedding
         function (Collection.py:212).
 
-        When a fresh vector index exists (build_vector_index), the search
-        probes ``nprobe`` posting lists (default: all — exact within the
-        index; tune down for speed) and brute-forces only WAL-tail records,
-        merging the two top-k streams (the reference's parallel
-        knn_log + knn_hnsw -> knn_merge pipeline, SURVEY §3.2). Falls back
-        to the exact scan when no fresh index exists."""
+        With a fresh vector index (build_vector_index), a probe of
+        ``nprobe`` posting lists fewer than all of them (after the filter's
+        selectivity scaling), or any probe of a quantized index, searches
+        the index and brute-forces only WAL-tail records, merging the two
+        top-k streams (the reference's parallel knn_log + knn_hnsw ->
+        knn_merge pipeline, SURVEY §3.2). ``nprobe=None`` probes every
+        list, which on an unquantized index is served by the exact scan of
+        the resident records instead: the same answer for less work. With
+        no fresh index, the exact scan serves."""
         self._client._enforce(
             Action.QUERY, query_embeddings=query_embeddings, query_ids=ids,
             where=where, where_document=where_document, n_results=n_results,
         )
-        # one catalog read serves the whole call: EF, schema gate, snapshot,
-        # index descriptors and the selectivity-cache key all describe it
+        # one catalog read serves the whole call: EF, schema gate, snapshot
+        # and index descriptors all describe it
         ex = self._read(read_level)
-        meta = ex.view.meta
+        meta = ex.meta
         if query_embeddings is None:
             if query_texts is None:
                 raise CollectionError("one of query_embeddings / query_texts is required")
@@ -2637,10 +2834,12 @@ class Collection:
         list-typed client API). No query row ever reaches the driver, so
         the batch can be another table (the classic similarity join).
 
-        Served by the fresh vector index when one exists (same
-        nprobe-pruned pipeline + WAL-tail merge as :meth:`query`), else by
-        the exact scan. Predicates restrict the candidate set before the
-        index/exact search (filter-before-ANN, knn_filter.rs).
+        The physical choice is :meth:`query`'s: an ``nprobe`` below the
+        list count (or a quantized index) runs the nprobe-pruned index
+        pipeline + WAL-tail merge; ``nprobe=None`` on an unquantized index,
+        or no fresh index, runs the exact scan. Predicates restrict the
+        candidate set before the index/exact search (filter-before-ANN,
+        knn_filter.rs).
 
         Scale note: queries stay distributed through the centroid
         assignment (centroids are the broadcast side); the probed-list join
@@ -2650,7 +2849,7 @@ class Collection:
         self._client._enforce(Action.QUERY, n_results=n_results, where=where,
                               where_document=where_document)
         ex = self._read(read_level)
-        self._validate_indexed(ex.view.meta, where, where_document, knn=True)
+        self._validate_indexed(ex.meta, where, where_document, knn=True)
         qdf = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).alias("embedding"),
@@ -2700,7 +2899,7 @@ class Collection:
         if query_text_col is not None:
             if query_vec_col is not None:
                 raise CollectionError("pass query_vec_col or query_text_col, not both")
-            sef, _skey = self._sparse_embedding_function(ex.view.meta, key)
+            sef, _skey = self._sparse_embedding_function(ex.meta, key)
             if sef is None:
                 raise CollectionError(
                     f"query_text_col requires a sparse embedding function "
@@ -2742,7 +2941,7 @@ class Collection:
 
         self._client._enforce(Action.QUERY, n_results=per_side_limit)
         ex = self._read(read_level)
-        self._validate_indexed(ex.view.meta, None, None, knn=True)
+        self._validate_indexed(ex.meta, None, None, knn=True)
         side = KNNPlan(fetch=per_side_limit, include=("distances",), read_level=read_level)
         dense = ex.knn(
             side, dense_queries.select("query_id", "embedding"), nprobe
@@ -2783,7 +2982,7 @@ class Collection:
             else payload.get("limit"),
         )
         ex = self._read(read_level)
-        self._validate_indexed(ex.view.meta, payload.get("where"), payload.get("where_document"))
+        self._validate_indexed(ex.meta, payload.get("where"), payload.get("where_document"))
         payload = dict(payload)
         limit = Limit(payload.pop("offset", 0), payload.pop("limit", None))
         return ex.search(Search(limit=limit, read_level=read_level, **payload))

@@ -67,8 +67,10 @@ def stamp_layout(path: str, kind: str) -> None:
         json.dump({"format_version": version, "kind": kind}, f)
 
 
-def check_layout(path: str, kind: str) -> None:
-    """Validate a layout dir before reading it.
+def check_layout(path: str, kind: str) -> int | None:
+    """Validate a layout dir before reading it; returns the stamp's mtime
+    (None without a stamp), which identifies one build of the layout: a
+    rebuild into the same dir restamps it.
 
     Accepts: a matching stamp at or below the current format version, or
     no stamp at all (pre-versioning layout == v1). Refuses: a stamp from a
@@ -76,10 +78,11 @@ def check_layout(path: str, kind: str) -> None:
     """
     stamp_path = os.path.join(path, "_layout.json")
     if not os.path.exists(stamp_path):
-        return  # pre-versioning layout: defined as format v1
+        return None  # pre-versioning layout: defined as format v1
     try:
         with open(stamp_path) as f:
             stamp = json.load(f)
+            built = os.fstat(f.fileno()).st_mtime_ns
     except (OSError, json.JSONDecodeError) as e:
         raise LayoutFormatError(f"unreadable layout stamp {stamp_path}: {e}") from e
     v = int(stamp.get("format_version", 1))
@@ -95,6 +98,7 @@ def check_layout(path: str, kind: str) -> None:
         raise LayoutFormatError(
             f"index layout {path} is a {got_kind!r} layout, expected {kind!r}"
         )
+    return built
 
 
 def live(desc: dict, sub: str) -> DataFrame:

@@ -51,8 +51,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # any real deployment (the reference compacts into its segments
 # asynchronously; queries never build), so a store is built at most once per
 # source signature (the table file's mtime and size), reused across
-# processes, and memoized per process in ``_STORES``. A changed signature or
-# an unreadable marker rebuilds the store from scratch; the marker is
+# processes, and memoized per process in ``_STORES``. A changed signature,
+# an unreadable marker or a marker written under another root (the store's
+# catalog records absolute paths, so a copied or moved store points at
+# files it does not own) rebuilds the store from scratch; the marker is
 # written last, by rename, so a build cut short is never read.
 # ---------------------------------------------------------------------------
 
@@ -97,11 +99,11 @@ def _store(
             info = json.load(f)
     except (OSError, ValueError):
         info = None
-    if not isinstance(info, dict) or info.get("src_sig") != sig:
+    if not isinstance(info, dict) or info.get("src_sig") != sig or info.get("root") != root:
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root)
         t0 = time.time()
-        info = {**(build(root) or {}), "src_sig": sig}
+        info = {**(build(root) or {}), "src_sig": sig, "root": root}
         BUILDS.append((os.path.basename(root), round(time.time() - t0, 3)))
         with open(marker + ".tmp", "w") as f:
             json.dump(info, f)

@@ -135,6 +135,19 @@ def txn_contender(root: str, worker_id: str, n_iter: int) -> None:
         spark.stop()
 
 
+def add_compact(root: str, name: str, rid: str) -> None:
+    """Add one record to collection ``name`` and compact it."""
+    from chroma_spark.api import Client
+
+    spark = _spark("mp-add-compact")
+    try:
+        col = Client(spark, root).get_collection(name)
+        col.add(ids=[rid], embeddings=[[5.0, 5.0]])
+        col.compact()
+    finally:
+        spark.stop()
+
+
 def main() -> int:
     role, args = sys.argv[1], sys.argv[2:]
     try:
@@ -146,6 +159,8 @@ def main() -> int:
             compactor_gcer(args[0], int(args[1]))
         elif role == "hot_writer":
             hot_writer(args[0], args[1], int(args[2]))
+        elif role == "add_compact":
+            add_compact(args[0], args[1], args[2])
         elif role == "txn_contender":
             txn_contender(args[0], args[1], int(args[2]))
         else:

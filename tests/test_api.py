@@ -17,6 +17,15 @@ def client(spark, tmp_path):
     return Client(spark, str(tmp_path / "store"))
 
 
+def _index_ids(col, qdf, k: int) -> list[str]:
+    """Ids of the vector index's own top ``k`` (query 0), in rank order:
+    ``query()`` without ``nprobe`` serves an unquantized index's whole-list
+    probe from the exact scan, so index behaviour is observed here."""
+    top = col._read().ivf_top(qdf, k, None, None)
+    assert top is not None, "the vector index must be fresh"
+    return [r.id for r in top.filter("query_id = 0").orderBy("rank").collect()]
+
+
 def _mk(client, name="c1", dim=4):
     col = client.create_collection(name, dimension=dim, space="l2")
     col.add(
@@ -249,17 +258,19 @@ def test_read_is_not_torn_by_a_concurrent_compaction(client, monkeypatch, read):
     col.add(ids=["a", "b", "c"], embeddings=[[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]])
     col.build_vector_index(n_lists=1)
     col.add(ids=["new"], embeddings=[[0.9, 0.1]])  # uncompacted insert
-    read_base = CollectionStore.read_base
+    # the hook sits on the WAL-tail read: the base frame of a resident
+    # state passes on to the next state without a new read_base
+    read_log = CollectionStore.read_log
     compacted: dict = {}
 
-    def read_base_then_compact(store, *args, **kwargs):
-        df = read_base(store, *args, **kwargs)
+    def read_log_then_compact(store, *args, **kwargs):
+        df = read_log(store, *args, **kwargs)
         if not compacted:  # once: the compaction's own reads pass through
             compacted["version"] = None
             compacted["version"] = client.get_collection(col.name).compact()
         return df
 
-    monkeypatch.setattr(CollectionStore, "read_base", read_base_then_compact)
+    monkeypatch.setattr(CollectionStore, "read_log", read_log_then_compact)
     if read == "query":
         ids = col.query([[1.0, 0.0]], n_results=4)["ids"][0]
     else:
@@ -465,6 +476,8 @@ def test_schema_configured_index_builds_at_compaction(client):
     vi = col._store.meta.indexes["vector"]
     assert vi is not None and vi["version"] == col.version and vi["n_lists"] == 2
     assert col.query([[1.0, 0]], n_results=1)["ids"][0] == ["a"]
+    qdf = client.spark.createDataFrame([(0, [1.0, 0.0])], "query_id INT, embedding ARRAY<FLOAT>")
+    assert _index_ids(col, qdf, 1) == ["a"]
 
 
 def test_quantized_vector_index_lifecycle(client, spark):
@@ -714,6 +727,7 @@ def test_vector_index_lifecycle_and_knn_merge(client, spark):
     assert "r7" not in res["ids"][0]          # tail-side delete excluded
     by_id = dict(zip(res["ids"][0], res["distances"][0]))
     assert by_id["r5"] > 100                  # tail-side update moved it away
+    assert _index_ids(col, qdf, 12) == res["ids"][0]  # the index's knn_merge agrees
 
     # pending predicate delete: the index stays engaged (matched ids are
     # computed vectorized against base and excluded; no wholesale fallback)
@@ -795,6 +809,7 @@ def test_compaction_maintains_index_incrementally(client, spark):
     got = col.query([[2.0, 2, 2, 2]], n_results=5)["ids"][0]
     exact = exact_knn(col.snapshot().filter("embedding is not null"), qdf, k=5, space="l2")
     assert got == [r.id for r in exact.orderBy("rank").collect()]
+    assert _index_ids(col, qdf, 5) == got
     assert got[0] == "n1"
 
     # cumulative drift beyond REINDEX_FRACTION * n_rows retrains
@@ -883,6 +898,8 @@ def test_index_maintenance_never_skips_a_batch(client, kind):
     col.compact()
     if kind == "vector":
         assert col.query([[100.0, 100.0]], n_results=1)["ids"][0] == ["far"]
+        qdf = client.spark.createDataFrame([(0, [100.0, 100.0])], "query_id INT, embedding ARRAY<FLOAT>")
+        assert _index_ids(col, qdf, 1) == ["far"]
     else:
         rank = {"$knn": {"query": {"indices": [9], "values": [1.0]}, "key": "sv", "limit": 1}}
         assert [r["id"] for r in col.search(rank=rank, select=["#id"]).collect()] == ["far"]
@@ -1014,6 +1031,7 @@ def test_incremental_maintenance_soak_many_cycles(client, spark):
             col.snapshot().filter("embedding is not null"), qdf, k=6, space="l2"
         )
         assert got == [r.id for r in exact.orderBy("rank").collect()], f"cycle {cycle}"
+        assert _index_ids(col, qdf, 6) == got, f"cycle {cycle}"
         assert got[0] == victim
         # exactly one live posting per id despite 5 generations of appends
         live = col._ivf(col._store.meta.indexes["vector"])[1].groupBy("id").count()
@@ -1073,11 +1091,14 @@ def test_fork_isolated_from_parent_incremental_appends(client):
     assert col._store.meta.indexes["vector"]["path"] == child._store.meta.indexes["vector"]["path"]
 
     # parent sees its new state
+    qdf = client.spark.createDataFrame([(0, [0.0, 1.0])], "query_id INT, embedding ARRAY<FLOAT>")
     got_parent = set(col.query([[0.0, 1.0]], n_results=4)["ids"][0])
     assert "p1" in got_parent and "b" not in got_parent
+    assert set(_index_ids(col, qdf, 4)) == got_parent
     # child still sees the fork-time state from the SAME shared files
     got_child = set(child.query([[0.0, 1.0]], n_results=4)["ids"][0])
     assert "b" in got_child and "p1" not in got_child
+    assert set(_index_ids(child, qdf, 4)) == got_child
     rank = {"$knn": {"query": {"indices": [0], "values": [1.0]}, "key": "sv", "limit": 4}}
     child_sparse = {r["id"] for r in child.search(rank=rank, select=["#id"]).collect()}
     assert child_sparse == {"a", "b", "c"}
@@ -1329,6 +1350,7 @@ def test_index_reads_tolerate_matching_predicate_deletes(client, spark):
     qdf = spark.createDataFrame([(0, [2.0, 8.0])], "query_id INT, embedding ARRAY<FLOAT>")
     assert col._read().ivf_top(qdf, 4, None, None) is not None
     got_vec = col.query([[2.0, 8.0]], n_results=4)["ids"][0]
+    assert _index_ids(col, qdf, 4) == got_vec
     assert col._read().sparse_indexes(keys={"sv"}) != {}
     rank = {"$knn": {"query": {"indices": [1], "values": [1.0]}, "key": "sv", "limit": 5}}
     got_sparse = [r["id"] for r in col.search(rank=rank, select=["#id"]).collect()]
@@ -1432,6 +1454,8 @@ def test_query_batch_matches_query_exact_and_indexed(spark, tmp_path):
     ib = _collect(col.query_batch(qdf, n_results=5))
     assert set(ib) == set(batch)
     assert {k: v[0] for k, v in ib.items()} == {k: v[0] for k, v in batch.items()}
+    by_index = _collect(col._read().ivf_top(qdf, 5, None, None))
+    assert {k: v[0] for k, v in by_index.items()} == {k: v[0] for k, v in batch.items()}
 
     # empty collection: empty frame with the caller's query_id type
     empty_col = client.create_collection("empty", dimension=dim)
@@ -1699,6 +1723,15 @@ def test_filtered_index_query_boosts_nprobe(spark, tmp_path):
     # nprobe=1 would probe a's list and find nothing without the boost
     res = col.query([[0.0, 0.0]], n_results=3, where={"lab": "d"}, nprobe=1)
     assert res["ids"][0] == ["d0", "d1", "d2"]
+    # the boosted budget covers every list, so query() took the exact
+    # scan; the index probe with the same budget finds the same answer
+    from chroma_spark.plans import Filter
+
+    ex = col._read()
+    allowed = ex.filtered(Filter(where={"lab": "d"})).select("id")
+    qdf = spark.createDataFrame([(0, [0.0, 0.0])], "query_id INT, embedding ARRAY<FLOAT>")
+    top = ex.ivf_top(qdf, 3, 1, allowed)
+    assert [r.id for r in top.orderBy("rank").collect()] == ["d0", "d1", "d2"]
 
 
 def test_semantic_near_duplicates_from_vector_index(client, spark):
@@ -1846,8 +1879,9 @@ def test_client_vacuum_compacts_and_prunes(spark, tmp_path):
 def test_filtered_ann_selectivity_count_memoized(client, monkeypatch):
     """A query loop re-issuing the SAME filter prices the nprobe
     selectivity boost once: the allowed.count() job runs on the first call
-    and is served from the (version, log_position, predicate) cache after
-    (VERDICT r6 item #7). A write or a different predicate re-counts."""
+    and is served from the memo of the read state (keyed by predicate; the
+    state key carries version and log_position) after (VERDICT r6 item
+    #7). A write or a different predicate re-counts."""
     import random
 
     col = client.create_collection("selcache", dimension=4)
@@ -1881,7 +1915,7 @@ def test_filtered_ann_selectivity_count_memoized(client, monkeypatch):
     per_repeat = (calls["n"] - first) / 2
     # exactly one count job saved per repeated query
     assert per_repeat == first - 1
-    cache = client._selectivity_cache
+    cache = col._read().view.selectivity
     assert len(cache) == 1 and list(cache.values())[0] == 40
 
     # a different predicate counts once more
@@ -1892,7 +1926,9 @@ def test_filtered_ann_selectivity_count_memoized(client, monkeypatch):
     col.add(ids=["x1"], embeddings=[[0.0, 0.0, 0.0, 0.0]], metadatas=[{"grp": 1}])
     before = calls["n"]
     col.query(q, n_results=3, where={"grp": 1}, nprobe=2)
-    assert len(cache) == 3  # fresh key for the new WAL position
+    fresh = col._read().view.selectivity
+    assert fresh is not cache and len(fresh) == 1  # fresh memo for the new WAL position
+    assert list(fresh.values())[0] == 41
     assert calls["n"] > before
 
 
@@ -2168,3 +2204,233 @@ def test_reads_lower_only_through_the_executor():
             assert not stray or fn.name == "_predicate_matched_ids", (
                 f"{cls_name}.{fn.name} calls {sorted(stray)}"
             )
+
+
+# ---------------------------------------------------------------------------
+# The physical choice and the resident read state
+# ---------------------------------------------------------------------------
+
+
+def _plans_of_knn(monkeypatch) -> list[str]:
+    """Optimized plans of every frame ``_Executor.knn`` returns from now on."""
+    from chroma_spark.api import _Executor
+
+    plans: list[str] = []
+    real = _Executor.knn
+
+    def spy(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+        return out
+
+    monkeypatch.setattr(_Executor, "knn", spy)
+    return plans
+
+
+def test_whole_list_probe_lowers_to_the_flat_scan(client, monkeypatch):
+    """query() on a fresh unquantized index without nprobe takes the exact
+    scan (no centroid join); nprobe below the list count, or a quantized
+    index, keeps the index path."""
+    import random
+
+    rnd = random.Random(21)
+    ids = [f"r{i}" for i in range(40)]
+    embs = [[rnd.random() for _ in range(4)] for _ in ids]
+    flat = client.create_collection("phys_flat", dimension=4, space="l2")
+    flat.add(ids=ids, embeddings=embs)
+    flat.build_vector_index(n_lists=4)
+    coded = client.create_collection("phys_sign", dimension=4, space="l2")
+    coded.add(ids=ids, embeddings=embs)
+    coded.build_vector_index(n_lists=4, quantized="sign")
+    plans = _plans_of_knn(monkeypatch)
+
+    whole = flat.query([embs[3]], n_results=3)
+    assert "centroid_id" not in plans[-1]
+    partial = flat.query([embs[3]], n_results=3, nprobe=2)
+    assert "centroid_id" in plans[-1]
+    coded.query([embs[3]], n_results=3)
+    assert "centroid_id" in plans[-1]
+    assert whole["ids"][0][0] == partial["ids"][0][0] == "r3"
+
+
+def test_flat_scan_and_index_probe_agree_on_one_view(client, monkeypatch):
+    """On one view whose WAL tail holds an UPDATE, a DELETE and a pending
+    predicate delete, the flat scan and the whole-list index probe return
+    the same ids, distances and hydrated fields, filtered or not."""
+    import random
+
+    from chroma_spark.api import _Executor
+    from chroma_spark.plans import Filter, KNNPlan
+
+    col = client.create_collection("flatpar", dimension=4, space="l2")
+    rnd = random.Random(13)
+    ids = [f"p{i:02d}" for i in range(30)]
+    embs = [[rnd.random() for _ in range(4)] for _ in ids]
+    col.add(
+        ids=ids, embeddings=embs, documents=[f"doc {i}" for i in range(30)],
+        metadatas=[{"grp": i % 3, "n": i} for i in range(30)],
+    )
+    col.build_vector_index(n_lists=3)
+    col.update(ids=["p04"], embeddings=[[0.5, 0.5, 0.5, 0.5]], documents=["moved"],
+               metadatas=[{"grp": 0, "n": 99}])
+    col.delete(ids=["p09"])
+    col.delete(where={"grp": 2})
+    ex = col._read()
+    assert ex.view.touched is not None and ex.view.where_ops
+    qdf = client.spark.createDataFrame(
+        [(0, embs[4]), (1, embs[9])], "query_id INT, embedding ARRAY<FLOAT>"
+    )
+    every = ("distances", "documents", "metadatas", "embeddings")
+    plans = [
+        KNNPlan(fetch=6, include=every),
+        KNNPlan(fetch=4, filter=Filter(where={"grp": 0}), include=every),
+    ]
+    flat = [_rows(ex.knn(p, qdf, None)) for p in plans]
+    monkeypatch.setattr(_Executor, "_scan_serves", staticmethod(lambda vi, probes: False))
+    indexed = [_rows(ex.knn(p, qdf, None)) for p in plans]
+    assert flat == indexed
+    got = {r["id"] for r in flat[0]}
+    assert "p09" not in got and not any(r.get("grp") == 2 for r in flat[0])
+    assert {r["document"] for r in flat[0] if r["id"] == "p04"} <= {"moved"}
+
+
+def test_views_of_different_collections_do_not_wait_on_each_other(client, monkeypatch):
+    """Each view builds its frames under its own lock: a read of one
+    collection completes while another collection's base resolution is
+    blocked."""
+    import threading
+
+    from chroma_spark.sources.collection import CollectionStore
+
+    a = client.create_collection("lock_a", dimension=2)
+    a.add(ids=["a1"], embeddings=[[1.0, 0.0]])
+    b = client.create_collection("lock_b", dimension=2)
+    b.add(ids=["b1", "b2"], embeddings=[[0.0, 1.0], [1.0, 1.0]])
+    a.compact()
+    b.compact()
+    entered, release = threading.Event(), threading.Event()
+    read_base = CollectionStore.read_base
+
+    def blocking(store, meta):
+        if store.name == a._store.name:
+            entered.set()
+            release.wait(120)
+        return read_base(store, meta)
+
+    monkeypatch.setattr(CollectionStore, "read_base", blocking)
+    counts: dict = {}
+    ta = threading.Thread(target=lambda: counts.setdefault("a", a.count()))
+    tb = threading.Thread(target=lambda: counts.setdefault("b", b.count()))
+    ta.start()
+    try:
+        assert entered.wait(60)
+        tb.start()
+        tb.join(30)
+        b_done = not tb.is_alive()
+    finally:
+        release.set()
+    ta.join(60)
+    tb.join(60)
+    assert b_done, "a read of another collection waited on a blocked view"
+    assert not ta.is_alive() and not tb.is_alive()
+    assert counts == {"a": 1, "b": 2}
+
+
+def test_concurrent_first_reads_of_a_state_share_one_view(client, monkeypatch):
+    """More readers than cores, with a short switch interval, resolve one
+    state at once: they share one view, which reads the WAL tail once."""
+    import sys
+    import threading
+    import time
+
+    from chroma_spark.sources.collection import CollectionStore
+
+    col = _mk(client, "shared_view")
+    log_reads = []
+    read_log = CollectionStore.read_log
+
+    def slow_read_log(store, meta):
+        log_reads.append(1)
+        time.sleep(0.5)
+        return read_log(store, meta)
+
+    monkeypatch.setattr(CollectionStore, "read_log", slow_read_log)
+    views, counts = [], []
+
+    def read():
+        ex = col._read()
+        views.append(ex.view)
+        counts.append(ex.count())
+
+    threads = [threading.Thread(target=read) for _ in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert counts == [3] * 6
+    assert len(log_reads) == 1 and all(v is views[0] for v in views)
+    assert views[0].resident
+
+
+def test_resident_state_never_serves_a_newer_state(client):
+    """An add, an update and a delete each commit a new state: the next
+    read resolves a new view and the old one's records are released."""
+    col = _mk(client, "res_change")
+    first = col._read().view
+    assert col.count() == 3 and col._read().view is first and first.resident
+    assert first.records.is_cached
+
+    col.add(ids=["d"], embeddings=[[0.0, 0.0, 0.0, 1.0]])
+    assert col.count() == 4
+    second = col._read().view
+    assert second is not first and not first.resident and not first.records.is_cached
+
+    col.update(ids=["a"], embeddings=[[0.0, 0.0, 0.0, 2.0]])
+    assert col.query([[0.0, 0.0, 0.0, 2.0]], n_results=1)["ids"][0] == ["a"]
+    assert col._read().view is not second
+
+    col.delete(ids=["b"])
+    assert sorted(r["id"] for r in col.get(include=[])) == ["a", "c", "d"]
+    assert col.count() == 3
+
+
+def test_residency_is_bounded_and_released(client, spark):
+    """Only the newest state of the last RESIDENT_COLLECTIONS collections
+    stays persisted, however many states a collection goes through;
+    delete_collection and reset release their entries."""
+    from chroma_spark import api
+
+    spark.catalog.clearCache()  # frames persisted by earlier tests
+    jsc = spark.sparkContext._jsc
+    root = client.catalog.root
+    cap = api.RESIDENT_COLLECTIONS
+    cols = []
+    for i in range(cap + 2):
+        c = client.create_collection(f"cap{i}", dimension=2)
+        c.add(ids=[f"x{i}"], embeddings=[[float(i), 1.0]])
+        assert c.count() == 1
+        cols.append(c)
+    assert jsc.getPersistentRDDs().size() <= cap
+    col = cols[-1]
+    for j in range(20):
+        col.add(ids=[f"y{j}"], embeddings=[[float(j), 2.0]])
+        assert col.query([[float(j), 2.0]], n_results=1)["ids"][0] == [f"y{j}"]
+    assert jsc.getPersistentRDDs().size() <= cap
+
+    def resident_ids():
+        return {s[1] for s in api._resident if s[0] == root}
+
+    gone = col._store.meta.id
+    assert gone in resident_ids()
+    client.delete_collection(col.name)
+    assert gone not in resident_ids()
+    client.allow_reset = True
+    client.reset()
+    assert resident_ids() == set()
+    assert jsc.getPersistentRDDs().size() == 0

@@ -146,6 +146,10 @@ def test_bulk_pipeline_journey_over_testdata(spark, tmp_path):
     snap = col.snapshot().filter("embedding is not null")
     expect = [r.id for r in exact_knn(snap, qdf, k=5, space="l2").orderBy("rank").collect()]
     assert got == expect and got[0] == "3"
+    # query() serves a whole-list probe from the exact scan; the index's
+    # own top-5 is checked through the executor
+    by_index = col._read().ivf_top(qdf, 5, None, None)
+    assert [r.id for r in by_index.orderBy("rank").collect()] == expect
 
     # bulk delta -> incremental compaction (no retrain), still correct
     delta = spark.createDataFrame(

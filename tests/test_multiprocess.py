@@ -221,3 +221,25 @@ def test_conditional_transactions_two_processes(spark, tmp_path):
     assert ids == sorted(
         [f"x{i}" for i in range(n_iter)] + [f"y{i}" for i in range(n_iter)]
     )
+
+
+def test_resident_state_not_served_after_another_process_compacts(spark, tmp_path):
+    """A state resident in this process is never served once another
+    process commits: its add + compaction is a new catalog state, so the
+    next read resolves a new view over the new base."""
+    from chroma_spark.api import Client
+
+    root = str(tmp_path / "store")
+    col = Client(spark, root).create_collection("mpres", dimension=2)
+    col.add(ids=["a", "b"], embeddings=[[0.0, 0.0], [1.0, 0.0]])
+    assert col.count() == 2
+    before = col._read().view
+    assert before.resident and before.records.is_cached
+
+    _join([_spawn("add_compact", root, "mpres", "w")], timeout=300)
+
+    assert col.count() == 3
+    after = col._read().view
+    assert after is not before and not before.resident
+    assert after.meta.version == before.meta.version + 1
+    assert col.query([[5.0, 5.0]], n_results=1)["ids"][0] == ["w"]

@@ -87,6 +87,33 @@ def test_torn_store_marker_rebuilds(spark, duck):
         assert json.load(f)["src_sig"] is not None
 
 
+def test_moved_store_rebuilds(spark, duck):
+    """A store whose marker was written under another root (a copied or
+    moved ``.index_cache``: its catalog's absolute paths name files it does
+    not own) is stale: the next call rebuilds it in place and still matches
+    the oracle."""
+    import json
+    import os
+
+    from chroma_spark import registry
+
+    q = QUERIES["doc_contains_indexed"]
+    q.fn(spark, SF_SMALL).count()
+    root = registry._index_dir("docs", SF_SMALL)
+    marker = os.path.join(root, "_index_meta.json")
+    with open(marker) as f:
+        info = json.load(f)
+    with open(marker, "w") as f:
+        json.dump({**info, "root": os.path.join(os.path.dirname(root), "elsewhere")}, f)
+    registry._STORES.pop(root)  # as a fresh process would see it
+    n_built = len(registry.BUILDS)
+    got = sorted(r["id"] for r in q.fn(spark, SF_SMALL).collect())
+    assert got == sorted(r[0] for r in duck.execute(q.oracle).fetchall())
+    assert [b for b, _ in registry.BUILDS[n_built:]] == [os.path.basename(root)]
+    with open(marker) as f:
+        assert json.load(f)["root"] == root
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -135,6 +135,11 @@ def test_unstamped_index_layout_is_pre_versioning_and_reads(spark, tmp_path):
     client, col = _mk_store(spark, root)
     os.remove(os.path.join(col._store.meta.indexes["vector"]["path"], "_layout.json"))
     assert col.query([[1.0, 0.0]], n_results=1)["ids"][0] == ["a"]
+    # query() serves a whole-list probe from the exact scan: read the
+    # unstamped layout itself through the index path
+    qdf = spark.createDataFrame([(0, [1.0, 0.0])], "query_id INT, embedding ARRAY<FLOAT>")
+    top = col._read().ivf_top(qdf, 1, None, None)
+    assert [r.id for r in top.collect()] == ["a"]
 
 
 def test_wrong_layout_kind_refuses(spark, tmp_path):
@@ -228,6 +233,12 @@ def test_v2_catalog_migrates_engine_state_to_typed_fields(spark, tmp_path):
     assert meta.indexes["vector"]["n_docs"] == 4 and meta.indexes["vector"]["quantized"] is False
     assert set(meta.config) == {"embedding_function"}
     assert _results(migrated) == before
+    # query() serves a whole-list probe from the exact scan: the migrated
+    # vector descriptor still serves through the index path
+    qvec = [float(x) for x in migrated._embedding_function(meta)(["alpha beta"])[0]]
+    qdf = spark.createDataFrame([(0, qvec)], "query_id INT, embedding ARRAY<FLOAT>")
+    top = migrated._read().ivf_top(qdf, 3, None, None)
+    assert [r.id for r in top.orderBy("rank").collect()] == before[0][0]
     # the migrated descriptors keep being maintained by compaction
     migrated.add(ids=["e"], documents=["alpha beta gamma delta theta"],
                  metadatas=[{"sv": {"indices": [0], "values": [9.0]}}])
