@@ -46,9 +46,9 @@ from .sources.collection import (
 )
 from .quota import Action, AllowAllQuotaEnforcer, QuotaPayload
 from .schema import Schema
-from .sources.log import materialize
+from .sources.log import WHERE_OP, materialize, split_where_ops, where_op_matches
 from .sparse_vector import SPARSE_VECTOR_TYPE
-from .where import filter_records, where_doc_to_column, where_to_column
+from .where import filter_records
 
 _META_SPARK_TYPES = {bool: T.BooleanType(), int: T.LongType(), float: T.DoubleType(), str: T.StringType()}
 
@@ -544,7 +544,7 @@ class _ReadView:
         log = self._store.read_log(self.meta) if self.read_level != "index_only" else None
         if log is not None and self.read_level == "index_and_bounded_wal":
             log = log.filter(F.col("seq_id") <= int(self._log_bound))
-        return Collection._split_where_ops(log)
+        return split_where_ops(log)
 
     @property
     def log(self) -> DataFrame | None:
@@ -1362,9 +1362,10 @@ class Collection:
         (chromadb/api/models/Collection.py:559-581).
 
         Predicate deletes append ONE DELETE_WHERE log record carrying the
-        predicate, folded per record at materialization (the reference
-        stores the predicate, not the matched-id expansion) — no driver-side
-        id collection at any collection size."""
+        predicate (the reference stores the predicate, not the matched-id
+        expansion); materialization cuts the log at its seq and drops the
+        matching records there, in the JVM — no driver-side id collection
+        at any collection size."""
         if ids is None and where is None and where_document is None:
             raise CollectionError("delete() requires ids, where, or where_document")
         self._client._enforce(
@@ -1474,7 +1475,7 @@ class Collection:
         )
         df = local_frame(
             self._client.spark,
-            [(meta.log_position, "DELETE_WHERE", None, None, None, None, payload)],
+            [(meta.log_position, WHERE_OP, None, None, None, None, payload)],
             schema,
         )
         path = self._store.append_log(df)
@@ -1648,36 +1649,6 @@ class Collection:
         return _ReadView.resolve(self._store, self._store.meta, read_level, log_bound).records
 
     @staticmethod
-    def _split_where_ops(log: DataFrame | None) -> tuple[DataFrame | None, list[tuple]]:
-        """Separate DELETE_WHERE predicate records from the id-keyed log.
-
-        The collect is bounded by the number of predicate-delete statements
-        issued (predicates, not data)."""
-        where_ops: list[tuple] = []
-        if log is not None and "where_json" in log.columns:
-            import json as _json
-
-            wrows = (
-                log.filter(F.col("op") == "DELETE_WHERE")
-                .select("seq_id", "where_json")
-                .collect()
-            )
-            for r in wrows:
-                p = _json.loads(r["where_json"])
-                where_ops.append(
-                    (
-                        int(r["seq_id"]),
-                        # an EMPTY id list is a real (matches-nothing)
-                        # constraint, distinct from "no id constraint"
-                        set(p["ids"]) if p.get("ids") is not None else None,
-                        p.get("where"),
-                        p.get("where_document"),
-                    )
-                )
-            log = log.filter(F.col("op") != "DELETE_WHERE").drop("where_json")
-        return log, where_ops
-
-    @staticmethod
     def _predicate_matched_ids(base: DataFrame, where_ops: list[tuple]) -> DataFrame:
         """Base ids matched by any pending DELETE_WHERE, evaluated
         vectorized with the same where compilers every read uses. Exact for
@@ -1686,17 +1657,9 @@ class Collection:
         by the callers, so the union is always a superset of the stale set —
         over-inclusion only routes an id through the bounded tail fold,
         never drops one."""
-        known = frozenset(base.columns)
         cond = F.lit(False)
-        for _seq, w_ids, w, wd in where_ops:
-            c = F.lit(True)
-            if w_ids is not None:
-                c = c & F.col("id").isin([str(i) for i in w_ids])
-            if w is not None:
-                c = c & where_to_column(w, known_keys=known)
-            if wd is not None:
-                c = c & where_doc_to_column(wd)
-            cond = cond | c
+        for op in where_ops:
+            cond = cond | where_op_matches(op, base.schema)
         return base.filter(cond).select("id")
 
     @staticmethod
@@ -1966,7 +1929,6 @@ class Collection:
         # a resident view of the pinned state writes its persisted records;
         # compaction never makes a state resident
         view = _ReadView.lookup(self._store, meta) or _ReadView(self._store, meta)
-        base, log, where_ops = view.base, view.log, view.where_ops
         snap = view.records
         if snap is None:
             return meta.version
@@ -2001,23 +1963,18 @@ class Collection:
             m.log_paths = [p for p in m.log_paths if p not in consumed]
 
         registered = self._store.catalog.mutate(self._store.name, _register)
-        self._maintain_indexes(registered, base, log, where_ops)
+        self._maintain_indexes(registered, view)
         return new_version
 
-    def _maintain_indexes(
-        self,
-        meta: CollectionMeta,
-        old_base: DataFrame | None,
-        log: DataFrame | None,
-        where_ops: list[tuple],
-    ) -> None:
+    def _maintain_indexes(self, meta: CollectionMeta, folded: _ReadView) -> None:
         """Flush every registered index for ``meta``, the state this
         compaction just registered, under layout.py's append-or-rebuild
         rule. One aggregate over the new base counts every index's docs;
-        the touched ids (the log's ids, plus — under predicate deletes —
-        old-base ids missing from the new base) are computed once for all
-        indexes; every new descriptor lands in one catalog commit. A
-        rebuild builds from the registered base (it never compacts again);
+        the touched ids of ``folded``, the state it folded
+        (:attr:`_ReadView.touched`: the log's ids, plus the old-base ids a
+        predicate delete matches), are counted once for all indexes; every
+        new descriptor lands in one catalog commit. A rebuild builds from
+        the registered base (it never compacts again);
         an index whose source column has no rows left is deregistered, and
         a vector index the schema declares (``n_lists``) is built here once
         vectors exist."""
@@ -2035,13 +1992,10 @@ class Collection:
         own_dir = _os.path.join(self._store.catalog.root, self._store.name)
         replaced = meta.version - 1
         touched, n_touched = None, 0
-        if log is not None and any(
+        if folded.log is not None and any(
             layout.can_append(d, own_dir, replaced, 0) for d in wanted.values() if d
         ):
-            touched = log.select("id").distinct()
-            if where_ops and old_base is not None:
-                gone = old_base.select("id").join(base.select("id"), "id", "anti")
-                touched = touched.unionByName(gone).distinct()
+            touched = folded.touched
             n_touched = touched.count()
         out: dict[str, dict | None] = {}
         for name, desc in wanted.items():

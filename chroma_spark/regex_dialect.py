@@ -295,8 +295,9 @@ class _Parser:
             raise self.error(r"\Z is outside the supported dialect (absent from RE2)")
         if c in ("p", "P"):
             # \p{...} exists in Java/RE2/the reference but NOT in Python's
-            # re — the pure-Python twin that folds DELETE_WHERE records
-            # must be able to evaluate every validated pattern
+            # re — validate_regex compiles with re, and the pure-Python
+            # twin (validate_payloads, the test models) must be able to
+            # evaluate every validated pattern
             raise self.error(r"\p{...} classes are outside the supported dialect")
         if c == "k":
             raise self.error("named backreferences are outside the supported dialect")

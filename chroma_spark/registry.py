@@ -201,9 +201,10 @@ def register(name: str, oracle: str | None = None):
 
 
 ARRAY_KEYS = frozenset({"m_tags"})
-# the collection view's column set — threading it through the compilers
-# exercises the absent-key semantics (a key never written to the collection
-# fails positive ops and matches $ne/$nin, test_filtering.py:59-66)
+# the collection view's column set — threading it (and, on the Spark side,
+# the frame's schema) through the compilers exercises the absent-key
+# semantics (a key never written to the collection fails positive ops and
+# matches $ne/$nin, test_filtering.py:59-66)
 COLL_KEYS = frozenset(
     {"id", "document", "lang", "source", "n_chars", "label", "embedding",
      "m_src", "m_score", "m_bool", "m_tags"}
@@ -216,11 +217,8 @@ def _where_query(name: str, where: dict, out_cols: list[str]) -> None:
     from .where import where_to_column, where_to_sql
 
     def fn(spark: SparkSession, sf_dir: str, _w=where, _cols=tuple(out_cols)) -> DataFrame:
-        return (
-            collection_df(spark, sf_dir)
-            .filter(where_to_column(_w, ARRAY_KEYS, known_keys=COLL_KEYS))
-            .select(*_cols)
-        )
+        coll = collection_df(spark, sf_dir)
+        return coll.filter(where_to_column(_w, coll.schema, ARRAY_KEYS)).select(*_cols)
 
     cols = ", ".join(f'"{c}"' for c in out_cols)
     sql = f"{COLL_SQL} SELECT {cols} FROM coll WHERE {where_to_sql(where, ARRAY_KEYS, known_keys=COLL_KEYS)}"
@@ -386,9 +384,8 @@ def _count_records_oracle() -> str:
 def count_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .where import where_to_column
 
-    coll = collection_df(spark, sf_dir).filter(
-        where_to_column({"lang": {"$ne": "en"}}, ARRAY_KEYS, known_keys=COLL_KEYS)
-    )
+    coll = collection_df(spark, sf_dir)
+    coll = coll.filter(where_to_column({"lang": {"$ne": "en"}}, coll.schema, ARRAY_KEYS))
     return coll.agg(F.count("*").alias("n"))
 
 

@@ -20,36 +20,80 @@ Reference semantics:
   DELETE gets a fresh offset (OverwriteExisting).
 
 - Predicate deletes (``delete(where=...)``) are stored as ONE log record
-  holding the predicate — the reference stores the predicate, not the
-  matched-id expansion — and folded here at the right seq position against
-  each record's state via the pure-Python ``where_matches`` twin.
+  (``op = DELETE_WHERE``, the predicate in ``where_json``) — the reference
+  stores the predicate, not the matched-id expansion — and applied between
+  ops at their seq position: a record existing at that seq and matching
+  every given constraint is deleted.
 
-Spark shape: ``repartition(id)`` (the reference's ``partition_log.rs``) then
-``applyInPandas`` per id-group — the fold is inherently sequential per id
-but embarrassingly parallel across ids, and groups are tiny (a handful of
-log entries per record), so this scales linearly with executor count. The
-Arrow boundary transfers each group once. Where-op predicates are a
-broadcast-sized list (predicates, not data): every id-group folds them in
-locally, so a predicate delete of 10^9 rows never touches the driver.
+Spark shape: one window + aggregate fold keyed on id (one hash shuffle, the
+reference's ``partition_log.rs``) under whole-stage codegen; no Python. With
+pending predicate deletes the log is cut at each one's seq: each segment
+folds onto the previous state (carried in as BASE rows with their
+``offset_id``), then the rows the predicate matches are dropped, compiled by
+the same ``where.py`` compilers every read uses. Predicates are statements,
+not data, so this costs one more fold of the state per pending predicate
+delete, and compaction resets the count.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import json
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..where import where_doc_matches, where_doc_to_column, where_to_column
+
 OPS = ("ADD", "UPDATE", "UPSERT", "DELETE")
 BASE_OP = "BASE"
+WHERE_OP = "DELETE_WHERE"
 OFFSET_COL = "offset_id"
 
+# a pending predicate delete: (seq, ids, where, where_document)
+WhereOp = tuple[int, set | None, dict | None, dict | None]
 
-def _py(v):
-    """numpy value -> Python value (where_matches needs real bool/int)."""
-    if hasattr(v, "tolist") and getattr(v, "ndim", 0):
-        return v.tolist()  # array-valued field (embedding, metadata array)
-    return v.item() if hasattr(v, "item") else v
+
+def split_where_ops(log: DataFrame | None) -> tuple[DataFrame | None, list[WhereOp]]:
+    """Separate DELETE_WHERE predicate records from the id-keyed log.
+
+    The collect is bounded by the number of predicate-delete statements
+    issued (predicates, not data)."""
+    where_ops: list[WhereOp] = []
+    if log is not None and "where_json" in log.columns:
+        for r in log.filter(F.col("op") == WHERE_OP).select("seq_id", "where_json").collect():
+            p = json.loads(r["where_json"])
+            where_ops.append(
+                (
+                    int(r["seq_id"]),
+                    # an EMPTY id list is a real (matches-nothing)
+                    # constraint, distinct from "no id constraint"
+                    set(p["ids"]) if p.get("ids") is not None else None,
+                    p.get("where"),
+                    p.get("where_document"),
+                )
+            )
+        log = log.filter(F.col("op") != WHERE_OP).drop("where_json")
+    return log, where_ops
+
+
+def where_op_matches(op: WhereOp, schema: T.StructType, id_col: str = "id") -> Column:
+    """Whether a record row of ``schema`` matches where-op ``op`` (every
+    given constraint: id membership, ``where``, ``where_document``) — the
+    one definition the fold, the read path's touched ids and compaction
+    share. Never NULL: a NULL predicate result means no match."""
+    _seq, ids, where, where_document = op
+    cond = F.lit(True)
+    if ids is not None:
+        cond = cond & F.col(id_col).isin(sorted(ids))
+    if where is not None:
+        cond = cond & where_to_column(where, schema)
+    if where_document is not None:
+        if "document" in schema.fieldNames():
+            cond = cond & where_doc_to_column(where_document)
+        else:  # no document column: every document is missing
+            cond = cond & F.lit(where_doc_matches(None, where_document))
+    return F.coalesce(cond, F.lit(False))
 
 
 def materialize(
@@ -58,8 +102,7 @@ def materialize(
     id_col: str = "id",
     seq_col: str = "seq_id",
     op_col: str = "op",
-    where_ops: list[tuple[int, list | None, dict | None, dict | None]] | None = None,
-    impl: str = "auto",
+    where_ops: list[WhereOp] | None = None,
 ) -> DataFrame:
     """Fold ``log`` (in ``seq_col`` order, per ``id_col``) onto ``base``.
 
@@ -69,16 +112,9 @@ def materialize(
 
     ``where_ops``: DELETE-WHERE records as ``(seq, ids, where,
     where_document)`` — applied between ops at their seq position; a record
-    existing at that seq and matching ALL given constraints (id membership
-    and/or predicates) is deleted.
-
-    ``impl``: ``"auto"`` folds with pure window/aggregate expressions
-    (whole-stage codegen, no Python) when no predicate deletes are pending
-    and falls back to the per-group pandas fold otherwise; ``"vectorized"``
-    / ``"python"`` force a path (property tests assert their equivalence).
+    existing at that seq and matching ALL given constraints
+    (:func:`where_op_matches`) is deleted.
     """
-    from ..where import where_doc_matches, where_matches
-
     field_cols = [c for c in log.columns if c not in (id_col, seq_col, op_col, OFFSET_COL)]
     if base is not None:
         base_aligned = base
@@ -103,80 +139,28 @@ def materialize(
             union = union.withColumn(OFFSET_COL, F.lit(None).cast("long"))
         union = union.select(id_col, seq_col, op_col, OFFSET_COL, *field_cols)
 
-    if impl == "vectorized" or (impl == "auto" and not where_ops):
-        if where_ops:
-            raise ValueError("vectorized fold does not support where_ops")
-        return _materialize_vectorized(union, id_col, seq_col, op_col, field_cols)
-
-    out_schema = T.StructType(
-        [union.schema[id_col], T.StructField(OFFSET_COL, T.LongType())]
-        + [union.schema[c] for c in field_cols]
-    )
-    wops = sorted(where_ops or [], key=lambda t: t[0])
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(seq_col, kind="mergesort")
-        gid = _py(pdf[id_col].iloc[0])
-        exists = False
-        state: dict = {}
-        offset: int | None = None
-
-        def apply_where_ops(upto_seq: float) -> None:
-            # fold in every pending predicate delete with seq < upto_seq
-            nonlocal exists, state, offset
-            while wq and wq[0][0] < upto_seq:
-                _, w_ids, w, wd = wq.pop(0)
-                if not exists:
-                    continue
-                meta = {k: _py(v) for k, v in state.items() if not _is_null(v)}
-                ok = (
-                    (w_ids is None or str(gid) in w_ids)
-                    and (w is None or where_matches(meta, w))
-                    and (wd is None or where_doc_matches(meta.get("document"), wd))
-                )
-                if ok:
-                    exists, state, offset = False, {}, None
-
-        wq = list(wops)
-        for row in pdf.itertuples(index=False):
-            d = row._asdict()
-            op = d[op_col]
-            seq = d[seq_col]
-            if op != BASE_OP:
-                apply_where_ops(seq)
-            if op == BASE_OP:
-                exists = True
-                state = {c: d[c] for c in field_cols}
-                offset = None if _is_null(d.get(OFFSET_COL)) else int(d[OFFSET_COL])
-            elif op == "ADD":
-                if not exists:
-                    exists = True
-                    state = {c: d[c] for c in field_cols}
-                    offset = int(seq)
-            elif op == "UPDATE":
-                if exists:
-                    for c in field_cols:
-                        if not _is_null(d[c]):
-                            state[c] = d[c]
-            elif op == "UPSERT":
-                if exists:
-                    for c in field_cols:
-                        if not _is_null(d[c]):
-                            state[c] = d[c]
-                else:
-                    exists = True
-                    state = {c: d[c] for c in field_cols}
-                    offset = int(seq)
-            elif op == "DELETE":
-                exists = False
-                state = {}
-                offset = None
-        apply_where_ops(float("inf"))
-        if not exists:
-            return pd.DataFrame(columns=[id_col, OFFSET_COL, *field_cols])
-        return pd.DataFrame([{id_col: pdf[id_col].iloc[0], OFFSET_COL: offset, **state}])
-
-    return union.groupBy(id_col).applyInPandas(fold, schema=out_schema)
+    # cut the log at each where-op's seq; each segment folds onto the state
+    # the previous one left, which then loses the rows the where-op matches
+    state, lo = None, None
+    for op in [*sorted(where_ops or [], key=lambda o: o[0]), None]:
+        seg = union
+        if lo is not None:
+            seg = seg.filter(F.col(seq_col) > lo)
+        if op is not None:
+            seg = seg.filter(F.col(seq_col) < op[0])
+        if state is not None:
+            seg = state.select(
+                id_col,
+                F.lit(-1).cast("long").alias(seq_col),
+                F.lit(BASE_OP).alias(op_col),
+                OFFSET_COL,
+                *field_cols,
+            ).unionByName(seg)
+        state = _materialize_vectorized(seg, id_col, seq_col, op_col, field_cols)
+        if op is not None:
+            state = state.filter(~where_op_matches(op, state.schema, id_col))
+            lo = op[0]
+    return state
 
 
 def _materialize_vectorized(
@@ -237,12 +221,3 @@ def _materialize_vectorized(
         )
     return contributing.groupBy(id_col).agg(*aggs)
 
-
-def _is_null(v) -> bool:
-    if v is None:
-        return True
-    try:
-        result = pd.isna(v)
-        return bool(result) if not hasattr(result, "__len__") else False
-    except (TypeError, ValueError):
-        return False

@@ -18,7 +18,10 @@ Oracle semantics (``chromadb/test/property/test_filtering.py:32-109``):
   value means "key absent" -> row does not match).
 - ``$ne/$nin/$not_contains``: a MISSING key MATCHES (NULL -> True).
 - int/float cross-type equality (``1 == 1.0``) is allowed -> Spark/DuckDB
-  numeric coercion handles it.
+  numeric coercion handles it. Otherwise values are type-strict: a literal
+  of another type (``True`` on an int key, ``1`` on a string key) never
+  equals, so positive ops fail and negative ops match (the Spark compiler
+  types each leaf against the frame's schema).
 - document ``$contains``: substring; empty/missing document -> False.
   ``$not_contains``: missing document -> True. Same polarity for
   ``$regex``/``$not_regex``.
@@ -42,6 +45,7 @@ from typing import AbstractSet, Any, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _COMPARE_OPS = {"$eq", "$ne", "$gt", "$gte", "$lt", "$lte"}
 _SET_OPS = {"$in", "$nin"}
@@ -101,28 +105,33 @@ _NEGATIVE_OPS = frozenset({"$ne", "$nin", "$not_contains"})
 
 def where_to_column(
     where: dict[str, Any],
+    schema: T.StructType | None = None,
     array_keys: AbstractSet[str] = frozenset(),
-    known_keys: AbstractSet[str] | None = None,
 ) -> Column:
     """Compile a Where dict into a Spark ``Column`` predicate.
 
-    ``known_keys`` is the collection's column set; a key never written to the
-    collection has no column at all, and the oracle semantics
-    (``chromadb/test/property/test_filtering.py:59-66``) say it fails every
-    positive op and MATCHES ``$ne``/``$nin``/``$not_contains`` — so unknown
-    keys compile to constant FALSE/TRUE instead of an AnalysisException.
-    Pass ``None`` (default) to skip the check (caller guarantees columns).
+    ``schema`` is the filtered frame's schema. Each leaf compiles against
+    its column's type, as the reference's type-strict ``MetadataValue``
+    compares (``metadata.rs:659-682``): numeric columns take int/float
+    literals (not bool), string columns str, boolean columns bool, array
+    columns their element type; ``$in``/``$nin`` keep only the comparable
+    literals. A key with no column (never written to the collection) or no
+    comparable literal fails every positive op and MATCHES
+    ``$ne``/``$nin``/``$not_contains`` (``test_filtering.py:59-66``), so it
+    compiles to a constant instead of an AnalysisException or a mid-query
+    cast error — exactly :func:`where_matches`. Pass ``None`` (default) to
+    skip the typing (the caller guarantees same-typed columns).
     """
     if not isinstance(where, dict) or len(where) == 0:
         raise WhereError("where must be a non-empty dict")
     if len(where) > 1:
         # implicit $and over multiple keys (chroma accepts a multi-key dict)
-        return _and_all([where_to_column({k: v}, array_keys, known_keys) for k, v in where.items()])
+        return _and_all([where_to_column({k: v}, schema, array_keys) for k, v in where.items()])
     [(key, operand)] = where.items()
     if key in ("$and", "$or"):
         if not isinstance(operand, list) or not operand:
             raise WhereError(f"{key} expects a non-empty list")
-        parts = [where_to_column(w, array_keys, known_keys) for w in operand]
+        parts = [where_to_column(w, schema, array_keys) for w in operand]
         return _and_all(parts) if key == "$and" else _or_all(parts)
     if not isinstance(operand, dict):
         _validate_scalar(operand)
@@ -131,8 +140,18 @@ def where_to_column(
         raise WhereError("operator object must have exactly one op")
     [(op, val)] = operand.items()
     _validate_op(op, val, key, array_keys)
-    if known_keys is not None and key not in known_keys:
-        return F.lit(op in _NEGATIVE_OPS)
+    if schema is not None:
+        dtype = schema[key].dataType if key in schema.fieldNames() else T.NullType()
+        is_array = isinstance(dtype, T.ArrayType)
+        if is_array != (key in array_keys or op in _ARRAY_OPS):
+            return F.lit(op in _NEGATIVE_OPS)
+        dtype = dtype.elementType if is_array else dtype
+        if op in _SET_OPS:
+            val = [v for v in val if _comparable(dtype, v)]
+            if not val:
+                return F.lit(op in _NEGATIVE_OPS)
+        elif not _comparable(dtype, val):
+            return F.lit(op in _NEGATIVE_OPS)
     c = F.col(key)
     if key in array_keys or op in _ARRAY_OPS:
         if op == "$contains":
@@ -146,6 +165,16 @@ def where_to_column(
         return c.isNull() | (c != F.lit(val))
     cmp = {"$gt": c > val, "$gte": c >= val, "$lt": c < val, "$lte": c <= val}
     return c.isNotNull() & cmp[op]
+
+
+def _comparable(dtype: T.DataType, v: Any) -> bool:
+    """Whether literal ``v`` compares with values of ``dtype`` (never for a
+    missing column, NullType, or a type no metadata value has)."""
+    if isinstance(dtype, T.NumericType):
+        return isinstance(v, (int, float)) and not isinstance(v, bool)
+    if isinstance(dtype, T.StringType):
+        return isinstance(v, str)
+    return isinstance(dtype, T.BooleanType) and isinstance(v, bool)
 
 
 def filter_records(
@@ -166,7 +195,7 @@ def filter_records(
     if ids is not None:
         out = out.filter(F.col(id_col).isin([str(i) for i in ids]))
     if where is not None:
-        out = out.filter(where_to_column(where, array_keys, known_keys=frozenset(records.columns)))
+        out = out.filter(where_to_column(where, records.schema, array_keys))
     if where_document is not None:
         if doc_candidates is not None:
             out = out.join(doc_candidates, id_col, "semi")
@@ -308,10 +337,9 @@ def where_doc_to_sql(wd: dict[str, Any], doc_col: str = "document") -> str:
 # ---------------------------------------------------------------------------
 # Pure-Python evaluator (the third twin): evaluates a Where dict against one
 # record's metadata dict with the exact oracle semantics of
-# ``chromadb/test/property/test_filtering.py:32-85``. Used by the
-# materializer to fold DELETE-WHERE log records (the reference stores the
-# predicate, not the matched-id expansion) and by the hypothesis suites as a
-# model to check the two compilers against.
+# ``chromadb/test/property/test_filtering.py:32-85``. Used by
+# :func:`validate_payloads` (frontend validation with no Spark session) and
+# by the hypothesis suites as a model to check the two compilers against.
 # ---------------------------------------------------------------------------
 
 
@@ -344,9 +372,8 @@ def where_matches(record: dict[str, Any], where: dict[str, Any],
     v = record.get(key)
     missing = v is None
     if key in array_keys or op in _ARRAY_OPS:
-        if op == "$contains":
-            return not missing and val in v
-        return missing or val not in v
+        found = isinstance(v, list) and any(_num_eq(x, val) and x == val for x in v)
+        return found if op == "$contains" else not found
     if op == "$eq":
         return not missing and _num_eq(v, val) and v == val
     if op == "$ne":

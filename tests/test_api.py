@@ -1258,6 +1258,52 @@ def test_delete_empty_id_list_with_where_deletes_nothing(client):
     assert col.count() == 3
 
 
+def test_delete_where_type_mismatched_literal_deletes_nothing(client):
+    """Metadata values are type-strict (the reference's MetadataValue):
+    ``True`` never equals an integer, nor ``"1"`` the integer 1. A pending
+    ``delete(where={"k": True})`` on an integer key deletes nothing, and
+    every read path and the compaction over it succeed."""
+    col = _mk(client, "tmis")
+    col.build_vector_index(n_lists=2)
+    col.delete(where={"k": True})
+    assert sorted(r["id"] for r in col.get()) == ["a", "b", "c"]
+    assert col.count() == 3
+    assert col.query([[1.0, 0, 0, 0]], n_results=1, nprobe=1)["ids"][0] == ["a"]
+    col.compact()
+    assert col.count() == 3
+    assert col.get(where={"k": "1"}) == []
+
+
+def test_two_predicate_deletes_around_an_update_agree_on_every_path(client):
+    """Each pending predicate delete applies at its own seq: an UPDATE
+    between two of them makes r0 match only the second, and cannot revive
+    r1, which the first already deleted. get, the flat query, the index
+    probe and the compacted base agree."""
+    import random
+
+    rnd = random.Random(5)
+    ids = [f"r{i}" for i in range(12)]
+    # two well-separated clusters: the nprobe=1 probe reaches the query's own
+    embs = [[(0.0 if i < 6 else 10.0) + rnd.random() for _ in range(4)] for i in range(12)]
+    col = client.create_collection("twowhere", dimension=4, space="l2")
+    col.add(ids=ids, embeddings=embs, metadatas=[{"grp": i % 3} for i in range(12)])
+    col.build_vector_index(n_lists=2)
+    col.delete(where={"grp": 1})
+    col.update(ids=["r0", "r1"], metadatas=[{"grp": 2}, {"grp": 0}])
+    col.delete(where={"grp": 2})
+    survivors = {"r3", "r6", "r9"}
+
+    assert {r["id"] for r in col.get()} == survivors
+    assert set(col.query([embs[3]], n_results=5)["ids"][0]) == survivors
+    flat = col.query([embs[6]], n_results=2)
+    assert flat["ids"][0] == ["r6", "r9"]
+    assert col.query([embs[6]], n_results=2, nprobe=1) == flat
+    col.compact()
+    base = col._store.read_base(col._store.meta)
+    assert {r.id for r in base.select("id").collect()} == survivors
+    assert {r["id"] for r in col.get()} == survivors
+
+
 def test_compact_deregisters_index_when_collection_empties(client):
     col = client.create_collection("vgone", dimension=2)
     col.add(ids=["a", "b"], embeddings=[[1.0, 0], [0, 1.0]])

@@ -111,3 +111,37 @@ def test_driver_rows_only_enter_spark_through_local_frame():
                 if (rel, fn) != ("frames.py", "local_frame"):
                     stray.append(f"{rel}:{line}")
     assert stray == [], f"createDataFrame outside frames.local_frame: {stray}"
+
+
+def _py_files(*dirs: str):
+    for d in dirs:
+        for root, _dirs, files in os.walk(d):
+            for name in files:
+                if name.endswith(".py"):
+                    path = os.path.join(root, name)
+                    with open(path, encoding="utf-8") as f:
+                        yield os.path.relpath(path, os.path.dirname(PKG)), ast.parse(f.read(), path)
+
+
+def test_wal_fold_is_one_jvm_mechanism():
+    """One WAL fold: nothing under ``sources/`` runs a grouped-map pandas
+    fold or imports pandas (a predicate delete folds in the JVM, between
+    vectorized segments), and no ``materialize`` caller picks a fold."""
+    stray = []
+    for rel, tree in _py_files(os.path.join(PKG, "sources")):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "applyInPandas":
+                stray.append(f"{rel}:{node.lineno} applyInPandas")
+            elif isinstance(node, ast.Import) and any(a.name.split(".")[0] == "pandas" for a in node.names):
+                stray.append(f"{rel}:{node.lineno} import pandas")
+            elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
+                stray.append(f"{rel}:{node.lineno} from pandas")
+    repo = os.path.dirname(PKG)
+    for rel, tree in _py_files(PKG, os.path.join(repo, "scripts"), os.path.join(repo, "tests")):
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func.attr if isinstance(node.func, ast.Attribute) else getattr(node.func, "id", None)
+            if fn == "materialize" and any(k.arg == "impl" for k in node.keywords):
+                stray.append(f"{rel}:{node.lineno} materialize(impl=...)")
+    assert stray == [], stray

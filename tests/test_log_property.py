@@ -1,7 +1,8 @@
 """Property-based WAL materialization testing: random operation sequences
-folded by the Spark applyInPandas merge must match a pure-Python state
-machine implementing operation.rs:16-35 semantics (the reference's stateful
-test_embeddings machine, SURVEY §5)."""
+folded by the Spark window/aggregate merge (cut at each pending predicate
+delete) must match a pure-Python state machine implementing
+operation.rs:16-35 semantics (the reference's stateful test_embeddings
+machine, SURVEY §5), offset_id included."""
 
 from __future__ import annotations
 
@@ -22,15 +23,22 @@ def _op():
     )
 
 
-def py_fold(ops, base=None):
+def py_fold(ops, base=None, offsets=None, start=0):
     """operation.rs:16-35: ADD ignores existing, UPDATE merges non-null into
-    existing only, UPSERT both, DELETE removes (later ADD recreates)."""
+    existing only, UPSERT both, DELETE removes (later ADD recreates).
+
+    ``ops`` carry seqs ``start, start + 1, ...``. ``offsets``, when given,
+    maps each base id to its carried offset_id (None included) and is
+    updated in place to every survivor's offset_id: the seq of its current
+    incarnation's insert."""
     state = dict(base or {})
-    for op, rid, doc, score in ops:
+    offs = {} if offsets is None else offsets
+    for seq, (op, rid, doc, score) in enumerate(ops, start):
         exists = rid in state
         fields = {"document": doc, "score": score}
         if op == "ADD" and not exists:
             state[rid] = dict(fields)
+            offs[rid] = seq
         elif op == "UPDATE" and exists:
             state[rid].update({k: v for k, v in fields.items() if v is not None})
         elif op == "UPSERT":
@@ -38,8 +46,10 @@ def py_fold(ops, base=None):
                 state[rid].update({k: v for k, v in fields.items() if v is not None})
             else:
                 state[rid] = dict(fields)
+                offs[rid] = seq
         elif op == "DELETE" and exists:
             del state[rid]
+            offs.pop(rid, None)
     return state
 
 
@@ -71,20 +81,24 @@ def test_materialize_with_base_matches_state_machine(spark, ops):
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(ops=st.lists(_op(), min_size=1, max_size=12))
 def test_vectorized_fold_equals_python_fold(spark, ops):
-    """The window/aggregate fold and the per-group pandas fold must agree on
-    every column INCLUDING offset_id, with and without a base side."""
-    base = spark.createDataFrame(
-        [("a", "base-doc", 0.5), ("b", None, 9.9)],
-        "id STRING, document STRING, score DOUBLE",
-    )
+    """The one fold equals the state-machine model on every column
+    INCLUDING offset_id, with and without a base side (whose rows carry a
+    set and a null offset_id)."""
+    base_rows = [("a", "base-doc", 0.5, 3), ("b", None, 9.9, None)]
+    base = spark.createDataFrame(base_rows, "id STRING, document STRING, score DOUBLE, offset_id LONG")
     log = spark.createDataFrame(
-        [(i, op, rid, doc, score) for i, (op, rid, doc, score) in enumerate(ops)],
+        [(10 + i, op, rid, doc, score) for i, (op, rid, doc, score) in enumerate(ops)],
         "seq_id LONG, op STRING, id STRING, document STRING, score DOUBLE",
     )
     for b in (None, base):
-        vec = sorted(tuple(r) for r in materialize(b, log, impl="vectorized").collect())
-        py = sorted(tuple(r) for r in materialize(b, log, impl="python").collect())
-        assert vec == py, (b is not None, ops)
+        offsets = {} if b is None else {r[0]: r[3] for r in base_rows}
+        model = py_fold(
+            ops, base=None if b is None else {r[0]: {"document": r[1], "score": r[2]} for r in base_rows},
+            offsets=offsets, start=10,
+        )
+        expect = sorted((rid, offsets[rid], f["document"], f["score"]) for rid, f in model.items())
+        got = sorted(tuple(r) for r in materialize(b, log).select("id", "offset_id", "document", "score").collect())
+        assert got == expect, (b is not None, ops)
 
 
 # ---------------------------------------------------------------------------
@@ -121,10 +135,12 @@ def _py_where_matches(meta, w):
     raise AssertionError(op)
 
 
-def py_fold_with_where(items):
-    state: dict = {}
-    offs: dict = {}
-    for seq, (kind, payload) in enumerate(items):
+def py_fold_with_where(items, base=None, start=0):
+    """``base`` maps pre-existing ids to ``(fields, offset_id)``; ``items``
+    carry seqs ``start, start + 1, ...``."""
+    state: dict = {rid: dict(f) for rid, (f, _off) in (base or {}).items()}
+    offs: dict = {rid: off for rid, (_f, off) in (base or {}).items()}
+    for seq, (kind, payload) in enumerate(items, start):
         if kind == "REC":
             op, rid, doc, score = payload
             exists = rid in state
@@ -180,3 +196,26 @@ def test_materialize_where_ops_and_offsets_match_state_machine(spark, items):
     got_offs = {r.id: r.offset_id for r in rows}
     assert got_state == expect_state, items
     assert got_offs == expect_offs, items
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(items=st.lists(_item(), min_size=1, max_size=10))
+def test_materialize_where_ops_with_base_match_state_machine(spark, items):
+    """Segments chain onto pre-existing state: base rows (one with a set,
+    one with a null offset_id) are matched by predicate deletes and carry
+    their offsets through every segment."""
+    base_rows = [("a", "d2", 2.0, 4), ("b", None, 1.0, None), ("c", "d1", None, 7)]
+    base = spark.createDataFrame(base_rows, "id STRING, document STRING, score DOUBLE, offset_id LONG")
+    rec_rows = [
+        (10 + seq, *payload) for seq, (kind, payload) in enumerate(items) if kind == "REC"
+    ]
+    where_ops = [
+        (10 + seq, None, *payload) for seq, (kind, payload) in enumerate(items) if kind == "WHERE"
+    ]
+    log = spark.createDataFrame(rec_rows, "seq_id LONG, op STRING, id STRING, document STRING, score DOUBLE")
+    expect_state, expect_offs = py_fold_with_where(
+        items, base={r[0]: ({"document": r[1], "score": r[2]}, r[3]) for r in base_rows}, start=10
+    )
+    rows = materialize(base, log, where_ops=where_ops).collect()
+    assert {r.id: {"document": r.document, "score": r.score} for r in rows} == expect_state, items
+    assert {r.id: r.offset_id for r in rows} == expect_offs, items

@@ -170,7 +170,8 @@ def _where(pools=_KEY_POOLS):
 
 # pools including a key NEVER present in the record schema: positive ops on
 # it must fail, $ne/$nin must match (test_filtering.py:59-66); the compilers
-# constant-fold it via known_keys instead of raising AnalysisException
+# constant-fold it (the DuckDB twin via known_keys, the Spark compiler via
+# the frame's schema) instead of raising AnalysisException
 _ABSENT_POOLS = {**_KEY_POOLS, "zz_absent": ["red", "blue"]}
 _KNOWN = frozenset({"id", "i", "f", "s", "b", "document"})
 
@@ -269,8 +270,59 @@ def test_absent_key_duckdb_twin(duck_con, w):
 @given(w=_where(_ABSENT_POOLS))
 def test_absent_key_spark_compiler(sdf, w):
     expect = {r["id"] for r in RECORDS if py_matches(r, w)}
-    col = where_to_column(w, known_keys=_KNOWN)
+    col = where_to_column(w, sdf.schema)
     got = {row["id"] for row in sdf.filter(col).select("id").collect()}
+    assert got == expect, f"clause {w}"
+
+
+# literals of every type on every key: the reference's MetadataValue is
+# type-strict (metadata.rs:659-682), so a literal no column value can equal
+# fails positive ops and matches $ne/$nin instead of raising or coercing
+_CROSS_POOLS = {
+    "i": [1, 2.5, "1", "x", True, False],
+    "f": [1.0, 2, "2.5", True],
+    "s": ["red", "", 1, 0.0, True],
+    "b": [True, False, 1, 0, "true"],
+    "zz_absent": ["red", 1, True],
+}
+
+
+def _cross_leaf():
+    def typed(key):
+        scalar = st.sampled_from(_CROSS_POOLS[key])
+        ranged = scalar.filter(lambda v: not isinstance(v, bool))  # validation rejects bool ranges
+        return st.one_of(
+            scalar.map(lambda v: {key: v}),
+            st.tuples(st.sampled_from(["$eq", "$ne"]), scalar).map(lambda t: {key: {t[0]: t[1]}}),
+            st.tuples(st.sampled_from(["$in", "$nin"]), st.lists(scalar, min_size=1, max_size=3)).map(
+                lambda t: {key: {t[0]: t[1]}}
+            ),
+            st.tuples(st.sampled_from(["$gt", "$gte", "$lt", "$lte"]), ranged).map(
+                lambda t: {key: {t[0]: t[1]}}
+            ),
+        )
+
+    return st.sampled_from(list(_CROSS_POOLS)).flatmap(typed)
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    w=st.recursive(
+        _cross_leaf(),
+        lambda ch: st.tuples(st.sampled_from(["$and", "$or"]), st.lists(ch, min_size=1, max_size=3)).map(
+            lambda t: {t[0]: t[1]}
+        ),
+        max_leaves=4,
+    )
+)
+def test_spark_compiler_types_literals_like_where_matches(sdf, w):
+    """Compiled against the frame's schema, a clause with type-mismatched
+    literals selects exactly the rows ``where_matches`` accepts — no
+    AnalysisException, no CAST_INVALID_INPUT, no string-to-number coercion."""
+    from chroma_spark.where import where_matches
+
+    expect = {r["id"] for r in RECORDS if where_matches(r, w)}
+    got = {row["id"] for row in sdf.filter(where_to_column(w, sdf.schema)).select("id").collect()}
     assert got == expect, f"clause {w}"
 
 
