@@ -46,7 +46,7 @@ from .sources.collection import (
 )
 from .quota import Action, AllowAllQuotaEnforcer, QuotaPayload
 from .schema import Schema
-from .sources.log import WHERE_OP, materialize, split_where_ops, where_op_matches
+from .sources.log import WHERE_OP, WhereOp, materialize, split_where_ops, where_op_matches
 from .sparse_vector import SPARSE_VECTOR_TYPE
 from .where import filter_records
 
@@ -540,7 +540,7 @@ class _ReadView:
         return self.frame(("base", paths), lambda: self._store.read_base(self.meta))
 
     @_built_once
-    def _tail(self) -> tuple[DataFrame | None, list[tuple]]:
+    def _tail(self) -> tuple[DataFrame | None, list[WhereOp]]:
         log = self._store.read_log(self.meta) if self.read_level != "index_only" else None
         if log is not None and self.read_level == "index_and_bounded_wal":
             log = log.filter(F.col("seq_id") <= int(self._log_bound))
@@ -552,7 +552,7 @@ class _ReadView:
         return self._tail[0]
 
     @property
-    def where_ops(self) -> list[tuple]:
+    def where_ops(self) -> list[WhereOp]:
         return self._tail[1]
 
     @_built_once
@@ -1649,21 +1649,21 @@ class Collection:
         return _ReadView.resolve(self._store, self._store.meta, read_level, log_bound).records
 
     @staticmethod
-    def _predicate_matched_ids(base: DataFrame, where_ops: list[tuple]) -> DataFrame:
+    def _predicate_matched_ids(base: DataFrame, where_ops: list[WhereOp]) -> DataFrame:
         """Base ids matched by any pending DELETE_WHERE, evaluated
-        vectorized with the same where compilers every read uses. Exact for
-        ids the id-keyed tail never touches (their state at each predicate's
-        seq IS base state); ids the tail does touch are collected separately
-        by the callers, so the union is always a superset of the stale set —
-        over-inclusion only routes an id through the bounded tail fold,
-        never drops one."""
+        vectorized by the fold's own match rule (``where_op_matches``).
+        Exact for ids the id-keyed tail never touches (their state at each
+        predicate's seq IS base state); ids the tail does touch are
+        collected separately by the callers, so the union is always a
+        superset of the stale set — over-inclusion only routes an id
+        through the bounded tail fold, never drops one."""
         cond = F.lit(False)
         for op in where_ops:
             cond = cond | where_op_matches(op, base.schema)
         return base.filter(cond).select("id")
 
     @staticmethod
-    def _fold(base: DataFrame | None, log: DataFrame | None, where_ops: list[tuple]) -> DataFrame | None:
+    def _fold(base: DataFrame | None, log: DataFrame | None, where_ops: list[WhereOp]) -> DataFrame | None:
         if log is None:
             return base
         if base is None:
