@@ -638,13 +638,18 @@ class _Executor:
         return centroids, self._live(vi, "postings")
 
     def records(self, extra: dict[str, T.DataType] | None = None) -> DataFrame:
-        """The view's records; if empty, a typed empty frame of the record
-        fields plus ``extra`` (name -> type) columns a plan references."""
-        if self.view.records is not None:
-            return self.view.records
-        fields = {**_RECORD_FIELDS, **(extra or {})}
-        schema = T.StructType([T.StructField(n, t) for n, t in fields.items()])
-        return local_frame(self.col._client.spark, [], schema)
+        """The view's records (if empty, a typed empty frame of the record
+        fields), carrying every ``extra`` (name -> type) column a plan
+        references: one no record has written is a typed null."""
+        records = self.view.records
+        if records is None:
+            fields = {**_RECORD_FIELDS, **(extra or {})}
+            schema = T.StructType([T.StructField(n, t) for n, t in fields.items()])
+            return local_frame(self.col._client.spark, [], schema)
+        missing = [n for n in (extra or {}) if n not in records.columns]
+        if missing:
+            records = records.withColumns({n: F.lit(None).cast(extra[n]) for n in missing})
+        return records
 
     def filtered(self, flt: Filter, extra: dict[str, T.DataType] | None = None) -> DataFrame:
         """Stage 2: the records ``flt`` keeps."""
@@ -875,17 +880,22 @@ class _Executor:
                 query_indices=query_indices,
             )
         records = self.records({key: SPARSE_VECTOR_TYPE})
-        if key not in records.columns:  # no record ever wrote the key
-            records = records.withColumn(key, F.lit(None).cast(SPARSE_VECTOR_TYPE))
         return sparse_dot_topk(
             records.filter(F.col(key).isNotNull()), qdf, plan.fetch, sparse_col=key, idf=idf
         )
 
     def search(self, plan: Search) -> DataFrame:
         """A Search plan: the filter stage keeps the candidates, the rank
-        expression's sparse ``$knn`` terms read fresh sparse indexes (dense
-        ``$knn`` terms scan exactly), and the search operator ranks,
-        groups, pages and hydrates the winners."""
+        expression's ``$knn`` terms rank them, and the search operator
+        groups, pages and hydrates the winners.
+
+        The physical choice for sparse terms follows from the expression:
+        a dense ``$knn`` term scans every candidate exactly, so sparse terms
+        beside it score the same candidates per record (their IDF ``n`` the
+        fresh sparse index's ``n_docs``, as on the index path) rather than
+        reading the term-bucket index and merging the WAL tail into it. A
+        rank of sparse terms only reads fresh sparse indexes
+        (:meth:`sparse_indexes`), whose bucket pruning bounds the read."""
         import copy
 
         meta = self.meta
@@ -911,6 +921,14 @@ class _Executor:
                 extra[str(t.get("key") or "#embedding").lstrip("#")] = T.ArrayType(T.FloatType())
         records = self.records(extra)
         sparse_keys = {k for k, t in extra.items() if t == SPARSE_VECTOR_TYPE}
+        sparse_index, n_docs = {}, {}
+        if len(sparse_keys) == len(extra):
+            sparse_index = self.sparse_indexes(keys=sparse_keys)
+        else:
+            for key in sparse_keys:
+                si = meta.indexes.get(f"sparse:{key}")
+                if si is not None and si["version"] == meta.version:
+                    n_docs[key] = float(si["n_docs"])
         return search_op(
             records,
             candidates=self.filtered(Filter(where=plan.where, where_document=plan.where_document), extra),
@@ -921,7 +939,8 @@ class _Executor:
             select=plan.select,
             default_space=meta.space,
             offset_col="offset_id" if "offset_id" in records.columns else None,
-            sparse_index=self.sparse_indexes(keys=sparse_keys) if sparse_keys else {},
+            sparse_index=sparse_index,
+            sparse_n_docs=n_docs,
         )
 
 

@@ -44,7 +44,36 @@ def exact_knn(
     Returns columns: ``query_id_col, id_col, dist_col, rank`` (rank is the
     1-based position, the reference's ``return_rank`` payload). Determinism:
     ordered by (rounded distance, record id) so float summation-order noise
-    cannot flip the ordering between runs/engines.
+    cannot flip the ordering between runs/engines. Distances as in
+    :func:`knn_distances`.
+    """
+    joined = knn_distances(
+        records, queries, space, id_col, vec_col, query_id_col, query_vec_col,
+        dist_col, round_decimals, query_space_col,
+    )
+    return topk_per_group(
+        joined,
+        [query_id_col],
+        [F.col(dist_col).asc(), F.col(id_col).asc()],
+        k,
+        rank_col="rank",
+    )
+
+
+def knn_distances(
+    records: DataFrame,
+    queries: DataFrame,
+    space: str | list[str] = "l2",
+    id_col: str = "id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "embedding",
+    dist_col: str = "dist",
+    round_decimals: int | None = ROUND_DECIMALS,
+    query_space_col: str = "space",
+) -> DataFrame:
+    """``(query_id_col, id_col, dist_col)``: every record's distance to
+    every query (the broadcast nested-loop join, before any top-k).
 
     ``space`` may be a list, in which case each query row picks its own
     metric via ``query_space_col`` — one records-side scan serves a mixed
@@ -74,17 +103,10 @@ def exact_knn(
         # + 0.0 canonicalizes IEEE negative zero (cosine self-distance can
         # round to -0.0 in one engine and 0.0 in the other)
         d = F.round(d, round_decimals) + F.lit(0.0)
-    joined = records.crossJoin(F.broadcast(q)).select(
+    return records.crossJoin(F.broadcast(q)).select(
         F.col("__qid").alias(query_id_col),
         F.col(id_col),
         d.alias(dist_col),
-    )
-    return topk_per_group(
-        joined,
-        [query_id_col],
-        [F.col(dist_col).asc(), F.col(id_col).asc()],
-        k,
-        rank_col="rank",
     )
 
 

@@ -41,11 +41,15 @@ Grammar accepted here (dict form, as the client serializes it)::
     {"$abs": e} {"$exp": e} {"$log": e}
     {"$min": [e...]} {"$max": [e...]}
 
-Physical shape: every ``$knn`` term is one exact/ANN top-k (broadcast
-nested-loop + two-stage top-k, no shuffle of the record side); arithmetic
-over domains is full-outer / left / inner joins on id keyed by the merge
-rule — at most ``limit`` rows per side, so these joins are tiny regardless
-of collection size.
+Physical shape: every ``$knn`` term is one top-k over the candidates, no
+shuffle of the record side. A dense term scans them with a broadcast
+nested-loop distance join; a sparse term scores each one with a per-record
+dot product, or reads a persisted index's bucket-pruned postings when the
+caller passes one. A batch of one query ranks with one
+TakeOrderedAndProject, a batch of several with the two-stage windows.
+Arithmetic over domains is full-outer / left / inner joins on id keyed by
+the merge rule — at most ``limit`` rows per side, so these joins are tiny
+regardless of collection size.
 """
 
 from __future__ import annotations
@@ -59,7 +63,8 @@ from pyspark.sql import functions as F
 
 from ..frames import local_frame
 from ..functions.distance import ROUND_DECIMALS
-from .knn import exact_knn
+from .knn import knn_distances
+from .topk import topk_per_group
 
 F32_MIN = -3.4028234663852886e38
 F32_MAX = 3.4028234663852886e38
@@ -157,28 +162,31 @@ class RankEvaluator:
         id_col: str = "id",
         vec_col: str = "embedding",
         default_space: str = "l2",
-        knn_fn: Callable[..., DataFrame] | None = None,
         sparse_index: dict[str, tuple[DataFrame, int, float | None]] | None = None,
-        idf_records: DataFrame | None = None,
+        corpus: DataFrame | None = None,
+        sparse_n_docs: dict[str, float] | None = None,
     ) -> None:
         """``sparse_index`` routes sparse $knn terms on a key through a
-        persisted term-bucket postings index instead of exploding the
-        record column inline: ``{key: (indexed_postings, n_buckets,
-        n_docs|None)}`` (see sparse.write_sparse_index). The candidate set
-        is still ``records`` — index hits outside it are semi-joined away,
-        the reference's allowed-ids bitmap restriction.
+        persisted term-bucket postings index: ``{key: (indexed_postings,
+        n_buckets, n_docs|None)}`` (see sparse.write_sparse_index). The
+        candidate set is still ``records`` — index hits outside it are
+        semi-joined away, the reference's allowed-ids bitmap restriction.
+        Sparse terms on any other key score every candidate per record
+        (:func:`~.sparse.sparse_scan_scores`).
 
-        ``idf_records``: the UNFILTERED corpus for sparse IDF stats when
-        ``records`` is a filtered candidate subset — keeps inline scoring
-        consistent with the indexed path (the reference's Idf always reads
-        whole-index stats)."""
+        ``corpus``: the UNFILTERED records the per-record scorer counts its
+        IDF document frequencies over when ``records`` is a filtered
+        candidate subset (the reference's Idf always reads whole-index
+        stats; default ``records``). ``sparse_n_docs``: per key, the IDF
+        ``n`` of those terms (a fresh sparse index's compaction-time doc
+        count); keys absent count the corpus."""
         self.records = records
         self.id_col = id_col
         self.vec_col = vec_col
         self.default_space = default_space
-        self.knn_fn = knn_fn or exact_knn
         self.sparse_index = sparse_index or {}
-        self.idf_records = idf_records
+        self.corpus = corpus
+        self.sparse_n_docs = sparse_n_docs or {}
         # (qvec, limit, space, return_rank) -> support DataFrame, filled by
         # _precompute_knns before tree evaluation
         self._knn_cache: dict[tuple, DataFrame] = {}
@@ -205,19 +213,56 @@ class RankEvaluator:
 
     @staticmethod
     def _valid_query(q: Any) -> bool:
+        """A non-empty dense vector, or a sparse query whose indices are
+        strictly ascending and aligned with its values."""
         if isinstance(q, dict):
-            return bool(q.get("indices")) and bool(q.get("values"))
+            idx, vals = q.get("indices"), q.get("values")
+            return (
+                bool(idx) and bool(vals) and len(idx) == len(vals)
+                and all(int(a) < int(b) for a, b in zip(idx, idx[1:]))
+            )
         return isinstance(q, (list, tuple)) and bool(q)
 
+    def _ranked(self, scored: DataFrame, n_queries: int, measure: str, k: int) -> DataFrame:
+        """The top ``k`` of ``scored`` per query by ``(measure, id)``, with
+        a 1-based ``rank``: one TakeOrderedAndProject for a batch of one
+        query, the two-stage windows for a batch of several."""
+        return topk_per_group(
+            scored,
+            [] if n_queries == 1 else ["query_id"],
+            [F.col(measure).asc(), F.col(self.id_col).asc()],
+            k,
+            rank_col="rank",
+        )
+
+    def _slice(self, top: DataFrame, keyed: list, measure: str) -> None:
+        """Each term's support: its query's ``rank <= limit`` rows of the
+        batch's shared top-k. AQE exchange reuse dedupes the scan across
+        the slices at runtime (an explicit persist() measured SLOWER: the
+        cache materialization is a barrier, while reused query stages
+        pipeline)."""
+        for i, (key, t) in enumerate(keyed):
+            limit = int(t.get("limit", 16))
+            rr = bool(t.get("return_rank", False))
+            score = (F.col("rank") - 1).cast("double") if rr else F.col(measure)
+            self._knn_cache[key] = (
+                top.filter((F.col("query_id") == i) & (F.col("rank") <= limit))
+                .select(F.col(self.id_col).alias("id"), score.alias("score"))
+            )
+
     def _precompute_knns(self, expr: dict[str, Any]) -> None:
-        """One batched top-k per distance space instead of one Spark plan per
-        $knn term: all terms of a space share a single
-        records-side scan/shuffle (queries become rows of the broadcast
-        side), then each term slices its ``rank <= limit`` from the result.
+        """One batched top-k per vector column (and per sparse column)
+        instead of one Spark plan per $knn term: all terms of a column
+        share a single records-side scan (queries become rows of the
+        broadcast side; mixed spaces pick their metric per query row, so a
+        multi-space rank such as Rrf over cosine+l2 reads the big side
+        once), then each term slices its ``rank <= limit`` from the
+        result. Dense terms score only records with a vector in their
+        column.
         """
         terms: list[dict] = []
         collect_knn_terms(expr, terms)
-        by_space: dict[str, list[tuple[tuple, dict]]] = {}
+        by_vcol: dict[str, list[tuple[str, tuple, dict]]] = {}
         by_sparse_col: dict[str, list[tuple[tuple, dict]]] = {}
         for t in terms:
             q = t.get("query")
@@ -236,75 +281,35 @@ class RankEvaluator:
             else:
                 # dense terms may target any ARRAY<FLOAT> column via "key"
                 # (operator.py:1043-1111; default #embedding) — multi-vector
-                # records batch per (space, column)
+                # records batch per column
                 vcol = str(t.get("key") or "#embedding").lstrip("#")
                 if vcol == "embedding":
                     vcol = self.vec_col
-                by_space.setdefault((t.get("space", self.default_space), vcol), []).append((key, t))
-        spark = self.records.sparkSession
+                by_vcol.setdefault(vcol, []).append((t.get("space", self.default_space), key, t))
         for (col, use_idf), keyed in by_sparse_col.items():
-            self._precompute_sparse(spark, col, keyed, use_idf)
-        # when the default exact_knn serves the terms, mixed-space batches
-        # of the same vector column collapse into ONE records-side scan
-        # (per-query-row metric via the space column) — a multi-space rank
-        # expression (e.g. Rrf over cosine+l2) reads the big side once
-        if self.knn_fn is exact_knn and len(by_space) > 1:
-            merged: dict[str, list[tuple[str, tuple, dict]]] = {}
-            for (space, vcol), keyed in by_space.items():
-                merged.setdefault(vcol, []).extend((space, k_, t) for k_, t in keyed)
-            by_space = {
-                (tuple(sorted({s for s, _, _ in triples})), vcol): [
-                    (k_, t, s) for s, k_, t in triples
-                ]
-                for vcol, triples in merged.items()
-            }
-        else:
-            by_space = {
-                (space, vcol): [(k_, t, space) for k_, t in keyed]
-                for (space, vcol), keyed in by_space.items()
-            }
-        for (space, vcol), keyed in by_space.items():
-            multi = isinstance(space, tuple)
-            if multi and len(space) == 1:
-                space, multi = space[0], False
-            if multi:
-                qrows = [
-                    (i, [float(x) for x in t.get("query")], s)
-                    for i, (_, t, s) in enumerate(keyed)
-                ]
-                qdf = local_frame(
-                    spark, qrows, "query_id INT, embedding ARRAY<FLOAT>, space STRING"
-                )
-                space = list(space)
+            self._precompute_sparse(col, keyed, use_idf)
+        spark = self.records.sparkSession
+        for vcol, triples in by_vcol.items():
+            spaces = sorted({s for s, _, _ in triples})
+            if len(spaces) > 1:
+                qrows = [(i, [float(x) for x in t.get("query")], s) for i, (s, _, t) in enumerate(triples)]
+                qdf = local_frame(spark, qrows, "query_id INT, embedding ARRAY<FLOAT>, space STRING")
+                space: str | list[str] = spaces
             else:
-                qrows = [
-                    (i, [float(x) for x in t.get("query")]) for i, (_, t, _) in enumerate(keyed)
-                ]
+                qrows = [(i, [float(x) for x in t.get("query")]) for i, (_, _, t) in enumerate(triples)]
                 qdf = local_frame(spark, qrows, "query_id INT, embedding ARRAY<FLOAT>")
-            keyed = [(k_, t) for k_, t, _ in keyed]
-            kmax = max(int(t.get("limit", 16)) for _, t in keyed)
-            top = self.knn_fn(
-                self.records,
+                space = spaces[0]
+            keyed = [(k_, t) for _, k_, t in triples]
+            dist = knn_distances(
+                self.records.filter(F.col(vcol).isNotNull()),
                 qdf,
-                k=kmax,
                 space=space,
                 id_col=self.id_col,
                 vec_col=vcol,
                 round_decimals=None,
             )
-            # each term slices rank<=limit from this shared plan; AQE
-            # exchange reuse dedupes the records-side scan across the term
-            # slices at runtime (an explicit persist() measured SLOWER: the
-            # cache materialization is a barrier, while reused query stages
-            # pipeline)
-            for i, (key, t) in enumerate(keyed):
-                limit = int(t.get("limit", 16))
-                rr = bool(t.get("return_rank", False))
-                score = (F.col("rank") - 1).cast("double") if rr else F.col("dist")
-                self._knn_cache[key] = (
-                    top.filter((F.col("query_id") == i) & (F.col("rank") <= limit))
-                    .select(F.col(self.id_col).alias("id"), score.alias("score"))
-                )
+            kmax = max(int(t.get("limit", 16)) for _, t in keyed)
+            self._slice(self._ranked(dist, len(keyed), "dist", kmax), keyed, "dist")
 
     def evaluate(self, expr: dict[str, Any]) -> RankDomain:
         self._precompute_knns(expr)
@@ -351,82 +356,60 @@ class RankEvaluator:
             return RankDomain(sup, _map_default(d.default, py_fn))
         raise RankError(f"unknown rank operator {op}")
 
-    def _precompute_sparse(self, spark, sparse_col: str, keyed: list, use_idf: bool = True) -> None:
+    def _precompute_sparse(self, sparse_col: str, keyed: list, use_idf: bool = True) -> None:
         """Batched sparse top-k for every sparse $knn term over one record
-        column: one postings source + broadcast-join of ALL query terms
-        (sparse_index_knn.rs semantics; measure = 1 - dot, ascending).
+        column (sparse_index_knn.rs semantics; measure = 1 - dot,
+        ascending).
 
         Query weights are IDF-scaled first — the reference's sparse KNN
         orchestration always runs the Idf operator before the search
         (sparse_knn.rs:243 -> idf.rs:24-31). When a persisted term-bucket
         index is registered for the key, the search reads only the query
-        terms' bucket partitions and semi-joins the candidate set; otherwise
-        postings are exploded from the records inline."""
-        from pyspark.sql import Window
+        terms' bucket partitions and semi-joins the candidate set;
+        otherwise every candidate scores per record."""
+        from .sparse import sparse_index_scores, sparse_scan_scores
 
-        from .sparse import sparse_dot_topk, sparse_index_topk
-
-        qrows = [
-            (
-                i,
-                (
-                    [int(x) for x in t["query"]["indices"]],
-                    [float(v) for v in t["query"]["values"]],
-                ),
-            )
-            for i, (_, t) in enumerate(keyed)
+        queries = [
+            ([int(x) for x in t["query"]["indices"]], [float(v) for v in t["query"]["values"]])
+            for _, t in keyed
         ]
-        qdf = local_frame(
-            spark,
-            qrows,
-            f"query_id INT, {sparse_col} STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>",
-        )
-        kmax = max(int(t.get("limit", 16)) for _, t in keyed)
         if sparse_col in self.sparse_index:
             postings, n_buckets, n_docs = self.sparse_index[sparse_col]
-            all_idx = sorted({int(i) for _, t in keyed for i in t["query"]["indices"]})
-            top = sparse_index_topk(
+            qdf = local_frame(
+                self.records.sparkSession,
+                [(i, q) for i, q in enumerate(queries)],
+                f"query_id INT, {sparse_col} STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>",
+            )
+            scored = sparse_index_scores(
                 postings,
                 qdf,
-                k=kmax,
                 n_buckets=n_buckets,
                 sparse_col=sparse_col,
-                round_decimals=None,
                 idf=use_idf,
                 n_docs=n_docs,
                 candidates=self.records.select(F.col(self.id_col).alias("id")),
-                query_indices=all_idx,
-            )
+                query_indices=sorted({i for idx, _ in queries for i in idx}),
+            ).withColumnRenamed("id", self.id_col)
         else:
-            top = sparse_dot_topk(
+            scored = sparse_scan_scores(
                 self.records,
-                qdf,
-                k=kmax,
-                id_col=self.id_col,
+                queries,
                 sparse_col=sparse_col,
-                round_decimals=None,
+                id_col=self.id_col,
                 idf=use_idf,
-                idf_records=self.idf_records,
-            )
-        top = top.withColumn("__measure", F.lit(1.0) - F.col("score"))
-        w = Window.partitionBy("query_id").orderBy(F.col("__measure").asc(), F.col(self.id_col).asc())
-        top = top.withColumn("rank", F.row_number().over(w).cast("long"))
-        if len(keyed) > 1:
-            top = top.persist()
-        for i, (key, t) in enumerate(keyed):
-            limit = int(t.get("limit", 16))
-            rr = bool(t.get("return_rank", False))
-            score = (F.col("rank") - 1).cast("double") if rr else F.col("__measure")
-            self._knn_cache[key] = (
-                top.filter((F.col("query_id") == i) & (F.col("rank") <= limit))
-                .select(F.col(self.id_col).alias("id"), score.alias("score"))
-            )
+                corpus=self.corpus,
+                n_docs=self.sparse_n_docs.get(sparse_col),
+            ).withColumnRenamed("id", self.id_col)
+        scored = scored.withColumn("__measure", F.lit(1.0) - F.col("score"))
+        kmax = max(int(t.get("limit", 16)) for _, t in keyed)
+        self._slice(self._ranked(scored, len(keyed), "__measure", kmax), keyed, "__measure")
 
     def _knn(self, arg: dict[str, Any]) -> RankDomain:
         qvec = arg.get("query")
         if not self._valid_query(qvec):
             raise RankError(
                 "$knn requires a dense query vector or a sparse {indices, values} dict"
+                " (indices strictly ascending, one value each)"
             )
         default = arg.get("default")
         sup = self._knn_cache.get(self._knn_key(arg))

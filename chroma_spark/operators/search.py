@@ -39,17 +39,18 @@ def search(
     doc_col: str = "document",
     array_keys: frozenset[str] = frozenset(),
     default_space: str = "l2",
-    knn_fn=None,
     offset_col: str | None = None,
     sparse_index: dict | None = None,
     candidates: DataFrame | None = None,
+    sparse_n_docs: dict[str, float] | None = None,
 ) -> DataFrame:
     """Run a Search payload; returns records (+ ``score`` when ranked).
 
     ``offset_col`` — the internal insertion-offset column; when given,
     un-ranked results order by it (limit.rs:23-36) instead of the id.
     ``sparse_index`` — per-key persisted posting indexes for sparse $knn
-    terms (see RankEvaluator). ``candidates`` — the records the caller's
+    terms, and ``sparse_n_docs`` — per-key IDF ``n`` for the sparse terms
+    scored per record (see RankEvaluator). ``candidates`` — the records the caller's
     own filter stage already kept (Collection.search lowers ``where`` /
     ``where_document`` with its FTS candidates there); when None, ``where``
     and ``where_document`` filter ``records`` here. Filtering touches the
@@ -72,15 +73,19 @@ def search(
             id_col=id_col,
             vec_col=vec_col,
             default_space=default_space,
-            knn_fn=knn_fn,
             sparse_index=sparse_index,
-            idf_records=records,  # IDF stats over the unfiltered corpus
+            corpus=records,  # IDF stats over the unfiltered corpus
+            sparse_n_docs=sparse_n_docs,
         )
         scores = finalize_scores(ev.evaluate(rank))
-        # hydration join (reference KnnProjection: winners only fetch payload)
-        out = scores.withColumnRenamed("id", "__sid").join(
-            candidates, F.col("__sid") == F.col(id_col), "inner"
-        ).drop("__sid")
+        if not group_by and select is not None and set(select) <= {"#id", "#score"}:
+            # the scores carry every selected field: no record is fetched
+            out = scores.withColumnRenamed("id", id_col)
+        else:
+            # hydration join (reference KnnProjection: winners only fetch payload)
+            out = scores.withColumnRenamed("id", "__sid").join(
+                candidates, F.col("__sid") == F.col(id_col), "inner"
+            ).drop("__sid")
         if group_by:
             agg = group_by.get("aggregate", {})
             if len(agg) != 1:

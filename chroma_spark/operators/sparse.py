@@ -233,7 +233,30 @@ def _dot_topk(
     idf_from: DataFrame | None = None,
     n_docs: float | None = None,
 ) -> DataFrame:
-    """Shared scoring core: ``(query_id, id, score)`` top-k by dot product.
+    """``(query_id, id, score)`` top-k by dot product per query: the
+    :func:`_dot_scores` of the postings, rounded, two-stage top-k."""
+    return _score_topk(_dot_scores(postings, qpost, candidates, idf_from, n_docs), k, round_decimals)
+
+
+def _score_topk(scored: DataFrame, k: int, round_decimals: int | None) -> DataFrame:
+    """The top ``k`` per query of ``(query_id, id, score)`` rows, score
+    descending then id, scores rounded first."""
+    if round_decimals is not None:
+        scored = scored.select(
+            "query_id", "id", (F.round(F.col("score"), round_decimals) + F.lit(0.0)).alias("score")
+        )
+    return topk_per_group(scored, ["query_id"], [F.col("score").desc(), F.col("id").asc()], k)
+
+
+def _dot_scores(
+    postings: DataFrame,
+    qpost: DataFrame,
+    candidates: DataFrame | None = None,
+    idf_from: DataFrame | None = None,
+    n_docs: float | None = None,
+) -> DataFrame:
+    """Shared scoring core: ``(query_id, id, score)`` by dot product, one
+    row per record sharing a term with the query.
 
     ``qpost`` is broadcast-sized ``(query_id, idx, q_w)``. With ``idf_from``
     (a postings corpus) the query weights are scaled by the corpus IDF
@@ -278,12 +301,20 @@ def _dot_topk(
         contrib = F.col("doc_w") * F.col("q_w") * idf_expr(F.col("__df"), n_col)
     if candidates is not None:
         joined = joined.join(candidates.select("id"), "id", "semi")
-    scored = joined.groupBy("query_id", "id").agg(F.sum(contrib).alias("score"))
-    if round_decimals is not None:
-        scored = scored.select(
-            "query_id", "id", (F.round(F.col("score"), round_decimals) + F.lit(0.0)).alias("score")
-        )
-    return topk_per_group(scored, ["query_id"], [F.col("score").desc(), F.col("id").asc()], k)
+    return joined.groupBy("query_id", "id").agg(F.sum(contrib).alias("score"))
+
+
+def _query_postings(query: DataFrame, sparse_col: str, query_id_col: str) -> DataFrame:
+    """``(query_id, idx, q_w)`` rows of a query frame's sparse vectors."""
+    return query.select(
+        F.col(query_id_col).alias("query_id"),
+        F.explode(
+            F.arrays_zip(
+                F.col(f"{sparse_col}.indices").alias("idx"),
+                F.col(f"{sparse_col}.values").alias("val"),
+            )
+        ).alias("p"),
+    ).select("query_id", F.col("p.idx").alias("idx"), F.col("p.val").cast("double").alias("q_w"))
 
 
 def sparse_dot_topk(
@@ -295,7 +326,6 @@ def sparse_dot_topk(
     query_id_col: str = "query_id",
     round_decimals: int | None = 6,
     idf: bool = False,
-    idf_records: DataFrame | None = None,
 ) -> DataFrame:
     """Top-``k`` by sparse dot product per query; ``(query_id, id, score)``.
 
@@ -303,28 +333,109 @@ def sparse_dot_topk(
     exploded query terms on the index, sum products per (query, id) —
     the SPANN-paper posting-list join expressed as DataFrame ops
     (sparse_index_knn.rs equivalent). ``idf`` scales query weights by the
-    corpus IDF first (the orchestration-level contract, sparse_knn.rs:243);
-    ``idf_records`` names the stats corpus when ``records`` is already a
-    filtered candidate subset (the reference's Idf always reads whole-index
-    stats; the filter only restricts the support).
-    """
+    IDF of ``records`` first (the orchestration-level contract,
+    sparse_knn.rs:243). For the query-batch join; a rank expression's
+    terms score per record (:func:`sparse_scan_scores`)."""
     postings = explode_postings(records, id_col=id_col, sparse_col=sparse_col)
-    qpost = query.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(
-            F.arrays_zip(
-                F.col(f"{sparse_col}.indices").alias("idx"),
-                F.col(f"{sparse_col}.values").alias("val"),
-            )
-        ).alias("p"),
-    ).select("query_id", F.col("p.idx").alias("idx"), F.col("p.val").cast("double").alias("q_w"))
-    idf_from = None
+    qpost = _query_postings(query, sparse_col, query_id_col)
+    return _dot_topk(postings, qpost, k, round_decimals, idf_from=postings if idf else None)
+
+
+def sparse_scan_scores(
+    records: DataFrame,
+    queries: list[tuple[list[int], list[float]]],
+    sparse_col: str = "sparse",
+    id_col: str = "id",
+    idf: bool = False,
+    corpus: DataFrame | None = None,
+    n_docs: float | None = None,
+) -> DataFrame:
+    """``(query_id, id, score)`` by dot product for each record of
+    ``records`` sharing a term with query ``query_id`` (its position in
+    ``queries``, driver-side ``(indices, values)`` with strictly ascending
+    indices) — the same support and scores as the postings join, computed
+    per record in the JVM: no explode, no join and no shuffle of postings.
+
+    Per record, ``arrays_overlap`` with the query's indices (a hash probe)
+    keeps the records that share a term; for those, the record's and the
+    query's ``(idx, side, weight, idf)`` entries are merged by one sort of
+    the two ascending runs (TimSort merges two runs in linear time) and
+    one walk multiplies each adjacent record/query pair of one index:
+    cost linear in the record's postings plus the query's terms. A record
+    repeating an index fails the read (SparseVector indices are strictly
+    ascending).
+
+    ``idf`` scales the query weights by ``ln((n - df + 0.5) / (df + 0.5) +
+    1)`` (idf.rs:24-31): each query term's df is counted by ONE aggregate
+    over ``corpus`` (the unfiltered records; default ``records``), and
+    ``n`` is ``n_docs`` when given (a sparse index's compaction-time
+    count), else the corpus records with at least one posting. Products
+    multiply ``doc_w * q_w * idf`` in the postings join's order."""
+    indices = F.col(f"{sparse_col}.indices")
+    vocab = sorted({i for idx, _ in queries for i in idx})
     if idf:
-        if idf_records is not None and idf_records is not records:
-            idf_from = explode_postings(idf_records, id_col=id_col, sparse_col=sparse_col)
-        else:
-            idf_from = postings
-    return _dot_topk(postings, qpost, k, round_decimals, idf_from=idf_from)
+        corpus = records if corpus is None else corpus
+        shared = corpus.select(
+            F.array_intersect(indices, F.array(*[F.lit(t) for t in vocab])).alias("__s"),
+            (F.size(indices) > 0).alias("__has"),
+        )
+        counts = [F.count(F.when(F.array_contains("__s", t), 1)) for t in vocab]
+        row = shared.agg(*counts, F.count(F.when(F.col("__has"), 1))).first()
+        df = dict(zip(vocab, row))
+        n = float(n_docs) if n_docs is not None else float(row[-1])
+    terms = [
+        F.array(*[
+            F.struct(
+                F.lit(t).alias("idx"), F.lit(1).alias("side"),
+                F.lit(v).cast("float").cast("double").alias("w"),
+                (idf_expr(F.lit(float(df[t])), F.lit(n)) if idf else F.lit(1.0)).alias("idf"),
+            )
+            for t, v in zip(idx, vals)
+        ])
+        for idx, vals in queries
+    ]
+    overlap = [F.array(*[F.lit(t) for t in idx]) for idx, _ in queries]
+    if len(queries) == 1:
+        scan = records.select("*", F.lit(0).alias("query_id"))
+        query, query_indices = terms[0], overlap[0]
+    else:
+        qdf = local_frame(
+            records.sparkSession, [(i,) for i in range(len(queries))], "query_id INT"
+        )
+        scan = records.crossJoin(F.broadcast(qdf))
+        query, query_indices = (
+            F.element_at(F.array(*arrs), F.col("query_id") + 1) for arrs in (terms, overlap)
+        )
+    doc = F.zip_with(
+        indices, F.col(f"{sparse_col}.values"),
+        lambda t, v: F.struct(
+            t.alias("idx"), F.lit(0).alias("side"), v.cast("double").alias("w"),
+            F.lit(1.0).alias("idf"),
+        ),
+    )
+
+    def step(acc, e):
+        same = e["idx"] == acc["idx"]
+        score = (
+            F.when(same & (e["side"] == acc["side"]), F.raise_error(F.lit(
+                f"sparse vector {sparse_col!r} repeats an index (indices must be strictly ascending)"
+            )))
+            .when(same, acc["score"] + acc["w"] * e["w"] * e["idf"])
+            .otherwise(acc["score"])
+        )
+        return F.struct(
+            e["idx"].alias("idx"), e["side"].alias("side"), e["w"].alias("w"),
+            score.cast("double").alias("score"),
+        )
+
+    start = F.struct(
+        F.lit(None).cast("int").alias("idx"), F.lit(None).cast("int").alias("side"),
+        F.lit(0.0).alias("w"), F.lit(0.0).alias("score"),
+    )
+    score = F.aggregate(F.sort_array(F.concat(doc, query)), start, step, lambda acc: acc["score"])
+    return scan.filter(F.arrays_overlap(indices, query_indices)).select(
+        "query_id", F.col(id_col).alias("id"), score.alias("score")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -479,28 +590,40 @@ def sparse_index_topk(
     candidates: DataFrame | None = None,
     query_indices: list[int] | None = None,
 ) -> DataFrame:
-    """Top-``k`` dot-product over the persisted index, reading only the
-    query terms' bucket partitions (static pruning via an ``isin`` literal
-    on the partition column — the sparse-index read cost is proportional to
-    the query's vocabulary, not the corpus, like the reference's per-term
-    posting-list reads, rust/index/src/sparse/reader.rs).
+    """Top-``k`` dot-product per query over the persisted index: the
+    :func:`sparse_index_scores`, rounded, two-stage top-k."""
+    scored = sparse_index_scores(
+        indexed_postings, query, n_buckets, sparse_col, query_id_col,
+        idf=idf, n_docs=n_docs, candidates=candidates, query_indices=query_indices,
+    )
+    return _score_topk(scored, k, round_decimals)
+
+
+def sparse_index_scores(
+    indexed_postings: DataFrame,
+    query: DataFrame,
+    n_buckets: int = 64,
+    sparse_col: str = "sparse",
+    query_id_col: str = "query_id",
+    idf: bool = False,
+    n_docs: float | None = None,
+    candidates: DataFrame | None = None,
+    query_indices: list[int] | None = None,
+) -> DataFrame:
+    """``(query_id, id, score)`` dot products over the persisted index,
+    reading only the query terms' bucket partitions (static pruning via an
+    ``isin`` literal on the partition column — the sparse-index read cost
+    is proportional to the query's vocabulary, not the corpus, like the
+    reference's per-term posting-list reads, rust/index/src/sparse/reader.rs).
 
     ``query_indices``: the query's term indices when known driver-side
     (they always are — queries arrive as literals); skips the collect.
     ``idf``: scale query weights by corpus IDF; per-term df comes from the
     pruned buckets (exact — a term's postings all live in its bucket) and
     the corpus doc count from ``n_docs`` (index metadata; falls back to a
-    full-index distinct count). ``candidates``: see :func:`_dot_topk`.
+    full-index distinct count). ``candidates``: see :func:`_dot_scores`.
     """
-    qpost = query.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(
-            F.arrays_zip(
-                F.col(f"{sparse_col}.indices").alias("idx"),
-                F.col(f"{sparse_col}.values").alias("val"),
-            )
-        ).alias("p"),
-    ).select("query_id", F.col("p.idx").alias("idx"), F.col("p.val").cast("double").alias("q_w"))
+    qpost = _query_postings(query, sparse_col, query_id_col)
     if query_indices is None:
         query_indices = [int(r["idx"]) for r in qpost.select("idx").distinct().collect()]
     buckets = sorted({int(i) % n_buckets for i in query_indices})
@@ -509,9 +632,4 @@ def sparse_index_topk(
         idf_src: DataFrame | None = indexed_postings.drop("bucket")
     else:
         idf_src = pruned if idf else None
-    return _dot_topk(
-        pruned, qpost, k, round_decimals,
-        candidates=candidates,
-        idf_from=idf_src,
-        n_docs=n_docs,
-    )
+    return _dot_scores(pruned, qpost, candidates=candidates, idf_from=idf_src, n_docs=n_docs)

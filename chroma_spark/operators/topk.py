@@ -35,9 +35,12 @@ def topk_per_group(
 
     ``order_cols`` must define a total order (pass a unique tiebreak column
     last) or results are nondeterministic. If ``rank_col`` is given, the
-    1-based position (BIGINT) is kept under that name.
+    1-based position (BIGINT) is kept under that name. Ungrouped, the
+    first stage is skipped: TakeOrderedAndProject keeps a per-partition
+    heap itself, so a window keyed on the partition id would only add a
+    shuffle.
     """
-    if two_stage:
+    if two_stage and group_cols:
         staged = df.withColumn("__pid", F.spark_partition_id())
         w1 = Window.partitionBy(*group_cols, "__pid").orderBy(*order_cols)
         survivors = (

@@ -1250,6 +1250,148 @@ def test_sparse_index_lifecycle_in_search(client):
     assert scores == {"b": 1.0 - 10.0, "d": 1.0 - 7.0}
 
 
+def _hybrid_tail_collection(client):
+    """A collection with a fresh sparse index on ``sv`` and a WAL tail that
+    UPDATEs ``sv``, DELETEs, ADDs and holds a pending ``delete(where=...)``."""
+    import random
+
+    rnd = random.Random(11)
+    ids = [f"r{i:02d}" for i in range(40)]
+
+    def sv():
+        idx = sorted(rnd.sample(range(12), rnd.randint(1, 4)))
+        return {"indices": idx, "values": [round(rnd.uniform(0.1, 3.0), 3) for _ in idx]}
+
+    col = client.create_collection("hyb", dimension=3, space="cosine")
+    col.add(
+        ids=ids,
+        embeddings=[[rnd.uniform(-1, 1) for _ in range(3)] for _ in ids],
+        metadatas=[{"grp": i % 3, "sv": sv()} for i in range(len(ids))],
+    )
+    si = col.build_sparse_index("sv", n_buckets=4)
+    col.update(ids=["r01", "r05"], metadatas=[{"sv": sv()}, {"sv": sv()}])
+    col.delete(ids=["r02", "r07"])
+    col.add(ids=["n0", "n1"], embeddings=[[0.3, 0.1, 0.9], [0.9, 0.2, 0.1]],
+            metadatas=[{"grp": 0, "sv": sv()}, {"grp": 1, "sv": sv()}])
+    col.delete(where={"grp": {"$eq": 2}})
+    return col, si
+
+
+def _hybrid_payloads():
+    dense = {"query": [0.5, 0.5, 0.1], "limit": 12, "default": 12.0}
+    sparse = {"query": {"indices": [1, 4, 9], "values": [1.0, 0.5, 2.0]}, "key": "sv",
+              "limit": 12, "default": 12.0}
+    from chroma_spark.operators.rank import rrf
+
+    for idf in (True, False):
+        sp = {**sparse, "idf": idf}
+        yield {"rank": rrf([dense, sp]), "limit": 8}
+        yield {"rank": {"$sum": [{"$knn": dense}, {"$knn": sp}]},
+               "where": {"grp": {"$eq": 0}}, "offset": 2, "limit": 5}
+        yield {"rank": {"$sum": [{"$knn": dense}, {"$knn": {**sp, "return_rank": True}}]},
+               "where": {"grp": {"$in": [0, 1]}}, "limit": 20}
+
+
+def test_hybrid_search_scan_matches_index_lowering(client):
+    """A search with a dense $knn term scores its sparse terms per record
+    over the candidates; ids and scores equal the sparse-index lowering of
+    the same view (index postings merged with the WAL tail, IDF n from
+    the index descriptor), filtered or not, idf on or off, paged."""
+    from chroma_spark.operators.search import search as search_op
+
+    col, _ = _hybrid_tail_collection(client)
+    for payload in _hybrid_payloads():
+        got = [(r["id"], r["score"]) for r in col.search(**payload, select=["#id", "#score"]).collect()]
+        ex = col._read()
+        want = search_op(
+            ex.records(),
+            where=payload.get("where"),
+            rank=payload["rank"],
+            offset=payload.get("offset", 0),
+            limit=payload["limit"],
+            select=["#id", "#score"],
+            default_space=ex.meta.space,
+            offset_col="offset_id",
+            sparse_index=ex.sparse_indexes({"sv"}),
+        )
+        want = [(r["id"], r["score"]) for r in want.collect()]
+        assert got and got == want, payload
+
+
+def test_hybrid_search_plan_scans_records_only(client, spark):
+    """A hybrid search reads no sparse-index layout and explodes nothing:
+    each $knn term is one TakeOrderedAndProject over the records (plus one
+    for the page). A sparse-only rank on the same collection still reads
+    the index with the query's buckets as partition filters."""
+    col, si = _hybrid_tail_collection(client)
+    payload = next(_hybrid_payloads())
+    plan = col.search(**payload)._jdf.queryExecution().executedPlan().toString()
+    assert si["path"] not in plan and "Generate" not in plan
+    assert plan.count("TakeOrderedAndProject") == 3, plan
+    sparse = {"$knn": {"query": {"indices": [1, 4], "values": [1.0, 0.5]}, "key": "sv", "limit": 5}}
+    df = col.search(rank=sparse, limit=5)
+    formatted = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert any(
+        "PartitionFilters" in line and "bucket" in line for line in formatted.splitlines()
+    ), formatted
+
+
+@pytest.mark.parametrize("indexed", [False, True])
+def test_search_with_two_sparse_terms_caches_nothing(client, spark, indexed):
+    """Searches whose rank has two sparse terms on one key leave Spark's
+    persistent-RDD count where the first left it (the batched sparse top-k
+    is shared through exchange reuse, never persisted)."""
+    from chroma_spark.operators.rank import rrf
+
+    col = client.create_collection(f"twosparse{int(indexed)}", dimension=2)
+    col.add(
+        ids=["a", "b", "c"],
+        embeddings=[[1.0, 0], [0, 1.0], [0.5, 0.5]],
+        metadatas=[{"sv": {"indices": [0, 2], "values": [1.0, 2.0]}},
+                   {"sv": {"indices": [2, 5], "values": [3.0, 1.0]}},
+                   {"sv": {"indices": [0, 7], "values": [4.0, 1.0]}}],
+    )
+    if indexed:
+        col.build_sparse_index("sv", n_buckets=4)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    counts = []
+    for w in range(5):
+        terms = [{"query": {"indices": [0, 2], "values": [1.0, 1.0]}, "key": "sv", "limit": 3},
+                 {"query": {"indices": [5, 7], "values": [1.0, 2.0 + w]}, "key": "sv", "limit": 3}]
+        rows = col.search(rank=rrf(terms, weights=[1.0, 1.0 + w]), limit=3).collect()
+        assert rows
+        counts.append(len(persistent()))
+    assert counts == [counts[0]] * 5, counts
+
+
+def test_search_dense_knn_skips_records_without_vector(client, spark):
+    """A dense $knn term scores only records with a vector in its column,
+    as query() does: records added without an embedding never rank."""
+    col = client.create_collection("novec", dimension=2)
+    col.add(ids=["a"], embeddings=[[1.0, 0.0]])
+    col.add(ids=["m"], documents=["hello"])
+    col.add_records(spark.createDataFrame(
+        [("n", None, "world")], "id STRING, embedding ARRAY<FLOAT>, document STRING"
+    ))
+    rows = col.search(rank={"$knn": {"query": [1.0, 0.0], "limit": 3}}).collect()
+    assert [(r["id"], r["score"]) for r in rows] == [("a", 0.0)]
+
+
+def test_search_knn_on_unwritten_key(client):
+    """A $knn on a key no record has written has an empty support on a
+    non-empty collection too; the merge rules decide the rest."""
+    col = client.create_collection("nokey", dimension=2)
+    col.add(ids=["a", "b"], embeddings=[[1.0, 0.0], [0.0, 1.0]])
+    sparse = {"query": {"indices": [0], "values": [1.0]}, "key": "sv", "limit": 3}
+    assert col.search(rank={"$knn": sparse}).collect() == []
+    assert col.search(rank={"$knn": {"query": [1.0, 0.0], "key": "#img", "limit": 3}}).collect() == []
+    dense = {"query": [1.0, 0.0], "limit": 3}
+    rows = col.search(rank={"$sum": [{"$knn": dense}, {"$knn": {**sparse, "default": 5.0}}]}).collect()
+    assert [(r["id"], r["score"]) for r in rows] == [("a", 5.0), ("b", 7.0)]
+
+
 def test_delete_empty_id_list_with_where_deletes_nothing(client):
     """ids=[] is a real matches-nothing constraint, not 'no constraint' —
     the intersection with any predicate is empty."""

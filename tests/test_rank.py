@@ -133,6 +133,26 @@ def test_sparse_knn_term_idf_scaling(spark):
     assert 3 not in out
 
 
+def test_sparse_knn_indices_must_ascend(spark):
+    """The per-record sparse scorer merges two sorted index runs: a query
+    whose indices are not strictly ascending (or not one value each) is a
+    RankError, and a record repeating an index fails the read."""
+    from chroma_spark.operators.rank import RankEvaluator, finalize_scores
+
+    schema = "id BIGINT, sparse STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>"
+    records = spark.createDataFrame([(1, ([0, 2], [1.0, 2.0]))], schema)
+    for q in ({"indices": [2, 0], "values": [1.0, 1.0]},
+              {"indices": [0, 0], "values": [1.0, 1.0]},
+              {"indices": [0, 2], "values": [1.0]}):
+        with pytest.raises(RankError, match="ascending"):
+            RankEvaluator(records).evaluate({"$knn": {"query": q, "key": "sparse", "limit": 2}})
+    dup = spark.createDataFrame([(1, ([0, 0], [1.0, 2.0]))], schema)
+    expr = {"$knn": {"query": {"indices": [0], "values": [1.0]}, "key": "sparse",
+                     "limit": 2, "idf": False}}
+    with pytest.raises(Exception, match="repeats an index"):
+        finalize_scores(RankEvaluator(dup).evaluate(expr)).collect()
+
+
 def test_dense_knn_alternate_vector_column(spark):
     """Dense $knn with key=<other ARRAY<FLOAT> column> (operator.py's key
     param, default #embedding) — multi-vector records rank per column."""
