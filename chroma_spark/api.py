@@ -752,29 +752,27 @@ class _Executor:
             tail = tail.join(allowed, "id", "semi")
         return knn_merge([index_top, exact_knn(tail, qdf, k=k, space=meta.space)], k)
 
-    def sparse_indexes(self, keys: set[str] | None = None) -> dict:
-        """Stage 3, sparse: fresh per-key sparse indexes as RankEvaluator
-        specs ``(postings, n_buckets, n_docs)``, with the WAL tail merged
-        in: index entries of the view's touched ids are anti-joined away
-        and the bounded tail fold's postings unioned (the reference's
-        parallel sparse_index_knn + sparse_log_knn); n_docs refreshes at
-        compaction like the reference's index-time stats. ``keys``
-        restricts the work to the sparse columns a plan queries."""
+    def _fresh_sparse(self, keys: set[str]) -> dict[str, dict]:
+        """Descriptors of the fresh sparse indexes on the columns ``keys``."""
+        fresh = {key: self._fresh(f"sparse:{key}") for key in sorted(keys)}
+        return {key: si for key, si in fresh.items() if si is not None}
+
+    def sparse_indexes(self, keys: set[str]) -> dict:
+        """Stage 3, sparse: fresh sparse indexes on the columns ``keys``
+        as RankEvaluator specs ``(postings, n_buckets, n_docs)``, with the
+        WAL tail merged in: index entries of the view's touched ids are
+        anti-joined away and the bounded tail fold's postings unioned (the
+        reference's parallel sparse_index_knn + sparse_log_knn); n_docs
+        refreshes at compaction like the reference's index-time stats."""
         view = self.view
         out: dict = {}
-        for name in self.meta.indexes:
-            key = name.split(":", 1)[-1]
-            if not name.startswith("sparse:") or (keys is not None and key not in keys):
-                continue
-            si = self._fresh(name)
-            if si is None:
-                continue
+        for key, si in self._fresh_sparse(keys).items():
             postings = self._live(si, "postings")
             if view.touched is not None:
                 postings = postings.join(view.touched, "id", "anti")
                 if key in view.tail.columns:
                     tail = view.tail.filter(F.col(key).isNotNull())
-                    postings = postings.unionByName(self.col._index_rows(name, si, tail))
+                    postings = postings.unionByName(self.col._index_rows(f"sparse:{key}", si, tail))
             out[key] = (postings, int(si["n_buckets"]), float(si["n_docs"]))
         return out
 
@@ -925,10 +923,7 @@ class _Executor:
         if len(sparse_keys) == len(extra):
             sparse_index = self.sparse_indexes(keys=sparse_keys)
         else:
-            for key in sparse_keys:
-                si = meta.indexes.get(f"sparse:{key}")
-                if si is not None and si["version"] == meta.version:
-                    n_docs[key] = float(si["n_docs"])
+            n_docs = {k: float(si["n_docs"]) for k, si in self._fresh_sparse(sparse_keys).items()}
         return search_op(
             records,
             candidates=self.filtered(Filter(where=plan.where, where_document=plan.where_document), extra),
@@ -1158,7 +1153,7 @@ class Collection:
                 df = df.withColumn("embedding", ef.embed_column(F.col("document")).cast("array<float>"))
         if "embedding" in df.columns:
             df = df.withColumn("embedding", F.col("embedding").cast("array<float>"))
-        from .sparse_vector import SPARSE_VECTOR_TYPE
+        from .sparse_vector import SPARSE_VECTOR_TYPE, sparse_vector_ok
 
         sef, skey = self._sparse_embedding_function(meta)
         if sef is not None and skey not in df.columns and "document" in df.columns:
@@ -1238,15 +1233,27 @@ class Collection:
         front = ["seq_id", "op", "id", "embedding", "document", "uri"]
         log_df = log_df.select(*front, *[c for c in log_df.columns if c not in front])
         path = self._store.append_log(log_df)
-        # validate dimensions on the WRITTEN fragment (one narrow scan that
-        # shares the cursor read) so an attached EF's pandas UDF is not
-        # evaluated twice; a failed check leaves the fragment unreferenced
+        # validate dimensions and SparseVectors on the WRITTEN fragment (one
+        # narrow scan that shares the cursor read) so an attached EF's
+        # pandas UDF is not evaluated twice; a failed check leaves the
+        # fragment unreferenced
         written = self._client.spark.read.parquet(path)
+        sparse_cols = [
+            f.name for f in written.schema.fields
+            if f.dataType.simpleString() == SPARSE_VECTOR_TYPE.simpleString()
+        ]
         row = written.agg(
             F.max("seq_id").alias("m"),
             F.count("*").alias("n"),
             F.collect_set(F.size("embedding")).alias("dims"),
+            *[F.count(F.when(~sparse_vector_ok(F.col(c)), 1)) for c in sparse_cols],
         ).first()
+        bad = [c for c, n_bad in zip(sparse_cols, row[3:]) if n_bad]
+        if bad:
+            raise CollectionError(
+                f"sparse vector column(s) {bad}: indices must be non-negative and strictly"
+                " ascending, one value each"
+            )
         dims = [int(d) for d in (row["dims"] or []) if d is not None and d >= 0]
         if dims:
             if meta.dimension is None and len(dims) == 1:

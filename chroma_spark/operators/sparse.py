@@ -360,10 +360,11 @@ def sparse_scan_scores(
     keeps the records that share a term; for those, the record's and the
     query's ``(idx, side, weight, idf)`` entries are merged by one sort of
     the two ascending runs (TimSort merges two runs in linear time) and
-    one walk multiplies each adjacent record/query pair of one index:
-    cost linear in the record's postings plus the query's terms. A record
-    repeating an index fails the read (SparseVector indices are strictly
-    ascending).
+    one walk carries the last query entry's weight and IDF onto the
+    record entries of its index (a query entry sorts before the record's
+    entries of the same index): cost linear in the record's postings plus
+    the query's terms. A record that repeats an index adds one product
+    per repeat, as the postings join does, and counts once in df.
 
     ``idf`` scales the query weights by ``ln((n - df + 0.5) / (df + 0.5) +
     1)`` (idf.rs:24-31): each query term's df is counted by ONE aggregate
@@ -386,7 +387,7 @@ def sparse_scan_scores(
     terms = [
         F.array(*[
             F.struct(
-                F.lit(t).alias("idx"), F.lit(1).alias("side"),
+                F.lit(t).alias("idx"), F.lit(0).alias("side"),
                 F.lit(v).cast("float").cast("double").alias("w"),
                 (idf_expr(F.lit(float(df[t])), F.lit(n)) if idf else F.lit(1.0)).alias("idf"),
             )
@@ -409,28 +410,24 @@ def sparse_scan_scores(
     doc = F.zip_with(
         indices, F.col(f"{sparse_col}.values"),
         lambda t, v: F.struct(
-            t.alias("idx"), F.lit(0).alias("side"), v.cast("double").alias("w"),
+            t.alias("idx"), F.lit(1).alias("side"), v.cast("double").alias("w"),
             F.lit(1.0).alias("idf"),
         ),
     )
 
     def step(acc, e):
-        same = e["idx"] == acc["idx"]
-        score = (
-            F.when(same & (e["side"] == acc["side"]), F.raise_error(F.lit(
-                f"sparse vector {sparse_col!r} repeats an index (indices must be strictly ascending)"
-            )))
-            .when(same, acc["score"] + acc["w"] * e["w"] * e["idf"])
-            .otherwise(acc["score"])
-        )
+        # acc carries the last query entry (idx, w, idf) and the score
+        is_query = e["side"] == 0
+        hit = ~is_query & (e["idx"] == acc["idx"])
         return F.struct(
-            e["idx"].alias("idx"), e["side"].alias("side"), e["w"].alias("w"),
-            score.cast("double").alias("score"),
+            *[F.when(is_query, e[f]).otherwise(acc[f]).alias(f) for f in ("idx", "w", "idf")],
+            F.when(hit, acc["score"] + e["w"] * acc["w"] * acc["idf"])
+            .otherwise(acc["score"]).alias("score"),
         )
 
     start = F.struct(
-        F.lit(None).cast("int").alias("idx"), F.lit(None).cast("int").alias("side"),
-        F.lit(0.0).alias("w"), F.lit(0.0).alias("score"),
+        F.lit(None).cast("int").alias("idx"), F.lit(0.0).alias("w"),
+        F.lit(1.0).alias("idf"), F.lit(0.0).alias("score"),
     )
     score = F.aggregate(F.sort_array(F.concat(doc, query)), start, step, lambda acc: acc["score"])
     return scan.filter(F.arrays_overlap(indices, query_indices)).select(

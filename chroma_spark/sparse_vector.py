@@ -65,6 +65,21 @@ def validate_sparse_vector(sv: dict[str, Any]) -> None:
             raise SparseVectorError("labels must be strings")
 
 
+def sparse_vector_ok(sv: Column) -> Column:
+    """The Column twin of :func:`validate_sparse_vector` for bulk writes:
+    true when ``sv`` is NULL, or its indices are non-negative and strictly
+    ascending with one value (and, when present, one label) each; false
+    otherwise, never NULL."""
+    idx = sv["indices"]
+    ok = (
+        (F.size(idx) == F.size(sv["values"]))
+        & F.forall(idx, lambda i: i >= 0)
+        & (F.array_sort(F.array_distinct(idx)) == idx)
+        & (sv["labels"].isNull() | (F.size(sv["labels"]) == F.size(idx)))
+    )
+    return sv.isNull() | F.coalesce(ok, F.lit(False))
+
+
 def to_wire(sv: dict[str, Any]) -> dict[str, Any]:
     """Serialize to the reference wire format: ``labels`` -> ``tokens``
     (``base_types.py:90-101``); absent labels are omitted."""

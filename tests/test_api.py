@@ -1392,6 +1392,41 @@ def test_search_knn_on_unwritten_key(client):
     assert [(r["id"], r["score"]) for r in rows] == [("a", 5.0), ("b", 7.0)]
 
 
+def test_add_records_rejects_malformed_sparse_vectors(client, spark):
+    """add_records checks SparseVector columns as add() does: indices
+    non-negative and strictly ascending, one value each. A rejected batch
+    leaves the collection as it was, so every stored record is one that
+    the per-record scorer and the postings index score alike."""
+    from chroma_spark.operators.rank import rrf
+    from chroma_spark.sparse_vector import SPARSE_VECTOR_TYPE
+
+    col = client.create_collection("sparsecheck", dimension=2)
+    schema = "id STRING, embedding ARRAY<FLOAT>, indices ARRAY<INT>, vals ARRAY<FLOAT>"
+
+    def batch(rows):
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame(rows, schema)
+        sv = F.struct(F.col("indices").alias("indices"), F.col("vals").alias("values"),
+                      F.lit(None).cast("array<string>").alias("labels"))
+        sv = F.when(F.col("indices").isNotNull(), sv.cast(SPARSE_VECTOR_TYPE))
+        return df.select("id", "embedding", sv.alias("sv"))
+
+    good = [("a", [1.0, 0.0], [0, 3], [1.0, 2.0]), ("b", [0.0, 1.0], [3, 7], [0.5, 1.0]),
+            ("c", [0.6, 0.4], None, None)]
+    assert col.add_records(batch(good)) == 3
+    for bad in ([0, 0], [3, 1], [-1, 2], [1]):
+        vals = [1.0, 2.0]
+        with pytest.raises(CollectionError, match="strictly ascending"):
+            col.add_records(batch([("z", [1.0, 1.0], bad, vals)]))
+    assert col.count() == 3
+    sparse = {"query": {"indices": [3], "values": [1.0]}, "key": "sv", "limit": 3, "idf": False}
+    only = {r["id"]: r["score"] for r in col.search(rank={"$knn": sparse}).collect()}
+    assert only == {"a": 1.0 - 2.0, "b": 1.0 - 0.5}
+    hybrid = col.search(rank=rrf([{"query": [1.0, 0.0], "limit": 3}, sparse]), limit=3).collect()
+    assert {r["id"] for r in hybrid} == {"a", "b"}  # no default: c has no sparse rank
+
+
 def test_delete_empty_id_list_with_where_deletes_nothing(client):
     """ids=[] is a real matches-nothing constraint, not 'no constraint' —
     the intersection with any predicate is empty."""

@@ -136,8 +136,13 @@ def test_sparse_knn_term_idf_scaling(spark):
 def test_sparse_knn_indices_must_ascend(spark):
     """The per-record sparse scorer merges two sorted index runs: a query
     whose indices are not strictly ascending (or not one value each) is a
-    RankError, and a record repeating an index fails the read."""
+    RankError. A record repeating an index adds one product per repeat, as
+    the postings join does; IDF counts it as one document containing the
+    term."""
+    import math
+
     from chroma_spark.operators.rank import RankEvaluator, finalize_scores
+    from chroma_spark.operators.sparse import sparse_dot_topk
 
     schema = "id BIGINT, sparse STRUCT<indices: ARRAY<INT>, values: ARRAY<FLOAT>>"
     records = spark.createDataFrame([(1, ([0, 2], [1.0, 2.0]))], schema)
@@ -146,11 +151,24 @@ def test_sparse_knn_indices_must_ascend(spark):
               {"indices": [0, 2], "values": [1.0]}):
         with pytest.raises(RankError, match="ascending"):
             RankEvaluator(records).evaluate({"$knn": {"query": q, "key": "sparse", "limit": 2}})
-    dup = spark.createDataFrame([(1, ([0, 0], [1.0, 2.0]))], schema)
-    expr = {"$knn": {"query": {"indices": [0], "values": [1.0]}, "key": "sparse",
-                     "limit": 2, "idf": False}}
-    with pytest.raises(Exception, match="repeats an index"):
-        finalize_scores(RankEvaluator(dup).evaluate(expr)).collect()
+    dup = spark.createDataFrame(
+        [(1, ([0, 0, 3], [1.0, 2.0, 0.5])), (2, ([0, 3], [4.0, 1.0])), (3, ([5], [1.0]))], schema
+    )
+    query = {"indices": [0, 3], "values": [1.0, 0.5]}
+
+    def scores(idf):
+        expr = {"$knn": {"query": query, "key": "sparse", "limit": 3, "idf": idf}}
+        return {r["id"]: r["score"] for r in finalize_scores(RankEvaluator(dup).evaluate(expr)).collect()}
+
+    qdf = spark.createDataFrame([(0, (query["indices"], query["values"]))],
+                                "query_id INT, " + schema.split(", ", 1)[1])
+    joined = {r["id"]: round(1.0 - r["score"], 6) for r in sparse_dot_topk(dup, qdf, 3).collect()}
+    assert scores(False) == joined == {1: 1.0 - 3.25, 2: 1.0 - 4.5}
+    idf = math.log((3 - 2 + 0.5) / (2 + 0.5) + 1)  # n = 3 records, df = 2 for both terms
+    got = scores(True)
+    assert set(got) == {1, 2}
+    assert got[1] == pytest.approx(1.0 - 3.25 * idf, abs=1e-6)
+    assert got[2] == pytest.approx(1.0 - 4.5 * idf, abs=1e-6)
 
 
 def test_dense_knn_alternate_vector_column(spark):
